@@ -32,6 +32,9 @@ object FallbackCensus {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // sortedOnce's checkpoint would cut each executed plan down to
+    // Sort-over-LogicalRDD and hide the query body's operators
+    spark.conf.set(Tables.sortedOnceEnabledKey, "false")
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // reason -> (executions hit, distinct queries, example nodes)

@@ -29,9 +29,12 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // sortedOnce's checkpoint would cut each plan down to
+    // Sort-over-LogicalRDD; SPARK_GRAFT_CONF below can turn it back on
+    spark.conf.set(Tables.sortedOnceEnabledKey, "false")
     // Same A/B hook as Bench: extra session confs ("k=v,k2=v2") so
-    // gated shapes (e.g. sortedOnce off) can be captured for
-    // before/after evidence without code edits.
+    // gated shapes can be captured for before/after evidence without
+    // code edits.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
       val parts = kv.split("=", 2)
       if (parts.length == 2) spark.conf.set(parts(0).trim, parts(1).trim)

@@ -38,8 +38,14 @@ object GraphQueries {
   /** Min-label connected components over an undirected edge list
     * (d1, d2). Returns (node, component) for every node present in
     * `edges`, component = min node id reachable.
+    *
+    * `maxIter` bounds the label-propagation rounds, the first included
+    * (the folded round always runs), so it must be at least 1; the
+    * labels are exact once every node lies within `maxIter` hops of its
+    * component's minimum node.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    require(maxIter >= 1, s"connectedComponents needs maxIter >= 1, got $maxIter")
     val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
       .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
       .localCheckpoint()

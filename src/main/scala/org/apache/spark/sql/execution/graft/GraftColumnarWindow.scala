@@ -31,9 +31,10 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   * dedicated [[GraftWindowSlidingExec]]),
   * 14=ntile (`nth` = bucket count), 15=percent_rank, 16=cume_dist —
   * the SIZE-BASED functions (SizeBasedWindowFunction: their value needs
-  * the partition row count, so the node runs the partition-buffered
-  * row face; 14/15 close at the row — kind 0 frames; 16 closes at the
-  * peer group's end — kind 1).
+  * the partition row count, so the node runs the size-based row face,
+  * which streams groups the grouped sort below has counted; 14/15
+  * close at the row — kind 0 frames; 16 closes at the peer group's
+  * end — kind 1).
   * `excl` marks the exclusive running frame ROWS UNBOUNDED
   * PRECEDING..1 PRECEDING (fn 0-5): the value closes one row EARLIER —
   * the distributed-prefix-sum shape. Offset/excl/boxed specs run the
@@ -169,7 +170,9 @@ case class GraftColumnarWindowExec(
 
   override lazy val metrics = Map(
     "numInputRows" -> SQLMetrics.createMetric(sparkContext, "number of input rows"),
-    "numPartitionGroups" -> SQLMetrics.createMetric(sparkContext, "window partition groups"))
+    "numPartitionGroups" -> SQLMetrics.createMetric(sparkContext, "window partition groups"),
+    "numStreamedGroups" -> SQLMetrics.createMetric(sparkContext,
+      "window partition groups streamed with a known size"))
 
   private def longGetter(v: ColumnVector, dt: DataType): Int => Long = dt match {
     case ByteType => v.getByte(_).toLong
@@ -1328,30 +1331,40 @@ case class GraftColumnarWindowExec(
   }
 
   /** Size-based row face — any spec is ntile/percent_rank/cume_dist
-    * (fn 14-16): their value depends on the PARTITION row count, so the
-    * partition buffers whole in Spark's own spill-backed
-    * ExternalAppendOnlyUnsafeRowArray (exactly the row WindowExec's
-    * bound for these functions — SizeBasedWindowFunction forces it to
-    * buffer too; no memory regression, and the shared machinery spills
-    * under pressure). Emission then walks the buffer ONCE per cursor:
-    *  - kind-0 nodes (ntile/percent_rank + streaming aggs/ranking): a
-    *    single cursor re-runs the streaming update per row — ntile
-    *    buckets and percent_rank close at the row once `n` is known;
-    *  - kind-1 nodes (cume_dist + RANGE-running aggs): a second
-    *    sequential SCOUT cursor over the same buffer advances one peer
-    *    group ahead of emission, accumulating through the group's end —
-    *    cume_dist = peer-end row number / n, and the aggregate
-    *    accumulators hold the group-closed values the deferred path
-    *    would compute. Both cursors are strictly sequential (a spilled
-    *    buffer pays two ordered reads, never per-row reader churn).
+    * (fn 14-16): their value depends on the PARTITION row count `n`.
     *
-    * A/B (FilterMicroBench winsize-*, sf0.1, 3 runs of min-of-5):
-    * ntile(10)+percent_rank+rank over 3 giant partitions 0.85-0.94x;
-    * cume_dist+RANGE-running sum/count over ~50 fat peer groups
-    * 0.99-1.04x — win-to-parity, ON by default.
+    * When the child is a [[GraftGroupedSortExec]] (the usual shape: the
+    * rule swaps the window's in-partition sort), its iterator reports
+    * `n` at a group's first row for the group it sorted on its own
+    * ORDER BY keys, and the group streams:
+    *  - kind-0 nodes (ntile/percent_rank + streaming aggs/ranking)
+    *    buffer nothing — ntile buckets and percent_rank close at the
+    *    row once `n` is known;
+    *  - kind-1 nodes (cume_dist + RANGE-running aggs) read one peer
+    *    group ahead into Spark's spill-backed
+    *    ExternalAppendOnlyUnsafeRowArray, accumulating it as it is read
+    *    — cume_dist = peer-end row number / n, and the accumulators
+    *    hold the group-closed values — then emit it.
+    *
+    * A group of unknown size (any other child, or a task's further
+    * partition keys, which the sort orders by the full key) buffers
+    * whole in that array first, as the row WindowExec does for
+    * SizeBasedWindowFunction. Emission then walks the buffer once per
+    * cursor: kind-0 nodes with one cursor, kind-1 nodes with a second
+    * sequential SCOUT cursor one peer group ahead of emission doing
+    * the accumulation. Both cursors are strictly sequential (a spilled
+    * buffer pays two ordered reads, never per-row reader churn).
+    * `spark.sql.windowExec.buffer.*` bounds every buffer here, peer
+    * groups included.
+    *
+    * A/B of the buffered form (FilterMicroBench winsize-*, sf0.1, 3
+    * runs of min-of-5): ntile(10)+percent_rank+rank over 3 giant
+    * partitions 0.85-0.94x; cume_dist+RANGE-running sum/count over ~50
+    * fat peer groups 0.99-1.04x — win-to-parity, ON by default.
     */
   private def sizeBasedRowPath(): RDD[InternalRow] = {
     val (inM, grpM) = (metrics("numInputRows"), metrics("numPartitionGroups"))
+    val streamM = metrics("numStreamedGroups")
     val pIdx = partIdx.toArray
     val pTypes = partTypes.toArray
     val oIdx = orderIdx.toArray
@@ -1568,43 +1581,120 @@ case class GraftColumnarWindowExec(
         else (rem + (idx0 - thresh) / bucketSize + 1).toInt
       }
       new Iterator[InternalRow] {
+        private type Row = org.apache.spark.sql.catalyst.expressions.UnsafeRow
+        private val sizes = rows match {
+          case g: SizedGroupIterator => g
+          case _ => null
+        }
+        private def sizeOfLast: Long = if (sizes == null) -1L else sizes.groupSize
+        // the partition (size unknown) or the current peer group (size
+        // known, kind 1)
         private val buffer = new org.apache.spark.sql.execution
           .ExternalAppendOnlyUnsafeRowArray(inMemThreshold, Long.MaxValue,
             spillThreshold, spillSizeThreshold)
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ => buffer.clear()))
-        private var emitIter: Iterator[org.apache.spark.sql.catalyst.expressions.UnsafeRow] =
-          Iterator.empty
-        private var scout: Iterator[org.apache.spark.sql.catalyst.expressions.UnsafeRow] = _
-        private var scoutPending: org.apache.spark.sql.catalyst.expressions.UnsafeRow = _
-        private var held: org.apache.spark.sql.catalyst.expressions.UnsafeRow = _
+        private var emitIter: Iterator[Row] = Iterator.empty
+        private var scout: Iterator[Row] = _
+        private var scoutPending: Row = _
+        private var held: Row = _
+        private var heldSize = -1L
+        private var streamed = false
+        // rows of a streamed group not yet read from the input
+        private var left = 0L
         private var n = 0L
         private var rowNum = 0L
         private var rkRank = 0L
         private var rkDense = 0L
         private var scoutPos = 0L
+        private def input(): Row = {
+          inM.add(1)
+          rows.next().asInstanceOf[Row]
+        }
         private def advancePartition(): Unit = {
           if (!rows.hasNext && held == null) { emitIter = Iterator.empty; return }
-          buffer.clear()
           reset()
           rowNum = 0L; rkRank = 0L; rkDense = 0L
           scoutPos = 0L; scoutPending = null
-          if (held != null) { partCarry.carry(held); buffer.add(held); held = null }
-          var open = true
-          while (open && rows.hasNext) {
-            val row = rows.next().asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
-            inM.add(1)
-            if (buffer.length > 0 && partCarry.differs(row)) {
-              held = row.copy(); open = false
-            } else { partCarry.carry(row); buffer.add(row) }
-          }
-          n = buffer.length
+          val first = if (held != null) held else input()
+          val size = if (held != null) heldSize else sizeOfLast
+          held = null
           grpM.add(1)
-          // all writes to the buffer are done — BOTH iterators below see
-          // a frozen array (EAOURA invalidates iterators on modification,
-          // not on sibling iterator creation)
-          emitIter = buffer.generateIterator()
-          scout = if (kind1) buffer.generateIterator() else null
+          if (streamed && !partCarry.differs(first))
+            throw new IllegalStateException("a sized group ended inside a window partition")
+          partCarry.carry(first)
+          streamed = size > 0
+          n = size
+          if (streamed) {
+            // the sort below counted the group: stream it, keeping at
+            // most the current peer group (kind 1) as look-ahead
+            streamM.add(1)
+            left = size - 1
+            emitIter = if (kind1) peerGroups(first) else Iterator.single(first) ++ streamRest
+          } else {
+            buffer.clear()
+            buffer.add(first)
+            var open = true
+            while (open && rows.hasNext) {
+              val row = input()
+              if (partCarry.differs(row)) {
+                held = row.copy(); heldSize = sizeOfLast; open = false
+              } else { partCarry.carry(row); buffer.add(row) }
+            }
+            n = buffer.length
+            // all writes to the buffer are done — BOTH iterators below see
+            // a frozen array (EAOURA invalidates iterators on modification,
+            // not on sibling iterator creation)
+            emitIter = buffer.generateIterator()
+            scout = if (kind1) buffer.generateIterator() else null
+          }
+        }
+        /** The next input row of a streamed group; its last row must
+          * still carry the group's partition key. */
+        private def groupInput(): Row = {
+          left -= 1
+          val r = input()
+          if (left == 0 && partCarry.differs(r))
+            throw new IllegalStateException("a window partition ended inside a sized group")
+          r
+        }
+        /** The rest of a streamed group, read straight from the input. */
+        private def streamRest: Iterator[Row] = new Iterator[Row] {
+          override def hasNext: Boolean = left > 0
+          override def next(): Row = groupInput()
+        }
+        /** A streamed kind-1 group, one peer group at a time: reading a
+          * peer group into the buffer accumulates it (the scout's job
+          * on the buffered path), then its rows are emitted with the
+          * group-closed values. */
+        private def peerGroups(first: Row): Iterator[Row] = new Iterator[Row] {
+          private var nextPeer: Row = first
+          private var it: Iterator[Row] = Iterator.empty
+          override def hasNext: Boolean = it.hasNext || nextPeer != null
+          override def next(): Row = {
+            if (!it.hasNext) fill()
+            it.next()
+          }
+          private def fill(): Unit = {
+            buffer.clear()
+            peerCarry.carry(nextPeer); buffer.add(nextPeer); update(nextPeer); scoutPos += 1
+            nextPeer = null
+            while (nextPeer == null && left > 0) {
+              val r = groupInput()
+              if (peerCarry.differs(r)) nextPeer = r.copy()
+              else { buffer.add(r); update(r); scoutPos += 1 }
+            }
+            writeAggValues()
+            writeCumeDist()
+            it = buffer.generateIterator()
+          }
+        }
+        private def writeCumeDist(): Unit = {
+          var s = 0
+          while (s < nS) {
+            if (ss(s).fn == 16) aggRow.update(s, scoutPos.toDouble / n)
+            s += 1
+          }
         }
         /** Accumulate the scout through the emission row's whole peer
           * group (peerCarry holds its keys); leaves the first
@@ -1630,23 +1720,19 @@ case class GraftColumnarWindowExec(
           if (!hasNext) throw new NoSuchElementException
           val r = emitIter.next()
           rowNum += 1
-          val newPeer = needPeers && (rowNum == 1L || peerCarry.differs(r))
-          if (newPeer) peerCarry.carry(r)
           if (kind1) {
-            // peer-group-closed values: the scout accumulates through
-            // this group's end exactly once, at its first row
-            if (newPeer) {
+            // peer-group-closed values: on a buffered partition the
+            // scout accumulates through this group's end exactly once,
+            // at its first row (a streamed group did so reading it)
+            if (!streamed && (rowNum == 1L || peerCarry.differs(r))) {
+              peerCarry.carry(r)
               scoutThroughPeers()
               writeAggValues()
-              var s = 0
-              while (s < nS) {
-                if (ss(s).fn == 16)
-                  aggRow.update(s, scoutPos.toDouble / n) // cume_dist
-                s += 1
-              }
+              writeCumeDist()
             }
           } else {
-            if (newPeer) { rkRank = rowNum; rkDense += 1 }
+            val newPeer = needPeers && (rowNum == 1L || peerCarry.differs(r))
+            if (newPeer) { peerCarry.carry(r); rkRank = rowNum; rkDense += 1 }
             update(r)
             writeAggValues()
             var s = 0

@@ -436,8 +436,11 @@ object VecNumExpr {
     * semantics (verified against the 4.1.2 bytecode): NaN/Infinity pass
     * through, otherwise scala BigDecimal(d) (the decimal/toString
     * representation, not raw binary) setScale(HALF_UP|HALF_EVEN)
-    * toDouble. Allocates a BigDecimal per live row like the row path
-    * itself — the win is batch locality, so masked-off rows are
+    * toDouble. Where VecDecExpr.halfUpScaled decides the rounded
+    * integer k, the value is k / 10^scale by one IEEE division
+    * (decToDouble, BigDecimal.doubleValue's own fast path for
+    * |k| < 2^52); near-ties and negative scales take the BigDecimal
+    * path. Masked-off rows are
     * SKIPPED (rounding is total; garbage values are discarded by the
     * selecting CaseWhen anyway). Census: 5 queries blocked on Round.
     * A/B sf0.1 interleaved min-of-7: 0.96-0.97x (q33/q34), 0.96
@@ -454,8 +457,12 @@ object VecNumExpr {
       while (i < n) {
         val d = values(i)
         if (!isNull(i) && s.live(i) &&
-            !java.lang.Double.isNaN(d) && !java.lang.Double.isInfinite(d))
-          values(i) = scala.math.BigDecimal(d).setScale(scale, mode).toDouble
+            !java.lang.Double.isNaN(d) && !java.lang.Double.isInfinite(d)) {
+          val k = VecDecExpr.halfUpScaled(d, scale)
+          values(i) =
+            if (k == k) VecDecExpr.decToDouble(k.toLong, scale)
+            else scala.math.BigDecimal(d).setScale(scale, mode).toDouble
+        }
         i += 1
       }
     }
@@ -1271,6 +1278,34 @@ object VecDecExpr {
   // BigDecimal.doubleValue fast-path table)
   private val POW10D: Array[Double] = Array.tabulate(23)(k => math.pow(10d, k.toDouble))
 
+  /** `x` rounded HALF_UP at `scale` decimal places, as the unscaled
+    * integer `Decimal(x)` (the decimal string of x) rounds to, or NaN
+    * when plain arithmetic cannot decide it. The decimal string D
+    * round-trips to x, so |D − x| ≤ ½ulp(x); y = fl(x·10^scale) adds at
+    * most ½ulp(y). When |y| < 2^52 and y lies farther than twice that
+    * sum from every k + ½, D·10^scale and y round to the same integer
+    * and neither is a tie, so rint(y) is the answer for HALF_UP and
+    * HALF_EVEN alike. Ties (0.125 at 2 places), near-ties (1.005,
+    * 2.675), huge, non-finite and negative-scale inputs return NaN and
+    * take the BigDecimal path. Zero comes back as +0.0, like a
+    * BigDecimal zero. */
+  def halfUpScaled(x: Double, scale: Int): Double =
+    if (scale < 0 || scale >= POW10D.length) Double.NaN
+    else {
+      val y = x * POW10D(scale)
+      val a = math.abs(y)
+      if (!(a < 4503599627370496.0)) Double.NaN // 2^52; also NaN and ±Inf
+      else {
+        val err = math.ulp(x) * POW10D(scale) + math.ulp(y)
+        if (math.abs(a - math.floor(a) - 0.5) <= err) Double.NaN
+        else math.rint(y) + 0.0
+      }
+    }
+
+  /** |k| fits `precision` digits (k integral, |k| < 2^52 < 10^16). */
+  def fitsDigits(k: Double, precision: Int): Boolean =
+    precision > 15 || math.abs(k) < POW10D(precision)
+
   /** unscaled long at `scale` → double, replicating
     * java.math.BigDecimal.doubleValue() (fast path: one correctly
     * rounded IEEE division when |u| < 2^52 and scale ≤ 22). */
@@ -1361,9 +1396,10 @@ object VecDecExpr {
 
   /** Cast(double → decimal(p,s)): the rounding/overflow site. NaN/±Inf
     * → null in every eval mode; finite overflow → null (LEGACY/TRY) or
-    * Spark's NUMERIC_VALUE_OUT_OF_RANGE (ANSI). Delegates the
-    * round-half-up conversion to Spark's own Decimal so the
-    * string-based double→BigDecimal semantics match bit-for-bit. */
+    * Spark's NUMERIC_VALUE_OUT_OF_RANGE (ANSI). Rounds with plain
+    * arithmetic where that provably agrees (VecDecExpr.halfUpScaled) and
+    * delegates the rest (near-ties, overflow) to Spark's own Decimal, so
+    * the string-based double→BigDecimal semantics match bit-for-bit. */
   final case class DoubleToDec(c: VecNumExpr, p: Int, sc: Int, ansi: Boolean) extends VecDecExpr {
     override def eval(b: ColumnarBatch, n: Int, values: Array[Long], isNull: Array[Boolean],
         s: VecScratch): Unit = {
@@ -1376,8 +1412,10 @@ object VecDecExpr {
           if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) {
             isNull(i) = true; values(i) = 0L
           } else {
-            val dec = Decimal(x)
-            if (dec.changePrecision(p, sc)) values(i) = dec.toUnscaledLong
+            val k = VecDecExpr.halfUpScaled(x, sc)
+            val dec = if (k == k && VecDecExpr.fitsDigits(k, p)) null else Decimal(x)
+            if (dec == null) values(i) = k.toLong
+            else if (dec.changePrecision(p, sc)) values(i) = dec.toUnscaledLong
             else if (ansi && s.live(i)) {
               throw org.apache.spark.sql.errors.QueryExecutionErrors
                 .cannotChangeDecimalPrecisionError(Decimal(x), p, sc, null)
@@ -1748,7 +1786,8 @@ object VecDec128Expr {
   }
 
   /** cast(double/float expr AS decimal128): Decimal(d).toPrecision —
-    * the exact Cast body. Empirically pinned (r15 probe): NaN/Infinity
+    * the exact Cast body, after the same arithmetic fast path as
+    * DoubleToDec. Empirically pinned (r15 probe): NaN/Infinity
     * → NULL in EVERY eval mode; finite overflow → NULL (LEGACY/TRY) or
     * SparkArithmeticException NUMERIC_VALUE_OUT_OF_RANGE (ANSI, via
     * toPrecision's own nullOnOverflow=false path). Floats reach here
@@ -1769,15 +1808,20 @@ object VecDec128Expr {
           if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) {
             isNull(i) = true; hi(i) = 0L; lo(i) = 0L
           } else {
-            val dec = Decimal(d)
-            val r =
-              if (ansi && s.live(i))
-                dec.toPrecision(p, sc, Decimal.ROUND_HALF_UP, false, ctx)
-              else dec.toPrecision(p, sc, Decimal.ROUND_HALF_UP, true, null)
-            if (r == null) { isNull(i) = true; hi(i) = 0L; lo(i) = 0L }
-            else {
-              val bi = r.toJavaBigDecimal.unscaledValue()
-              hi(i) = hiOf(bi); lo(i) = loOf(bi)
+            val k = VecDecExpr.halfUpScaled(d, sc)
+            if (k == k && VecDecExpr.fitsDigits(k, p)) {
+              lo(i) = k.toLong; hi(i) = if (k < 0) -1L else 0L
+            } else {
+              val dec = Decimal(d)
+              val r =
+                if (ansi && s.live(i))
+                  dec.toPrecision(p, sc, Decimal.ROUND_HALF_UP, false, ctx)
+                else dec.toPrecision(p, sc, Decimal.ROUND_HALF_UP, true, null)
+              if (r == null) { isNull(i) = true; hi(i) = 0L; lo(i) = 0L }
+              else {
+                val bi = r.toJavaBigDecimal.unscaledValue()
+                hi(i) = hiOf(bi); lo(i) = loOf(bi)
+              }
             }
           }
         }

@@ -106,7 +106,7 @@ case class GraftColumnarRule(session: SparkSession) extends ColumnarRule {
       // pass 3 — merge-back: two ADJACENT split products BOTH left on
       // the row WindowExec re-fuse into one node (one partition buffer
       // instead of two; never worse than the unsplit original)
-      if (!didSplit) swapped else swapped.transformUp {
+      val merged = if (!didSplit) swapped else swapped.transformUp {
         case w1: org.apache.spark.sql.execution.window.WindowExec
             if w1.getTagValue(splitWindowTag).isDefined &&
               w1.child.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec] &&
@@ -120,6 +120,9 @@ case class GraftColumnarRule(session: SparkSession) extends ColumnarRule {
             .foreach(r => m.setTagValue(fallbackReasonTag, r))
           m
       }
+      // pass 4 — the sort under each window-family node groups by its
+      // partition key (GraftGroupedSortExec)
+      org.apache.spark.sql.execution.graft.GraftGroupedSortExec.swapUnderWindows(merged)
     }
 
     private val swapOne: PartialFunction[SparkPlan, SparkPlan] = {
@@ -1731,8 +1734,9 @@ case class GraftColumnarRule(session: SparkSession) extends ColumnarRule {
       * group on GraftWindowSlidingExec, running/deferred groups on
       * GraftColumnarWindowExec), and the merge-back pass re-fuses
       * adjacent nodes left unswapped, so the degenerate outcome is never
-      * worse than today's single row WindowExec. Buffering kinds sit at
-      * the BOTTOM of the chain where rows are narrowest; the streaming
+      * worse than today's single row WindowExec. A size-based group sits
+      * at the BOTTOM, on the sort that counts its partitions; the other
+      * buffering kinds follow where rows are narrowest; the streaming
       * kind-0 group tops it. (Reference analogue: CometWindowExec
       * serializes whole window nodes and falls back on any unsupported
       * expression — `spark/sql/comet/CometWindowExec.scala`; splitting
@@ -1800,7 +1804,9 @@ case class GraftColumnarRule(session: SparkSession) extends ColumnarRule {
       val groups = es.groupBy { case (_, g) => gid(g) }
       if (groups.size < 2) return None
       var cur: SparkPlan = w.child
-      groups.toSeq.sortBy(-_._1).foreach { case (_, ges) =>
+      // a size-based group sits directly on the sort, which counts its
+      // partitions (GraftGroupedSortExec); the rest by descending gid
+      groups.toSeq.sortBy { case (g, ges) => (!ges.exists(_._2._3), -g) }.foreach { case (_, ges) =>
         val nw = org.apache.spark.sql.execution.window.WindowExec(
           ges.map(_._1), w.partitionSpec, w.orderSpec, cur)
         nw.setTagValue(splitWindowTag, ())

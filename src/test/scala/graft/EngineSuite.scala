@@ -4540,4 +4540,18 @@ class EngineSuite extends GraftTestBase {
     assert(row.getDouble(1) == 2.5 && row.getLong(2) == 2L, // {-0.0, 2.5}
       s"distinct over b must be {0.0, 2.5}: $row")
   }
+
+  test("connectedComponents requires maxIter >= 1; one round labels one hop") {
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("d1", "d2")
+    val e = intercept[IllegalArgumentException](
+      graft.queries.GraphQueries.connectedComponents(path, maxIter = 0))
+    assert(e.getMessage.contains("maxIter >= 1"), e.getMessage)
+    def labels(maxIter: Int): Map[Long, Long] =
+      graft.queries.GraphQueries.connectedComponents(path, maxIter).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the folded first round: each node takes the min of itself and its
+    // neighbours
+    assert(labels(1) == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
+    assert(labels(20) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+  }
 }

@@ -767,4 +767,123 @@ object FuzzProps extends Properties("graft") {
       } finally spark.conf.unset("spark.graft.columnar.enabled")
       Prop(on == off) :| s"maxGroups=$maxGroups n=${rows.size}"
     }
+
+  // ── grouped in-partition sort: SortExec's order for any key mix ──
+  // 1-3 hash partitions over three flags + null put 1-3 partition-key
+  // values in one task (one partition holds them all); the ORDER BY
+  // keys carry nulls, NaN, -0.0 and ties in random directions, and both
+  // sorts spill every few rows in some cases.
+  private val sortRowsGen = for {
+    n <- Gen.choose(1, 300)
+    rows <- Gen.listOfN(n, for {
+      f <- Gen.frequency(
+        3 -> Gen.oneOf("A", "N", "R").map(Option(_)),
+        1 -> Gen.const(Option.empty[String]))
+      x <- Gen.frequency(
+        4 -> Gen.choose(-3, 3).map(i => Option(i * 0.5)),
+        1 -> Gen.oneOf(Double.NaN, -0.0, 0.0).map(Option(_)),
+        1 -> Gen.const(Option.empty[Double]))
+      y <- Gen.frequency(
+        4 -> Gen.choose(0, 5).map(Option(_)),
+        1 -> Gen.const(Option.empty[Int]))
+    } yield (f, x, y))
+    parts <- Gen.choose(1, 3)
+    xDesc <- Gen.oneOf(true, false)
+    nullsFirst <- Gen.oneOf(true, false)
+    spillEvery <- Gen.oneOf(0, 7, 50)
+  } yield (rows, parts, xDesc, nullsFirst, spillEvery)
+
+  property("grouped sort emits SortExec's order and exact group sizes for any key mix") =
+    forAll(sortRowsGen) { case (rows, parts, xDesc, nullsFirst, spillEvery) =>
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.expressions._
+      import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+      import org.apache.spark.sql.execution.graft.{GraftGroupedSortExec, SizedGroupIterator}
+      val df = rows.zipWithIndex.map { case ((f, x, y), i) => (f, x, y, i) }
+        .toDF("f", "x", "y", "id").repartition(parts, $"f")
+      val child = df.queryExecution.executedPlan
+      val Seq(f, x, y, _) = child.output
+      val order = Seq(SortOrder(f, Ascending),
+        SortOrder(x, if (xDesc) Descending else Ascending,
+          if (nullsFirst) NullsFirst else NullsLast, Seq.empty),
+        SortOrder(y, Descending))
+      val full = RowOrdering.create(order, child.output)
+      val key = RowOrdering.create(order.take(1), child.output)
+      // per task: each row with the group size reported alongside it
+      def tasks(p: SparkPlan): Map[Int, Seq[(InternalRow, Long)]] =
+        p.execute().mapPartitionsWithIndex { (i, it) =>
+          val sizes = it match { case g: SizedGroupIterator => g; case _ => null }
+          it.map(r => (i, r.copy(), if (sizes == null) -1L else sizes.groupSize))
+        }.collect().toSeq.groupBy(_._1).map { case (i, rs) => i -> rs.map(r => (r._2, r._3)) }
+      val want = tasks(SortExec(order, global = false, child, spillEvery))
+      val got = tasks(GraftGroupedSortExec(order, 1, child, spillEvery))
+      def ids(rs: Seq[(InternalRow, Long)]) = rs.map(_._1.getInt(3)).sorted
+      val sameRows = want.keySet == got.keySet &&
+        want.forall { case (i, w) => ids(w) == ids(got(i)) }
+      val sameOrder = sameRows && want.forall { case (i, w) =>
+        w.zip(got(i)).forall { case ((a, _), (b, _)) => full.compare(a, b) == 0 } }
+      // a counted group is one contiguous run of exactly its size that
+      // holds every row of its key
+      val sizesOk = got.values.forall { rs =>
+        val counted = rs.zipWithIndex.filter(_._1._2 >= 0)
+        counted.isEmpty || {
+          val n = counted.head._1._2
+          val k0 = counted.head._1._1
+          counted.size == n && counted.last._2 - counted.head._2 + 1 == n &&
+            rs.count(r => key.compare(r._1, k0) == 0) == n
+        }
+      }
+      (Prop(sameRows) :| "same rows per task") && (Prop(sameOrder) :| "SortExec's order") &&
+        (Prop(sizesOk) :| "group sizes") :| s"parts=$parts n=${rows.size} spill=$spillEvery"
+    }
+
+  // ── double → decimal casts and round/bround: the arithmetic fast
+  // path against Spark's row-path Cast and round ──
+  // Ties at the target scale (0.125, 2.5, x/8), near-ties whose decimal
+  // string sits just below .5 (1.005, 2.675), 3-dp values, overflow for
+  // the narrow types, ±0, NaN/±Inf and subnormals; ANSI on and off.
+  private val castDoubleGen: Gen[Double] = Gen.frequency(
+    4 -> Gen.chooseNum(-1e6, 1e6),
+    4 -> Gen.choose(-1000000, 1000000).map(_ / 1000.0),
+    2 -> Gen.choose(-100000, 100000).map(_ / 8.0),
+    3 -> Gen.oneOf(0.125, -0.125, 1.005, 2.675, 0.5, 1.5, 2.5, -2.5, 0.015, 1.115,
+      99999.995, 4503599627370497.0, 1e15 + 0.5, 1e7, -1e7, 1e20, 1e300, -0.0, 0.0,
+      1e-310, Double.MinPositiveValue, -Double.MinPositiveValue, Double.MaxValue,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity))
+
+  property("double→decimal casts and round/bround match the row path, ANSI on and off") =
+    forAll(Gen.listOfN(64, castDoubleGen)) { xs =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-dbldec").toString
+      try {
+        xs.toDF("x").coalesce(1).write.mode("overwrite").parquet(dir)
+        val t = spark.read.parquet(dir)
+        val rounds = Seq("round(x, 2)", "round(x, 0)", "round(x, 3)", "bround(x, 2)",
+          "round(x, -1)")
+        val casts = Seq("decimal(10,2)", "decimal(6,3)", "decimal(18,4)",
+          "decimal(20,2)", "decimal(38,10)").map(d => s"cast(x AS $d)")
+        def condition(e: Throwable): String =
+          Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+            case st: org.apache.spark.SparkThrowable if st.getCondition != null => st.getCondition
+          }.getOrElse(e.getClass.getName)
+        def outcome(exprs: Seq[String]): String =
+          try t.selectExpr(exprs: _*).collect()
+            .map(_.toSeq.mkString("|")).mkString(",")
+          catch { case scala.util.control.NonFatal(e) => "error " + condition(e) }
+        def all(ansi: Boolean, columnar: Boolean): Seq[String] =
+          withConf("spark.sql.ansi.enabled" -> ansi.toString,
+              "spark.graft.columnar.enabled" -> columnar.toString) {
+            // under ANSI one overflow must not hide another
+            if (ansi) (rounds +: casts.map(Seq(_))).map(outcome)
+            else Seq(outcome(rounds ++ casts))
+          }
+        val kernel = withConf("spark.sql.ansi.enabled" -> "false") {
+          t.selectExpr(casts.head, "round(x, 2)").queryExecution.executedPlan.toString
+        }.contains("GraftColumnarProject")
+        Seq(true, false).map { ansi =>
+          val on = all(ansi, columnar = true)
+          val off = all(ansi, columnar = false)
+          Prop(on == off) :| s"ansi=$ansi\n on=$on\noff=$off"
+        }.reduce(_ && _) && (Prop(kernel) :| "the casts must run on the columnar kernels")
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
 }

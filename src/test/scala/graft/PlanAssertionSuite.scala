@@ -24,6 +24,19 @@ class PlanAssertionSuite extends GraftTestBase {
     * below the checkpoint is identical — only the sampling double-run
     * differs).
     */
+  /** Every node of the executed plan, descending into AQE's final plan
+    * and its query stages. */
+  private def nodesOf(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def deep(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
+      case q: QueryStageExec => deep(q.plan)
+      case other => other +: other.children.flatMap(deep)
+    }
+    deep(df.queryExecution.executedPlan)
+  }
+
   private def runFullPlan(name: String): DataFrame = {
     spark.conf.set(graft.Tables.sortedOnceEnabledKey, "false")
     try {
@@ -630,6 +643,21 @@ class PlanAssertionSuite extends GraftTestBase {
     assert(!mapSideSort, s"no sort may remain below the columnar rank probe:\n$p")
   }
 
+  test("q168 final-stage window sort groups by key with the full-key fallback") {
+    // rank() OVER (PARTITION BY l_orderkey ...): a task holds many
+    // order keys, so the grouped sort under the final WindowGroupLimit
+    // sorts all but its first key by the full key, like SortExec
+    val df = run("q168_rank_group_limit")
+    df.collect()
+    val sorts = nodesOf(df).collect {
+      case g: org.apache.spark.sql.execution.graft.GraftGroupedSortExec => g
+    }
+    assert(sorts.nonEmpty,
+      s"expected the grouped sort under the final window stage:\n${planString(df)}")
+    assert(sorts.map(_.metrics("fullKeyRows").value).sum > 0,
+      s"the high-cardinality key must take the full-key sorter:\n${planString(df)}")
+  }
+
   test("q169 dense_rank group limit probes columnar with no map-side sort") {
     val df = run("q169_dense_rank_group_limit")
     df.collect()
@@ -829,18 +857,26 @@ class PlanAssertionSuite extends GraftTestBase {
       s"no row WindowExec should remain for the wide RANGE frames:\n$p")
   }
 
-  test("q187 size-based window functions swap to the partition-buffered face") {
-    // BOTH nodes leave the row exec: the kind-0 ntile/percent_rank/rank
-    // node (single emission cursor) and the kind-1 cume_dist +
-    // RANGE-running-agg node (peer-scout cursor)
+  test("q187 size-based window nodes stream from the grouped sort below them") {
+    // BOTH nodes leave the row exec — the kind-0 ntile/percent_rank/rank
+    // node and the kind-1 cume_dist + RANGE-running-agg node — and each
+    // sits directly on a grouped sort, whose counted groups it streams
+    // instead of buffering the partition
     val df = runFullPlan("q187_window_sizebased")
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    val swapped = "GraftColumnarWindow".r.findAllIn(p).size
-    assert(swapped >= 2,
-      s"expected both size-based window nodes on GraftColumnarWindowExec in:\n$p")
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0,
       s"no row WindowExec should remain for the size-based functions:\n$p")
+    val sized = nodesOf(df).collect {
+      case w: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+          if w.specs.exists(_.fn >= 14) => w
+    }
+    assert(sized.size == 2, s"expected both size-based nodes on GraftColumnarWindowExec in:\n$p")
+    assert(sized.forall(_.child.isInstanceOf[
+      org.apache.spark.sql.execution.graft.GraftGroupedSortExec]),
+      s"each size-based node must sit on a grouped sort:\n$p")
+    assert(sized.forall(_.metrics("numStreamedGroups").value > 0),
+      s"each size-based node must stream a counted group:\n$p")
   }
 
   test("q188 mixed-kind window node splits into three swapped graft nodes") {
@@ -860,6 +896,14 @@ class PlanAssertionSuite extends GraftTestBase {
     val sorts = "Sort \\[".r.findAllIn(p).size
     assert(sorts <= 2, // the window sort + the query's output ORDER BY
       s"the split chain must reuse the single window sort:\n$p")
+    // the size-based (ntile) node sits lowest, on the grouped sort
+    val ntile = nodesOf(df).collect {
+      case w: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+          if w.specs.exists(_.fn == 14) => w
+    }
+    assert(ntile.size == 1 && ntile.head.child.isInstanceOf[
+      org.apache.spark.sql.execution.graft.GraftGroupedSortExec],
+      s"the ntile node must sit directly on the grouped sort:\n$p")
   }
 
   test("q189 suffix frames swap to the block-combined face") {
