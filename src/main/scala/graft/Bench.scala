@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every inventory query on SPARK_GRAFT_SF_DIR
   * and emits ONE JSON line. Results are fully materialized through the
@@ -19,23 +18,13 @@ object Bench {
         .split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
     val loadStart = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config(Tables.eventsReadConf._1, Tables.eventsReadConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // A/B instrumentation: extra session confs ("k=v,k2=v2") and a
     // query-name filter, so operator gates can be measured without
     // code edits (the BHJ/finalAgg A/B methodology).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val parts = kv.split("=", 2)
-      if (parts.length == 2) spark.conf.set(parts(0).trim, parts(1).trim)
-    })
+    GraftSession.applyEnvConf(spark)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
 
     def esc(s: String): String = s.flatMap {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.GraftExplain
 
 /** Diagnostic main: run every Catalog query at the given SF dir and
@@ -23,14 +21,7 @@ object FallbackCensus {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config(Tables.eventsReadConf._1, Tables.eventsReadConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     // sortedOnce's checkpoint would cut each executed plan down to
     // Sort-over-LogicalRDD and hide the query body's operators

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named inventory queries to files —
@@ -20,14 +19,7 @@ object PlanDump {
     require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(sfDir, outDir, suffix, qcsv) = args.take(4)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config(Tables.eventsReadConf._1, Tables.eventsReadConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // sortedOnce's checkpoint would cut each plan down to
     // Sort-over-LogicalRDD; SPARK_GRAFT_CONF below can turn it back on
@@ -35,10 +27,7 @@ object PlanDump {
     // Same A/B hook as Bench: extra session confs ("k=v,k2=v2") so
     // gated shapes can be captured for before/after evidence without
     // code edits.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val parts = kv.split("=", 2)
-      if (parts.length == 2) spark.conf.set(parts(0).trim, parts(1).trim)
-    })
+    GraftSession.applyEnvConf(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = qcsv.split(",").map(_.trim).filter(_.nonEmpty)
     names.foreach { name =>

@@ -71,18 +71,24 @@ object Tables {
     * sort (q55, q126, q153) deliberately keep the plain orderBy. Same
     * trade at scale: one write+read of the output vs recomputing the
     * span.
+    *
+    * Two costs come with it. The query body EXECUTES when the DataFrame
+    * is built (localCheckpoint is eager), not when an action runs. And
+    * the checkpoint blocks live only in executor storage with no
+    * lineage behind them: after an executor loss they cannot be
+    * recomputed, and the query fails instead of retrying.
     */
-  val sortedOnceEnabledKey = "spark.graft.sortedOnce.enabled"
-
   def sortedOnce(df: DataFrame,
       keys: org.apache.spark.sql.Column*): DataFrame =
-    // The gate exists for plan tests (the checkpoint truncates the
-    // final plan to Sort-over-LogicalRDD, so pins of the pipeline's
-    // operators set it false) and as a production escape hatch; default
-    // ON — the A/B-won path.
     if (df.sparkSession.conf.getOption(sortedOnceEnabledKey).forall(_.toBoolean))
       df.localCheckpoint().orderBy(keys: _*)
     else df.orderBy(keys: _*)
+
+  /** Gate of [[sortedOnce]], default ON (the A/B-won path). It exists for
+    * plan tests (the checkpoint truncates the final plan to
+    * Sort-over-LogicalRDD, so pins of the pipeline's operators set it
+    * false) and as a production escape hatch. */
+  val sortedOnceEnabledKey = "spark.graft.sortedOnce.enabled"
 
   /** Hash-repartition `df` by `key` ONLY when its resolved scan cannot
     * feed the session's shuffle parallelism (guide §2.5 "repartition
@@ -96,6 +102,12 @@ object Tables {
     * planned scan's partition count (driver-side, no job); hash
     * repartition, not round-robin: no sort-before-repartition pass and
     * deterministic under retries.
+    *
+    * The comparison is against the PLANNED split count
+    * (`df.rdd.getNumPartitions`: the file-scan splits after
+    * maxPartitionBytes packing), not the row-group or file count of the
+    * source: one split may cover several row groups, and a split that
+    * holds no row group's midpoint reads nothing.
     */
   def spreadIfNarrow(df: DataFrame,
       key: org.apache.spark.sql.Column): DataFrame = {
@@ -106,8 +118,8 @@ object Tables {
   /** Conf a session SHOULD carry to read events.parquet fixtures that
     * store `ts` as parquet INT64 TIMESTAMP(NANOS) — Spark 4.x rejects that
     * type outright (PARQUET_TYPE_ILLEGAL) unless the legacy conf maps it
-    * to a raw long. Set it in the SparkSession builder (Verify/Bench/tests
-    * all do). It is deliberately NOT set inside [[events]]: the conf is
+    * to a raw long. Set it in the SparkSession builder ([[GraftSession]]
+    * does). It is deliberately NOT set inside [[events]]: the conf is
     * re-read at execution time, so save-and-restore around the read breaks
     * lazy execution, and setting it permanently would silently change how
     * unrelated nanos-parquet reads behave for the rest of the session

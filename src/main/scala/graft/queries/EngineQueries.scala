@@ -337,7 +337,7 @@ object EngineQueries {
       "q144_columnar_semi_anti",
       (s, dir) => {
         import s.implicits._
-        // Columnar existence probes (default ON — unlike the inner
+        // Columnar existence probes (default ON — unlike an inner
         // probe, the semi/anti shapes have no build-side output, so the
         // probe is a pure selection over the stream batch and A/Bs at
         // parity with the codegen row BHJ): scan → GraftColumnarFilter →
@@ -372,27 +372,15 @@ object EngineQueries {
 
     QueryDef(
       "q133_columnar_broadcast_join",
-      (s0, dir) => {
-        // The columnar-BHJ probe is opt-in (measured slower than
-        // Spark's codegen-fused row BHJ — see the rule's comment), so
-        // this query enables it on a CLONED session: the parent
-        // session's runtime confs are copied first (preserving the
-        // dual-run axes), the flag flips only here, and no other
-        // query's planning is affected.
-        val s = s0.newSession()
-        s0.conf.getAll.foreach { case (k, v) =>
-          try s.conf.set(k, v) catch { case _: Exception => () }
-        }
-        s.conf.set(org.apache.spark.sql.graft.GraftColumnarRule.bhjEnabledKey, "true")
+      (s, dir) => {
         import s.implicits._
-        // The columnar probe pipeline: scan → GraftColumnarFilter →
-        // GraftColumnarBHJ (probing Spark's own broadcast
-        // HashedRelation batch-at-a-time; stream columns zero-copy
-        // selection gathers, build columns materialized) →
-        // GraftColumnarGroupedAgg — the fact side never leaves
-        // ColumnarBatch until the partial-agg buffer rows cross the
-        // shuffle. avg(l_quantity) is an exact integer-sum/count;
-        // count/min/max are exact; nothing order-dependent.
+        // Inner broadcast join on Spark's codegen-fused BHJ (a columnar
+        // JVM probe measured ~1.65x slower and was removed): both sides
+        // are filtered on ColumnarBatch below the join, the partial agg
+        // fuses into the join's codegen stage (no decimal money lane to
+        // pay for RowToColumnar), and the final agg runs columnar.
+        // avg(l_quantity) is an exact integer-sum/count; count/min/max
+        // are exact; nothing order-dependent.
         Tables.t(s, dir, "lineitem")
           .filter($"l_quantity" > 40.0)
           .select($"l_suppkey", $"l_orderkey", $"l_quantity")
@@ -412,33 +400,23 @@ object EngineQueries {
         FROM lineitem, supplier
         WHERE l_suppkey = s_suppkey AND l_quantity > 40
         GROUP BY s_nationkey ORDER BY s_nationkey"""),
-      doc = "Columnar broadcast hash join: batch-at-a-time probe of Spark's own broadcast HashedRelation (zero-copy stream gathers, materialized build columns) feeding the columnar grouped partial agg — the fact side stays columnar from scan to shuffle.")
+      doc = "Inner broadcast hash join on Spark's BHJ over the columnar filter: both sides are filtered on ColumnarBatch below the join, the partial aggregate fuses into the join's codegen stage and the final aggregate runs columnar.")
     ,
 
     QueryDef(
       "q154_columnar_existence_join",
-      (s0, dir) => {
+      (spark, dir) => {
         // IN-subquery inside a DISJUNCTION: RewritePredicateSubquery
         // can't turn this into a semi join (the other disjunct keeps
         // non-matching rows alive), so it plans an ExistenceJoin — the
-        // stream batch extended with one boolean column, consumed by
-        // the filter `exists OR l_quantity > 48`. The columnar probe
-        // appends the boolean vector zero-copy-over-stream; the
-        // disjunctive filter compiles in the columnar filter (boolean
-        // attribute leaf OR double comparison), so scan → existence
-        // probe → filter → grouped partial agg all run on
-        // ColumnarBatch. OPT-IN like q133 (cloned session): the A/B
-        // measured the probe 1.2-1.4x slower than the codegen-fused
-        // row pipeline — existence emits EVERY stream row, so there is
-        // no selection to pay back the lost fusion. At 100 TB: the
-        // subquery side is a filtered dim (broadcast), the fact side
-        // never shuffles before the partial agg — true on both paths.
-        val spark = s0.newSession()
-        s0.conf.getAll.foreach { case (k, v) =>
-          try spark.conf.set(k, v) catch { case _: Exception => () }
-        }
-        spark.conf.set(
-          org.apache.spark.sql.graft.GraftColumnarRule.existBhjEnabledKey, "true")
+        // stream rows extended with one boolean column, consumed by
+        // the filter `exists OR l_quantity > 48`. The join runs on
+        // Spark's codegen-fused BHJ (a columnar JVM probe measured
+        // 1.2-1.4x slower: existence emits every stream row, so there
+        // is no selection to pay back the lost fusion); the dim side
+        // is filtered columnar and the final agg runs columnar. At
+        // 100 TB: the subquery side is a filtered dim (broadcast), the
+        // fact side never shuffles before the partial agg.
         import spark.implicits._
         Tables.t(spark, dir, "part").filter($"p_size" < 8)
           .select($"p_partkey").createOrReplaceTempView("small_parts")
@@ -457,7 +435,7 @@ object EngineQueries {
         WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size < 8)
            OR l_quantity > 48
         GROUP BY l_returnflag ORDER BY l_returnflag"""),
-      doc = "Columnar EXISTENCE broadcast join (IN-subquery under a disjunction): the probe appends one boolean vector to the zero-copy stream batch and the disjunctive filter consumes it columnar — scan to partial agg on ColumnarBatch. Opt-in (cloned session): A/B measured 1.2-1.4x slower than the codegen-fused row pipeline since existence emits every stream row.")
+      doc = "Existence broadcast join (IN-subquery under a disjunction) on Spark's BHJ over the columnar filter: the subquery's dim side is filtered on ColumnarBatch, the exists-OR filter and partial aggregate fuse into the join's codegen stage, and the final aggregate runs columnar.")
     ,
 
     QueryDef(

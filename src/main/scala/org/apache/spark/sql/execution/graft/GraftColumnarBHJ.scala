@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.joins.HashedRelation
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.graft.{SelectedColumnVector, StringArrayVector}
+import org.apache.spark.sql.graft.SelectedColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
@@ -86,6 +86,12 @@ final class DoubleBuildVector(dt: DataType, values: Array[Double], nulls: Array[
   override def getChild(ordinal: Int): ColumnVector = nope
 }
 
+/** Hosts the probe-key helpers shared by the semi/anti broadcast probe
+  * and the shuffled hash joins (the sort and the window reuse the
+  * build-output vectors above): the build-output type families, the
+  * key-shape gate and the probe-side key getters. Inner and existence
+  * broadcast joins stay on Spark's codegen-fused BroadcastHashJoinExec
+  * (a JVM probe measured 1.65x and 1.2-1.4x slower there). */
 object GraftColumnarBHJExec {
   /** Long-family types a BUILD OUTPUT column may have (materialized
     * into the long lane of the match buffers). NOT a valid probe-key
@@ -116,9 +122,7 @@ object GraftColumnarBHJExec {
   // runs): bhj-semi-str a consistent 0.86-0.90x win; bhj-anti-str
   // parity (0.92-1.16x, median ~1.0, run-noise-dominated — anti emits
   // the complement so selection pays back less). Shares the semi
-  // gate's default-ON: win on semi, no loss on anti. Kept OFF the
-  // opt-in broadcast inner-probe gate, whose match-buffer cost
-  // dominates either way.
+  // gate's default-ON: win on semi, no loss on anti.
   /** Single-key types probed through a 1-field UnsafeRow against the
     * UnsafeHashedRelation Spark builds when the key cannot rewrite into
     * a long: default-collation strings and the date/time family
@@ -195,212 +199,11 @@ object GraftColumnarBHJExec {
   }
 }
 
-/** Columnar INNER broadcast hash join: probes Spark's own broadcast
-  * HashedRelation batch-at-a-time. Stream-side output columns are
-  * zero-copy [[SelectedColumnVector]] gathers over the input batch (a
-  * match index may repeat for one-to-many joins); build-side columns
-  * are materialized into primitive/reference arrays as matches are
-  * found (UTF8Strings point into the broadcast's stable memory — no
-  * copy). Restrictions, enforced by the planning rule: inner join, no
-  * residual condition, ONE integral equi-key ([[GraftColumnarBHJExec.probeKeyTypes]]
-  * — exactly the shape Spark builds a LongHashedRelation for), build
-  * columns of long/double/string families.
-  *
-  * Scale note: this node changes HOW a broadcast join executes, not
-  * WHAT shuffles — the build side is the same broadcast value the row
-  * join uses (shared across all columnar and row consumers on an
-  * executor), and the stream side stays columnar from the scan through
-  * the probe.
-  */
-case class GraftColumnarBHJExec(
-    output: Seq[Attribute],
-    streamKeyOrd: Int,
-    streamKeyType: DataType,
-    buildSideStruct: StructType,
-    streamOrBuild: Seq[Either[Int, Int]], // per output col: Left(streamOrd) | Right(buildOrd)
-    left: SparkPlan,
-    right: SparkPlan,
-    buildIsRight: Boolean)
-    extends BinaryExecNode {
-
-  private def streamPlan: SparkPlan = if (buildIsRight) left else right
-
-  /** The broadcast child. Spark's transition insertion assumes every
-    * child of a columnar node consumes ColumnarBatches and wraps the
-    * (row-producing) broadcast exchange in RowToColumnarExec; that node
-    * is never executed — we only need the exchange's broadcast value —
-    * so unwrap it here.
-    */
-  private def buildPlan: SparkPlan = {
-    val raw = if (buildIsRight) right else left
-    raw match {
-      case r: org.apache.spark.sql.execution.RowToColumnarExec => r.child
-      case p => p
-    }
-  }
-
-  override def supportsColumnar: Boolean = true
-  override def outputPartitioning = streamPlan.outputPartitioning
-
-  override lazy val metrics = Map(
-    "numBatches" -> SQLMetrics.createMetric(sparkContext, "number of batches"),
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-    "numProbedRows" -> SQLMetrics.createMetric(sparkContext, "number of probed rows"))
-
-  override def doExecuteColumnar(): RDD[ColumnarBatch] = {
-    val broadcastRel = buildPlan.executeBroadcast[HashedRelation]()
-    val keyOrd = streamKeyOrd
-    val keyDt = streamKeyType
-    val plan = streamOrBuild.toArray
-    val buildTypes = buildSideStruct.fields.map(_.dataType)
-    val (batchM, rowM, probeM) =
-      (metrics("numBatches"), metrics("numOutputRows"), metrics("numProbedRows"))
-
-    streamPlan.executeColumnar().mapPartitionsInternal { iter =>
-      val rel = broadcastRel.value.asReadOnlyCopy()
-      // growable match buffers, reused across batches
-      var cap = 1 << 10
-      var sel = new Array[Int](cap)
-      val nBuild = buildTypes.length
-      var buildL = Array.ofDim[Long](nBuild, cap)
-      var buildD = Array.ofDim[Double](nBuild, cap)
-      var buildS = Array.ofDim[UTF8String](nBuild, cap)
-      var buildN = Array.ofDim[Boolean](nBuild, cap)
-
-      def grow(newCap: Int): Unit = {
-        sel = java.util.Arrays.copyOf(sel, newCap)
-        var c = 0
-        while (c < nBuild) {
-          buildL(c) = java.util.Arrays.copyOf(buildL(c), newCap)
-          buildD(c) = java.util.Arrays.copyOf(buildD(c), newCap)
-          buildS(c) = java.util.Arrays.copyOf(buildS(c), newCap)
-          buildN(c) = java.util.Arrays.copyOf(buildN(c), newCap)
-          c += 1
-        }
-        cap = newCap
-      }
-
-      iter.flatMap { batch =>
-        val n = batch.numRows()
-        probeM.add(n)
-        val keys = batch.column(keyOrd)
-        // Sign-extending narrower integrals matches Spark's own
-        // rewriteKeyExpr Cast-to-Long on the build side. Only
-        // probeKeyTypes reach here (planning-rule gate).
-        val getKey: Int => Long = keyDt match {
-          case LongType => keys.getLong
-          case IntegerType => i => keys.getInt(i).toLong
-          case ShortType => i => keys.getShort(i).toLong
-          case ByteType => i => keys.getByte(i).toLong
-          case other => throw new IllegalStateException(s"bad key type $other")
-        }
-        def writeBuildRow(row: InternalRow, m: Int): Unit = {
-          var c = 0
-          while (c < nBuild) {
-            if (row.isNullAt(c)) { buildN(c)(m) = true }
-            else {
-              buildN(c)(m) = false
-              buildTypes(c) match {
-                case LongType | TimestampType | TimestampNTZType =>
-                  buildL(c)(m) = row.getLong(c)
-                case IntegerType | DateType => buildL(c)(m) = row.getInt(c).toLong
-                case ShortType => buildL(c)(m) = row.getShort(c).toLong
-                case ByteType => buildL(c)(m) = row.getByte(c).toLong
-                case BooleanType => buildL(c)(m) = if (row.getBoolean(c)) 1L else 0L
-                case DoubleType => buildD(c)(m) = row.getDouble(c)
-                case FloatType => buildD(c)(m) = row.getFloat(c).toDouble
-                // Decimal64 rides the long lane as its unscaled value
-                case d: DecimalType =>
-                  buildL(c)(m) = row.getDecimal(c, d.precision, d.scale).toUnscaledLong
-                case StringType => buildS(c)(m) = row.getUTF8String(c)
-                case other => throw new IllegalStateException(s"bad build type $other")
-              }
-            }
-            c += 1
-          }
-        }
-        def mkBatch(m: Int): ColumnarBatch = {
-          // snapshot the match buffers: downstream may hold the batch
-          // while we refill for the next one
-          val selOut = java.util.Arrays.copyOf(sel, m)
-          val cols = new Array[ColumnVector](plan.length)
-          var o = 0
-          while (o < plan.length) {
-            cols(o) = plan(o) match {
-              case scala.Left(sOrd) => new SelectedColumnVector(batch.column(sOrd), selOut)
-              case scala.Right(bOrd) =>
-                val nl = java.util.Arrays.copyOf(buildN(bOrd), m)
-                buildTypes(bOrd) match {
-                  case dt if GraftColumnarBHJExec.doubleFamily(dt) =>
-                    new DoubleBuildVector(dt, java.util.Arrays.copyOf(buildD(bOrd), m), nl, m)
-                  case StringType =>
-                    new StringArrayVector(java.util.Arrays.copyOf(buildS(bOrd), m), nl, m)
-                  case dt =>
-                    new LongBuildVector(dt, java.util.Arrays.copyOf(buildL(bOrd), m), nl, m)
-                }
-            }
-            o += 1
-          }
-          batchM.add(1); rowM.add(m)
-          new ColumnarBatch(cols, m)
-        }
-        // CHUNKED probe (the shuffled inner probe's scheme): buffers are
-        // bounded at maxBatchRows — a skewed build key (K duplicates)
-        // otherwise turns one input batch into a 4096*K-row unregistered
-        // ColumnarBatch. Probing suspends mid-match-iterator and resumes
-        // after each emission.
-        val chunk = GraftColumnarShuffledInnerJoinExec.maxBatchRows
-        new Iterator[ColumnarBatch] {
-          private var i = 0
-          private var liveIt: Iterator[InternalRow] = null
-          private var pending: ColumnarBatch = _
-          private def fill(): Unit = {
-            var m = 0
-            while (m < chunk && (liveIt != null || i < n)) {
-              if (liveIt == null) {
-                if (!keys.isNullAt(i)) liveIt = rel.get(getKey(i))
-                if (liveIt == null) i += 1
-              } else if (liveIt.hasNext) {
-                val row = liveIt.next()
-                if (m == cap) grow(cap * 2)
-                sel(m) = i
-                writeBuildRow(row, m)
-                m += 1
-              } else {
-                liveIt = null
-                i += 1
-              }
-            }
-            pending = if (m == 0) null else mkBatch(m)
-          }
-          override def hasNext: Boolean = {
-            while (pending == null && (liveIt != null || i < n)) fill()
-            pending != null
-          }
-          override def next(): ColumnarBatch = {
-            if (!hasNext) throw new NoSuchElementException
-            val b = pending; pending = null; b
-          }
-        }
-      }
-    }
-  }
-
-  /** Row fallback — the planner routes columnar (supportsColumnar). */
-  override protected def doExecute(): RDD[InternalRow] =
-    throw new UnsupportedOperationException(
-      "GraftColumnarBHJExec is columnar-only; the rule swaps whole BroadcastHashJoinExec nodes")
-
-  override protected def withNewChildrenInternal(
-      newLeft: SparkPlan, newRight: SparkPlan): GraftColumnarBHJExec =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Columnar LEFT SEMI / LEFT ANTI broadcast hash join: the join shapes
   * with NO build-side output — each stream row is emitted or skipped on
   * an existence probe, so the whole output batch is zero-copy
   * [[SelectedColumnVector]] gathers over the input batch (no match
-  * buffers, no build materialization at all — the cost that made the
+  * buffers, no build materialization at all — the cost that made an
   * inner columnar probe lose its A/B). Equi-key NULL semantics: a null
   * stream key never matches — dropped by SEMI, kept by ANTI (the
   * null-AWARE anti join variant is a different operator shape and stays
@@ -427,9 +230,11 @@ case class GraftColumnarSemiBHJExec(
     right: SparkPlan)
     extends BinaryExecNode {
 
-  /** Unwrap the never-executed RowToColumnarExec that transition
-    * insertion puts around the broadcast exchange (see
-    * [[GraftColumnarBHJExec.buildPlan]]). */
+  /** The broadcast child. Spark's transition insertion assumes every
+    * child of a columnar node consumes ColumnarBatches and wraps the
+    * (row-producing) broadcast exchange in RowToColumnarExec; that node
+    * is never executed — only the exchange's broadcast value is read —
+    * so unwrap it here. */
   private def buildPlan: SparkPlan = right match {
     case r: org.apache.spark.sql.execution.RowToColumnarExec => r.child
     case p => p
@@ -522,124 +327,5 @@ case class GraftColumnarSemiBHJExec(
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): GraftColumnarSemiBHJExec =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Boolean output vector for the existence probe (no nulls — exists is
-  * always definite). */
-final class BoolArrayVector(values: Array[Boolean], n: Int)
-    extends ColumnVector(BooleanType) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = false
-  override def numNulls: Int = 0
-  override def isNullAt(rowId: Int): Boolean = false
-  override def getBoolean(rowId: Int): Boolean = values(rowId)
-  private def nope = throw new UnsupportedOperationException("boolean-only vector")
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
-
-/** Columnar EXISTENCE broadcast hash join — the shape
-  * RewritePredicateSubquery plans for an IN/EXISTS predicate inside a
-  * disjunction: every stream row is EMITTED (never filtered), extended
-  * with one boolean `exists` column that the Filter above consumes
-  * (`exists OR other-condition`). Stream columns pass through
-  * zero-copy; the only materialization is one boolean array per batch,
-  * so like the semi/anti probe (and unlike the inner join) there is no
-  * build-side cost at all. OPT-IN (default off,
-  * spark.graft.columnar.existbhj.enabled): existence emits EVERY
-  * stream row, so unlike semi/anti there is no selection to pay back
-  * the lost whole-stage fusion — the A/B measured 1.2-1.4x slower than
-  * Spark's codegen-fused row pipeline at sf0.1, the same honesty call
-  * as the gated inner probe. Equi-key NULL semantics: a null stream key
-  * probes to exists=false (HashJoin.existenceJoin's anyNull check; the
-  * null-AWARE variants are rewritten to different operators before
-  * planning and never reach this shape).
-  *
-  * Same restrictions as the semi probe, rule-enforced: BuildRight, one
-  * integral equi-key ([[GraftColumnarBHJExec.probeKeyTypes]], the
-  * LongHashedRelation shape), no residual condition.
-  *
-  * Reference analogue: its hash join serde maps all Spark join types
-  * incl. existence (operators.scala join-type mapping, planner.rs).
-  */
-case class GraftColumnarExistenceBHJExec(
-    output: Seq[Attribute], // stream attributes :+ the exists boolean
-    streamKeyOrd: Int,
-    streamKeyType: DataType,
-    streamOrds: Seq[Int], // per non-exists output col: ordinal in the stream batch
-    left: SparkPlan,
-    right: SparkPlan)
-    extends BinaryExecNode {
-
-  private def buildPlan: SparkPlan = right match {
-    case r: org.apache.spark.sql.execution.RowToColumnarExec => r.child
-    case p => p
-  }
-
-  override def supportsColumnar: Boolean = true
-  override def outputPartitioning = left.outputPartitioning
-
-  override lazy val metrics = Map(
-    "numBatches" -> SQLMetrics.createMetric(sparkContext, "number of batches"),
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
-
-  override def doExecuteColumnar(): RDD[ColumnarBatch] = {
-    val broadcastRel = buildPlan.executeBroadcast[HashedRelation]()
-    val keyOrd = streamKeyOrd
-    val keyDt = streamKeyType
-    val ords = streamOrds.toArray
-    val (batchM, rowM) = (metrics("numBatches"), metrics("numOutputRows"))
-
-    left.executeColumnar().mapPartitionsInternal { iter =>
-      val rel = broadcastRel.value.asReadOnlyCopy()
-
-      iter.map { batch =>
-        val n = batch.numRows()
-        val keys = batch.column(keyOrd)
-        val getKey: Int => Long = keyDt match {
-          case LongType => keys.getLong
-          case IntegerType => i => keys.getInt(i).toLong
-          case ShortType => i => keys.getShort(i).toLong
-          case ByteType => i => keys.getByte(i).toLong
-          case other => throw new IllegalStateException(s"bad key type $other")
-        }
-        val exists = new Array[Boolean](n)
-        var i = 0
-        while (i < n) {
-          exists(i) = !keys.isNullAt(i) && {
-            val it = rel.get(getKey(i))
-            it != null && it.hasNext
-          }
-          i += 1
-        }
-        val cols = new Array[ColumnVector](ords.length + 1)
-        var o = 0
-        while (o < ords.length) { cols(o) = batch.column(ords(o)); o += 1 }
-        cols(ords.length) = new BoolArrayVector(exists, n)
-        batchM.add(1); rowM.add(n)
-        new ColumnarBatch(cols, n)
-      }
-    }
-  }
-
-  /** Row fallback — the planner routes columnar (supportsColumnar). */
-  override protected def doExecute(): RDD[InternalRow] =
-    throw new UnsupportedOperationException(
-      "GraftColumnarExistenceBHJExec is columnar-only; the rule swaps whole BroadcastHashJoinExec nodes")
-
-  override protected def withNewChildrenInternal(
-      newLeft: SparkPlan, newRight: SparkPlan): GraftColumnarExistenceBHJExec =
     copy(left = newLeft, right = newRight)
 }

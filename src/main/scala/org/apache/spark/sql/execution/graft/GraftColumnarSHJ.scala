@@ -195,13 +195,13 @@ case class GraftColumnarShuffledSemiJoinExec(
 /** Columnar INNER / LEFT OUTER shuffled hash join for the same
   * co-located layout as [[GraftColumnarShuffledSemiJoinExec]] (bucketed
   * columnar stream, shuffled row build): per-task HashedRelation build +
-  * the broadcast inner probe's match-buffer scheme (zero-copy stream
-  * gathers via selection vectors, build columns materialized per match).
+  * growable match buffers (zero-copy stream gathers via selection
+  * vectors, build columns materialized per match).
   * Default ON (spark.graft.columnar.shj.inner.enabled) after a winning
   * A/B: shj-inner-bkt median ~0.84x of the row ShuffledHashJoin across
   * ten session runs (0.74-0.93x typical; occasional load-noise outliers
-  * up to ~1.3x on a contended box). The broadcast inner
-  * probe lost its A/B (~1.65x, opt-in) because it displaces a fully
+  * up to ~1.3x on a contended box). A broadcast inner
+  * probe lost its A/B (~1.65x, since removed) because it displaces a fully
   * codegen-FUSED scan→join pipeline; here the row twin is not fused —
   * it already pays a ColumnarToRow of every stream row plus the same
   * per-task relation build — so avoiding the row materialization wins.
@@ -318,8 +318,7 @@ case class GraftColumnarShuffledInnerJoinExec(
       TaskContext.get().addTaskCompletionListener[Unit](_ => rel.close())
       buildM.add((System.nanoTime() - t0) / 1000000)
       val matchedKeys = if (isBuildOuter) new java.util.BitSet() else null
-      // growable match buffers, reused across batches (the broadcast
-      // inner probe's scheme)
+      // growable match buffers, reused across batches
       var cap = 1 << 10
       var sel = new Array[Int](cap)
       val nBuild = buildTypes.length

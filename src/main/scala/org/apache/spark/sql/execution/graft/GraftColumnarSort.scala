@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.graft.{SelectedColumnVector, StringArrayVector}
+import org.apache.spark.sql.graft.SelectedColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
@@ -87,16 +87,8 @@ case class GraftColumnarSortExec(
   import GraftColumnarSortExec._
 
   override def doExecuteColumnar(): RDD[ColumnarBatch] = {
-    val colTypes0 = child.output.map(_.dataType).toArray
-    val specs0 = keys.toArray
-    val kgEnabled = conf.getConfString(keyGatherKey, "false").toBoolean
-    if (kgEnabled && specs0.map(_.col).distinct.length < colTypes0.length) {
-      keyGatherPath(colTypes0, specs0)
-    } else bufferedPath(colTypes0, specs0)
-  }
-
-  private def bufferedPath(
-      colTypes: Array[DataType], specs: Array[TopKKeySpec]): RDD[ColumnarBatch] = {
+    val colTypes = child.output.map(_.dataType).toArray
+    val specs = keys.toArray
     val spillThreshold = conf.getConfString(
       spillThresholdKey, defaultSpillThreshold.toString).toLong
     val (inM, batchM, timeM) =
@@ -227,187 +219,6 @@ case class GraftColumnarSortExec(
     }
   }
 
-  /** EXPERIMENTAL key+gather hybrid
-    * (spark.graft.columnar.sort.keygather.enabled, default OFF): only
-    * the KEY columns buffer in memory; every non-key column streams to
-    * an uncompressed row file as batches arrive (sequential write),
-    * the (key, row-id) index sorts as usual, and emission gathers
-    * non-key slots from an mmap of the file in sorted order (random
-    * page-cache reads). The wide-row experiment the residual
-    * 1.38-1.40x buffered-path loss motivates: memory holds keys only,
-    * so the 16-column case stops paying JVM-array buffering for
-    * columns the sort never compares.
-    *
-    * MEASURED (FilterMicroBench sortkg-*, sf0.1, 3 runs of min-of-5,
-    * full-width lineitem, vs the row SortExec): keygather 1.83-2.27x
-    * (1-key) and 1.51-1.72x (2-key) — clearly WORSE than both the row
-    * path and the buffered columnar path (0.89-1.22x on the same
-    * runs): even with the file fully page-cache-resident, the per-slot
-    * encode on write plus the random-order per-slot decode on gather
-    * costs more than buffering every column in JVM arrays ever did,
-    * and neither beats the row path's single UnsafeRow copy. The
-    * hybrid's only value is memory headroom (keys-only footprint), so
-    * it stays OPT-IN and the wide-row default remains the row path —
-    * closing the round-9 "measure the key+gather hybrid" question with
-    * numbers. Single-mmap bound: one partition's non-key bytes must
-    * fit 2 GiB (MappedByteBuffer limit — acceptable for an opt-in
-    * experiment).
-    */
-  private def keyGatherPath(
-      colTypes: Array[DataType], specs: Array[TopKKeySpec]): RDD[ColumnarBatch] = {
-    val (inM, batchM, timeM) =
-      (metrics("numInputRows"), metrics("numBatches"), metrics("sortTime"))
-    val bytesM = metrics("spillBytes")
-    child.executeColumnar().mapPartitionsInternal { batches =>
-      val kinds = colTypes.map(kindOf)
-      val keyOrds: Array[Int] = specs.map(_.col).distinct.sorted
-      val keyPos = keyOrds.zipWithIndex.toMap
-      val nonKey: Array[Int] = colTypes.indices.filterNot(keyOrds.contains(_)).toArray
-      val keyBufs: Array[ColBuf] = keyOrds.map(o => newBuf(colTypes(o)))
-      val file =
-        if (org.apache.spark.SparkEnv.get != null) {
-          org.apache.spark.SparkEnv.get.blockManager.diskBlockManager.createTempLocalBlock()._2
-        } else java.io.File.createTempFile("graft-sort-kg", ".rows")
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => file.delete()))
-      val counting = new CountingOutputStream(
-        new java.io.BufferedOutputStream(new java.io.FileOutputStream(file), 1 << 16))
-      val out = new java.io.DataOutputStream(counting)
-      var offsets = new Array[Long](1 << 12)
-      var n = 0
-      def longOf(v: ColumnVector, dt: DataType, i: Int): Long = dt match {
-        case ByteType => v.getByte(i).toLong
-        case ShortType => v.getShort(i).toLong
-        case IntegerType | DateType => v.getInt(i).toLong
-        case BooleanType => if (v.getBoolean(i)) 1L else 0L
-        case d: DecimalType => v.getDecimal(i, d.precision, d.scale).toUnscaledLong
-        case _ => v.getLong(i)
-      }
-      batches.foreach { batch =>
-        val rows = batch.numRows()
-        inM.add(rows)
-        var c = 0
-        while (c < keyOrds.length) { keyBufs(c).append(batch.column(keyOrds(c)), rows); c += 1 }
-        val nkCols = nonKey.map(batch.column)
-        var i = 0
-        while (i < rows) {
-          if (n == offsets.length) offsets = java.util.Arrays.copyOf(offsets, offsets.length * 2)
-          offsets(n) = counting.count
-          var k = 0
-          while (k < nonKey.length) {
-            val v = nkCols(k)
-            val dt = colTypes(nonKey(k))
-            val nl = v.isNullAt(i)
-            out.writeBoolean(nl)
-            if (!nl) kinds(nonKey(k)) match {
-              case 0 => out.writeLong(longOf(v, dt, i))
-              case 1 => out.writeDouble(
-                if (dt == FloatType) v.getFloat(i).toDouble else v.getDouble(i))
-              case _ =>
-                val b = v.getUTF8String(i).getBytes
-                out.writeInt(b.length)
-                out.write(b)
-            }
-            k += 1
-          }
-          i += 1
-          n += 1
-        }
-      }
-      out.close()
-      bytesM.add(file.length())
-      if (n == 0) Iterator.empty
-      else {
-        val idx = new Array[Int](n)
-        var i = 0
-        while (i < n) { idx(i) = i; i += 1 }
-        val t0 = System.nanoTime()
-        sortIndices(idx, n, specs, specs.map(s => keyBufs(keyPos(s.col))))
-        timeM.add((System.nanoTime() - t0) / 1000000)
-        val ch = java.nio.channels.FileChannel.open(
-          file.toPath, java.nio.file.StandardOpenOption.READ)
-        // single-map bound: offsets index the one mapped buffer with an
-        // Int, so a partition whose non-key bytes exceed 2 GiB cannot
-        // take this path — name the opt-in config instead of surfacing
-        // the raw NIO IllegalArgumentException the oversized map() throws
-        if (ch.size() > Int.MaxValue) {
-          ch.close()
-          throw new IllegalStateException(
-            s"graft key-gather sort: partition non-key row file is ${file.length()} bytes, " +
-              s"over the 2 GiB single-map bound of this experimental path — disable " +
-              s"$keyGatherKey (default off) or raise spark.sql.files.maxPartitionBytes " +
-              "granularity so per-task partitions shrink")
-        }
-        val mapped = ch.map(java.nio.channels.FileChannel.MapMode.READ_ONLY, 0, ch.size())
-        ch.close()
-        val keyVectors = keyBufs.map(_.vector())
-        new Iterator[ColumnarBatch] {
-          private var off = 0
-          override def hasNext: Boolean = off < n
-          override def next(): ColumnarBatch = {
-            val len = math.min(batchRows, n - off)
-            val sel = java.util.Arrays.copyOfRange(idx, off, off + len)
-            off += len
-            val cols = new Array[ColumnVector](colTypes.length)
-            var c = 0
-            while (c < keyOrds.length) {
-              cols(keyOrds(c)) = new SelectedColumnVector(keyVectors(c), sel)
-              c += 1
-            }
-            // gather non-key slots from the mapped row file
-            val nulls = Array.ofDim[Boolean](nonKey.length, len)
-            val longs = nonKey.map(o => if (kinds(o) == 0) new Array[Long](len) else null)
-            val dbls = nonKey.map(o => if (kinds(o) == 1) new Array[Double](len) else null)
-            var strBytes = nonKey.map(o => if (kinds(o) == 2) new Array[Byte](1 << 12) else null)
-            val strUsed = new Array[Int](nonKey.length)
-            val strOffs = nonKey.map(o => if (kinds(o) == 2) new Array[Int](len) else null)
-            val strLens = nonKey.map(o => if (kinds(o) == 2) new Array[Int](len) else null)
-            var m = 0
-            while (m < len) {
-              var pos = offsets(sel(m)).toInt
-              var k = 0
-              while (k < nonKey.length) {
-                val nl = mapped.get(pos) != 0
-                pos += 1
-                nulls(k)(m) = nl
-                if (!nl) kinds(nonKey(k)) match {
-                  case 0 => longs(k)(m) = mapped.getLong(pos); pos += 8
-                  case 1 => dbls(k)(m) = mapped.getDouble(pos); pos += 8
-                  case _ =>
-                    val blen = mapped.getInt(pos); pos += 4
-                    if (strUsed(k) + blen > strBytes(k).length) {
-                      strBytes(k) = java.util.Arrays.copyOf(strBytes(k),
-                        math.max(strBytes(k).length * 2, strUsed(k) + blen))
-                    }
-                    mapped.get(pos, strBytes(k), strUsed(k), blen)
-                    pos += blen
-                    strOffs(k)(m) = strUsed(k)
-                    strLens(k)(m) = blen
-                    strUsed(k) += blen
-                }
-                k += 1
-              }
-              m += 1
-            }
-            var k = 0
-            while (k < nonKey.length) {
-              val o = nonKey(k)
-              cols(o) = kinds(o) match {
-                case 0 => new LongBuildVector(colTypes(o), longs(k), nulls(k), len)
-                case 1 => new DoubleBuildVector(colTypes(o), dbls(k), nulls(k), len)
-                case _ => new ByteSliceStringVector(
-                  strBytes(k), strOffs(k), strLens(k), nulls(k), len)
-              }
-              k += 1
-            }
-            batchM.add(1)
-            new ColumnarBatch(cols, len)
-          }
-        }
-      }
-    }
-  }
-
   /** Row fallback — present for completeness; the planner routes through
     * columnar (supportsColumnar).
     */
@@ -434,26 +245,6 @@ object GraftColumnarSortExec {
     * buffers = 4 MiB per task — comfortably inside executor memory
     * even at 32 concurrent tasks, and far under any fd ulimit. */
   val mergeFanIn = 64
-
-  /** EXPERIMENTAL wide-row hybrid: buffer keys only, stream non-key
-    * columns to a row file, gather from an mmap at emission. Measured a
-    * clear LOSS vs both the row and buffered paths (1.5-2.3x; see
-    * keyGatherPath's scaladoc) — stays opt-in, kept as the answered
-    * experiment. */
-  val keyGatherKey = "spark.graft.columnar.sort.keygather.enabled"
-
-  /** Logical byte position of a buffered stream (placed ABOVE the
-    * buffer so `count` is the write offset, not the flushed count). */
-  private[graft] final class CountingOutputStream(under: java.io.OutputStream)
-      extends java.io.OutputStream {
-    var count = 0L
-    override def write(b: Int): Unit = { under.write(b); count += 1 }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      under.write(b, off, len); count += len
-    }
-    override def flush(): Unit = under.flush()
-    override def close(): Unit = under.close()
-  }
 
   /** Buffered-bytes threshold above which the partition spills a sorted
     * run to disk (a spill is also forced by task-memory refusal

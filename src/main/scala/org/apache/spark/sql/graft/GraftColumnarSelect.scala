@@ -152,62 +152,12 @@ case class GraftColumnarRule(session: SparkSession) extends ColumnarRule {
           case Left(reason) => f.setTagValue(fallbackReasonTag, reason); f
         }
 
-      // Columnar INNER broadcast hash join: one INTEGRAL equi-key
-      // (the only shape Spark builds a LongHashedRelation for —
-      // HashJoin.canRewriteAsLongType), no residual condition,
-      // supported build output types. The probe
-      // consumes the SAME broadcast HashedRelation the row join would.
-      // OPT-IN (default off): the A/B bench showed the JVM scalar probe
-      // loses to Spark's codegen-FUSED row BHJ across the suite (~65%
-      // slower stage-for-stage) — the reference's native probe wins on
-      // SIMD + fused vectorized pipelines, which a JVM loop over
-      // per-row virtual calls cannot match. Kept as a correct,
-      // A/B-verified demonstrator behind its own flag (the reference's
-      // per-operator spark.comet.exec.*.enabled pattern).
-      case j @ joins.BroadcastHashJoinExec(
-          Seq(lk), Seq(rk), org.apache.spark.sql.catalyst.plans.Inner,
-          side, None, left, right, false) if bhjEnabled(session) =>
-        val buildIsRight = side == org.apache.spark.sql.catalyst.optimizer.BuildRight
-        val stream = if (buildIsRight) left else right
-        val build = if (buildIsRight) right else left
-        val streamKey = if (buildIsRight) lk else rk
-        // Probe keys: integral types ONLY (Byte/Short/Int/Long) — the
-        // shapes HashJoin.canRewriteAsLongType builds a
-        // LongHashedRelation for. Date/Timestamp/Boolean keys broadcast
-        // an UnsafeHashedRelation (get(Long) throws) → row path.
-        def probeKey(dt: org.apache.spark.sql.types.DataType) =
-          org.apache.spark.sql.execution.graft.GraftColumnarBHJExec.probeKeyTypes(dt)
-        (streamKey, stream.supportsColumnar) match {
-          case (a: AttributeReference, true)
-              if probeKey(a.dataType) &&
-                stream.output.exists(_.exprId == a.exprId) &&
-                build.output.forall(at => org.apache.spark.sql.execution.graft
-                  .GraftColumnarBHJExec.supportedBuildType(at.dataType)) =>
-            val streamOrBuild = j.output.map { at =>
-              val s = stream.output.indexWhere(_.exprId == at.exprId)
-              if (s >= 0) scala.Left(s)
-              else scala.Right(build.output.indexWhere(_.exprId == at.exprId))
-            }
-            org.apache.spark.sql.execution.graft.GraftColumnarBHJExec(
-              j.output,
-              stream.output.indexWhere(_.exprId == a.exprId),
-              a.dataType,
-              org.apache.spark.sql.types.StructType(build.output.map(at =>
-                org.apache.spark.sql.types.StructField(at.name, at.dataType, at.nullable))),
-              streamOrBuild, left, right, buildIsRight)
-          case (_, true) =>
-            j.setTagValue(fallbackReasonTag,
-              "broadcast join not columnar-probeable (needs a single integral " +
-                "attribute key — LongHashedRelation shape — and supported build " +
-                "column types)"); j
-          case _ => j
-        }
-
       // Columnar LEFT SEMI / LEFT ANTI broadcast join: no build-side
       // output, so the probe is a pure existence filter over the stream
       // batch (zero-copy selection vectors, no match-buffer
-      // materialization — the cost that made the inner probe lose its
-      // A/B). Key gate: integral (LongHashedRelation) OR string
+      // materialization — the cost that made an inner probe lose its
+      // A/B to Spark's codegen-fused BHJ, which inner joins keep). Key
+      // gate: integral (LongHashedRelation) OR string
       // (UnsafeHashedRelation, the dedup anti-join shape); the
       // null-aware anti variant (isNullAwareAntiJoin=true) stays on
       // the row path.
@@ -337,41 +287,6 @@ case class GraftColumnarRule(session: SparkSession) extends ColumnarRule {
               "inner/outer shuffled join not columnar-probeable (needs " +
                 "integral attribute keys packing into 8 bytes or a single " +
                 "string/date/timestamp key, and supported build column types)"); j
-          case _ => j
-        }
-
-      // Columnar EXISTENCE broadcast join (IN/EXISTS inside a
-      // disjunction — RewritePredicateSubquery's ExistenceJoin): like
-      // semi/anti there is no build-side output, so the probe appends
-      // one boolean vector to the zero-copy stream batch; the Filter
-      // above consumes `exists OR ...` (boolean attribute leaves are a
-      // supported columnar-filter shape, so the whole pipeline stays
-      // on batches). OPT-IN (default off): unlike semi/anti, the probe
-      // REDUCES nothing — every stream row is emitted — so the A/B
-      // measured it 1.2-1.4x slower than Spark's codegen-fused row
-      // pipeline (scan→join→filter→agg in one stage) at sf0.1. Same
-      // honesty call as the inner BHJ: correct, demonstrated, gated.
-      case j @ joins.BroadcastHashJoinExec(
-          Seq(lk @ _), Seq(_),
-          org.apache.spark.sql.catalyst.plans.ExistenceJoin(_),
-          org.apache.spark.sql.catalyst.optimizer.BuildRight,
-          None, left, right, false) if existBhjEnabled(session) =>
-        def probeKeyEx(dt: org.apache.spark.sql.types.DataType) =
-          org.apache.spark.sql.execution.graft.GraftColumnarBHJExec.probeKeyTypes(dt)
-        (lk, left.supportsColumnar) match {
-          case (a: AttributeReference, true)
-              if probeKeyEx(a.dataType) && left.output.exists(_.exprId == a.exprId) &&
-                j.output.init.forall(at => left.output.exists(_.exprId == at.exprId)) =>
-            org.apache.spark.sql.execution.graft.GraftColumnarExistenceBHJExec(
-              j.output,
-              left.output.indexWhere(_.exprId == a.exprId),
-              a.dataType,
-              j.output.init.map(at => left.output.indexWhere(_.exprId == at.exprId)),
-              left, right)
-          case (_, true) =>
-            j.setTagValue(fallbackReasonTag,
-              "existence broadcast join not columnar-probeable (needs a single " +
-                "integral attribute key — LongHashedRelation shape)"); j
           case _ => j
         }
 
@@ -2029,13 +1944,6 @@ object GraftColumnarRule {
   def windowAggEnabled(session: SparkSession): Boolean =
     session.conf.getOption(windowAggEnabledKey).forall(_.toBoolean)
 
-  /** The columnar broadcast-join probe is opt-in (see the rule case):
-    * correct and A/B-verified, but measurably slower than Spark's
-    * codegen-fused row BHJ, so it must never swap by default. */
-  val bhjEnabledKey = "spark.graft.columnar.bhj.enabled"
-  def bhjEnabled(session: SparkSession): Boolean =
-    session.conf.getOption(bhjEnabledKey).exists(_.toBoolean)
-
   /** Accept a ROW-based child for the partial aggregation swaps (the
     * transitions rule then inserts Spark's RowToColumnarExec below the
     * kernel): the TPC-H join→aggregate shape, where the partial agg's
@@ -2074,24 +1982,15 @@ object GraftColumnarRule {
   def finalAggEnabled(session: SparkSession): Boolean =
     session.conf.getOption(finalAggEnabledKey).forall(_.toBoolean)
 
-  /** Columnar SEMI/ANTI broadcast-join probe — unlike the inner probe
-    * (opt-in: measured loss), the semi/anti probe has no build-side
+  /** Columnar SEMI/ANTI broadcast-join probe — unlike an inner probe
+    * (a measured loss; inner and existence broadcast joins stay on
+    * Spark's BHJ), the semi/anti probe has no build-side
     * materialization AND reduces rows at the probe; its A/B won, so it
     * defaults ON (see README).
     */
   val semiBhjEnabledKey = "spark.graft.columnar.semibhj.enabled"
   def semiBhjEnabled(session: SparkSession): Boolean =
     session.conf.getOption(semiBhjEnabledKey).forall(_.toBoolean)
-
-  /** Columnar EXISTENCE broadcast-join probe — OPT-IN (default off):
-    * the probe emits every stream row (no selection to amortize the
-    * batch overhead), and the A/B measured it 1.2-1.4x slower than the
-    * codegen-fused row pipeline. Correct and pinned (q154 opts in on a
-    * cloned session); kept gated like the inner BHJ.
-    */
-  val existBhjEnabledKey = "spark.graft.columnar.existbhj.enabled"
-  def existBhjEnabled(session: SparkSession): Boolean =
-    session.conf.getOption(existBhjEnabledKey).exists(_.toBoolean)
 
   /** Columnar partial WindowGroupLimit — default ON (A/B at sf0.1:
     * 0.18x-0.96x across group cardinalities, see the exec's scaladoc):
@@ -2119,8 +2018,8 @@ object GraftColumnarRule {
 
   /** Columnar INNER shuffled hash join — default ON after a winning A/B
     * (median ~0.84x across ten session runs, 0.74-0.93x typical; see
-    * GraftColumnarShuffledInnerJoinExec's scaladoc). Unlike the
-    * broadcast inner probe (opt-in, 1.65x LOSS), the co-located-stream
+    * GraftColumnarShuffledInnerJoinExec's scaladoc). Unlike a
+    * broadcast inner probe (measured 1.65x LOSS), the co-located-stream
     * SHJ's row twin is not a fused scan pipeline — it already pays
     * ColumnarToRow on every stream row plus the same per-task relation
     * build — so the zero-copy stream gathers win here.
@@ -2136,7 +2035,7 @@ object GraftColumnarRule {
     * the residual cost is buffering every output column, which the
     * reference escapes natively (arena + SIMD), not the sort loop.
     * Correct, parity-tested, demonstrated (q164 opts in on a cloned
-    * session) — the same honesty call as the gated inner BHJ.
+    * session).
     */
   val sortEnabledKey = "spark.graft.columnar.sort.enabled"
   def sortEnabled(session: SparkSession): Boolean =

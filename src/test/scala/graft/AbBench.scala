@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** r16 interleaved same-JVM A/B: run one query N times alternating a
   * session conf between two values, print per-arm times and mins. The
   * only comparison this box's ±30% session drift can't fool (the r15
@@ -16,14 +14,7 @@ object AbBench {
     val n = if (args.length > 4) args(4).toInt else 6
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config(Tables.eventsReadConf._1, Tables.eventsReadConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     // warmup both arms once (codegen/classload)

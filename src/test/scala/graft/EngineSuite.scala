@@ -388,35 +388,6 @@ class EngineSuite extends GraftTestBase {
     }
   }
 
-  test("columnar sort key+gather hybrid (opt-in): wide-row parity incl. strings + nulls") {
-    import org.apache.spark.sql.graft.GraftColumnarRule
-    import org.apache.spark.sql.execution.graft.GraftColumnarSortExec
-    val dir = java.nio.file.Files.createTempDirectory("graft-sortkg").toString
-    (1 to 25000).map { i =>
-      (i.toLong,
-        if (i % 7 == 0) None else Some(s"v_${i % 311}_${"y" * (i % 17)}"),
-        if (i % 11 == 0) None else Some(i * 1.5 - 999),
-        (i % 127).toShort, i % 2 == 0,
-        if (i % 13 == 0) None else Some((i * 31 % 100000).toLong))
-    }.toDF("k", "s", "d", "sh", "b", "l2")
-      .repartition(1).write.mode("overwrite").parquet(dir)
-    def qq() = spark.read.parquet(dir).sortWithinPartitions($"k".desc)
-    val kg = withSQLConf(
-      GraftColumnarRule.sortEnabledKey -> "true",
-      GraftColumnarSortExec.keyGatherKey -> "true") {
-      val df = qq()
-      val rows = df.collect()
-      assert(findExec(df) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
-      }.isDefined)
-      rows
-    }
-    val row = withSQLConf(
-      GraftColumnarRule.sortEnabledKey -> "false",
-      GraftColumnarRule.narrowSortEnabledKey -> "false") { qq().collect() }
-    assert(kg.toSeq == row.toSeq, "key+gather sort diverged from the row sort")
-  }
-
   test("columnar sort multi-pass merge: run count above the fan-in cap stays correct") {
     import org.apache.spark.sql.graft.GraftColumnarRule
     import org.apache.spark.sql.execution.graft.GraftColumnarSortExec
@@ -2831,47 +2802,6 @@ class EngineSuite extends GraftTestBase {
     }
   }
 
-  test("GraftColumnarBHJExec matches the row join incl. null keys, dup build keys, misses") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-colbhj").toString
-    // stream: some keys null, some missing from build, some matching dups
-    Seq(
-      (1L, Option(10L), 1.5), (2L, Option(20L), 2.5), (3L, Option.empty[Long], 3.5),
-      (4L, Option(99L), 4.5), (5L, Option(10L), 5.5), (6L, Option(30L), 6.5))
-      .toDF("id", "k", "v").write.mode("overwrite").parquet(s"$dir/stream")
-    // build: key 10 duplicated (one-to-many), 20/30 unique, null-able cols
-    Seq(
-      (10L, Option("a"), Option(1)), (10L, Option("b"), Option.empty[Int]),
-      (20L, Option.empty[String], Option(3)), (30L, Option("d"), Option(4)))
-      .toDF("bk", "tag", "m").write.mode("overwrite").parquet(s"$dir/build")
-    def join(hint: Boolean) = {
-      val st = spark.read.parquet(s"$dir/stream")
-      val bd = spark.read.parquet(s"$dir/build")
-      st.join(if (hint) broadcast(bd) else bd, $"k" === $"bk", "inner")
-        .select($"id", $"k", $"v", $"tag", $"m")
-    }
-    withSQLConf(org.apache.spark.sql.graft.GraftColumnarRule.bhjEnabledKey -> "true") {
-      val cdf = join(true)
-      val on = canon(cdf)
-      assert(findExec(cdf) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarBHJExec => e
-      }.isDefined, s"expected columnar BHJ in:\n${cdf.queryExecution.executedPlan}")
-      val off = withSQLConf(
-        org.apache.spark.sql.graft.GraftColumnarRule.enabledKey -> "false") {
-        canon(join(true))
-      }
-      assert(on == off, s"columnar=$on row=$off")
-      // 6 output rows: id1 x2 (dup build key), id2, id5 x2, id6; id3 null
-      // key and id4 missing key drop
-      assert(cdf.count() == 6)
-    }
-    // default OFF: without the opt-in flag the row BHJ must plan
-    val row = join(true)
-    row.collect()
-    assert(findExec(row) {
-      case e: org.apache.spark.sql.execution.graft.GraftColumnarBHJExec => e
-    }.isEmpty, s"columnar BHJ must be opt-in:\n${row.queryExecution.executedPlan}")
-  }
-
   test("GraftColumnarSemiBHJExec: semi/anti parity incl. null keys, misses, dup build keys") {
     val dir = java.nio.file.Files.createTempDirectory("graft-colsemi").toString
     Seq(
@@ -3408,61 +3338,6 @@ class EngineSuite extends GraftTestBase {
     }
   }
 
-  test("GraftColumnarExistenceBHJExec: IN-or-disjunction parity incl. null keys, int key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-colexist").toString
-    // long key table (null key → exists=false; dup build key counts once)
-    Seq(
-      (1L, Option(10L), 5.0), (2L, Option(20L), 50.0), (3L, Option.empty[Long], 60.0),
-      (4L, Option(99L), 1.0), (5L, Option(10L), 2.0), (6L, Option(30L), 70.0))
-      .toDF("id", "k", "v").write.mode("overwrite").parquet(s"$dir/stream")
-    Seq((10L, "a"), (10L, "b"), (30L, "d"), (77L, "e"))
-      .toDF("bk", "tag").write.mode("overwrite").parquet(s"$dir/build")
-    spark.read.parquet(s"$dir/stream").createOrReplaceTempView("ex_stream")
-    spark.read.parquet(s"$dir/build").createOrReplaceTempView("ex_build")
-    def q() = spark.sql(
-      "SELECT id FROM ex_stream WHERE k IN (SELECT bk FROM ex_build) OR v > 45.0")
-    // opt-in flag (A/B measured the probe slower than the fused row
-    // pipeline — default off)
-    withSQLConf(
-      org.apache.spark.sql.graft.GraftColumnarRule.existBhjEnabledKey -> "true") {
-      val cdf = q()
-      cdf.collect()
-      assert(findExec(cdf) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarExistenceBHJExec => e
-      }.isDefined, s"expected columnar existence BHJ in:\n${cdf.queryExecution.executedPlan}")
-      // matches via IN: 1,5 (k=10 dup build rows count once), 6 (k=30);
-      // via the disjunct: 2 (v=50), 3 (null key, v=60); dropped: 4
-      assert(q().collect().map(_.getLong(0)).sorted.sameElements(Array(1L, 2L, 3L, 5L, 6L)))
-      val on = canon(q().selectExpr("cast(id as string) c0"))
-      val off = withSQLConf(
-        org.apache.spark.sql.graft.GraftColumnarRule.enabledKey -> "false") {
-        canon(q().selectExpr("cast(id as string) c0"))
-      }
-      assert(on == off, s"columnar=$on row=$off")
-      // int key: probe must sign-extend to match the rewritten long build key
-      Seq((1L, Option(10), 5.0), (2L, Option(-7), 50.0), (3L, Option.empty[Int], 1.0))
-        .toDF("id", "k", "v").write.mode("overwrite").parquet(s"$dir/istream")
-      Seq(Tuple1(-7), Tuple1(10)).toDF("bk").write.mode("overwrite").parquet(s"$dir/ibuild")
-      spark.read.parquet(s"$dir/istream").createOrReplaceTempView("ex_istream")
-      spark.read.parquet(s"$dir/ibuild").createOrReplaceTempView("ex_ibuild")
-      def qi() = spark.sql(
-        "SELECT id FROM ex_istream WHERE k IN (SELECT bk FROM ex_ibuild) OR v > 100.0")
-      val idf = qi()
-      idf.collect()
-      assert(findExec(idf) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarExistenceBHJExec => e
-      }.isDefined, s"int key: expected columnar existence BHJ in:\n${idf.queryExecution.executedPlan}")
-      assert(qi().collect().map(_.getLong(0)).sorted.sameElements(Array(1L, 2L)))
-    }
-    // default (no flag): the row BHJ stays — the probe must never swap
-    // uninvited
-    val rdf = q()
-    rdf.collect()
-    assert(findExec(rdf) {
-      case e: org.apache.spark.sql.execution.graft.GraftColumnarExistenceBHJExec => e
-    }.isEmpty, "existence probe must be opt-in (default off)")
-  }
-
   test("GraftColumnarFinalAggExec merges buffers identically to the row final HashAggregate") {
     // all supported spec kinds at once, null keys, null-only groups,
     // multi-flush partials (tiny maxGroups forces duplicate buffer rows
@@ -3657,59 +3532,34 @@ class EngineSuite extends GraftTestBase {
   test("GraftColumnarBHJExec IntegerType key: sign-extended probe matches the Cast-to-Long build") {
     // Spark rewrites the single int build key to Cast(k, Long) — sign
     // extension. Negative keys are the case where a zero-extending
-    // probe would silently miss every match.
-    val dir = java.nio.file.Files.createTempDirectory("graft-colbhj-int").toString
+    // probe (packedKeyGetter's single-key getter) would silently miss
+    // every match.
+    val dir = java.nio.file.Files.createTempDirectory("graft-colsemi-int").toString
     Seq((1L, Option(-5), 1.5), (2L, Option(7), 2.5), (3L, Option.empty[Int], 3.5),
-      (4L, Option(-5), 4.5), (5L, Option(Int.MinValue), 5.5))
+      (4L, Option(-5), 4.5), (5L, Option(Int.MinValue), 5.5), (6L, Option(-6), 6.5))
       .toDF("id", "k", "v").write.mode("overwrite").parquet(s"$dir/stream")
     Seq((-5, Option("neg")), (7, Option("pos")), (Int.MinValue, Option("min")))
       .toDF("bk", "tag").write.mode("overwrite").parquet(s"$dir/build")
-    def join() = {
+    def join(tpe: String) = {
       val st = spark.read.parquet(s"$dir/stream")
       val bd = spark.read.parquet(s"$dir/build")
-      st.join(broadcast(bd), $"k" === $"bk", "inner").select($"id", $"k", $"v", $"tag")
+      st.join(broadcast(bd), $"k" === $"bk", tpe)
     }
-    withSQLConf(org.apache.spark.sql.graft.GraftColumnarRule.bhjEnabledKey -> "true") {
-      val cdf = join()
+    for (tpe <- Seq("left_semi", "left_anti")) {
+      val cdf = join(tpe)
       val on = canon(cdf)
       assert(findExec(cdf) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarBHJExec => e
-      }.isDefined, s"expected columnar BHJ on int key:\n${cdf.queryExecution.executedPlan}")
+        case e: org.apache.spark.sql.execution.graft.GraftColumnarSemiBHJExec => e
+      }.isDefined, s"$tpe: expected columnar probe on int key:\n${cdf.queryExecution.executedPlan}")
       val off = withSQLConf(
-        org.apache.spark.sql.graft.GraftColumnarRule.enabledKey -> "false") { canon(join()) }
-      assert(on == off, s"columnar=$on row=$off")
-      assert(cdf.count() == 4) // ids 1,2,4,5 match; id3 null key drops
+        org.apache.spark.sql.graft.GraftColumnarRule.enabledKey -> "false") { canon(join(tpe)) }
+      assert(on == off, s"$tpe: columnar=$on row=$off")
     }
-  }
-
-  test("GraftColumnarBHJExec DateType key: rule leaves the row BHJ (UnsafeHashedRelation shape)") {
-    // A date equi-key broadcasts an UnsafeHashedRelation (HashJoin
-    // .canRewriteAsLongType requires IntegralType); probing it with
-    // get(Long) throws. The gate must keep such joins on the row path
-    // even when the columnar BHJ is enabled — and tag why.
-    val dir = java.nio.file.Files.createTempDirectory("graft-colbhj-date").toString
-    def d(s: String) = java.sql.Date.valueOf(s)
-    Seq((1L, d("2024-01-01"), 1.5), (2L, d("2024-02-01"), 2.5))
-      .toDF("id", "k", "v").write.mode("overwrite").parquet(s"$dir/stream")
-    Seq((d("2024-01-01"), "jan"), (d("2024-02-01"), "feb"))
-      .toDF("bk", "tag").write.mode("overwrite").parquet(s"$dir/build")
-    withSQLConf(org.apache.spark.sql.graft.GraftColumnarRule.bhjEnabledKey -> "true") {
-      val st = spark.read.parquet(s"$dir/stream")
-      val bd = spark.read.parquet(s"$dir/build")
-      val df = st.join(broadcast(bd), $"k" === $"bk", "inner")
-        .select($"id", $"v", $"tag")
-      assert(df.collect().length == 2) // must EXECUTE, not crash
-      assert(findExec(df) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarBHJExec => e
-      }.isEmpty, s"date key must stay on the row BHJ:\n${df.queryExecution.executedPlan}")
-      val tagged = findExec(df) {
-        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-            if j.getTagValue(org.apache.spark.sql.graft.GraftColumnarRule.fallbackReasonTag).isDefined =>
-          j.getTagValue(org.apache.spark.sql.graft.GraftColumnarRule.fallbackReasonTag).get
-      }
-      assert(tagged.exists(_.contains("integral")),
-        s"expected integral-key fallback tag, got $tagged in:\n${df.queryExecution.executedPlan}")
-    }
+    // semi: ids 1,2,4,5 match; anti: id3 (null key) and id6 (missing key)
+    assert(join("left_semi").select($"id").collect().map(_.getLong(0)).sorted
+      .sameElements(Array(1L, 2L, 4L, 5L)))
+    assert(join("left_anti").select($"id").collect().map(_.getLong(0)).sorted
+      .sameElements(Array(3L, 6L)))
   }
 
   test("observe() surfaces per-query metrics without a second pass") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.GraftColumnarRule
 
 /** A/B micro-bench: the same filter shapes with the columnar swap on vs
@@ -10,14 +9,7 @@ import org.apache.spark.sql.graft.GraftColumnarRule
 object FilterMicroBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config(Tables.eventsReadConf._1, Tables.eventsReadConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -721,29 +713,6 @@ object FilterMicroBench {
       val on = timeIt(f)
       spark.conf.unset(GraftColumnarRule.narrowSortEnabledKey)
       println(f"MICRO $name%-14s row=$off%.3fs columnar=$on%.3fs ratio=${on / off}%.2f")
-    }
-
-    // Wide-row key+gather hybrid (EXPERIMENTAL, opt-in): three-way —
-    // row SortExec vs buffered columnar vs keys-in-memory +
-    // non-key-columns-on-disk gather
-    val kgShapes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "sortkg-1key" -> (() =>
-        Tables.t(spark, sfDir, "lineitem").sortWithinPartitions($"l_orderkey")),
-      "sortkg-2key" -> (() =>
-        Tables.t(spark, sfDir, "lineitem")
-          .sortWithinPartitions($"l_extendedprice".desc, $"l_orderkey")))
-    sel(kgShapes).foreach { case (name, f) =>
-      import org.apache.spark.sql.execution.graft.GraftColumnarSortExec
-      spark.conf.set(GraftColumnarRule.sortEnabledKey, "false")
-      spark.conf.set(GraftColumnarRule.narrowSortEnabledKey, "false")
-      val row = timeIt(f)
-      spark.conf.set(GraftColumnarRule.sortEnabledKey, "true")
-      val buffered = timeIt(f)
-      spark.conf.set(GraftColumnarSortExec.keyGatherKey, "true")
-      val kg = timeIt(f)
-      spark.conf.unset(GraftColumnarSortExec.keyGatherKey)
-      spark.conf.set(GraftColumnarRule.sortEnabledKey, "false")
-      println(f"MICRO $name%-14s row=$row%.3fs buffered=$buffered%.3fs (${buffered / row}%.2fx) keygather=$kg%.3fs (${kg / row}%.2fx)")
     }
 
     // Shuffled semi/anti probe over a bucketed stream (vs the row SHJ on

@@ -10,15 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * change results).
   */
 object GraftTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-    .config(Tables.eventsReadConf._1, Tables.eventsReadConf._2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(4, Seq("spark.app.name" -> "graft-test"))
 
   /** Data-root convention: every fixture dir hangs off one root
     * (override with SPARK_GRAFT_DATA_ROOT on machines with the parquet

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** r16 scratch: which inventory queries still execute a key-mapped
   * keys-only aggregate (GraftColumnarGroupedAggExec.keyOut non-empty)?
   * Test scope.
@@ -13,14 +11,7 @@ object KeyOutProbe {
         "q116_decontamination", "q156_winnowing_dedup", "q46_dedup_ngram_jaccard",
         "q74_llm_prep_pipeline", "q108_dedup_clusters", "q115_corpus_span_dedup")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config(Tables.eventsReadConf._1, Tables.eventsReadConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(8)
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -26,15 +26,42 @@ class PlanAssertionSuite extends GraftTestBase {
     */
   /** Every node of the executed plan, descending into AQE's final plan
     * and its query stages. */
-  private def nodesOf(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
+  private def nodesOf(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    nodesUnder(df.queryExecution.executedPlan)
+
+  /** `n` and every node below it, through AQE wrappers and stages. */
+  private def nodesUnder(
+      n: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def deep(n: SparkPlan): Seq[SparkPlan] = n match {
-      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-      case q: QueryStageExec => deep(q.plan)
-      case other => other +: other.children.flatMap(deep)
+    n match {
+      case a: AdaptiveSparkPlanExec => nodesUnder(a.executedPlan)
+      case q: QueryStageExec => nodesUnder(q.plan)
+      case other => other +: other.children.flatMap(nodesUnder)
     }
-    deep(df.queryExecution.executedPlan)
+  }
+
+  /** Pin for the inner and existence broadcast joins, which stay on
+    * Spark's BHJ: the join node is Spark's, a columnar filter feeds it,
+    * no graft broadcast probe other than semi/anti plans, and the final
+    * aggregate above the shuffle runs columnar. The partial aggregate
+    * over the join's rows stays on Spark's fused codegen (no decimal
+    * money lane to pay for RowToColumnar). */
+  private def assertSparkBhjOverColumnarFilter(name: String): Unit = {
+    val df = run(name)
+    df.collect()
+    val nodes = nodesOf(df)
+    val plan = df.queryExecution.executedPlan
+    val bhjs = nodes.collect { case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j }
+    assert(bhjs.nonEmpty, s"$name: expected Spark's BroadcastHashJoinExec in:\n$plan")
+    assert(bhjs.exists(j => nodesUnder(j).exists(
+      _.isInstanceOf[org.apache.spark.sql.graft.GraftColumnarFilterExec])),
+      s"$name: expected a GraftColumnarFilter below the broadcast join in:\n$plan")
+    assert(!nodes.exists(n => n.nodeName.startsWith("GraftColumnarBHJ") ||
+      n.nodeName.startsWith("GraftColumnarExistenceBHJ")),
+      s"$name: no graft inner/existence broadcast probe may plan:\n$plan")
+    assert(nodes.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.graft.GraftColumnarFinalAggExec]),
+      s"$name: expected the columnar final agg above the shuffle in:\n$plan")
   }
 
   private def runFullPlan(name: String): DataFrame = {
@@ -194,16 +221,8 @@ class PlanAssertionSuite extends GraftTestBase {
       s"q144: expected the grouped partial agg to stay columnar above the probes in:\n$p")
   }
 
-  test("q154 probes the existence join on ColumnarBatch, filter stays columnar") {
-    val df = run("q154_columnar_existence_join")
-    df.collect()
-    val p = planString(df)
-    assert(p.contains("GraftColumnarExistenceBHJ"),
-      s"q154: expected the columnar existence probe in:\n$p")
-    assert(p.contains("GraftColumnarFilter"),
-      s"q154: expected the disjunctive exists-OR filter columnar in:\n$p")
-    assert(p.contains("GraftColumnarGroupedAgg"),
-      s"q154: expected the grouped partial agg columnar above the probe in:\n$p")
+  test("q154 existence join runs on Spark's BHJ over the columnar filter") {
+    assertSparkBhjOverColumnarFilter("q154_columnar_existence_join")
   }
 
   test("q155 runs filter AND top-k on ColumnarBatch — no row TakeOrderedAndProject") {
@@ -1129,14 +1148,8 @@ class PlanAssertionSuite extends GraftTestBase {
       s"expected the whole pre-sort stage columnar in:\n$p")
   }
 
-  test("q133 probes the broadcast join and partial-aggregates entirely on ColumnarBatch") {
-    val df = run("q133_columnar_broadcast_join")
-    df.collect()
-    val p = planString(df)
-    assert(p.contains("GraftColumnarBHJ"),
-      s"expected the columnar broadcast join swap in:\n$p")
-    assert(p.contains("GraftColumnarFilter") && p.contains("GraftColumnarGroupedAgg"),
-      s"expected the whole pre-shuffle stage columnar in:\n$p")
+  test("q133 inner join runs on Spark's BHJ over the columnar filter") {
+    assertSparkBhjOverColumnarFilter("q133_columnar_broadcast_join")
   }
 
   test("q113 runs BOTH grouped aggregation stages on ColumnarBatch") {

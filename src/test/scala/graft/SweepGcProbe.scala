@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** r16 scratch probe: the Bench loop with builder-time extra confs, to
   * test the checkpoint-block-accumulation hypothesis (ContextCleaner's
   * periodic GC defaults to 30 min — longer than a sweep — so storage
@@ -16,17 +14,7 @@ object SweepGcProbe {
     val out = if (args.length > 1) args(1) else "/tmp/sweep_probe.json"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config(Tables.eventsReadConf._1, Tables.eventsReadConf._2)
-      .config("spark.ui.enabled", "false")
-    extra.split(",").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b = b.config(k.trim, v.trim)
-    }
-    val spark = b.getOrCreate()
+    val spark = GraftSession(cpus.toInt, GraftSession.parseConf(extra))
     spark.sparkContext.setLogLevel("WARN")
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .write.format("noop").mode("overwrite").save()
