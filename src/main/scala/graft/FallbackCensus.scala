@@ -23,9 +23,6 @@ object FallbackCensus {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    // sortedOnce's checkpoint would cut each executed plan down to
-    // Sort-over-LogicalRDD and hide the query body's operators
-    spark.conf.set(Tables.sortedOnceEnabledKey, "false")
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // reason -> (executions hit, distinct queries, example nodes)

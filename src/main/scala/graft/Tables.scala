@@ -57,39 +57,6 @@ object Tables {
   def clearResolved(spark: SparkSession): Unit =
     dfCache.synchronized { dfCache.remove(spark); () }
 
-  /** Presentation sort computed once (r16, guide §2.4/§5): a global
-    * orderBy is a RANGE exchange, and RangePartitioner SAMPLES the
-    * exchange's child to pick partition bounds — everything since the
-    * last materialized exchange runs TWICE, once for the sampling pass
-    * and once for the real pass. For map-only pipelines (no exchange at
-    * all below the sort) that is the ENTIRE query body. localCheckpoint
-    * materializes the body once; the sample and the sort read stored
-    * blocks. Applied ONLY where an interleaved same-JVM A/B won (q189
-    * 1.93 vs 2.66 s, q142 0.81 vs 1.28, q02 0.45 vs 0.56, q52 0.37 vs
-    * 0.49, q53 0.36 vs 0.53, q54 0.32 vs 0.43, q156 1.14 vs 1.21);
-    * measured-parity shapes with an aggregation exchange just below the
-    * sort (q55, q126, q153) deliberately keep the plain orderBy. Same
-    * trade at scale: one write+read of the output vs recomputing the
-    * span.
-    *
-    * Two costs come with it. The query body EXECUTES when the DataFrame
-    * is built (localCheckpoint is eager), not when an action runs. And
-    * the checkpoint blocks live only in executor storage with no
-    * lineage behind them: after an executor loss they cannot be
-    * recomputed, and the query fails instead of retrying.
-    */
-  def sortedOnce(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame =
-    if (df.sparkSession.conf.getOption(sortedOnceEnabledKey).forall(_.toBoolean))
-      df.localCheckpoint().orderBy(keys: _*)
-    else df.orderBy(keys: _*)
-
-  /** Gate of [[sortedOnce]], default ON (the A/B-won path). It exists for
-    * plan tests (the checkpoint truncates the final plan to
-    * Sort-over-LogicalRDD, so pins of the pipeline's operators set it
-    * false) and as a production escape hatch. */
-  val sortedOnceEnabledKey = "spark.graft.sortedOnce.enabled"
-
   /** Hash-repartition `df` by `key` ONLY when its resolved scan cannot
     * feed the session's shuffle parallelism (guide §2.5 "repartition
     * immediately after an unsplittable read", r16-gated on the actual

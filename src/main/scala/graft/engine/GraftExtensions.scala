@@ -28,6 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    This is the pre-shuffle probe filter a 100 TB join pipeline uses.
   *  - [[PlanAuditRule]] — a columnar rule that tags coverage counters
   *    (the moral equivalent of the reference's fallback tagging).
+  *  - `GraftMaterializeOnceRule` — stores the child of a range exchange
+  *    once, so RangePartitioner's sampling job and the map stage do not
+  *    both compute it. Injected after PlanAuditRule, so its
+  *    post-transition pass runs first and the audit sees the node.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -35,6 +39,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functionDescriptors.foreach(ext.injectFunction)
     ext.injectColumnar(session => org.apache.spark.sql.graft.GraftColumnarRule(session))
     ext.injectColumnar(session => PlanAuditRule(session))
+    ext.injectColumnar(_ => org.apache.spark.sql.execution.graft.GraftMaterializeOnceRule)
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.GraftTopKStrategy)
   }
 }

@@ -409,7 +409,7 @@ object DedupQueries {
           .groupBy($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
           .agg(count(lit(1)).as("shared"))
           .filter($"shared" >= 2)
-          .transform(Tables.sortedOnce(_, $"d1", $"d2"))  // A/B-won, see Tables.sortedOnce
+          .orderBy($"d1", $"d2")
       },
       Some("""WITH words AS (
           SELECT doc_id, string_split(text, ' ') AS ws FROM documents),

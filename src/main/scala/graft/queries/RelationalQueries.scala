@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -20,19 +20,6 @@ import graft.{QueryDef, Tables}
   *    deterministic conversion.
   */
 object RelationalQueries {
-
-  /** Window-family presentation sorts go through [[Tables.sortedOnce]]
-    * (one materialization instead of the range-sampling double compute:
-    * job-profile showed twin ~0.77 s jobs in q189, interleaved A/B won
-    * 1.93 vs 2.66 s). Storage level stays the default MEMORY_AND_DISK —
-    * a DISK_ONLY variant was A/B'd same-JVM and costs ~0.45 s per query
-    * isolated (serialize+write on the critical path) for an in-sweep
-    * storage-pressure benefit this box's drift could not demonstrate;
-    * a repartition-by-partition-key materialization variant measured
-    * parity (the extra shuffle costs what the recompute saves).
-    */
-  private def sortedOnce(df: DataFrame, keys: Column*): DataFrame =
-    Tables.sortedOnce(df, keys: _*)
 
   /** Exact, order-independent accumulation type for money-like doubles. */
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
@@ -95,8 +82,7 @@ object RelationalQueries {
             (dec($"l_extendedprice") * (one - dec($"l_discount")))
               .cast("double").as("revenue"),
             concat($"l_returnflag", lit("/"), $"l_linestatus").as("flag"))
-          .transform(Tables.sortedOnce(_,  // A/B-won, see Tables.sortedOnce
-            $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey"))
+          .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
       },
       Some(s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
         CAST(CAST(l_extendedprice AS $decSql) * (CAST(1 AS $decSql) - CAST(l_discount AS $decSql)) AS DOUBLE) AS revenue,
@@ -845,7 +831,7 @@ object RelationalQueries {
             min($"l_extendedprice").over(w.rowsBetween(-999, 0)).as("roll_min"),
             max($"l_extendedprice").over(w.rowsBetween(-499, 500)).as("roll_max"),
             count($"qty_l").over(w.rowsBetween(-999, 0)).as("roll_n"))
-          .transform(sortedOnce(_, $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey"))
+          .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
       },
       Some("""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_returnflag,
           CAST(sum(CAST(l_quantity AS BIGINT)) OVER wt AS BIGINT) AS roll_qty,
@@ -885,7 +871,7 @@ object RelationalQueries {
             min($"l_extendedprice").over(w).as("win_min"),
             max($"l_extendedprice").over(w).as("win_max"),
             count($"qty_l").over(w).as("win_n"))
-          .transform(sortedOnce(_, $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey"))
+          .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
       },
       Some("""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_returnflag,
           CAST(sum(CAST(l_quantity AS BIGINT)) OVER w AS BIGINT) AS win_qty,
@@ -932,7 +918,7 @@ object RelationalQueries {
             cume_dist().over(wq).as("cd_qty"),
             sum($"cents").over(wq).as("rev_upto_qty"),
             count(lit(1)).over(wq).as("n_upto_qty"))
-          .transform(sortedOnce(_, $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey"))
+          .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
       },
       Some("""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_returnflag,
           ntile(7) OVER wt AS sept,
@@ -979,7 +965,7 @@ object RelationalQueries {
             ntile(5).over(w).as("quint"),
             sum($"cents").over(w).as("range_cents"),
             count(lit(1)).over(w).as("range_n"))
-          .transform(sortedOnce(_, $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey"))
+          .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
       },
       Some("""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_returnflag,
           CAST(sum(cents) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS run_cents,
@@ -1033,8 +1019,7 @@ object RelationalQueries {
             first(when($"l_quantity" < 10, $"cents"), ignoreNulls = true)
               .over(wt.rowsBetween(Window.currentRow, Window.unboundedFollowing))
               .as("bfill_small"))
-        sortedOnce(base,
-          $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
+        base.orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
       },
       Some("""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_returnflag,
           CAST(sum(cents) OVER (wt ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS remaining_cents,
@@ -1079,7 +1064,7 @@ object RelationalQueries {
               Window.unboundedFollowing)).as("remaining_n"),
             min($"l_partkey").over(w.rowsBetween(Window.currentRow,
               Window.unboundedFollowing)).as("min_pk_ahead"))
-          .transform(sortedOnce(_, $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey"))
+          .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
       },
       Some("""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
           CAST(sum(cents) OVER w AS BIGINT) AS remaining_cents,

@@ -47,7 +47,7 @@ object TextQueries {
           .select($"doc_id", $"labeled_lang", $"pred_lang",
             $"s_en".cast("long").as("s_en"), $"s_de".cast("long").as("s_de"),
             $"s_es".cast("long").as("s_es"), $"s_fr".cast("long").as("s_fr"))
-          .transform(Tables.sortedOnce(_, $"doc_id"))  // A/B-won, see Tables.sortedOnce
+          .orderBy($"doc_id")
       },
       Some(s"""SELECT doc_id, lang AS labeled_lang,
           CASE WHEN ${hitsSql(enM)} >= greatest(${hitsSql(deM)}, ${hitsSql(esM)}, ${hitsSql(frM)}) THEN 'en'
@@ -78,7 +78,7 @@ object TextQueries {
             round(size(array_distinct(w)).cast("double") / nW, 6).as("distinct_ratio"),
             (size(w).between(20, 1000) &&
               (size(array_distinct(w)).cast("double") / nW) > 0.3).as("passes_quality"))
-          .transform(Tables.sortedOnce(_, $"doc_id"))  // A/B-won, see Tables.sortedOnce
+          .orderBy($"doc_id")
       },
       Some("""SELECT doc_id,
           len(string_split(text,' ')) AS n_words,
@@ -111,7 +111,7 @@ object TextQueries {
             aggregate(w, lit(0L), (acc, x) => acc + ((length(x) + 3) / 4).cast("long"))
               .as("subword_est"),
             size(array_distinct(w)).cast("long").as("vocab"))
-          .transform(Tables.sortedOnce(_, $"doc_id"))  // A/B-won, see Tables.sortedOnce
+          .orderBy($"doc_id")
       },
       Some("""SELECT doc_id,
           len(string_split(text,' ')) AS ws_tokens,
@@ -257,7 +257,7 @@ object TextQueries {
             expr("pii_detect(t)").as("classes"),
             expr("pii_redact(t)").as("redacted"),
             expr("pii_redact(t, 'email')").as("email_only"))
-        Tables.sortedOnce(red, $"doc_id")  // A/B-won: 0.81 vs 1.28 s (see Tables.sortedOnce)
+        red.orderBy($"doc_id")
       },
       Some(s"""WITH pii AS (
           SELECT doc_id, concat_ws(' ', text,

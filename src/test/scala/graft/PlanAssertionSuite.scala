@@ -17,13 +17,6 @@ class PlanAssertionSuite extends GraftTestBase {
   private def run(name: String): DataFrame =
     Catalog.validated.find(_.name == name).get.run(spark, sfDir)
 
-  /** Build (and execute, for executedPlan pins) a query with the
-    * presentation-sort materialization OFF: Tables.sortedOnce truncates
-    * the final plan to Sort-over-LogicalRDD, so pins of the pipeline's
-    * own operators inspect the un-truncated plan instead (the pipeline
-    * below the checkpoint is identical — only the sampling double-run
-    * differs).
-    */
   /** Every node of the executed plan, descending into AQE's final plan
     * and its query stages. */
   private def nodesOf(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
@@ -64,14 +57,32 @@ class PlanAssertionSuite extends GraftTestBase {
       s"$name: expected the columnar final agg above the shuffle in:\n$plan")
   }
 
-  private def runFullPlan(name: String): DataFrame = {
-    spark.conf.set(graft.Tables.sortedOnceEnabledKey, "false")
-    try {
-      val df = run(name)
-      df.collect()
-      df
-    } finally spark.conf.unset(graft.Tables.sortedOnceEnabledKey)
+  /** Pin of the presentation sort's materialization: exactly one
+    * GraftMaterializeOnceExec, directly under the range exchange, with a
+    * node matching `below` somewhere under it (the query body it stores
+    * once). */
+  private def assertMaterializedOnce(df: DataFrame, what: String)(
+      below: org.apache.spark.sql.execution.SparkPlan => Boolean): Unit = {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = df.queryExecution.executedPlan
+    val nodes = nodesOf(df)
+    val stored = nodes.collect {
+      case m: org.apache.spark.sql.execution.graft.GraftMaterializeOnceExec => m
+    }
+    assert(stored.size == 1, s"expected exactly one GraftMaterializeOnce in:\n$plan")
+    assert(nodes.exists {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[RangePartitioning] && (e.child eq stored.head)
+      case _ => false
+    }, s"the GraftMaterializeOnce must sit directly under the range exchange:\n$plan")
+    assert(nodesUnder(stored.head).exists(below),
+      s"expected $what below the GraftMaterializeOnce in:\n$plan")
   }
+
+  /** The window chain a presentation sort sits above. */
+  private def isWindow(n: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    n.nodeName.contains("Window")
 
   test("q64 plans a SortMergeJoin") {
     assert(planString(run("q64_sort_merge_join")).contains("SortMergeJoin"))
@@ -857,23 +868,27 @@ class PlanAssertionSuite extends GraftTestBase {
   }
 
   test("q185 wide rolling frames swap to the O(n) sliding window exec") {
-    val df = runFullPlan("q185_window_rolling_wide")
+    val df = run("q185_window_rolling_wide")
+    df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(p.contains("GraftWindowSliding"),
       s"expected the 1,000-row frames on the invertible sliding kernels in:\n$p")
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0,
       s"no row WindowExec should remain for the wide sliding frames:\n$p")
+    assertMaterializedOnce(df, "the window chain")(isWindow)
   }
 
   test("q186 wide value-range frames swap to the incremental range-slide exec") {
-    val df = runFullPlan("q186_window_range_wide")
+    val df = run("q186_window_range_wide")
+    df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(p.contains("GraftWindowRangeSlide"),
       s"expected the wide RANGE frames on the incremental kernels in:\n$p")
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0,
       s"no row WindowExec should remain for the wide RANGE frames:\n$p")
+    assertMaterializedOnce(df, "the window chain")(isWindow)
   }
 
   test("q187 size-based window nodes stream from the grouped sort below them") {
@@ -881,7 +896,8 @@ class PlanAssertionSuite extends GraftTestBase {
     // node and the kind-1 cume_dist + RANGE-running-agg node — and each
     // sits directly on a grouped sort, whose counted groups it streams
     // instead of buffering the partition
-    val df = runFullPlan("q187_window_sizebased")
+    val df = run("q187_window_sizebased")
+    df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0,
@@ -896,6 +912,7 @@ class PlanAssertionSuite extends GraftTestBase {
       s"each size-based node must sit on a grouped sort:\n$p")
     assert(sized.forall(_.metrics("numStreamedGroups").value > 0),
       s"each size-based node must stream a counted group:\n$p")
+    assertMaterializedOnce(df, "the window chain")(isWindow)
   }
 
   test("q188 mixed-kind window node splits into three swapped graft nodes") {
@@ -903,7 +920,8 @@ class PlanAssertionSuite extends GraftTestBase {
     // sliding min), size-based (ntile) and deferred RANGE-running
     // kinds: the splitter chains three homogeneous nodes over the one
     // sort and every one leaves the row exec
-    val df = runFullPlan("q188_window_mixed_kinds")
+    val df = run("q188_window_mixed_kinds")
+    df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     val swapped = "GraftColumnarWindow".r.findAllIn(p).size
     assert(swapped >= 3,
@@ -923,12 +941,14 @@ class PlanAssertionSuite extends GraftTestBase {
     assert(ntile.size == 1 && ntile.head.child.isInstanceOf[
       org.apache.spark.sql.execution.graft.GraftGroupedSortExec],
       s"the ntile node must sit directly on the grouped sort:\n$p")
+    assertMaterializedOnce(df, "the window chain")(isWindow)
   }
 
   test("q189 suffix frames swap to the block-combined face") {
     // both nodes (ROWS suffix over the total order, RANGE suffix over
     // the tied quantity order) leave the O(n^2) row exec
-    val df = runFullPlan("q189_window_suffix")
+    val df = run("q189_window_suffix")
+    df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     val swapped = "GraftColumnarWindow".r.findAllIn(p).size
     assert(swapped >= 2,
@@ -936,6 +956,30 @@ class PlanAssertionSuite extends GraftTestBase {
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0,
       s"no row WindowExec should remain for the suffix frames:\n$p")
+    assertMaterializedOnce(df, "the window chain")(isWindow)
+  }
+
+  test("q02 presentation sort stores the columnar filter pipeline once") {
+    val df = run("q02_filter_project")
+    df.collect()
+    assertMaterializedOnce(df, "the columnar filter")(
+      _.isInstanceOf[org.apache.spark.sql.graft.GraftColumnarFilterExec])
+  }
+
+  test("q142 presentation sort stores the PII redaction once") {
+    val df = run("q142_pii_redact")
+    df.collect()
+    assertMaterializedOnce(df, "the pii_redact projection") {
+      case p: org.apache.spark.sql.execution.ProjectExec =>
+        p.projectList.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.graft.PiiRedact]))
+      case _ => false
+    }
+  }
+
+  test("PlanDump prints q133's executed final plan with its graft nodes") {
+    val p = PlanDump.executedPlanString(run("q133_columnar_broadcast_join"))
+    assert(p.contains("isFinalPlan=true"), s"expected the final AQE plan:\n$p")
+    assert(p.contains("GraftColumnarFilter"), s"expected the columnar filter:\n$p")
   }
 
   test("q179 RANGE running frame swaps to the deferred streaming window exec") {
@@ -953,12 +997,14 @@ class PlanAssertionSuite extends GraftTestBase {
     // 6-gram assembly = pure-lead nodes (GraftWindowOffsetExec);
     // fingerprint selection = sliding string-min + lead in ONE node
     // (fn-13 mixed machine)
-    val df = runFullPlan("q156_winnowing_dedup")
+    val df = run("q156_winnowing_dedup")
+    df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(p.contains("GraftWindowOffset") || p.contains("GraftColumnarWindow"),
       s"expected streaming window execs in:\n$p")
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0, s"no row WindowExec should remain:\n$p")
+    assertMaterializedOnce(df, "the window chain")(isWindow)
   }
 
   test("q24 double-key value-range window swaps to the ring exec") {
@@ -1071,11 +1117,13 @@ class PlanAssertionSuite extends GraftTestBase {
     // pmod(l_orderkey, 4096) PARTITION BY: the rule materializes the key
     // in a Project below and retries — the O(n) suffix exec must swap
     // (executed plan: the swap lives inside materialized AQE stages)
-    val df = runFullPlan("q193_window_suffix_hicard")
+    val df = run("q193_window_suffix_hicard")
+    df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(p.contains("GraftColumnarWindow"),
       s"computed-key window must canonicalize and swap:\n$p")
     assert(p.contains("_graftpkey"), s"expected the materialized key below:\n$p")
+    assertMaterializedOnce(df, "the window chain")(isWindow)
   }
 
   test("q195 chunking is map-side: no exchange below the presentation sort") {

@@ -20,13 +20,12 @@ class GroupedSortSuite extends GraftTestBase {
     "spark.sql.windowExec.buffer.in.memory.threshold" -> "16",
     "spark.sql.windowExec.buffer.spill.threshold" -> "64")
 
-  /** Rows of the query's static plan (AQE and the presentation-sort
-    * checkpoint off, so the whole pipeline is one executable plan),
-    * with `edit` applied to the plan first, and the task spill bytes. */
+  /** Rows of the query's static plan (AQE off, so the whole pipeline is
+    * one executable plan), with `edit` applied to the plan first, and the
+    * task spill bytes. */
   private def rowsOf(query: => DataFrame, edit: SparkPlan => SparkPlan,
       confs: (String, String)*): (Seq[String], SparkPlan, Long) =
-    withSQLConf(Seq(Tables.sortedOnceEnabledKey -> "false",
-        "spark.sql.adaptive.enabled" -> "false") ++ confs: _*) {
+    withSQLConf(("spark.sql.adaptive.enabled" -> "false") +: confs: _*) {
       val df = query
       val plan = edit(df.queryExecution.executedPlan)
       val spilled = new java.util.concurrent.atomic.AtomicLong
