@@ -1,6 +1,7 @@
 package graft
 
 import graft.engine.GraftExplain
+import org.apache.spark.sql.DataFrame
 
 /** Diagnostic main: run every Catalog query at the given SF dir and
   * aggregate [[GraftExplain.fallbackReasons]] across the whole inventory —
@@ -17,6 +18,20 @@ import graft.engine.GraftExplain
   * (VERDICT r12 task #6).
   */
 object FallbackCensus {
+  /** Strips the labels that differ between two runs of the same plan:
+    * expression ids (`window#10770`, `sum(_w0#514)`) and codegen stage
+    * ids (`WholeStageCodegen (6)`). Without it two census runs of the
+    * same code differ, and a diff between sweeps shows noise. */
+  def normalize(label: String): String =
+    label.replaceAll("#\\d+", "#N")
+      .replaceAll("WholeStageCodegen \\(\\d+\\)", "WholeStageCodegen (N)")
+
+  /** One executed DataFrame's census entries, normalized: its
+    * (node, fallback reason) pairs and its columnar boundary consumers. */
+  def entries(df: DataFrame): (Seq[(String, String)], Seq[String]) =
+    (GraftExplain.fallbackReasons(df).map { case (n, r) => (normalize(n), normalize(r)) },
+      GraftExplain.columnarBoundaries(df).map(normalize))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1)
@@ -50,11 +65,12 @@ object FallbackCensus {
           if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
             println(s"=== ${q.name} executed plan ===\n" +
               df.queryExecution.executedPlan.toString)
-          GraftExplain.fallbackReasons(df).foreach { case (node, reason) =>
+          val (reasons, consumers) = entries(df)
+          reasons.foreach { case (node, reason) =>
             val (n, qs, nodes) = agg.getOrElse(reason, (0L, Set.empty[String], Set.empty[String]))
             agg(reason) = (n + 1, qs + q.name, nodes + node)
           }
-          GraftExplain.columnarBoundaries(df).foreach { consumer =>
+          consumers.foreach { consumer =>
             boundary(consumer) = boundary.getOrElse(consumer, Set.empty) + q.name
           }
         } catch {
@@ -70,12 +86,16 @@ object FallbackCensus {
       if (qlist.size > 8) qlist.take(8).mkString(",") + s",…(${qlist.size})"
       else qlist.mkString(",")
     }
+    // ties in the counts are broken by the text, so two runs of the same
+    // code write the same file
+    val byHits = agg.toSeq.sortBy { case (r, (n, _, _)) => (-n, r) }
+    val byQueries = boundary.toSeq.sortBy { case (c, qs) => (-qs.size, c) }
     println("=== fallback census (reason | node-hits | queries) ===")
-    agg.toSeq.sortBy(-_._2._1).foreach { case (reason, (n, qs, nodes)) =>
+    byHits.foreach { case (reason, (n, qs, nodes)) =>
       println(f"$n%5d  [${nodes.toSeq.sorted.mkString("/")}] $reason%s  <- ${fmt(qs)}")
     }
     println("=== columnar boundary census (first row consumer | queries) ===")
-    boundary.toSeq.sortBy(-_._2.size).foreach { case (consumer, qs) =>
+    byQueries.foreach { case (consumer, qs) =>
       println(f"${qs.size}%5d  $consumer  <- ${fmt(qs)}")
     }
     outFile.foreach { path =>
@@ -88,10 +108,10 @@ object FallbackCensus {
       } + "\""
       def arr(ss: Iterable[String]): String =
         ss.toSeq.sorted.map(js).mkString("[", ",", "]")
-      val reasons = agg.toSeq.sortBy(-_._2._1).map { case (r, (n, qs, nodes)) =>
+      val reasons = byHits.map { case (r, (n, qs, nodes)) =>
         s"""{"reason":${js(r)},"hits":$n,"nodes":${arr(nodes)},"queries":${arr(qs)}}"""
       }.mkString("[", ",", "]")
-      val bounds = boundary.toSeq.sortBy(-_._2.size).map { case (c, qs) =>
+      val bounds = byQueries.map { case (c, qs) =>
         s"""{"consumer":${js(c)},"queries":${arr(qs)}}"""
       }.mkString("[", ",", "]")
       val json = s"""{"sf":${js(sfDir)},"queries_run":${Catalog.validated.size},""" +

@@ -982,6 +982,21 @@ class PlanAssertionSuite extends GraftTestBase {
     assert(p.contains("GraftColumnarFilter"), s"expected the columnar filter:\n$p")
   }
 
+  test("the fallback census of q68 built twice in one session is identical") {
+    // q68's grouping-key reason names the time-window struct by its
+    // expression id, which a second build of the query renumbers
+    val runs = Seq.fill(2) {
+      val df = run("q68_time_window_agg")
+      df.collect()
+      (graft.engine.GraftExplain.fallbackReasons(df), FallbackCensus.entries(df))
+    }
+    val Seq((raw1, census1), (raw2, census2)) = runs
+    assert(raw1 != raw2, s"the raw reasons no longer carry run-dependent ids: $raw1")
+    assert(census1._1.exists(_._2.startsWith("unsupported grouping key: window#N")),
+      s"expected q68's normalized grouping-key reason in: ${census1._1}")
+    assert(census1 == census2, s"census entries differ between two builds:\n$census1\n$census2")
+  }
+
   test("q179 RANGE running frame swaps to the deferred streaming window exec") {
     val df = run("q179_window_range_peers")
     df.collect()
@@ -1271,5 +1286,356 @@ class PlanAssertionSuite extends GraftTestBase {
     val projLine = p.linesIterator.find(_.startsWith("(3) Project")).getOrElse("")
     assert(p.contains("codegen id") && projLine.contains("codegen id"),
       s"expected the cosine_sim Project inside a codegen span:\n$p")
+  }
+
+  // ---- admission matrix of the columnar rule ----------------------------
+  // Each case plans one small query (AQE off, so the rule has run when
+  // the executed plan exists and nothing executes) and records, for every
+  // candidate node, the graft exec it became or the fallback reason it
+  // carries. The tables pin which argument each swap admits and the exact
+  // reason text of each refusal.
+
+  private lazy val matrixDir: String = {
+    val sp = spark
+    import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-admission").toString
+    (0 until 40).map { n =>
+      (n % 3, n.toLong, n, n * 7L, n * 0.5, s"s${n % 5}",
+        BigDecimal(n) / 4, java.sql.Date.valueOf(s"2024-01-${1 + n % 28}"))
+    }.toDF("k", "o", "i", "l", "d", "s", "dec", "dt")
+      .withColumn("dec38", $"dec".cast("decimal(38,2)"))
+      .withColumn("dec", $"dec".cast("decimal(10,2)"))
+      .write.mode("overwrite").parquet(s"$dir/win")
+    dir
+  }
+
+  /** For every node `candidate` accepts: the graft exec's class with its
+    * compiled specs (lane, function, ordinals), or the row node's name
+    * and its normalized fallback reason. */
+  private def admission(df: DataFrame)(
+      candidate: org.apache.spark.sql.execution.SparkPlan => Boolean): String =
+    withSQLConf("spark.sql.adaptive.enabled" -> "false") {
+      nodesUnder(df.queryExecution.executedPlan).filter(candidate).map { n =>
+        n.getTagValue(org.apache.spark.sql.graft.GraftColumnarRule.fallbackReasonTag) match {
+          case Some(r) => s"${n.nodeName}: ${FallbackCensus.normalize(r)}"
+          case None =>
+            val specs = n.productIterator.collect {
+              case ss: Seq[_] if ss.nonEmpty &&
+                  ss.forall(_.getClass.getSimpleName.endsWith("Spec")) => ss.mkString(",")
+            }
+            (n.getClass.getSimpleName +: specs.toSeq).mkString(" ")
+        }
+      }.mkString(" | ")
+    }
+
+  private def assertMatrix(actual: Seq[(String, String)], expected: Seq[(String, String)]): Unit = {
+    val diff = actual.zip(expected).collect {
+      case (a, e) if a != e => s"${a._1}:\n  got      ${a._2}\n  expected ${e._2}"
+    }
+    assert(actual.size == expected.size && diff.isEmpty,
+      s"${diff.size} admission cases differ:\n${diff.mkString("\n")}\n\nactual table:\n" +
+        actual.map { case (c, o) => s"""    "$c" -> "${o.replace("\"", "\\\"")}",""" }
+          .mkString("\n"))
+  }
+
+  private val matrixAggs: Seq[(String, String, Boolean)] = Seq(
+    ("sum int", "sum(i)", false), ("sum double", "sum(d)", false),
+    ("sum TRY", "try_sum(i)", false), ("sum ANSI", "sum(i)", true),
+    ("count(*)", "count(*)", false), ("count(x)", "count(i)", false),
+    ("min long", "min(l)", false), ("max long", "max(l)", false),
+    ("min double", "min(d)", false), ("max double", "max(d)", false),
+    ("min string", "min(s)", false), ("max string", "max(s)", false),
+    ("avg int", "avg(i)", false), ("avg decimal", "avg(dec)", false),
+    ("avg double", "avg(d)", false),
+    ("first", "first(i)", false), ("last", "last(i)", false))
+
+  test("admission matrix: window aggregates by frame family") {
+    spark.read.parquet(s"$matrixDir/win").createOrReplaceTempView("am_win")
+    val w = "PARTITION BY k ORDER BY o"
+    val suffixNo = "Window: suffix frame (CURRENT ROW .. UNBOUNDED FOLLOWING) supports " +
+      "associative lanes only (integral sum, count, min/max); double sums and avg keep the row path"
+    // avg over a decimal reaches the window as a cast of the average
+    val shapeNo = "Window: unsupported window expression shape: Alias (running ROWS/RANGE or " +
+      "whole-partition frame over Complete agg, or row_number/rank/dense_rank, only)"
+    // the row_number spec beside each mixed-node slice
+    val rowNumber = ",WinAggSpec(6,-1,2,IntegerType,false,0,false,0,0,null,false,0,0)"
+    // (family, frame, a second expression sharing the node)
+    val families = Seq(
+      ("sliding ROWS", "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW", ""),
+      ("finite RANGE", "RANGE BETWEEN 2 PRECEDING AND CURRENT ROW", ""),
+      ("running ROWS", "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW", ""),
+      ("whole partition", "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING", ""),
+      ("suffix ROWS", "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING", ""),
+      ("mixed finite ROWS", "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW",
+        s", row_number() OVER ($w) AS rn"))
+    val actual = for {
+      (family, frame, extra) <- families
+      (arg, f, ansi) <- matrixAggs
+    } yield s"$family / $arg" ->
+      withSQLConf("spark.sql.ansi.enabled" -> ansi.toString) {
+        admission(spark.sql(s"SELECT k, o, $f OVER ($w $frame) AS r$extra FROM am_win"))(
+          _.nodeName.contains("Window"))
+      }
+    assertMatrix(actual, Seq(
+      "sliding ROWS / sum int" -> "GraftWindowSlidingExec WinSlideSpec(0,2,0,LongType,false,-2,0)",
+      "sliding ROWS / sum double" -> "GraftWindowSlidingExec WinSlideSpec(0,2,1,DoubleType,false,-2,0)",
+      "sliding ROWS / sum TRY" -> "Window: unsupported sliding window aggregate: try_sum(i#N) (LongType)",
+      "sliding ROWS / sum ANSI" -> "GraftWindowSlidingExec WinSlideSpec(0,2,0,LongType,true,-2,0)",
+      "sliding ROWS / count(*)" -> "GraftWindowSlidingExec WinSlideSpec(5,-1,2,LongType,false,-2,0)",
+      "sliding ROWS / count(x)" -> "GraftWindowSlidingExec WinSlideSpec(1,2,2,LongType,false,-2,0)",
+      "sliding ROWS / min long" -> "GraftWindowSlidingExec WinSlideSpec(2,2,0,LongType,false,-2,0)",
+      "sliding ROWS / max long" -> "GraftWindowSlidingExec WinSlideSpec(3,2,0,LongType,false,-2,0)",
+      "sliding ROWS / min double" -> "GraftWindowSlidingExec WinSlideSpec(2,2,1,DoubleType,false,-2,0)",
+      "sliding ROWS / max double" -> "GraftWindowSlidingExec WinSlideSpec(3,2,1,DoubleType,false,-2,0)",
+      "sliding ROWS / min string" -> "Window: unsupported sliding window aggregate: min(s#N) (StringType)",
+      "sliding ROWS / max string" -> "Window: unsupported sliding window aggregate: max(s#N) (StringType)",
+      "sliding ROWS / avg int" -> "GraftWindowSlidingExec WinSlideSpec(4,2,0,DoubleType,false,-2,0)",
+      "sliding ROWS / avg decimal" -> shapeNo,
+      "sliding ROWS / avg double" -> "GraftWindowSlidingExec WinSlideSpec(4,2,1,DoubleType,false,-2,0)",
+      "sliding ROWS / first" -> "Window: unsupported sliding window aggregate: first(i#N)() (IntegerType)",
+      "sliding ROWS / last" -> "Window: unsupported sliding window aggregate: last(i#N)() (IntegerType)",
+      "finite RANGE / sum int" -> "GraftWindowRangeSlideExec WinSlideSpec(0,2,0,LongType,false,-2,0)",
+      "finite RANGE / sum double" -> "GraftWindowRangeSlideExec WinSlideSpec(0,2,1,DoubleType,false,-2,0)",
+      "finite RANGE / sum TRY" -> "Window: unsupported RANGE window aggregate: try_sum(i#N) (LongType)",
+      "finite RANGE / sum ANSI" -> "GraftWindowRangeSlideExec WinSlideSpec(0,2,0,LongType,true,-2,0)",
+      "finite RANGE / count(*)" -> "GraftWindowRangeSlideExec WinSlideSpec(5,-1,2,LongType,false,-2,0)",
+      "finite RANGE / count(x)" -> "GraftWindowRangeSlideExec WinSlideSpec(1,2,2,LongType,false,-2,0)",
+      "finite RANGE / min long" -> "GraftWindowRangeSlideExec WinSlideSpec(2,2,0,LongType,false,-2,0)",
+      "finite RANGE / max long" -> "GraftWindowRangeSlideExec WinSlideSpec(3,2,0,LongType,false,-2,0)",
+      "finite RANGE / min double" -> "GraftWindowRangeSlideExec WinSlideSpec(2,2,1,DoubleType,false,-2,0)",
+      "finite RANGE / max double" -> "GraftWindowRangeSlideExec WinSlideSpec(3,2,1,DoubleType,false,-2,0)",
+      "finite RANGE / min string" -> "Window: unsupported RANGE window aggregate: min(s#N) (StringType)",
+      "finite RANGE / max string" -> "Window: unsupported RANGE window aggregate: max(s#N) (StringType)",
+      "finite RANGE / avg int" -> "GraftWindowRangeSlideExec WinSlideSpec(4,2,0,DoubleType,false,-2,0)",
+      "finite RANGE / avg decimal" -> shapeNo,
+      "finite RANGE / avg double" -> "GraftWindowRangeSlideExec WinSlideSpec(4,2,1,DoubleType,false,-2,0)",
+      "finite RANGE / first" -> "Window: unsupported RANGE window aggregate: first(i#N)() (IntegerType)",
+      "finite RANGE / last" -> "Window: unsupported RANGE window aggregate: last(i#N)() (IntegerType)",
+      "running ROWS / sum int" -> "GraftColumnarWindowExec WinAggSpec(0,2,0,LongType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / sum double" -> "GraftColumnarWindowExec WinAggSpec(0,2,1,DoubleType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / sum TRY" -> "Window: unsupported window aggregate: try_sum(i#N) (LongType)",
+      "running ROWS / sum ANSI" -> "GraftColumnarWindowExec WinAggSpec(0,2,0,LongType,true,0,false,0,0,null,false,0,0)",
+      "running ROWS / count(*)" -> "GraftColumnarWindowExec WinAggSpec(5,-1,2,LongType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / count(x)" -> "GraftColumnarWindowExec WinAggSpec(1,2,2,LongType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / min long" -> "GraftColumnarWindowExec WinAggSpec(2,2,0,LongType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / max long" -> "GraftColumnarWindowExec WinAggSpec(3,2,0,LongType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / min double" -> "GraftColumnarWindowExec WinAggSpec(2,2,1,DoubleType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / max double" -> "GraftColumnarWindowExec WinAggSpec(3,2,1,DoubleType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / min string" -> "Window: unsupported window aggregate: min(s#N) (StringType)",
+      "running ROWS / max string" -> "Window: unsupported window aggregate: max(s#N) (StringType)",
+      "running ROWS / avg int" -> "GraftColumnarWindowExec WinAggSpec(4,2,0,DoubleType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / avg decimal" -> shapeNo,
+      "running ROWS / avg double" -> "GraftColumnarWindowExec WinAggSpec(4,2,1,DoubleType,false,0,false,0,0,null,false,0,0)",
+      "running ROWS / first" -> "GraftColumnarWindowExec WinAggSpec(11,2,3,IntegerType,false,0,false,1,0,null,false,0,0)",
+      "running ROWS / last" -> "GraftColumnarWindowExec WinAggSpec(10,2,3,IntegerType,false,0,false,0,0,null,false,0,0)",
+      "whole partition / sum int" -> "GraftColumnarWindowExec WinAggSpec(0,2,0,LongType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / sum double" -> "GraftColumnarWindowExec WinAggSpec(0,2,1,DoubleType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / sum TRY" -> "Window: unsupported window aggregate: try_sum(i#N) (LongType)",
+      "whole partition / sum ANSI" -> "GraftColumnarWindowExec WinAggSpec(0,2,0,LongType,true,2,false,0,0,null,false,0,0)",
+      "whole partition / count(*)" -> "GraftColumnarWindowExec WinAggSpec(5,-1,2,LongType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / count(x)" -> "GraftColumnarWindowExec WinAggSpec(1,2,2,LongType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / min long" -> "GraftColumnarWindowExec WinAggSpec(2,2,0,LongType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / max long" -> "GraftColumnarWindowExec WinAggSpec(3,2,0,LongType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / min double" -> "GraftColumnarWindowExec WinAggSpec(2,2,1,DoubleType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / max double" -> "GraftColumnarWindowExec WinAggSpec(3,2,1,DoubleType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / min string" -> "Window: unsupported window aggregate: min(s#N) (StringType)",
+      "whole partition / max string" -> "Window: unsupported window aggregate: max(s#N) (StringType)",
+      "whole partition / avg int" -> "GraftColumnarWindowExec WinAggSpec(4,2,0,DoubleType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / avg decimal" -> shapeNo,
+      "whole partition / avg double" -> "GraftColumnarWindowExec WinAggSpec(4,2,1,DoubleType,false,2,false,0,0,null,false,0,0)",
+      "whole partition / first" -> "GraftColumnarWindowExec WinAggSpec(11,2,3,IntegerType,false,2,false,1,0,null,false,0,0)",
+      "whole partition / last" -> "GraftColumnarWindowExec WinAggSpec(10,2,3,IntegerType,false,2,false,0,0,null,false,0,0)",
+      "suffix ROWS / sum int" -> "GraftColumnarWindowExec WinAggSpec(0,2,0,LongType,false,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / sum double" -> suffixNo,
+      "suffix ROWS / sum TRY" -> "Window: unsupported window aggregate: try_sum(i#N) (LongType)",
+      "suffix ROWS / sum ANSI" -> "GraftColumnarWindowExec WinAggSpec(0,2,0,LongType,true,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / count(*)" -> "GraftColumnarWindowExec WinAggSpec(5,-1,2,LongType,false,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / count(x)" -> "GraftColumnarWindowExec WinAggSpec(1,2,2,LongType,false,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / min long" -> "GraftColumnarWindowExec WinAggSpec(2,2,0,LongType,false,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / max long" -> "GraftColumnarWindowExec WinAggSpec(3,2,0,LongType,false,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / min double" -> "GraftColumnarWindowExec WinAggSpec(2,2,1,DoubleType,false,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / max double" -> "GraftColumnarWindowExec WinAggSpec(3,2,1,DoubleType,false,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / min string" -> "Window: unsupported window aggregate: min(s#N) (StringType)",
+      "suffix ROWS / max string" -> "Window: unsupported window aggregate: max(s#N) (StringType)",
+      "suffix ROWS / avg int" -> suffixNo,
+      "suffix ROWS / avg decimal" -> shapeNo,
+      "suffix ROWS / avg double" -> suffixNo,
+      "suffix ROWS / first" -> "GraftColumnarWindowExec WinAggSpec(9,2,3,IntegerType,false,3,false,0,0,null,false,0,0)",
+      "suffix ROWS / last" -> "GraftColumnarWindowExec WinAggSpec(10,2,3,IntegerType,false,3,false,0,0,null,false,0,0)",
+      "mixed finite ROWS / sum int" -> ("GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,false,0,false,0,0,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / sum double" -> ("GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,0,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / sum TRY" -> "Window: unsupported mixed-node sliding aggregate: try_sum(i#N)",
+      "mixed finite ROWS / sum ANSI" -> ("GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,true,0,false,0,0,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / count(*)" -> ("GraftColumnarWindowExec WinAggSpec(13,-1,2,LongType,false,0,false,0,5,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / count(x)" -> ("GraftColumnarWindowExec WinAggSpec(13,2,2,LongType,false,0,false,0,1,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / min long" -> ("GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,false,0,false,0,2,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / max long" -> ("GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,false,0,false,0,3,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / min double" -> ("GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,2,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / max double" -> ("GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,3,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / min string" -> ("GraftColumnarWindowExec WinAggSpec(13,2,3,StringType,false,0,false,0,2,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / max string" -> ("GraftColumnarWindowExec WinAggSpec(13,2,3,StringType,false,0,false,0,3,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / avg int" -> ("GraftColumnarWindowExec WinAggSpec(13,2,0,DoubleType,false,0,false,0,4,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / avg decimal" -> shapeNo,
+      "mixed finite ROWS / avg double" -> ("GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,4,null,false,-2,0)" + rowNumber),
+      "mixed finite ROWS / first" -> "Window: unsupported mixed-node sliding aggregate: first(i#N)()",
+      "mixed finite ROWS / last" -> "Window: unsupported mixed-node sliding aggregate: last(i#N)()"
+    ))
+  }
+
+  test("admission matrix: join swaps by key shape") {
+    val sp = spark
+    import sp.implicits._
+    import org.apache.spark.sql.functions.broadcast
+    val rows = (0 until 40).map { n =>
+      (n.toLong, n % 6, n % 4, s"k${n % 6}", java.sql.Date.valueOf(s"2024-02-${1 + n % 6}"),
+        (n % 6) * 0.5, (n % 3).toLong)
+    }.toDF("id", "ki", "kj", "ks", "kd", "kx", "kl")
+    val build = (0 until 8).map { n =>
+      (n % 5, n % 4, s"k${n % 5}", java.sql.Date.valueOf(s"2024-02-${1 + n % 5}"),
+        (n % 5) * 0.5, n.toLong)
+    }.toDF("bi", "bj", "bs", "bd", "bx", "bv")
+    // the shuffled joins swap only over an exchange-free stream, so each
+    // key shape gets a stream bucketed on its own key columns
+    val keys = Seq(
+      ("int", Seq("ki"), $"ki" === $"bi"),
+      ("composite int", Seq("ki", "kj"), $"ki" === $"bi" && $"kj" === $"bj"),
+      ("string", Seq("ks"), $"ks" === $"bs"),
+      ("date", Seq("kd"), $"kd" === $"bd"),
+      ("double", Seq("kx"), $"kx" === $"bx"),
+      ("composite long", Seq("id", "kl"), $"id" === $"bv" && $"kl" === $"bv"),
+      ("computed", Seq("ki"), $"ki" + 1 === $"bi"))
+    keys.foreach { case (name, cols, _) =>
+      rows.write.format("parquet").bucketBy(4, cols.head, cols.tail: _*)
+        .option("path", s"$matrixDir/join_${name.replace(' ', '_')}")
+        .mode("overwrite").saveAsTable(s"am_stream_${name.replace(' ', '_')}")
+    }
+    val semiBhjNo = "BroadcastHashJoin: semi/anti broadcast join not columnar-probeable " +
+      "(needs integral attribute keys packing into 8 bytes, or a single string/date/timestamp key)"
+    val semiShjNo = "ShuffledHashJoin: shuffled semi/anti join not columnar-probeable " +
+      "(needs integral attribute keys packing into 8 bytes, or a single string/date/timestamp key)"
+    val innerShjNo = "ShuffledHashJoin: inner/outer shuffled join not columnar-probeable " +
+      "(needs integral attribute keys packing into 8 bytes or a single string/date/timestamp " +
+      "key, and supported build column types)"
+    val isJoin: org.apache.spark.sql.execution.SparkPlan => Boolean =
+      n => n.nodeName.contains("Join") || n.nodeName.contains("BHJ")
+    try {
+      val actual = for {
+        (swap, hint, types) <- Seq(
+          ("semi BHJ", "broadcast", Seq("left_semi", "left_anti")),
+          ("semi SHJ", "shuffle_hash", Seq("left_semi", "left_anti")),
+          ("inner/outer SHJ", "shuffle_hash", Seq("inner", "left_outer", "full_outer")))
+        tpe <- types
+        (name, _, cond) <- keys
+      } yield s"$swap / $tpe / $name" -> {
+        val stream = spark.table(s"am_stream_${name.replace(' ', '_')}")
+        val b = if (hint == "broadcast") broadcast(build) else build.hint(hint)
+        admission(stream.join(b, cond, tpe))(isJoin)
+      }
+      assertMatrix(actual, Seq(
+        "semi BHJ / left_semi / int" -> "GraftColumnarSemiBHJExec",
+        "semi BHJ / left_semi / composite int" -> "GraftColumnarSemiBHJExec",
+        "semi BHJ / left_semi / string" -> "GraftColumnarSemiBHJExec",
+        "semi BHJ / left_semi / date" -> "GraftColumnarSemiBHJExec",
+        "semi BHJ / left_semi / double" -> semiBhjNo,
+        "semi BHJ / left_semi / composite long" -> semiBhjNo,
+        "semi BHJ / left_semi / computed" -> semiBhjNo,
+        "semi BHJ / left_anti / int" -> "GraftColumnarSemiBHJExec",
+        "semi BHJ / left_anti / composite int" -> "GraftColumnarSemiBHJExec",
+        "semi BHJ / left_anti / string" -> "GraftColumnarSemiBHJExec",
+        "semi BHJ / left_anti / date" -> "GraftColumnarSemiBHJExec",
+        "semi BHJ / left_anti / double" -> semiBhjNo,
+        "semi BHJ / left_anti / composite long" -> semiBhjNo,
+        "semi BHJ / left_anti / computed" -> semiBhjNo,
+        "semi SHJ / left_semi / int" -> "GraftColumnarShuffledSemiJoinExec",
+        "semi SHJ / left_semi / composite int" -> "GraftColumnarShuffledSemiJoinExec",
+        "semi SHJ / left_semi / string" -> "GraftColumnarShuffledSemiJoinExec",
+        "semi SHJ / left_semi / date" -> "GraftColumnarShuffledSemiJoinExec",
+        "semi SHJ / left_semi / double" -> "ShuffledHashJoinExec",
+        "semi SHJ / left_semi / composite long" -> semiShjNo,
+        "semi SHJ / left_semi / computed" -> "ShuffledHashJoinExec",
+        "semi SHJ / left_anti / int" -> "GraftColumnarShuffledSemiJoinExec",
+        "semi SHJ / left_anti / composite int" -> "GraftColumnarShuffledSemiJoinExec",
+        "semi SHJ / left_anti / string" -> "GraftColumnarShuffledSemiJoinExec",
+        "semi SHJ / left_anti / date" -> "GraftColumnarShuffledSemiJoinExec",
+        "semi SHJ / left_anti / double" -> "ShuffledHashJoinExec",
+        "semi SHJ / left_anti / composite long" -> semiShjNo,
+        "semi SHJ / left_anti / computed" -> "ShuffledHashJoinExec",
+        "inner/outer SHJ / inner / int" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / inner / composite int" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / inner / string" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / inner / date" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / inner / double" -> "ShuffledHashJoinExec",
+        "inner/outer SHJ / inner / composite long" -> innerShjNo,
+        "inner/outer SHJ / inner / computed" -> "ShuffledHashJoinExec",
+        "inner/outer SHJ / left_outer / int" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / left_outer / composite int" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / left_outer / string" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / left_outer / date" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / left_outer / double" -> "ShuffledHashJoinExec",
+        "inner/outer SHJ / left_outer / composite long" -> innerShjNo,
+        "inner/outer SHJ / left_outer / computed" -> "ShuffledHashJoinExec",
+        "inner/outer SHJ / full_outer / int" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / full_outer / composite int" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / full_outer / string" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / full_outer / date" -> "GraftColumnarShuffledInnerJoinExec",
+        "inner/outer SHJ / full_outer / double" -> "ShuffledHashJoinExec",
+        "inner/outer SHJ / full_outer / composite long" -> innerShjNo,
+        "inner/outer SHJ / full_outer / computed" -> "ShuffledHashJoinExec"
+      ))
+    } finally keys.foreach { case (name, _, _) =>
+      spark.sql(s"DROP TABLE IF EXISTS am_stream_${name.replace(' ', '_')}")
+    }
+  }
+
+  test("admission matrix: sort, top-k and window-group-limit keys") {
+    spark.read.parquet(s"$matrixDir/win").createOrReplaceTempView("am_win")
+    // (key, its column, the sort expression)
+    val keys = Seq(("int", "i", "i"), ("long", "l", "l"), ("double", "d", "d"),
+      ("string", "s", "s"), ("date", "dt", "dt"), ("decimal", "dec", "dec"),
+      ("wide decimal", "dec38", "dec38"), ("computed", "i", "i + 1"))
+    val ops: Seq[(String, (String, String) => String,
+        org.apache.spark.sql.execution.SparkPlan => Boolean)] = Seq(
+      ("sort", (c, _) => s"SELECT o, $c FROM am_win",
+        n => n.nodeName.contains("Sort")),
+      ("top-k", (c, k) => s"SELECT o, $c FROM am_win ORDER BY $k DESC LIMIT 5",
+        n => n.nodeName.contains("TopK") || n.nodeName.contains("TakeOrdered")),
+      ("window group limit", (c, k) => s"SELECT * FROM (SELECT o, $c, row_number() OVER " +
+        s"(PARTITION BY k ORDER BY $k) AS rn FROM am_win) WHERE rn <= 2",
+        n => n.nodeName.contains("GroupLimit")))
+    val actual = for {
+      (op, sql, candidate) <- ops
+      (name, c, k) <- keys
+    } yield s"$op / $name" -> withSQLConf(
+        org.apache.spark.sql.graft.GraftColumnarRule.sortEnabledKey -> "true") {
+      val df = spark.sql(sql(c, k))
+      admission(if (op == "sort") df.sortWithinPartitions(org.apache.spark.sql.functions.expr(k))
+        else df)(candidate)
+    }
+    assertMatrix(actual, Seq(
+      "sort / int" -> "GraftColumnarSortExec TopKKeySpec(1,IntegerType,false,true)",
+      "sort / long" -> "GraftColumnarSortExec TopKKeySpec(1,LongType,false,true)",
+      "sort / double" -> "GraftColumnarSortExec TopKKeySpec(1,DoubleType,false,true)",
+      "sort / string" -> "GraftColumnarSortExec TopKKeySpec(1,StringType,false,true)",
+      "sort / date" -> "GraftColumnarSortExec TopKKeySpec(1,DateType,false,true)",
+      "sort / decimal" -> "GraftColumnarSortExec TopKKeySpec(1,DecimalType(10,2),false,true)",
+      "sort / wide decimal" -> "Sort: unsupported sort key: dec38#N (DecimalType(38,2))",
+      "sort / computed" -> "Sort: unsupported sort key: (i#N + 1) (IntegerType)",
+      "top-k / int" -> "GraftColumnarTopKExec TopKKeySpec(1,IntegerType,true,false)",
+      "top-k / long" -> "GraftColumnarTopKExec TopKKeySpec(1,LongType,true,false)",
+      "top-k / double" -> "GraftColumnarTopKExec TopKKeySpec(1,DoubleType,true,false)",
+      "top-k / string" -> "GraftColumnarTopKExec TopKKeySpec(1,StringType,true,false)",
+      "top-k / date" -> "GraftColumnarTopKExec TopKKeySpec(1,DateType,true,false)",
+      "top-k / decimal" -> "GraftColumnarTopKExec TopKKeySpec(1,DecimalType(10,2),true,false)",
+      "top-k / wide decimal" -> "TakeOrderedAndProject: unsupported top-k sort key: dec38#N (DecimalType(38,2))",
+      "top-k / computed" -> "TakeOrderedAndProject: unsupported top-k sort key: (i#N + 1) (IntegerType)",
+      "window group limit / int" -> "WindowGroupLimitExec | GraftColumnarWindowGroupLimitExec TopKKeySpec(1,IntegerType,false,true)",
+      "window group limit / long" -> "WindowGroupLimitExec | GraftColumnarWindowGroupLimitExec TopKKeySpec(1,LongType,false,true)",
+      "window group limit / double" -> "WindowGroupLimitExec | GraftColumnarWindowGroupLimitExec TopKKeySpec(1,DoubleType,false,true)",
+      "window group limit / string" -> "WindowGroupLimitExec | GraftColumnarWindowGroupLimitExec TopKKeySpec(1,StringType,false,true)",
+      "window group limit / date" -> "WindowGroupLimitExec | GraftColumnarWindowGroupLimitExec TopKKeySpec(1,DateType,false,true)",
+      "window group limit / decimal" -> "WindowGroupLimitExec | GraftColumnarWindowGroupLimitExec TopKKeySpec(1,DecimalType(10,2),false,true)",
+      "window group limit / wide decimal" -> "WindowGroupLimitExec | WindowGroupLimit: window group limit not columnar-probeable (needs row_number/rank/dense_rank, 1-2 attribute partition keys and attribute order keys of supported types)",
+      "window group limit / computed" -> "WindowGroupLimitExec | GraftColumnarWindowGroupLimitExec TopKKeySpec(3,IntegerType,false,true)"
+    ))
   }
 }
