@@ -790,16 +790,11 @@ object GraftColumnarAgg {
     r
   }
 
-  /** Write one PARTIAL decimal-sum value: values that no longer fit the
-    * buffer precision emit null — the same clamp Spark's UnsafeRow
-    * buffer write applies at every update (UnsafeRow.setDecimal nulls
-    * on changePrecision failure), just applied at emit time.
-    */
   /** True when a spec set justifies staging a ROW child through
-    * RowToColumnarExec (see rowInputAggEnabledKey): only the decimal
-    * money lanes — whose unscaled-long/int128 accumulation replaces
-    * per-row BigDecimal arithmetic — beat the fused codegen agg by more
-    * than the row→batch copy costs (interleaved min-of-9 A/B: TPC-H
+    * RowToColumnarExec: only the decimal money lanes — whose
+    * unscaled-long/int128 accumulation replaces per-row BigDecimal
+    * arithmetic — beat the fused codegen agg by more than the
+    * row→batch copy costs (interleaved min-of-9 A/B: TPC-H
     * Q8 0.98×, Q14 0.94×, Q5 0.97×, Q9 1.01× with a money lane;
     * Q4/Q13/Q18/Q22 — count/min/max shapes — 0.99–1.05×, the copy is
     * pure overhead there). */
