@@ -14,81 +14,10 @@ import org.apache.spark.sql.execution.joins.HashedRelation
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.graft.SelectedColumnVector
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
-import org.apache.spark.unsafe.types.UTF8String
-
-/** Long-backed build-side output vector: one class serves the whole
-  * integral family (the declared dataType picks which getter consumers
-  * call; all read the same long slot). */
-final class LongBuildVector(dt: DataType, values: Array[Long], nulls: Array[Boolean], n: Int)
-    extends ColumnVector(dt) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getBoolean(rowId: Int): Boolean = values(rowId) != 0L
-  override def getByte(rowId: Int): Byte = values(rowId).toByte
-  override def getShort(rowId: Int): Short = values(rowId).toShort
-  override def getInt(rowId: Int): Int = values(rowId).toInt
-  override def getLong(rowId: Int): Long = values(rowId)
-  // Decimal64 rides the long lane as its unscaled value (the columnar
-  // sort buffers money columns this way); p > 18 never reaches here
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal =
-    Decimal.createUnsafe(values(rowId), p, s)
-  private def nope = throw new UnsupportedOperationException("long-family-only vector")
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
-
-/** Double-backed build-side output vector (double/float). */
-final class DoubleBuildVector(dt: DataType, values: Array[Double], nulls: Array[Boolean], n: Int)
-    extends ColumnVector(dt) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getDouble(rowId: Int): Double = values(rowId)
-  override def getFloat(rowId: Int): Float = values(rowId).toFloat
-  private def nope = throw new UnsupportedOperationException("double-family-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
+import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
 /** Hosts the probe-key helpers shared by the semi/anti broadcast probe
-  * and the shuffled hash joins (the sort and the window reuse the
-  * build-output vectors above): the build-output type families, the
+  * and the shuffled hash joins: the build-output type families, the
   * key-shape gate and the probe-side key getters. Inner and existence
   * broadcast joins stay on Spark's codegen-fused BroadcastHashJoinExec
   * (a JVM probe measured 1.65x and 1.2-1.4x slower there). */

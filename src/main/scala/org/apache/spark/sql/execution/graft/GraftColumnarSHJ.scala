@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.joins.HashedRelation
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.graft.SelectedColumnVector
+import org.apache.spark.sql.graft.{AllNullVector, DoubleBuildVector, LongBuildVector, SelectedColumnVector, StringArrayVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
@@ -402,7 +402,7 @@ case class GraftColumnarShuffledInnerJoinExec(
                   val out = new Array[org.apache.spark.unsafe.types.UTF8String](m)
                   var k = 0
                   while (k < m) { out(k) = if (nl(k)) null else src(k).clone(); k += 1 }
-                  new org.apache.spark.sql.graft.StringArrayVector(out, nl, m)
+                  new StringArrayVector(out, nl, m)
                 case dt =>
                   new LongBuildVector(dt, java.util.Arrays.copyOf(buildL(bOrd), m), nl, m)
               }
@@ -569,31 +569,4 @@ object GraftColumnarShuffledInnerJoinExec {
     * rows keeps batches big enough to amortize per-batch overhead while
     * bounding the buffers at ~64K * lanes * 8 B. */
   val maxBatchRows: Int = 1 << 16
-}
-
-/** All-null column of any type: the stream lanes of build-outer sweep
-  * batches (consumers check isNullAt before any getter — the
-  * ColumnarToRow/kernel contract).
-  */
-final class AllNullVector(dt: DataType, n: Int)
-    extends org.apache.spark.sql.vectorized.ColumnVector(dt) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = true
-  override def numNulls: Int = n
-  override def isNullAt(rowId: Int): Boolean = true
-  private def nope = throw new UnsupportedOperationException("all-null vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): org.apache.spark.sql.types.Decimal = nope
-  override def getUTF8String(rowId: Int): org.apache.spark.unsafe.types.UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getArray(rowId: Int): org.apache.spark.sql.vectorized.ColumnarArray = nope
-  override def getMap(rowId: Int): org.apache.spark.sql.vectorized.ColumnarMap = nope
-  override def getChild(ordinal: Int): org.apache.spark.sql.vectorized.ColumnVector = nope
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.graft.SelectedColumnVector
+import org.apache.spark.sql.graft.{ByteSliceStringVector, DoubleBuildVector, LongBuildVector, SelectedColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
@@ -998,44 +998,4 @@ object GraftColumnarSortExec {
       }
     }
   }
-}
-
-/** Zero-copy string views over [[GraftColumnarSortExec]]'s concatenated
-  * string buffer: getUTF8String wraps a (offset, length) slice of the
-  * shared byte array — no per-row copy at emission; the downstream
-  * ColumnarToRow (or next kernel) copies what it keeps, same contract as
-  * [[org.apache.spark.sql.graft.StringArrayVector]].
-  */
-final class ByteSliceStringVector(
-    bytes: Array[Byte], offs: Array[Int], lens: Array[Int],
-    nulls: Array[Boolean], n: Int)
-    extends ColumnVector(StringType) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getUTF8String(rowId: Int): UTF8String =
-    UTF8String.fromBytes(bytes, offs(rowId), lens(rowId))
-  private def nope = throw new UnsupportedOperationException("string-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): org.apache.spark.sql.vectorized.ColumnarArray = nope
-  override def getMap(rowId: Int): org.apache.spark.sql.vectorized.ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): org.apache.spark.sql.types.Decimal = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
 }

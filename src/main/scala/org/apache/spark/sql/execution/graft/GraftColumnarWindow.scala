@@ -9,8 +9,11 @@ import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.graft.{DoubleBuildVector, LongBuildVector, StringArrayVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+
+import GraftColumnarWindowExec.{emitDbl, emitLong, readBoxed, rowDbl, rowLong}
 
 /** One window aggregate over a supported frame.
   *
@@ -449,7 +452,7 @@ case class GraftColumnarWindowExec(
           val sp = ss(s)
           cols(nIn + s) =
             if (outS(s) ne null)
-              new org.apache.spark.sql.graft.StringArrayVector(outS(s), outNull(s), n)
+              new StringArrayVector(outS(s), outNull(s), n)
             else if (outL(s) ne null) new LongBuildVector(sp.outType, outL(s), outNull(s), n)
             else new DoubleBuildVector(sp.outType, outD(s), outNull(s), n)
           s += 1
@@ -485,34 +488,9 @@ case class GraftColumnarWindowExec(
     // detection; row_number needs only the partition counter
     val needPeers = ss.exists(s => s.fn == 7 || s.fn == 8)
     child.execute().mapPartitionsInternal { rows =>
-      val nP = pIdx.length
-      val nO = if (needPeers) oIdx.length else 0
       val nS = ss.length
-      def rowLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
-        case ByteType => r.getByte(ord).toLong
-        case ShortType => r.getShort(ord).toLong
-        case IntegerType | DateType => r.getInt(ord).toLong
-        case BooleanType => if (r.getBoolean(ord)) 1L else 0L
-        case d: DecimalType => r.getDecimal(ord, d.precision, d.scale).toUnscaledLong
-        // double/float reach here only as PEER keys (normalized bits)
-        case DoubleType => GraftColumnarWindowExec.peerBits(r.getDouble(ord))
-        case FloatType => GraftColumnarWindowExec.peerBits(r.getFloat(ord).toDouble)
-        case _ => r.getLong(ord)
-      }
-      def rowDbl(r: InternalRow, ord: Int, dt: DataType): Double = dt match {
-        case FloatType => r.getFloat(ord).toDouble
-        case ByteType => r.getByte(ord).toDouble
-        case ShortType => r.getShort(ord).toDouble
-        case IntegerType => r.getInt(ord).toDouble
-        case LongType => r.getLong(ord).toDouble
-        case _ => r.getDouble(ord)
-      }
-      val prevLong = new Array[Long](nP)
-      val prevStr = new Array[org.apache.spark.unsafe.types.UTF8String](nP)
-      val prevNull = new Array[Boolean](nP)
-      val oPrevLong = new Array[Long](nO)
-      val oPrevStr = new Array[org.apache.spark.unsafe.types.UTF8String](nO)
-      val oPrevNull = new Array[Boolean](nO)
+      val partCarry = new KeyCarry(pIdx, pTypes)
+      val peerCarry = if (needPeers) new KeyCarry(oIdx, oTypes) else null
       var anyRow = false
       val accLong = new Array[Long](nS)
       val accDbl = new Array[Double](nS)
@@ -533,42 +511,11 @@ case class GraftColumnarWindowExec(
         java.util.Arrays.fill(accAny.asInstanceOf[Array[AnyRef]], null)
         rkRowNum = 0L; rkRank = 0L; rkDense = 0L
       }
-      /** Boxed catalyst value of one input column — UTF8Strings CLONED
-        * (the child may reuse its row buffer across iterations). */
-      def readBoxed(r: InternalRow, ord: Int, dt: DataType): Any =
-        if (r.isNullAt(ord)) null
-        else dt match {
-          case LongType | TimestampType | TimestampNTZType => r.getLong(ord)
-          case IntegerType | DateType => r.getInt(ord)
-          case ShortType => r.getShort(ord)
-          case ByteType => r.getByte(ord)
-          case BooleanType => r.getBoolean(ord)
-          case DoubleType => r.getDouble(ord)
-          case FloatType => r.getFloat(ord)
-          case d: DecimalType => r.getDecimal(ord, d.precision, d.scale)
-          case StringType => r.getUTF8String(ord).clone()
-          case other => throw new IllegalStateException(s"bad first/last type $other")
-        }
       val aggRow = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(nS)
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(outAll.map(_.dataType).toArray)
-      def emitLong(s: Int, v: Long): Unit = ss(s).outType match {
-        case LongType | TimestampType | TimestampNTZType => aggRow.update(s, v)
-        case IntegerType | DateType => aggRow.update(s, v.toInt)
-        case ShortType => aggRow.update(s, v.toShort)
-        case ByteType => aggRow.update(s, v.toByte)
-        case BooleanType => aggRow.update(s, v != 0L)
-        case d: DecimalType =>
-          aggRow.update(s, org.apache.spark.sql.types.Decimal
-            .createUnsafe(v, d.precision, d.scale))
-        case _ => aggRow.update(s, v)
-      }
-      def emitDbl(s: Int, v: Double): Unit = ss(s).outType match {
-        case FloatType => aggRow.update(s, v.toFloat)
-        case _ => aggRow.update(s, v)
-      }
       // lag/lead (fn 12), sliding-in-mixed-node (fn 13), and exclusive
       // frames defer emission behind the consumption point; everything
       // else emits per row
@@ -591,55 +538,13 @@ case class GraftColumnarWindowExec(
       val cap = (maxLag + maxLead + 1L + (if (anyExcl) 1L else 0L)).toInt
       if (cap == 1) rows.map { row =>
         inM.add(1)
-        var boundary = !anyRow
-        var k = 0
-        while (!boundary && k < nP) {
-          val nl = row.isNullAt(pIdx(k))
-          boundary =
-            if (nl != prevNull(k)) true
-            else if (nl) false
-            else if (pTypes(k) == StringType)
-              row.getUTF8String(pIdx(k)).compareTo(prevStr(k)) != 0
-            else rowLong(row, pIdx(k), pTypes(k)) != prevLong(k)
-          k += 1
-        }
+        val boundary = !anyRow || partCarry.differs(row)
         // peer-group start: partition change OR any ORDER BY key differs
         // (nulls are peers of nulls) — decided BEFORE carrying the keys
-        var newPeer = boundary
-        k = 0
-        while (needPeers && !newPeer && k < nO) {
-          val nl = row.isNullAt(oIdx(k))
-          newPeer =
-            if (nl != oPrevNull(k)) true
-            else if (nl) false
-            else if (oTypes(k) == StringType)
-              row.getUTF8String(oIdx(k)).compareTo(oPrevStr(k)) != 0
-            else rowLong(row, oIdx(k), oTypes(k)) != oPrevLong(k)
-          k += 1
-        }
+        val newPeer = boundary || (needPeers && peerCarry.differs(row))
         if (boundary) { reset(); grpM.add(1) }
-        k = 0
-        while (k < nP) {
-          val nl = row.isNullAt(pIdx(k))
-          prevNull(k) = nl
-          if (!nl) {
-            if (pTypes(k) == StringType)
-              prevStr(k) = row.getUTF8String(pIdx(k)).clone()
-            else prevLong(k) = rowLong(row, pIdx(k), pTypes(k))
-          }
-          k += 1
-        }
-        k = 0
-        while (k < nO) {
-          val nl = row.isNullAt(oIdx(k))
-          oPrevNull(k) = nl
-          if (!nl) {
-            if (oTypes(k) == StringType)
-              oPrevStr(k) = row.getUTF8String(oIdx(k)).clone()
-            else oPrevLong(k) = rowLong(row, oIdx(k), oTypes(k))
-          }
-          k += 1
-        }
+        partCarry.carry(row)
+        if (needPeers) peerCarry.carry(row)
         anyRow = true
         rkRowNum += 1
         if (boundary) { rkRank = 1; rkDense = 1 }
@@ -665,7 +570,8 @@ case class GraftColumnarWindowExec(
                 accSeen(s) = true
               }
               if (accSeen(s)) {
-                if (sp.lane == 0) emitLong(s, accLong(s)) else emitDbl(s, accDbl(s))
+                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accLong(s))
+                else emitDbl(aggRow, s, sp.outType, accDbl(s))
               } else aggRow.setNullAt(s)
             case 1 =>
               if (!nullIn) accCnt(s) += 1
@@ -713,7 +619,8 @@ case class GraftColumnarWindowExec(
                 accSeen(s) = true
               }
               if (accSeen(s)) {
-                if (sp.lane == 0) emitLong(s, accLong(s)) else emitDbl(s, accDbl(s))
+                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accLong(s))
+                else emitDbl(aggRow, s, sp.outType, accDbl(s))
               } else aggRow.setNullAt(s)
             case _ => // avg
               if (!nullIn) {
@@ -830,8 +737,8 @@ case class GraftColumnarWindowExec(
           sp.fn match {
             case 0 | 2 | 3 =>
               if (snapSeen(slot)(s)) {
-                if (sp.lane == 0) emitLong(s, snapL(slot)(s))
-                else emitDbl(s, snapD(slot)(s))
+                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, snapL(slot)(s))
+                else emitDbl(aggRow, s, sp.outType, snapD(slot)(s))
               } else aggRow.setNullAt(s)
             case 1 | 5 => aggRow.update(s, snapCnt(slot)(s))
             case 4 =>
@@ -855,40 +762,9 @@ case class GraftColumnarWindowExec(
         /** Full consumption step for a row KNOWN to be in the current
           * partition (boundary handled by the caller). */
         def ingest(row: UnsafeRow, boundary: Boolean): Unit = {
-          var newPeer = boundary
-          var k = 0
-          while (needPeers && !newPeer && k < nO) {
-            val nl = row.isNullAt(oIdx(k))
-            newPeer =
-              if (nl != oPrevNull(k)) true
-              else if (nl) false
-              else if (oTypes(k) == StringType)
-                row.getUTF8String(oIdx(k)).compareTo(oPrevStr(k)) != 0
-              else rowLong(row, oIdx(k), oTypes(k)) != oPrevLong(k)
-            k += 1
-          }
-          k = 0
-          while (k < nP) {
-            val nl = row.isNullAt(pIdx(k))
-            prevNull(k) = nl
-            if (!nl) {
-              if (pTypes(k) == StringType)
-                prevStr(k) = row.getUTF8String(pIdx(k)).clone()
-              else prevLong(k) = rowLong(row, pIdx(k), pTypes(k))
-            }
-            k += 1
-          }
-          k = 0
-          while (k < nO) {
-            val nl = row.isNullAt(oIdx(k))
-            oPrevNull(k) = nl
-            if (!nl) {
-              if (oTypes(k) == StringType)
-                oPrevStr(k) = row.getUTF8String(oIdx(k)).clone()
-              else oPrevLong(k) = rowLong(row, oIdx(k), oTypes(k))
-            }
-            k += 1
-          }
+          val newPeer = boundary || (needPeers && peerCarry.differs(row))
+          partCarry.carry(row)
+          if (needPeers) peerCarry.carry(row)
           anyRow = true
           rkRowNum += 1
           if (boundary) { rkRank = 1; rkDense = 1 }
@@ -928,18 +804,7 @@ case class GraftColumnarWindowExec(
               while (!canEmit && !boundary && rows.hasNext) {
                 val row = rows.next().asInstanceOf[UnsafeRow].copy()
                 inM.add(1)
-                var newPart = !anyRow
-                var k = 0
-                while (!newPart && k < nP) {
-                  val nl = row.isNullAt(pIdx(k))
-                  newPart =
-                    if (nl != prevNull(k)) true
-                    else if (nl) false
-                    else if (pTypes(k) == StringType)
-                      row.getUTF8String(pIdx(k)).compareTo(prevStr(k)) != 0
-                    else rowLong(row, pIdx(k), pTypes(k)) != prevLong(k)
-                  k += 1
-                }
+                val newPart = !anyRow || partCarry.differs(row)
                 if (anyRow && newPart) {
                   held = row
                   flushN = cons
@@ -1037,8 +902,8 @@ case class GraftColumnarWindowExec(
                     case _ =>
                       if (seen) {
                         if (sp.lane == 3) aggRow.update(s, accS)
-                        else if (sp.lane == 0) emitLong(s, accL)
-                        else emitDbl(s, accD)
+                        else if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accL)
+                        else emitDbl(aggRow, s, sp.outType, accD)
                       } else aggRow.setNullAt(s)
                   }
                 }
@@ -1081,59 +946,6 @@ case class GraftColumnarWindowExec(
     val spillSizeThreshold = conf.windowExecBufferSpillSizeThreshold
     child.execute().mapPartitionsInternal { rows =>
       val nS = ss.length
-      def rowLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
-        case ByteType => r.getByte(ord).toLong
-        case ShortType => r.getShort(ord).toLong
-        case IntegerType | DateType => r.getInt(ord).toLong
-        case BooleanType => if (r.getBoolean(ord)) 1L else 0L
-        case d: DecimalType => r.getDecimal(ord, d.precision, d.scale).toUnscaledLong
-        // double/float reach here only as PEER keys (normalized bits)
-        case DoubleType => GraftColumnarWindowExec.peerBits(r.getDouble(ord))
-        case FloatType => GraftColumnarWindowExec.peerBits(r.getFloat(ord).toDouble)
-        case _ => r.getLong(ord)
-      }
-      def rowDbl(r: InternalRow, ord: Int, dt: DataType): Double = dt match {
-        case FloatType => r.getFloat(ord).toDouble
-        case ByteType => r.getByte(ord).toDouble
-        case ShortType => r.getShort(ord).toDouble
-        case IntegerType => r.getInt(ord).toDouble
-        case LongType => r.getLong(ord).toDouble
-        case _ => r.getDouble(ord)
-      }
-      /** Generic key-set comparator state: null-safe equality vs the
-        * previous row (peers/partitions group nulls together). */
-      final class KeyCarry(idx: Array[Int], types: Array[DataType]) {
-        private val longs = new Array[Long](idx.length)
-        private val strs = new Array[org.apache.spark.unsafe.types.UTF8String](idx.length)
-        private val nulls = new Array[Boolean](idx.length)
-        def differs(r: InternalRow): Boolean = {
-          var k = 0
-          while (k < idx.length) {
-            val nl = r.isNullAt(idx(k))
-            val d =
-              if (nl != nulls(k)) true
-              else if (nl) false
-              else if (types(k) == StringType)
-                r.getUTF8String(idx(k)).compareTo(strs(k)) != 0
-              else rowLong(r, idx(k), types(k)) != longs(k)
-            if (d) return true
-            k += 1
-          }
-          false
-        }
-        def carry(r: InternalRow): Unit = {
-          var k = 0
-          while (k < idx.length) {
-            val nl = r.isNullAt(idx(k))
-            nulls(k) = nl
-            if (!nl) {
-              if (types(k) == StringType) strs(k) = r.getUTF8String(idx(k)).clone()
-              else longs(k) = rowLong(r, idx(k), types(k))
-            }
-            k += 1
-          }
-        }
-      }
       val partCarry = new KeyCarry(pIdx, pTypes)
       val peerCarry = if (byPeer) new KeyCarry(oIdx, oTypes) else null
       var anyRow = false
@@ -1149,22 +961,6 @@ case class GraftColumnarWindowExec(
         java.util.Arrays.fill(accSeen, false)
         java.util.Arrays.fill(accAny.asInstanceOf[Array[AnyRef]], null)
       }
-      /** Boxed catalyst value — UTF8Strings CLONED (buffered rows may
-        * outlive the child's reused row buffer). */
-      def readBoxed(r: InternalRow, ord: Int, dt: DataType): Any =
-        if (r.isNullAt(ord)) null
-        else dt match {
-          case LongType | TimestampType | TimestampNTZType => r.getLong(ord)
-          case IntegerType | DateType => r.getInt(ord)
-          case ShortType => r.getShort(ord)
-          case ByteType => r.getByte(ord)
-          case BooleanType => r.getBoolean(ord)
-          case DoubleType => r.getDouble(ord)
-          case FloatType => r.getFloat(ord)
-          case d: DecimalType => r.getDecimal(ord, d.precision, d.scale)
-          case StringType => r.getUTF8String(ord).clone()
-          case other => throw new IllegalStateException(s"bad first/last type $other")
-        }
       val aggRow = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(nS)
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
@@ -1236,17 +1032,6 @@ case class GraftColumnarWindowExec(
           s += 1
         }
       }
-      def emitLong(s: Int, v: Long): Unit = ss(s).outType match {
-        case LongType | TimestampType | TimestampNTZType => aggRow.update(s, v)
-        case IntegerType | DateType => aggRow.update(s, v.toInt)
-        case ShortType => aggRow.update(s, v.toShort)
-        case ByteType => aggRow.update(s, v.toByte)
-        case BooleanType => aggRow.update(s, v != 0L)
-        case d: DecimalType =>
-          aggRow.update(s, org.apache.spark.sql.types.Decimal
-            .createUnsafe(v, d.precision, d.scale))
-        case _ => aggRow.update(s, v)
-      }
       def closeGroupValues(): Unit = {
         var s = 0
         while (s < nS) {
@@ -1260,9 +1045,8 @@ case class GraftColumnarWindowExec(
               if (accSeen(s)) aggRow.update(s, accAny(s)) else aggRow.setNullAt(s)
             case _ =>
               if (accSeen(s)) {
-                if (sp.lane == 0) emitLong(s, accLong(s))
-                else if (sp.outType == FloatType) aggRow.update(s, accDbl(s).toFloat)
-                else aggRow.update(s, accDbl(s))
+                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accLong(s))
+                else emitDbl(aggRow, s, sp.outType, accDbl(s))
               } else aggRow.setNullAt(s)
           }
           s += 1
@@ -1379,57 +1163,6 @@ case class GraftColumnarWindowExec(
     val spillSizeThreshold = conf.windowExecBufferSpillSizeThreshold
     child.execute().mapPartitionsInternal { rows =>
       val nS = ss.length
-      def rowLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
-        case ByteType => r.getByte(ord).toLong
-        case ShortType => r.getShort(ord).toLong
-        case IntegerType | DateType => r.getInt(ord).toLong
-        case BooleanType => if (r.getBoolean(ord)) 1L else 0L
-        case d: DecimalType => r.getDecimal(ord, d.precision, d.scale).toUnscaledLong
-        // double/float reach here only as PEER keys (normalized bits)
-        case DoubleType => GraftColumnarWindowExec.peerBits(r.getDouble(ord))
-        case FloatType => GraftColumnarWindowExec.peerBits(r.getFloat(ord).toDouble)
-        case _ => r.getLong(ord)
-      }
-      def rowDbl(r: InternalRow, ord: Int, dt: DataType): Double = dt match {
-        case FloatType => r.getFloat(ord).toDouble
-        case ByteType => r.getByte(ord).toDouble
-        case ShortType => r.getShort(ord).toDouble
-        case IntegerType => r.getInt(ord).toDouble
-        case LongType => r.getLong(ord).toDouble
-        case _ => r.getDouble(ord)
-      }
-      final class KeyCarry(idx: Array[Int], types: Array[DataType]) {
-        private val longs = new Array[Long](idx.length)
-        private val strs = new Array[org.apache.spark.unsafe.types.UTF8String](idx.length)
-        private val nulls = new Array[Boolean](idx.length)
-        def differs(r: InternalRow): Boolean = {
-          var k = 0
-          while (k < idx.length) {
-            val nl = r.isNullAt(idx(k))
-            val d =
-              if (nl != nulls(k)) true
-              else if (nl) false
-              else if (types(k) == StringType)
-                r.getUTF8String(idx(k)).compareTo(strs(k)) != 0
-              else rowLong(r, idx(k), types(k)) != longs(k)
-            if (d) return true
-            k += 1
-          }
-          false
-        }
-        def carry(r: InternalRow): Unit = {
-          var k = 0
-          while (k < idx.length) {
-            val nl = r.isNullAt(idx(k))
-            nulls(k) = nl
-            if (!nl) {
-              if (types(k) == StringType) strs(k) = r.getUTF8String(idx(k)).clone()
-              else longs(k) = rowLong(r, idx(k), types(k))
-            }
-            k += 1
-          }
-        }
-      }
       val partCarry = new KeyCarry(pIdx, pTypes)
       // ranking (7/8) and percent_rank need peer detection on the
       // emission cursor; kind-1 nodes detect peers to drive the scout
@@ -1447,20 +1180,6 @@ case class GraftColumnarWindowExec(
         java.util.Arrays.fill(accSeen, false)
         java.util.Arrays.fill(accAny.asInstanceOf[Array[AnyRef]], null)
       }
-      def readBoxed(r: InternalRow, ord: Int, dt: DataType): Any =
-        if (r.isNullAt(ord)) null
-        else dt match {
-          case LongType | TimestampType | TimestampNTZType => r.getLong(ord)
-          case IntegerType | DateType => r.getInt(ord)
-          case ShortType => r.getShort(ord)
-          case ByteType => r.getByte(ord)
-          case BooleanType => r.getBoolean(ord)
-          case DoubleType => r.getDouble(ord)
-          case FloatType => r.getFloat(ord)
-          case d: DecimalType => r.getDecimal(ord, d.precision, d.scale)
-          case StringType => r.getUTF8String(ord).clone()
-          case other => throw new IllegalStateException(s"bad first/last type $other")
-        }
       val aggRow = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(nS)
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
@@ -1534,17 +1253,6 @@ case class GraftColumnarWindowExec(
           s += 1
         }
       }
-      def emitLong(s: Int, v: Long): Unit = ss(s).outType match {
-        case LongType | TimestampType | TimestampNTZType => aggRow.update(s, v)
-        case IntegerType | DateType => aggRow.update(s, v.toInt)
-        case ShortType => aggRow.update(s, v.toShort)
-        case ByteType => aggRow.update(s, v.toByte)
-        case BooleanType => aggRow.update(s, v != 0L)
-        case d: DecimalType =>
-          aggRow.update(s, org.apache.spark.sql.types.Decimal
-            .createUnsafe(v, d.precision, d.scale))
-        case _ => aggRow.update(s, v)
-      }
       /** Aggregate (fn 0-5, 9-11) lanes from the accumulators — the
         * accumulated state IS the emitted value for both kinds (kind 0:
         * updated through the current row; kind 1: through the scout's
@@ -1562,9 +1270,8 @@ case class GraftColumnarWindowExec(
               if (accSeen(s)) aggRow.update(s, accAny(s)) else aggRow.setNullAt(s)
             case _ =>
               if (accSeen(s)) {
-                if (sp.lane == 0) emitLong(s, accLong(s))
-                else if (sp.outType == FloatType) aggRow.update(s, accDbl(s).toFloat)
-                else aggRow.update(s, accDbl(s))
+                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accLong(s))
+                else emitDbl(aggRow, s, sp.outType, accDbl(s))
               } else aggRow.setNullAt(s)
           }
           s += 1
@@ -1828,57 +1535,6 @@ case class GraftColumnarWindowExec(
       GraftColumnarWindowExec.suffixBlockRowsKey, "4096").toInt
     child.execute().mapPartitionsInternal { rows =>
       val nS = ss.length
-      def rowLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
-        case ByteType => r.getByte(ord).toLong
-        case ShortType => r.getShort(ord).toLong
-        case IntegerType | DateType => r.getInt(ord).toLong
-        case BooleanType => if (r.getBoolean(ord)) 1L else 0L
-        case d: DecimalType => r.getDecimal(ord, d.precision, d.scale).toUnscaledLong
-        // double/float reach here only as PEER keys (normalized bits)
-        case DoubleType => GraftColumnarWindowExec.peerBits(r.getDouble(ord))
-        case FloatType => GraftColumnarWindowExec.peerBits(r.getFloat(ord).toDouble)
-        case _ => r.getLong(ord)
-      }
-      def rowDbl(r: InternalRow, ord: Int, dt: DataType): Double = dt match {
-        case FloatType => r.getFloat(ord).toDouble
-        case ByteType => r.getByte(ord).toDouble
-        case ShortType => r.getShort(ord).toDouble
-        case IntegerType => r.getInt(ord).toDouble
-        case LongType => r.getLong(ord).toDouble
-        case _ => r.getDouble(ord)
-      }
-      final class KeyCarry(idx: Array[Int], types: Array[DataType]) {
-        private val longs = new Array[Long](idx.length)
-        private val strs = new Array[org.apache.spark.unsafe.types.UTF8String](idx.length)
-        private val nulls = new Array[Boolean](idx.length)
-        def differs(r: InternalRow): Boolean = {
-          var k = 0
-          while (k < idx.length) {
-            val nl = r.isNullAt(idx(k))
-            val d =
-              if (nl != nulls(k)) true
-              else if (nl) false
-              else if (types(k) == StringType)
-                r.getUTF8String(idx(k)).compareTo(strs(k)) != 0
-              else rowLong(r, idx(k), types(k)) != longs(k)
-            if (d) return true
-            k += 1
-          }
-          false
-        }
-        def carry(r: InternalRow): Unit = {
-          var k = 0
-          while (k < idx.length) {
-            val nl = r.isNullAt(idx(k))
-            nulls(k) = nl
-            if (!nl) {
-              if (types(k) == StringType) strs(k) = r.getUTF8String(idx(k)).clone()
-              else longs(k) = rowLong(r, idx(k), types(k))
-            }
-            k += 1
-          }
-        }
-      }
       val partCarry = new KeyCarry(pIdx, pTypes)
       val peerCarry = if (byPeer) new KeyCarry(oIdx, oTypes) else null
       val aggRow = new org.apache.spark.sql.catalyst.expressions
@@ -1886,33 +1542,6 @@ case class GraftColumnarWindowExec(
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(outAll.map(_.dataType).toArray)
-      /** Boxed catalyst value — UTF8Strings CLONED (buffered rows may
-        * outlive a spilled reader's reused buffer). */
-      def readBoxed(r: InternalRow, ord: Int, dt: DataType): Any =
-        if (r.isNullAt(ord)) null
-        else dt match {
-          case LongType | TimestampType | TimestampNTZType => r.getLong(ord)
-          case IntegerType | DateType => r.getInt(ord)
-          case ShortType => r.getShort(ord)
-          case ByteType => r.getByte(ord)
-          case BooleanType => r.getBoolean(ord)
-          case DoubleType => r.getDouble(ord)
-          case FloatType => r.getFloat(ord)
-          case d: DecimalType => r.getDecimal(ord, d.precision, d.scale)
-          case StringType => r.getUTF8String(ord).clone()
-          case other => throw new IllegalStateException(s"bad first/last type $other")
-        }
-      def emitLong(s: Int, v: Long): Unit = ss(s).outType match {
-        case LongType | TimestampType | TimestampNTZType => aggRow.update(s, v)
-        case IntegerType | DateType => aggRow.update(s, v.toInt)
-        case ShortType => aggRow.update(s, v.toShort)
-        case ByteType => aggRow.update(s, v.toByte)
-        case BooleanType => aggRow.update(s, v != 0L)
-        case d: DecimalType =>
-          aggRow.update(s, org.apache.spark.sql.types.Decimal
-            .createUnsafe(v, d.precision, d.scale))
-        case _ => aggRow.update(s, v)
-      }
       // per-spec block-suffix accumulators (sized to the partition's
       // block count, grown on demand, suffix-combined in place) and
       // per-block staging (the block's input values + each row's FINAL
@@ -2453,11 +2082,9 @@ case class GraftColumnarWindowExec(
               case _ =>
                 val isNull = if (useLatch) latchNull(t) else outNull(t)(j)
                 if (isNull) aggRow.setNullAt(t)
-                else if (sp.lane == 1) {
-                  val x = if (useLatch) latchD(t) else outD(t)(j)
-                  if (sp.outType == FloatType) aggRow.update(t, x.toFloat)
-                  else aggRow.update(t, x)
-                } else emitLong(t, if (useLatch) latchL(t) else outL(t)(j))
+                else if (sp.lane == 1)
+                  emitDbl(aggRow, t, sp.outType, if (useLatch) latchD(t) else outD(t)(j))
+                else emitLong(aggRow, t, sp.outType, if (useLatch) latchL(t) else outL(t)(j))
             }
             t += 1
           }
@@ -2528,63 +2155,8 @@ case class GraftWindowOffsetExec(
     val cap = maxLag + maxLead + 1
     child.execute().mapPartitionsInternal { rows =>
       import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-      def rowLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
-        case ByteType => r.getByte(ord).toLong
-        case ShortType => r.getShort(ord).toLong
-        case IntegerType | DateType => r.getInt(ord).toLong
-        case BooleanType => if (r.getBoolean(ord)) 1L else 0L
-        case d: DecimalType => r.getDecimal(ord, d.precision, d.scale).toUnscaledLong
-        // double/float reach here only as PEER keys (normalized bits)
-        case DoubleType => GraftColumnarWindowExec.peerBits(r.getDouble(ord))
-        case FloatType => GraftColumnarWindowExec.peerBits(r.getFloat(ord).toDouble)
-        case _ => r.getLong(ord)
-      }
-      /** Boxed catalyst value of one column — feeds the GenericInternalRow. */
-      def readBoxed(r: InternalRow, ord: Int, dt: DataType): Any =
-        if (r.isNullAt(ord)) null
-        else dt match {
-          case LongType | TimestampType | TimestampNTZType => r.getLong(ord)
-          case IntegerType | DateType => r.getInt(ord)
-          case ShortType => r.getShort(ord)
-          case ByteType => r.getByte(ord)
-          case BooleanType => r.getBoolean(ord)
-          case DoubleType => r.getDouble(ord)
-          case FloatType => r.getFloat(ord)
-          case d: DecimalType => r.getDecimal(ord, d.precision, d.scale)
-          case StringType => r.getUTF8String(ord)
-          case other => throw new IllegalStateException(s"bad offset type $other")
-        }
-      val prevLong = new Array[Long](pIdx.length)
-      val prevStr = new Array[org.apache.spark.unsafe.types.UTF8String](pIdx.length)
-      val prevNull = new Array[Boolean](pIdx.length)
+      val partCarry = new KeyCarry(pIdx, pTypes)
       var anyRow = false
-      def partDiffers(r: InternalRow): Boolean = {
-        var k = 0
-        while (k < pIdx.length) {
-          val nl = r.isNullAt(pIdx(k))
-          val d =
-            if (nl != prevNull(k)) true
-            else if (nl) false
-            else if (pTypes(k) == StringType)
-              r.getUTF8String(pIdx(k)).compareTo(prevStr(k)) != 0
-            else rowLong(r, pIdx(k), pTypes(k)) != prevLong(k)
-          if (d) return true
-          k += 1
-        }
-        false
-      }
-      def partCarry(r: InternalRow): Unit = {
-        var k = 0
-        while (k < pIdx.length) {
-          val nl = r.isNullAt(pIdx(k))
-          prevNull(k) = nl
-          if (!nl) {
-            if (pTypes(k) == StringType) prevStr(k) = r.getUTF8String(pIdx(k)).clone()
-            else prevLong(k) = rowLong(r, pIdx(k), pTypes(k))
-          }
-          k += 1
-        }
-      }
       val ring = new Array[UnsafeRow](cap)
       val aggRow = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(ss.length)
@@ -2615,7 +2187,7 @@ case class GraftWindowOffsetExec(
               flushN = -1; cons = 0; emitE = 0
               if (held != null) {
                 grpM.add(1)
-                partCarry(held)
+                partCarry.carry(held)
                 ring(0) = held
                 cons = 1
                 held = null
@@ -2625,14 +2197,14 @@ case class GraftWindowOffsetExec(
             while (!canEmit && !boundary && rows.hasNext) {
               val row = rows.next().asInstanceOf[UnsafeRow].copy()
               inM.add(1)
-              if (anyRow && partDiffers(row)) {
+              if (anyRow && partCarry.differs(row)) {
                 held = row
                 flushN = cons
                 boundary = true
               } else {
                 if (!anyRow) grpM.add(1)
                 anyRow = true
-                partCarry(row)
+                partCarry.carry(row)
                 ring((cons % cap).toInt) = row
                 cons += 1
               }
@@ -2662,7 +2234,7 @@ case class GraftWindowOffsetExec(
             val sp = ss(s)
             val t = e + sp.offset
             if (t < 0 || t >= bound) aggRow.update(s, sp.default)
-            else aggRow.update(s, readBoxed(ring((t % cap).toInt), sp.col, sp.dt))
+            else aggRow.update(s, readBoxed(ring((t % cap).toInt), sp.col, sp.dt, copy = false))
             s += 1
           }
           proj(joined(ring((e % cap).toInt), aggRow))
@@ -2779,56 +2351,8 @@ case class GraftWindowSlidingExec(
     val cap = (if (fastMode) maxLead + 1L else maxLead + 1L - minLo).toInt
     child.execute().mapPartitionsInternal { rows =>
       import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-      def rowLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
-        case ByteType => r.getByte(ord).toLong
-        case ShortType => r.getShort(ord).toLong
-        case IntegerType | DateType => r.getInt(ord).toLong
-        case BooleanType => if (r.getBoolean(ord)) 1L else 0L
-        case d: DecimalType => r.getDecimal(ord, d.precision, d.scale).toUnscaledLong
-        // double/float reach here only as PEER keys (normalized bits)
-        case DoubleType => GraftColumnarWindowExec.peerBits(r.getDouble(ord))
-        case FloatType => GraftColumnarWindowExec.peerBits(r.getFloat(ord).toDouble)
-        case _ => r.getLong(ord)
-      }
-      def rowDbl(r: InternalRow, ord: Int, dt: DataType): Double = dt match {
-        case FloatType => r.getFloat(ord).toDouble
-        case ByteType => r.getByte(ord).toDouble
-        case ShortType => r.getShort(ord).toDouble
-        case IntegerType => r.getInt(ord).toDouble
-        case LongType => r.getLong(ord).toDouble
-        case _ => r.getDouble(ord)
-      }
-      val prevLong = new Array[Long](pIdx.length)
-      val prevStr = new Array[org.apache.spark.unsafe.types.UTF8String](pIdx.length)
-      val prevNull = new Array[Boolean](pIdx.length)
+      val partCarry = new KeyCarry(pIdx, pTypes)
       var anyRow = false
-      def partDiffers(r: InternalRow): Boolean = {
-        var k = 0
-        while (k < pIdx.length) {
-          val nl = r.isNullAt(pIdx(k))
-          val d =
-            if (nl != prevNull(k)) true
-            else if (nl) false
-            else if (pTypes(k) == StringType)
-              r.getUTF8String(pIdx(k)).compareTo(prevStr(k)) != 0
-            else rowLong(r, pIdx(k), pTypes(k)) != prevLong(k)
-          if (d) return true
-          k += 1
-        }
-        false
-      }
-      def partCarry(r: InternalRow): Unit = {
-        var k = 0
-        while (k < pIdx.length) {
-          val nl = r.isNullAt(pIdx(k))
-          prevNull(k) = nl
-          if (!nl) {
-            if (pTypes(k) == StringType) prevStr(k) = r.getUTF8String(pIdx(k)).clone()
-            else prevLong(k) = rowLong(r, pIdx(k), pTypes(k))
-          }
-          k += 1
-        }
-      }
       val ring = new Array[UnsafeRow](cap)
       // fast-mode per-spec state: value rings (sized to cover every
       // index between a spec's lowest live frame start and the
@@ -2918,17 +2442,6 @@ case class GraftWindowSlidingExec(
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(outAll.map(_.dataType).toArray)
-      def emitLong(s: Int, v: Long): Unit = ss(s).outType match {
-        case LongType | TimestampType | TimestampNTZType => aggRow.update(s, v)
-        case IntegerType | DateType => aggRow.update(s, v.toInt)
-        case ShortType => aggRow.update(s, v.toShort)
-        case ByteType => aggRow.update(s, v.toByte)
-        case BooleanType => aggRow.update(s, v != 0L)
-        case d: DecimalType =>
-          aggRow.update(s, org.apache.spark.sql.types.Decimal
-            .createUnsafe(v, d.precision, d.scale))
-        case _ => aggRow.update(s, v)
-      }
       /** O(1)-amortized update of spec `s` to frame [from, to]: exact
         * add/subtract on the long sum/count lanes (modular arithmetic is
         * order-free, so results equal the recompute path bit-for-bit) and
@@ -2962,7 +2475,7 @@ case class GraftWindowSlidingExec(
               }
               t += 1
             }
-            if (cnt > 0) emitLong(s, acc) else aggRow.setNullAt(s)
+            if (cnt > 0) emitLong(aggRow, s, sp.outType, acc) else aggRow.setNullAt(s)
           case 0 | 1 =>
             val vl = vLongS(s)
             while (hiF(s) < to) {
@@ -2985,7 +2498,7 @@ case class GraftWindowSlidingExec(
               loF(s) += 1
             }
             if (sp.fn == 1) aggRow.update(s, cntF(s))
-            else if (cntF(s) > 0) emitLong(s, accLF(s))
+            else if (cntF(s) > 0) emitLong(aggRow, s, sp.outType, accLF(s))
             else aggRow.setNullAt(s)
           case _ => // min/max: monotonic deque of candidate indices
             val dq = dqS(s)
@@ -3041,12 +2554,8 @@ case class GraftWindowSlidingExec(
             if (dqLen(s) == 0) aggRow.setNullAt(s)
             else {
               val idx = dq(dqHead(s))
-              if (sp.lane == 0) emitLong(s, vLongS(s)((idx % vc).toInt))
-              else {
-                val x = vDblS(s)((idx % vc).toInt)
-                if (sp.outType == FloatType) aggRow.update(s, x.toFloat)
-                else aggRow.update(s, x)
-              }
+              if (sp.lane == 0) emitLong(aggRow, s, sp.outType, vLongS(s)((idx % vc).toInt))
+              else emitDbl(aggRow, s, sp.outType, vDblS(s)((idx % vc).toInt))
             }
         }
       }
@@ -3110,9 +2619,8 @@ case class GraftWindowSlidingExec(
             else aggRow.setNullAt(s)
           case _ =>
             if (seen) {
-              if (sp.lane == 0) emitLong(s, accL)
-              else if (sp.outType == FloatType) aggRow.update(s, accD.toFloat)
-              else aggRow.update(s, accD)
+              if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accL)
+              else emitDbl(aggRow, s, sp.outType, accD)
             } else aggRow.setNullAt(s)
         }
       }
@@ -3134,7 +2642,7 @@ case class GraftWindowSlidingExec(
               if (fastMode) resetFast()
               if (held != null) {
                 grpM.add(1)
-                partCarry(held)
+                partCarry.carry(held)
                 ring(0) = held
                 if (fastMode) storeVals(held, 0L)
                 cons = 1
@@ -3145,14 +2653,14 @@ case class GraftWindowSlidingExec(
             while (!canEmit && !boundary && rows.hasNext) {
               val row = rows.next().asInstanceOf[UnsafeRow].copy()
               inM.add(1)
-              if (anyRow && partDiffers(row)) {
+              if (anyRow && partCarry.differs(row)) {
                 held = row
                 flushN = cons
                 boundary = true
               } else {
                 if (!anyRow) grpM.add(1)
                 anyRow = true
-                partCarry(row)
+                partCarry.carry(row)
                 ring((cons % cap).toInt) = row
                 if (fastMode) storeVals(row, cons)
                 cons += 1
@@ -3338,56 +2846,8 @@ case class GraftWindowRangeSlideExec(
     child.execute().mapPartitionsInternal { rows =>
       import org.apache.spark.sql.catalyst.expressions.UnsafeRow
       val nS = ss.length
-      def rowLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
-        case ByteType => r.getByte(ord).toLong
-        case ShortType => r.getShort(ord).toLong
-        case IntegerType | DateType => r.getInt(ord).toLong
-        case BooleanType => if (r.getBoolean(ord)) 1L else 0L
-        case d: DecimalType => r.getDecimal(ord, d.precision, d.scale).toUnscaledLong
-        // double/float reach here only as PEER keys (normalized bits)
-        case DoubleType => GraftColumnarWindowExec.peerBits(r.getDouble(ord))
-        case FloatType => GraftColumnarWindowExec.peerBits(r.getFloat(ord).toDouble)
-        case _ => r.getLong(ord)
-      }
-      def rowDbl(r: InternalRow, ord: Int, dt: DataType): Double = dt match {
-        case FloatType => r.getFloat(ord).toDouble
-        case ByteType => r.getByte(ord).toDouble
-        case ShortType => r.getShort(ord).toDouble
-        case IntegerType => r.getInt(ord).toDouble
-        case LongType => r.getLong(ord).toDouble
-        case _ => r.getDouble(ord)
-      }
-      val prevLong = new Array[Long](pIdx.length)
-      val prevStr = new Array[org.apache.spark.unsafe.types.UTF8String](pIdx.length)
-      val prevNull = new Array[Boolean](pIdx.length)
+      val partCarry = new KeyCarry(pIdx, pTypes)
       var anyRow = false
-      def partDiffers(r: InternalRow): Boolean = {
-        var k = 0
-        while (k < pIdx.length) {
-          val nl = r.isNullAt(pIdx(k))
-          val d =
-            if (nl != prevNull(k)) true
-            else if (nl) false
-            else if (pTypes(k) == StringType)
-              r.getUTF8String(pIdx(k)).compareTo(prevStr(k)) != 0
-            else rowLong(r, pIdx(k), pTypes(k)) != prevLong(k)
-          if (d) return true
-          k += 1
-        }
-        false
-      }
-      def partCarry(r: InternalRow): Unit = {
-        var k = 0
-        while (k < pIdx.length) {
-          val nl = r.isNullAt(pIdx(k))
-          prevNull(k) = nl
-          if (!nl) {
-            if (pTypes(k) == StringType) prevStr(k) = r.getUTF8String(pIdx(k)).clone()
-            else prevLong(k) = rowLong(r, pIdx(k), pTypes(k))
-          }
-          k += 1
-        }
-      }
       val reservation = org.apache.spark.sql.graft.GraftMemoryReservation.forTask()
       // Order-value comparisons, abstracted over the key family:
       // integral keys use exact long deltas along the sort direction;
@@ -3685,17 +3145,6 @@ case class GraftWindowRangeSlideExec(
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(outAll.map(_.dataType).toArray)
-      def emitLong(s: Int, v: Long): Unit = ss(s).outType match {
-        case LongType | TimestampType | TimestampNTZType => aggRow.update(s, v)
-        case IntegerType | DateType => aggRow.update(s, v.toInt)
-        case ShortType => aggRow.update(s, v.toShort)
-        case ByteType => aggRow.update(s, v.toByte)
-        case BooleanType => aggRow.update(s, v != 0L)
-        case d: DecimalType =>
-          aggRow.update(s, org.apache.spark.sql.types.Decimal
-            .createUnsafe(v, d.precision, d.scale))
-        case _ => aggRow.update(s, v)
-      }
       // per-spec frame cache: ties share identical frames (value-based
       // bounds), so consecutive rows of a tie group — the common case
       // for date-granularity keys — reuse the computed aggregate
@@ -3803,7 +3252,7 @@ case class GraftWindowRangeSlideExec(
         sp.fn match {
           case 1 => aggRow.update(s, iCnt(s))
           case 0 =>
-            if (iCnt(s) > 0) emitLong(s, iAccL(s)) else aggRow.setNullAt(s)
+            if (iCnt(s) > 0) emitLong(aggRow, s, sp.outType, iAccL(s)) else aggRow.setNullAt(s)
           case _ =>
             val dq = rDq(s)
             while (rDqLen(s) > 0 && dq(rDqHead(s)) < lp) {
@@ -3813,12 +3262,8 @@ case class GraftWindowRangeSlideExec(
             if (rDqLen(s) == 0) aggRow.setNullAt(s)
             else {
               val hd = dq(rDqHead(s))
-              if (sp.lane == 0) emitLong(s, specLAt(s, hd))
-              else {
-                val x = specDAt(s, hd)
-                if (sp.outType == FloatType) aggRow.update(s, x.toFloat)
-                else aggRow.update(s, x)
-              }
+              if (sp.lane == 0) emitLong(aggRow, s, sp.outType, specLAt(s, hd))
+              else emitDbl(aggRow, s, sp.outType, specDAt(s, hd))
             }
         }
       }
@@ -3832,9 +3277,8 @@ case class GraftWindowRangeSlideExec(
             else aggRow.setNullAt(s)
           case _ =>
             if (cSeen(s)) {
-              if (sp.lane == 0) emitLong(s, cL(s))
-              else if (sp.outType == FloatType) aggRow.update(s, cD(s).toFloat)
-              else aggRow.update(s, cD(s))
+              if (sp.lane == 0) emitLong(aggRow, s, sp.outType, cL(s))
+              else emitDbl(aggRow, s, sp.outType, cD(s))
             } else aggRow.setNullAt(s)
         }
       }
@@ -3951,14 +3395,14 @@ case class GraftWindowRangeSlideExec(
           if (!rows.hasNext) return false
           val row = rows.next().asInstanceOf[UnsafeRow].copy()
           inM.add(1)
-          if (anyRow && partDiffers(row)) {
+          if (anyRow && partCarry.differs(row)) {
             held = row
             flushN = cons
             return false
           }
           if (!anyRow) grpM.add(1)
           anyRow = true
-          partCarry(row)
+          partCarry.carry(row)
           rowBytesSum += row.getSizeInBytes
           rowCount += 1
           // ANSI long sums leave the incremental path for the rest of
@@ -4004,7 +3448,7 @@ case class GraftWindowRangeSlideExec(
               resetPart()
               if (held != null) {
                 grpM.add(1)
-                partCarry(held)
+                partCarry.carry(held)
                 ring(0) = held
                 val nl = held.isNullAt(oIdx)
                 ordNulls(0) = nl
@@ -4109,6 +3553,44 @@ object GraftWindowRangeSlideExec {
     "spark.graft.columnar.window.rangeslide.ansiFrameRowCap"
 }
 
+/** Partition/peer key carry of the row faces: null-safe equality of a
+  * row's keys (`idx`, of `types`) against the last carried row — nulls
+  * group with nulls. Strings are cloned on carry (the child may reuse
+  * its row buffer); every other key type rides the long lane.
+  */
+private[graft] final class KeyCarry(idx: Array[Int], types: Array[DataType]) {
+  private val longs = new Array[Long](idx.length)
+  private val strs = new Array[org.apache.spark.unsafe.types.UTF8String](idx.length)
+  private val nulls = new Array[Boolean](idx.length)
+  def differs(r: InternalRow): Boolean = {
+    var k = 0
+    while (k < idx.length) {
+      val nl = r.isNullAt(idx(k))
+      val d =
+        if (nl != nulls(k)) true
+        else if (nl) false
+        else if (types(k) == StringType)
+          r.getUTF8String(idx(k)).compareTo(strs(k)) != 0
+        else rowLong(r, idx(k), types(k)) != longs(k)
+      if (d) return true
+      k += 1
+    }
+    false
+  }
+  def carry(r: InternalRow): Unit = {
+    var k = 0
+    while (k < idx.length) {
+      val nl = r.isNullAt(idx(k))
+      nulls(k) = nl
+      if (!nl) {
+        if (types(k) == StringType) strs(k) = r.getUTF8String(idx(k)).clone()
+        else longs(k) = rowLong(r, idx(k), types(k))
+      }
+      k += 1
+    }
+  }
+}
+
 object GraftColumnarWindowExec {
   /** Rows per suffix-frame staging block (pass-2 value arrays are this
     * long; block-suffix accumulators number n/blockRows). 4,096 default
@@ -4141,4 +3623,68 @@ object GraftColumnarWindowExec {
   def peerBits(d: Double): Long =
     java.lang.Double.doubleToLongBits(
       if (java.lang.Double.isNaN(d)) Double.NaN else if (d == 0.0) 0.0 else d)
+
+  // Row-lane helpers shared by every row face (the streaming, deferred,
+  // size-based and suffix faces of GraftColumnarWindowExec, and the
+  // offset, sliding and RANGE-slide nodes).
+
+  /** Long-lane value of a non-null row column: integral/date/bool widen,
+    * Decimal64 reads its unscaled long, timestamps read their micros. */
+  def rowLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
+    case ByteType => r.getByte(ord).toLong
+    case ShortType => r.getShort(ord).toLong
+    case IntegerType | DateType => r.getInt(ord).toLong
+    case BooleanType => if (r.getBoolean(ord)) 1L else 0L
+    case d: DecimalType => r.getDecimal(ord, d.precision, d.scale).toUnscaledLong
+    // double/float reach here only as PEER keys (normalized bits)
+    case DoubleType => peerBits(r.getDouble(ord))
+    case FloatType => peerBits(r.getFloat(ord).toDouble)
+    case _ => r.getLong(ord)
+  }
+
+  /** Double-lane value of a non-null row column. */
+  def rowDbl(r: InternalRow, ord: Int, dt: DataType): Double = dt match {
+    case FloatType => r.getFloat(ord).toDouble
+    case ByteType => r.getByte(ord).toDouble
+    case ShortType => r.getShort(ord).toDouble
+    case IntegerType => r.getInt(ord).toDouble
+    case LongType => r.getLong(ord).toDouble
+    case _ => r.getDouble(ord)
+  }
+
+  /** Boxed catalyst value of one row column (the boxed lane: first/last,
+    * nth_value, lag/lead). `copy` clones UTF8Strings — the child may
+    * reuse its row buffer, and buffered values outlive it; a face whose
+    * rows are already copied passes false. */
+  def readBoxed(r: InternalRow, ord: Int, dt: DataType, copy: Boolean = true): Any =
+    if (r.isNullAt(ord)) null
+    else dt match {
+      case LongType | TimestampType | TimestampNTZType => r.getLong(ord)
+      case IntegerType | DateType => r.getInt(ord)
+      case ShortType => r.getShort(ord)
+      case ByteType => r.getByte(ord)
+      case BooleanType => r.getBoolean(ord)
+      case DoubleType => r.getDouble(ord)
+      case FloatType => r.getFloat(ord)
+      case d: DecimalType => r.getDecimal(ord, d.precision, d.scale)
+      case StringType => if (copy) r.getUTF8String(ord).clone() else r.getUTF8String(ord)
+      case other => throw new IllegalStateException(s"bad boxed window value type $other")
+    }
+
+  /** Writes long-lane value `v` into slot `s` of `out` as output type `dt`. */
+  def emitLong(out: InternalRow, s: Int, dt: DataType, v: Long): Unit = dt match {
+    case LongType | TimestampType | TimestampNTZType => out.update(s, v)
+    case IntegerType | DateType => out.update(s, v.toInt)
+    case ShortType => out.update(s, v.toShort)
+    case ByteType => out.update(s, v.toByte)
+    case BooleanType => out.update(s, v != 0L)
+    case d: DecimalType => out.update(s, Decimal.createUnsafe(v, d.precision, d.scale))
+    case _ => out.update(s, v)
+  }
+
+  /** Writes double-lane value `v` into slot `s` of `out` as output type `dt`. */
+  def emitDbl(out: InternalRow, s: Int, dt: DataType, v: Double): Unit = dt match {
+    case FloatType => out.update(s, v.toFloat)
+    case _ => out.update(s, v)
+  }
 }

@@ -9,82 +9,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
+import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Materialized double vector: the output of a vectorized arithmetic
-  * kernel. Only the double accessors are live — the projection's output
-  * schema guarantees consumers (ColumnarToRowExec, further kernels)
-  * never call anything else.
-  */
-final class DoubleArrayVector(values: Array[Double], nulls: Array[Boolean], n: Int)
-    extends ColumnVector(DoubleType) {
-  private[this] val anyNull: Boolean = {
-    var b = false; var i = 0
-    while (i < n && !b) { b = nulls(i); i += 1 }
-    b
-  }
-
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = anyNull
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getDouble(rowId: Int): Double = values(rowId)
-  private def nope = throw new UnsupportedOperationException("double-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
-
-/** Materialized boolean vector: the output of a projected predicate
-  * (a [[VecPredicate]] evaluated as a column — the quality-gate /
-  * flag-projection shape). Only the boolean accessor is live. */
-final class BooleanArrayVector(values: Array[Boolean], nulls: Array[Boolean], n: Int)
-    extends ColumnVector(org.apache.spark.sql.types.BooleanType) {
-  private[this] val anyNull: Boolean = {
-    var b = false; var i = 0
-    while (i < n && !b) { b = nulls(i); i += 1 }
-    b
-  }
-
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = anyNull
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getBoolean(rowId: Int): Boolean = values(rowId)
-  private def nope = throw new UnsupportedOperationException("boolean-only vector")
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
 
 /** Vectorized double-valued expression kernels. eval fills
   * values/isNull for rows 0..n of the batch. The supported surface is
@@ -1214,45 +1140,6 @@ object VecNumExpr {
   }
 }
 
-/** Materialized Decimal64 vector: unscaled longs + the static type.
-  * Serves both documented columnar channels for precision ≤ 18:
-  * getLong (the unscaled value, per the ColumnVector decimal contract)
-  * and getDecimal.
-  */
-final class DecimalArrayVector(values: Array[Long], nulls: Array[Boolean], n: Int,
-    dt: DecimalType) extends ColumnVector(dt) {
-  private[this] val anyNull: Boolean = {
-    var b = false; var i = 0
-    while (i < n && !b) { b = nulls(i); i += 1 }
-    b
-  }
-
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = anyNull
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getLong(rowId: Int): Long = values(rowId)
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal =
-    Decimal.createUnsafe(values(rowId), p, s)
-  private def nope = throw new UnsupportedOperationException("decimal-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
-
 /** Vectorized Decimal64 expression kernels: values are UNSCALED longs
   * at each node's STATIC scale. Only trees where every node's type has
   * precision ≤ 18 compile; within that bound Spark's decimal type
@@ -1669,49 +1556,6 @@ object VecDecExpr {
     }
     for { b <- bs; e <- ev } yield CaseWhenDec(b, e)
   }
-}
-
-/** Materialized Decimal128 vector: unscaled int128 values as two's-
-  * complement (hi, lo) long pairs at the static type's scale. Generic
-  * consumers go through getDecimal (ColumnarToRow, row operators); the
-  * graft aggregate kernels pattern-match this class and read the long
-  * pairs directly ([[AggSpec.SumDec128Spec]]).
-  */
-final class Dec128ArrayVector(hi: Array[Long], lo: Array[Long], nulls: Array[Boolean], n: Int,
-    dt: DecimalType) extends ColumnVector(dt) {
-  def hiAt(rowId: Int): Long = hi(rowId)
-  def loAt(rowId: Int): Long = lo(rowId)
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = {
-    val h = hi(rowId); val l = lo(rowId)
-    if (h == (l >> 63)) Decimal.createUnsafe(l, p, s) // fits a compact long
-    else Decimal(new java.math.BigDecimal(VecDec128Expr.big128(h, l), s), p, s)
-  }
-  private def nope = throw new UnsupportedOperationException("decimal128-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
 }
 
 /** Vectorized Decimal128 expression kernels: unscaled int128 values as
@@ -2153,114 +1997,6 @@ object VecDec128Expr {
     }
     for { b <- bs; e <- ev } yield CaseWhen128(b, e)
   }
-}
-
-/** Materialized string vector (mirror of [[DoubleArrayVector]] for the
-  * string kernels): holds one UTF8String reference per row. References
-  * may point into the child batch's buffers (ColS pass-through inside a
-  * kernel tree) — valid under the vectorized-reader contract that the
-  * consumer finishes with a batch before pulling the next.
-  */
-/** Materialized array<string> vector: per-row slices of one flat
-  * UTF8String child (offsets + lengths), the layout split() projections
-  * produce. Element nulls don't exist (StringSplit's containsNull =
-  * false), so the child's null mask is all-false. */
-final class StringsListVector(flat: Array[UTF8String], offsets: Array[Int],
-    lens: Array[Int], nulls: Array[Boolean], n: Int)
-    extends ColumnVector(ArrayType(StringType, containsNull = false)) {
-  private[this] val child = new StringArrayVector(flat, new Array[Boolean](flat.length), flat.length)
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getArray(rowId: Int): ColumnarArray =
-    new ColumnarArray(child, offsets(rowId), lens(rowId))
-  private def nope = throw new UnsupportedOperationException("array<string>-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = child
-}
-
-final class StringArrayVector(values: Array[UTF8String], nulls: Array[Boolean], n: Int)
-    extends ColumnVector(StringType) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getUTF8String(rowId: Int): UTF8String = values(rowId)
-  private def nope = throw new UnsupportedOperationException("string-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getInt(rowId: Int): Int = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
-
-/** Materialized int vector — output of [[VecStrExpr.LengthI]] (Spark's
-  * Length returns IntegerType). */
-final class IntArrayVector(values: Array[Int], nulls: Array[Boolean], n: Int)
-    extends ColumnVector(IntegerType) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getInt(rowId: Int): Int = values(rowId)
-  private def nope = throw new UnsupportedOperationException("int-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
 }
 
 /** Vectorized string kernels, evaluated column-at-a-time over
@@ -4152,85 +3888,6 @@ object VecLongExpr {
   }
 }
 
-/** Long-backed output vector (LongType / the micros-backed timestamp
-  * types read through getLong; IntegerType conditional-flag kernels read
-  * back through getInt — the lane computes in long, values are in-range
-  * by the static type). */
-final class LongArrayVector(values: Array[Long], nulls: Array[Boolean], n: Int,
-    dt: org.apache.spark.sql.types.DataType)
-    extends ColumnVector(dt) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getLong(rowId: Int): Long = values(rowId)
-  override def getInt(rowId: Int): Int = {
-    // getInt is only reached for int-family/date output types whose lane
-    // values are in-range by the STATIC type today; if arithmetic is
-    // ever added to the long lane an int-typed expression could overflow
-    // — fail loudly instead of wrapping in non-row-path-equivalent ways.
-    val v = values(rowId)
-    if (v < Int.MinValue || v > Int.MaxValue)
-      throw new ArithmeticException(s"long-lane value $v out of int range (dt=$dt)")
-    v.toInt
-  }
-  private def nope = throw new UnsupportedOperationException("long-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
-
-/** DateType output over the long kernel's value array: DateType vectors
-  * are read through getInt (epoch days), so this narrows at read time —
-  * the kernel pipeline stays all-long. */
-final class DateArrayVector(values: Array[Long], nulls: Array[Boolean], n: Int)
-    extends ColumnVector(org.apache.spark.sql.types.DateType) {
-  override def close(): Unit = ()
-  override def closeIfFreeable(): Unit = ()
-  override def hasNull: Boolean = {
-    var i = 0
-    while (i < n) { if (nulls(i)) return true; i += 1 }
-    false
-  }
-  override def numNulls: Int = {
-    var c = 0; var i = 0
-    while (i < n) { if (nulls(i)) c += 1; i += 1 }
-    c
-  }
-  override def isNullAt(rowId: Int): Boolean = nulls(rowId)
-  override def getInt(rowId: Int): Int = values(rowId).toInt
-  private def nope = throw new UnsupportedOperationException("date-only vector")
-  override def getBoolean(rowId: Int): Boolean = nope
-  override def getByte(rowId: Int): Byte = nope
-  override def getShort(rowId: Int): Short = nope
-  override def getLong(rowId: Int): Long = nope
-  override def getFloat(rowId: Int): Float = nope
-  override def getDouble(rowId: Int): Double = nope
-  override def getArray(rowId: Int): ColumnarArray = nope
-  override def getMap(rowId: Int): ColumnarMap = nope
-  override def getDecimal(rowId: Int, p: Int, s: Int): Decimal = nope
-  override def getUTF8String(rowId: Int): UTF8String = nope
-  override def getBinary(rowId: Int): Array[Byte] = nope
-  override def getChild(ordinal: Int): ColumnVector = nope
-}
-
 /** split(str, literalRegex, literalLimit) → array<string>: the string
   * lane computes the subject column, then Spark's own UTF8String.split
   * tokenizes per row — regex/limit semantics identical to
@@ -4411,7 +4068,7 @@ object ProjKernel {
 
 /** Columnar Project with COMPUTED expressions: evaluates the supported
   * double-algebra and string kernels batch-at-a-time into materialized
-  * [[DoubleArrayVector]]/[[StringArrayVector]]/[[IntArrayVector]]s;
+  * [[ArrayBackedVector]]s;
   * attribute items pass through zero-copy (referencing the child
   * batch's vectors, selection wrappers and all). Together with
   * GraftColumnarSelectExec (attribute-only fast path),
@@ -4483,7 +4140,7 @@ case class GraftColumnarProjectExec(projectList: Seq[NamedExpression], child: Sp
               if (outD(c) == null || outD(c).length < n) outD(c) = new Array[Double](n)
               scratch.reset()
               kernel.eval(batch, n, outD(c), nulls(c, n), scratch)
-              cols(c) = new DoubleArrayVector(outD(c), outN(c), n)
+              cols(c) = new DoubleBuildVector(DoubleType, outD(c), outN(c), n)
               compM.add(1)
             case scala.Right(StrKernel(kernel)) =>
               if (outS(c) == null || outS(c).length < n) outS(c) = new Array[UTF8String](n)
@@ -4501,7 +4158,7 @@ case class GraftColumnarProjectExec(projectList: Seq[NamedExpression], child: Sp
               if (outL(c) == null || outL(c).length < n) outL(c) = new Array[Long](n)
               scratch.reset()
               kernel.eval(batch, n, outL(c), nulls(c, n), scratch)
-              cols(c) = new DecimalArrayVector(outL(c), outN(c), n, dt)
+              cols(c) = new LongBuildVector(dt, outL(c), outN(c), n)
               compM.add(1)
             case scala.Right(Dec128Kernel(kernel, dt)) =>
               if (outL(c) == null || outL(c).length < n) outL(c) = new Array[Long](n)
@@ -4518,7 +4175,7 @@ case class GraftColumnarProjectExec(projectList: Seq[NamedExpression], child: Sp
             case scala.Right(DateKernel(kernel)) =>
               if (outL(c) == null || outL(c).length < n) outL(c) = new Array[Long](n)
               kernel.eval(batch, n, outL(c), nulls(c, n))
-              cols(c) = new DateArrayVector(outL(c), outN(c), n)
+              cols(c) = new LongBuildVector(DateType, outL(c), outN(c), n)
               compM.add(1)
             case scala.Right(SplitKernel(kernel)) =>
               strScratch.reset()
