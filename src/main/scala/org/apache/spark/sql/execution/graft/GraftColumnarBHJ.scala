@@ -92,6 +92,14 @@ object GraftColumnarBHJExec {
   def canPackKeys(dts: Seq[DataType]): Boolean =
     dts.nonEmpty && dts.forall(probeKeyTypes) && dts.map(_.defaultSize).sum <= 8
 
+  /** Whether any probe key of stream row `i` is null (a null key never
+    * matches). */
+  def anyNull(keys: Array[ColumnVector], i: Int): Boolean = {
+    var j = 0
+    while (j < keys.length) { if (keys(j).isNullAt(i)) return true; j += 1 }
+    false
+  }
+
   /** Probe-side twin of HashJoin.rewriteKeyExpr's packed key: the first
     * key sign-extends to long (Cast semantics), each subsequent key is
     * shifted in masked to its byte width. Identical bit layout to the
@@ -221,15 +229,10 @@ case class GraftColumnarSemiBHJExec(
               it != null && it.hasNext
             }
           }
-        def anyNull(i: Int): Boolean = {
-          var j = 0
-          while (j < keys.length) { if (keys(j).isNullAt(i)) return true; j += 1 }
-          false
-        }
         var m = 0
         var i = 0
         while (i < n) {
-          val matched = !anyNull(i) && hasMatch(i)
+          val matched = !GraftColumnarBHJExec.anyNull(keys, i) && hasMatch(i)
           if (matched != isAnti) { sel(m) = i; m += 1 }
           i += 1
         }

@@ -154,15 +154,10 @@ case class GraftColumnarShuffledSemiJoinExec(
               it != null && it.hasNext
             }
           }
-        def anyNull(i: Int): Boolean = {
-          var j = 0
-          while (j < keys.length) { if (keys(j).isNullAt(i)) return true; j += 1 }
-          false
-        }
         var m = 0
         var i = 0
         while (i < n) {
-          val matched = !anyNull(i) && hasMatch(i)
+          val matched = !GraftColumnarBHJExec.anyNull(keys, i) && hasMatch(i)
           if (matched != isAnti) { sel(m) = i; m += 1 }
           i += 1
         }
@@ -436,11 +431,6 @@ case class GraftColumnarShuffledInnerJoinExec(
               markAndUnwrap(rel.getWithKeyIndex(keyProj(keyRow)))
             } else i => { load(i); rel.get(keyProj(keyRow)) }
           }
-        def anyNull(i: Int): Boolean = {
-          var j = 0
-          while (j < keys.length) { if (keys(j).isNullAt(i)) return true; j += 1 }
-          false
-        }
         val isOuter = leftOuter
         // a LEFT OUTER miss (or null-key row) emits the stream row once
         // with every build lane null
@@ -470,7 +460,7 @@ case class GraftColumnarShuffledInnerJoinExec(
             var m = 0
             while (m < chunk && (liveIt != null || i < n)) {
               if (liveIt == null) {
-                if (!anyNull(i)) {
+                if (!GraftColumnarBHJExec.anyNull(keys, i)) {
                   matchedCur = false
                   liveIt = getIter(i)
                   if (liveIt == null) {

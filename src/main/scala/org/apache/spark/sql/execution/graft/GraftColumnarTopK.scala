@@ -66,19 +66,7 @@ case class GraftColumnarTopKExec(
       specs: Array[TopKKeySpec], ops: Array[KeyOps], lim: Int,
       inM: org.apache.spark.sql.execution.metric.SQLMetric)(
       batches: Iterator[ColumnarBatch]): Iterator[InternalRow] = {
-    // Entries ordered worst-first (max-heap under the requested order).
-    val entryOrd = new Ordering[Entry] {
-      override def compare(a: Entry, b: Entry): Int = {
-        var i = 0
-        while (i < specs.length) {
-          val c = cmpBoxed(specs(i), ops(i), a.keys(i), b.keys(i))
-          if (c != 0) return c
-          i += 1
-        }
-        0
-      }
-    }
-    val heap = new scala.collection.mutable.PriorityQueue[Entry]()(entryOrd)
+    val heap = new scala.collection.mutable.PriorityQueue[Entry]()(entryOrdering(specs, ops))
     batches.foreach { batch =>
       val n = batch.numRows()
       inM.add(n)
@@ -314,6 +302,21 @@ object GraftColumnarTopKExec {
 
   private[graft] def cmpBoxed(spec: TopKKeySpec, ops: KeyOps, a: AnyRef, b: AnyRef): Int =
     cmpSlot(spec, a == null, b == null, ops.cmp(a, b))
+
+  /** Entries ordered worst-first: the max-heap order of the bounded
+    * top-k heaps under the requested sort order. */
+  private[graft] def entryOrdering(specs: Array[TopKKeySpec], ops: Array[KeyOps]): Ordering[Entry] =
+    new Ordering[Entry] {
+      override def compare(a: Entry, b: Entry): Int = {
+        var i = 0
+        while (i < specs.length) {
+          val c = cmpBoxed(specs(i), ops(i), a.keys(i), b.keys(i))
+          if (c != 0) return c
+          i += 1
+        }
+        0
+      }
+    }
 
   /** Candidate (vector slots at row i) vs a heap entry's boxed keys;
     * negative = candidate orders strictly before (wins).

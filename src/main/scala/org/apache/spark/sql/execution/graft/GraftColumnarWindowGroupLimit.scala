@@ -63,7 +63,7 @@ case class GraftColumnarWindowGroupLimitExec(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "candidate rows emitted"),
     "numBailouts" -> SQLMetrics.createMetric(sparkContext, "group-map overflow bailouts"))
 
-  import GraftColumnarTopKExec.{cmpBoxed, cmpCandidate, keyOps, Entry, KeyOps}
+  import GraftColumnarTopKExec.{cmpBoxed, cmpCandidate, entryOrdering, keyOps, Entry, KeyOps}
 
   private class GroupHeap(entryOrd: Ordering[Entry]) {
     val heap = new scala.collection.mutable.PriorityQueue[Entry]()(entryOrd)
@@ -86,17 +86,7 @@ case class GraftColumnarWindowGroupLimitExec(
     val (lim, maxG) = (limit, maxGroups)
     val schema = StructType(output.map(a => StructField(a.name, a.dataType, a.nullable)))
     child.executeColumnar().mapPartitionsInternal { batches =>
-      val entryOrd = new Ordering[Entry] {
-        override def compare(a: Entry, b: Entry): Int = {
-          var i = 0
-          while (i < specs.length) {
-            val c = cmpBoxed(specs(i), ops(i), a.keys(i), b.keys(i))
-            if (c != 0) return c
-            i += 1
-          }
-          0
-        }
-      }
+      val entryOrd = entryOrdering(specs, ops)
       new Iterator[ColumnarBatch] {
         private val map = new java.util.HashMap[AnyRef, GroupHeap]()
         private var passthrough = false
@@ -216,19 +206,8 @@ case class GraftColumnarWindowGroupLimitExec(
     val pTypes = partTypes.toArray
     val oTypes = keys.map(_.dt).toArray
     val (lim, maxG) = (limit, maxGroups)
-    val entryOrdSpecs = specs
     child.execute().mapPartitionsInternal { rows =>
-      val entryOrd = new Ordering[Entry] {
-        override def compare(a: Entry, b: Entry): Int = {
-          var i = 0
-          while (i < entryOrdSpecs.length) {
-            val c = cmpBoxed(entryOrdSpecs(i), ops(i), a.keys(i), b.keys(i))
-            if (c != 0) return c
-            i += 1
-          }
-          0
-        }
-      }
+      val entryOrd = entryOrdering(specs, ops)
       val map = new java.util.HashMap[AnyRef, scala.collection.mutable.PriorityQueue[Entry]]()
       val out = new scala.collection.mutable.ArrayBuffer[InternalRow]()
       def boxed(r: InternalRow, ord: Int, dt: DataType): AnyRef = {
@@ -340,7 +319,7 @@ case class GraftColumnarRankGroupLimitExec(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "candidate rows emitted"),
     "numBailouts" -> SQLMetrics.createMetric(sparkContext, "group-map overflow bailouts"))
 
-  import GraftColumnarTopKExec.{cmpBoxed, cmpCandidate, keyOps, Entry, KeyOps}
+  import GraftColumnarTopKExec.{cmpBoxed, cmpCandidate, entryOrdering, keyOps, Entry, KeyOps}
 
   /** Bounded threshold tracker: the k smallest key tuples (multiset for
     * rank, distinct for dense_rank), max on top. */
@@ -406,17 +385,7 @@ case class GraftColumnarRankGroupLimitExec(
       (metrics("numInputRows"), metrics("numOutputRows"), metrics("numBailouts"))
     val (lim, maxG, dns) = (limit, maxGroups, dense)
     child.executeColumnar().mapPartitionsInternal { batches =>
-      val entryOrd = new Ordering[Entry] {
-        override def compare(a: Entry, b: Entry): Int = {
-          var i = 0
-          while (i < specs.length) {
-            val c = cmpBoxed(specs(i), ops(i), a.keys(i), b.keys(i))
-            if (c != 0) return c
-            i += 1
-          }
-          0
-        }
-      }
+      val entryOrd = entryOrdering(specs, ops)
       val map = new java.util.HashMap[AnyRef, Tracker]()
       var passthrough = false
       var sel = new Array[Int](1 << 10)

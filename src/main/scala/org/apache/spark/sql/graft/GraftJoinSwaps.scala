@@ -74,9 +74,14 @@ object GraftJoinSwaps {
           declined(j, "inner/outer shuffled join not columnar-probeable (needs " +
             "integral attribute keys packing into 8 bytes or a single " +
             "string/date/timestamp key, and supported build column types)")
-        case _ => j
+        case _ => rowStream(j, left)
       }
   }
+
+  /** A join whose stream side reaches it as rows (a key normalization or
+    * computed key puts an exchange under it) keeps the row path. */
+  private def rowStream(j: SparkPlan, stream: SparkPlan): SparkPlan =
+    declined(j, s"stream side is not columnar: ${stream.getClass.getSimpleName}")
 
   /** Stream ordinals and types of the probe keys: every key a plain
     * stream attribute, and either one string/date/timestamp key
@@ -104,6 +109,6 @@ object GraftJoinSwaps {
       case _ if left.supportsColumnar =>
         declined(j, s"$what not columnar-probeable (needs integral attribute keys " +
           "packing into 8 bytes, or a single string/date/timestamp key)")
-      case _ => j
+      case _ => rowStream(j, left)
     }
 }

@@ -262,8 +262,15 @@ object GraftWindowSwaps {
         if (k >= 3) Right(WinAggSpec(9, ord(a), 3, a.dataType, ansi = false, k, ign = ign))
         else Right(WinAggSpec(11, ord(a), 3, a.dataType, ansi = false, k, ign = ign, nth = n))
       case other =>
-        Left(s"unsupported window expression shape: ${other.getClass.getSimpleName}" +
-          " (running ROWS/RANGE or whole-partition frame over Complete agg," +
+        // name the window function, not its Alias: Spark plans avg over a
+        // short decimal as a Cast of an avg over unscaled values
+        // (DecimalAggregates), a wrapper no lane reads
+        val fn = other.collectFirst { case WindowExpression(f, _) => s"$f (${f.dataType})" }
+        val under = other.children.collectFirst {
+          case e if !e.isInstanceOf[WindowExpression] => s" under ${e.nodeName}"
+        }
+        Left(s"unsupported window expression shape: ${fn.getOrElse(other.toString)}" +
+          under.getOrElse("") + " (running ROWS/RANGE or whole-partition frame over Complete agg," +
           " or row_number/rank/dense_rank, only)")
     }
     withPartitionKeys(w, specs) { (pk, sp) =>
