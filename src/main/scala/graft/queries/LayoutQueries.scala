@@ -142,11 +142,11 @@ object LayoutQueries {
         // q78, which pays a range exchange first for globally
         // disjoint files). The local sort sits DIRECTLY on the
         // columnar scan→filter→project block, and the 4-column
-        // all-numeric output is the NARROW shape whose swap is
-        // default-ON after a winning A/B (0.55-0.87x vs Tungsten's
-        // radix sort — sort.narrow.enabled; wide/string sorts remain
-        // opt-in). The pin verifies the swap, the oracle verifies the
-        // row SET (per-partition order is not oracle-checkable).
+        // all-numeric output is the NARROW shape the columnar sort
+        // serves, on by default after a winning A/B against Tungsten's
+        // radix sort (sort.narrow.enabled; wide or string sorts stay on
+        // the row sort). The pin verifies the swap, the oracle verifies
+        // the row SET (per-partition order is not oracle-checkable).
         val spark = s0
         import spark.implicits._
         Tables.t(spark, dir, "lineitem")
@@ -158,6 +158,6 @@ object LayoutQueries {
       Some("""SELECT l_orderkey, l_linenumber, l_shipdate,
           l_extendedprice * (1.0 - l_discount) AS net
         FROM lineitem WHERE l_shipdate >= TIMESTAMP '1995-01-01'"""),
-      doc = "Sorted-run export: per-split local sort with no exchange — the write-side layout shape whose sort sits directly on the columnar scan; at scale each task emits one bounded sorted run for downstream merge compaction. The narrow all-numeric output swaps to GraftColumnarSortExec by DEFAULT (plan-pinned; winning 0.55-0.87x A/B after the byte-buffer rework); wide/string sorts remain opt-in.")
+      doc = "Sorted-run export: per-split local sort with no exchange — the write-side layout shape whose sort sits directly on the columnar scan; at scale each task emits one bounded sorted run for downstream merge compaction. The narrow all-numeric output swaps to GraftColumnarSortExec by DEFAULT (plan-pinned; the shape's A/B won against Tungsten's sort); wide or string sorts stay on the row sort.")
   )
 }

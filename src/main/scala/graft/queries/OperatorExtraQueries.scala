@@ -537,7 +537,7 @@ object OperatorExtraQueries {
           .sortWithinPartitions("o_custkey", "o_totalprice", "o_orderkey")
       },
       Some("SELECT o_custkey, o_orderkey, o_totalprice FROM orders"),
-      doc = "Bucket-aligned sorted export: per-bucket local sort with zero exchanges over the bucketed orders layout — swaps to GraftColumnarSortExec (pinned) now that sorted-run spill makes unbounded bucket partitions safe; narrow all-numeric output rides the default-ON radix path."),
+      doc = "Bucket-aligned sorted export: per-bucket local sort with zero exchanges over the bucketed orders layout — swaps to GraftColumnarSortExec (pinned) now that sorted-run spill makes unbounded bucket partitions safe; the 3-column all-numeric output is the narrow shape the columnar sort serves by default."),
 
     QueryDef(
       "q173_date_key_semi",

@@ -9,33 +9,30 @@ import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.graft.{ByteSliceStringVector, DoubleBuildVector, LongBuildVector, SelectedColumnVector}
+import org.apache.spark.sql.graft.{DoubleBuildVector, LongBuildVector, SelectedColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Columnar per-partition sort (reference analogue: DataFusion SortExec,
   * native/core/src/execution/planner.rs:1211-1245; serde
   * spark/src/main/scala/org/apache/spark/sql/comet/serde/operator/CometSort.scala).
   *
-  * OPT-IN (spark.graft.columnar.sort.enabled, default off). The sort
-  * itself is a HYBRID: LSD radix on the bit-mapped first key for
-  * numeric keys (the algorithm class Tungsten's prefix sort wins with)
-  * + comparison sort only inside first-key tie runs; strings take the
-  * pure comparison path over a CONCATENATED byte buffer (one shared
-  * byte[] + offset/length lanes per string column — a poor-JVM's arena:
-  * no per-row UTF8String clone at buffering, Arrays.compareUnsigned
-  * intrinsic comparisons, zero-copy fromBytes views at emission).
-  * Refreshed sf0.1 A/B medians (3 session runs) after that rework:
-  * narrow numeric rows WIN (sort-narrow-3col 0.86-0.94x), string key
-  * 1.15-1.21x (was 2.6x with cloned strings), 2key-mixed 1.01-1.06x
-  * (was 1.46x), wide 16-col rows still lose (sort-1key-long 1.38-1.40x)
-  * — the residual cost is buffering every output column of a wide row,
-  * which the reference escapes with native arena allocation + SIMD
-  * (DataFusion SortExec). Narrow all-numeric outputs (<= 4 columns)
-  * swap by DEFAULT (winning 0.55-0.87x A/B — sort.narrow.enabled, q164
-  * pins the plan); wide or string outputs remain opt-in via
-  * sort.enabled.
+  * Serves the NARROW shape only: at most [[GraftColumnarSortExec.maxColumns]]
+  * output columns, each of the long family (integral, boolean, date,
+  * timestamp, Decimal64 unscaled) or the double family. There it swaps by
+  * default (spark.graft.columnar.sort.narrow.enabled; q164 pins the plan)
+  * after a winning A/B against Tungsten's row sort (FilterMicroBench
+  * sf0.1, 4 cores, 3 session runs of min-of-5: 1col 0.68-0.80x,
+  * 4col-2key 0.47-0.52x, Decimal64 key 0.49-0.52x; 3col at parity,
+  * 0.97-1.04x). Wider or string outputs keep the row sort: the same
+  * kernel lost on them in the same runs (16 columns under one long key
+  * 1.44-2.00x, under a mixed double/long 2-key order 1.01-1.32x, a
+  * string key 1.14-1.74x), because it buffers every output column — a
+  * cost the reference escapes only through a native arena.
+  *
+  * The sort is a HYBRID: LSD radix on the bit-mapped first key (the
+  * algorithm class Tungsten's prefix sort wins with), then comparison
+  * sort only inside first-key tie runs.
   *
   * Replaces `ColumnarToRow + SortExec` above a columnar block: input
   * batches are decomposed COLUMN-WISE into typed primitive arrays (the
@@ -95,7 +92,7 @@ case class GraftColumnarSortExec(
       (metrics("numInputRows"), metrics("numBatches"), metrics("sortTime"))
     val (spillM, spillBytesM) = (metrics("spillCount"), metrics("spillBytes"))
     child.executeColumnar().mapPartitionsInternal { batches =>
-      val kinds = colTypes.map(kindOf)
+      val dbl = colTypes.map(doubleLane)
       val bufs: Array[ColBuf] = colTypes.map(newBuf)
       // Coarse per-batch task-memory accounting (GraftMemoryReservation):
       // Tungsten consumers on the same executor SEE this memory and spill
@@ -203,7 +200,7 @@ case class GraftColumnarSortExec(
         // in place so the completion listener deletes the live set.
         while (spills.length > mergeFanIn) {
           val merged = spills.toSeq.grouped(mergeFanIn).map { g =>
-            if (g.length == 1) g.head else mergeSpillGroup(g, specs, kinds)
+            if (g.length == 1) g.head else mergeSpillGroup(g, specs, dbl)
           }.toSeq
           spills.clear()
           spills ++= merged
@@ -211,10 +208,10 @@ case class GraftColumnarSortExec(
         val runs = scala.collection.mutable.ArrayBuffer.empty[SortedRun]
         if (n > 0) {
           res.foreach(_.reserve(4L * n))
-          runs += new MemoryRun(bufs, kinds, sortCurrent(), n)
+          runs += new MemoryRun(bufs, sortCurrent(), n)
         }
-        spills.foreach(sp => runs += new DiskRun(sp, kinds))
-        mergeRuns(runs.toSeq, specs, kinds, colTypes, () => batchM.add(1))
+        spills.foreach(sp => runs += new DiskRun(sp, bufs.length))
+        mergeRuns(runs.toSeq, specs, dbl, colTypes, () => batchM.add(1))
       }
     }
   }
@@ -252,10 +249,8 @@ object GraftColumnarSortExec {
   val spillThresholdKey = "spark.graft.columnar.sort.spill.threshold"
   val defaultSpillThreshold: Long = 256L << 20
 
-  /** The narrow default-ON shape: numeric/temporal only — string
-    * columns push the A/B above parity (buffer + compare cost). */
-  def numericColType(dt: DataType): Boolean =
-    dt != StringType && supportedColType(dt)
+  /** The widest output the sort serves (see the exec's scaladoc). */
+  val maxColumns = 4
 
   def supportedColType(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | BooleanType |
@@ -264,40 +259,73 @@ object GraftColumnarSortExec {
     // Decimal64: a column's values share one (p, s), so unscaled-long
     // order == numeric order — the long lane (and its radix path)
     // carries money columns unchanged. A/B sort-narrow-dec (sf0.1,
-    // 3 runs): 0.55-0.58x — the strongest narrow win, because the row
+    // 3 runs): 0.49-0.58x — the strongest narrow win, because the row
     // path pays per-comparison Decimal object compares where the radix
     // lane pays none
     case d: DecimalType if d.precision <= Decimal.MAX_LONG_DIGITS => true
-    case StringType => dt == StringType // default collation only
     case _ => false
   }
+
+  /** Double-family columns buffer as doubles and compare in Spark's
+    * double order; every other supported type rides the long lane. */
+  private def doubleLane(dt: DataType): Boolean = dt == DoubleType || dt == FloatType
+
+  private val initialCap = 1 << 12
 
   /** Growable column buffer: copies vector slots in (the scan reuses its
     * vectors batch-to-batch, so references cannot be retained), compares
     * by buffered index, re-emits as a ColumnVector for the gather.
     */
-  sealed trait ColBuf {
+  sealed abstract class ColBuf {
+    protected var nulls = new Array[Boolean](initialCap)
+    protected var n = 0
+    /** Copy the value lane into an array of `cap` slots. */
+    protected def resize(cap: Int): Unit
+    /** A fresh value lane of the initial capacity. */
+    protected def clearValues(): Unit
+
+    protected final def ensure(rows: Int): Unit =
+      if (n + rows > nulls.length) {
+        val cap = math.max(nulls.length * 2, n + rows)
+        resize(cap)
+        nulls = java.util.Arrays.copyOf(nulls, cap)
+      }
     def append(v: ColumnVector, rows: Int): Unit
-    def isNull(i: Int): Boolean
+    /** Append one slot given its null flag and [[bits]] — the merge
+      * path's output. */
+    def put(isNull: Boolean, bits: Long): Unit
+    final def isNull(i: Int): Boolean = nulls(i)
     def cmpRaw(a: Int, b: Int): Int
+    /** Slot `i`'s 64 value bits (the long itself, or the double's raw
+      * IEEE bits) — the spill-run format. */
+    def bits(i: Int): Long
+    /** Slot `i` mapped to an unsigned-radix-sortable long that keeps
+      * Spark's sort order. */
+    def radix(i: Int): Long
     def vector(): ColumnVector
-    /** Approximate bytes held: primitive lanes exactly, string content
-      * at clone size + per-object overhead — read after each append for
-      * the coarse task-memory accounting (GraftMemoryReservation). */
-    def trackedBytes: Long
+    /** Bytes held (value lane + null flag per slot), read after each
+      * append for the coarse task-memory accounting
+      * (GraftMemoryReservation). */
+    final def trackedBytes: Long = nulls.length * 9L
     /** Serialize slot `i` (null flag + value) to a spill run. */
-    def writeSlot(i: Int, out: java.io.DataOutput): Unit
+    final def writeSlot(i: Int, out: java.io.DataOutput): Unit = {
+      out.writeBoolean(nulls(i))
+      if (!nulls(i)) out.writeLong(bits(i))
+    }
     /** Drop the buffered content AND the backing arrays (back to the
       * initial capacity) — called after a run is spilled so the memory
       * is actually returned, not just logically cleared. */
-    def reset(): Unit
+    final def reset(): Unit = {
+      clearValues()
+      nulls = new Array[Boolean](initialCap)
+      n = 0
+    }
   }
 
   private final class LongBuf(dt: DataType) extends ColBuf {
-    private var values = new Array[Long](1 << 12)
-    private var nulls = new Array[Boolean](1 << 12)
-    private var n = 0
-    override def trackedBytes: Long = values.length * 9L
+    private var values = new Array[Long](initialCap)
+    override protected def resize(cap: Int): Unit = values = java.util.Arrays.copyOf(values, cap)
+    override protected def clearValues(): Unit = values = new Array[Long](initialCap)
     private val get: (ColumnVector, Int) => Long = dt match {
       case LongType | TimestampType | TimestampNTZType => (v, i) => v.getLong(i)
       case IntegerType | DateType => (v, i) => v.getInt(i).toLong
@@ -309,44 +337,33 @@ object GraftColumnarSortExec {
       case other => throw new IllegalStateException(s"not a long-family type $other")
     }
     override def append(v: ColumnVector, rows: Int): Unit = {
-      if (n + rows > values.length) {
-        val cap = math.max(values.length * 2, n + rows)
-        values = java.util.Arrays.copyOf(values, cap)
-        nulls = java.util.Arrays.copyOf(nulls, cap)
-      }
+      ensure(rows)
       var i = 0
       while (i < rows) {
         if (v.isNullAt(i)) nulls(n) = true else values(n) = get(v, i)
         n += 1; i += 1
       }
     }
-    override def isNull(i: Int): Boolean = nulls(i)
+    override def put(isNull: Boolean, bits: Long): Unit = {
+      ensure(1)
+      nulls(n) = isNull
+      values(n) = bits
+      n += 1
+    }
     override def cmpRaw(a: Int, b: Int): Int = java.lang.Long.compare(values(a), values(b))
+    override def bits(i: Int): Long = values(i)
+    // flip the sign bit: signed order becomes unsigned order
+    override def radix(i: Int): Long = values(i) ^ java.lang.Long.MIN_VALUE
     override def vector(): ColumnVector = new LongBuildVector(dt, values, nulls, n)
-    def raw(i: Int): Long = values(i)
-    override def writeSlot(i: Int, out: java.io.DataOutput): Unit = {
-      out.writeBoolean(nulls(i))
-      if (!nulls(i)) out.writeLong(values(i))
-    }
-    override def reset(): Unit = {
-      values = new Array[Long](1 << 12)
-      nulls = new Array[Boolean](1 << 12)
-      n = 0
-    }
   }
 
   private final class DoubleBuf(dt: DataType) extends ColBuf {
-    private var values = new Array[Double](1 << 12)
-    private var nulls = new Array[Boolean](1 << 12)
-    private var n = 0
+    private var values = new Array[Double](initialCap)
     private val isFloat = dt == FloatType
-    override def trackedBytes: Long = values.length * 9L
+    override protected def resize(cap: Int): Unit = values = java.util.Arrays.copyOf(values, cap)
+    override protected def clearValues(): Unit = values = new Array[Double](initialCap)
     override def append(v: ColumnVector, rows: Int): Unit = {
-      if (n + rows > values.length) {
-        val cap = math.max(values.length * 2, n + rows)
-        values = java.util.Arrays.copyOf(values, cap)
-        nulls = java.util.Arrays.copyOf(nulls, cap)
-      }
+      ensure(rows)
       var i = 0
       while (i < rows) {
         if (v.isNullAt(i)) nulls(n) = true
@@ -354,122 +371,35 @@ object GraftColumnarSortExec {
         n += 1; i += 1
       }
     }
-    override def isNull(i: Int): Boolean = nulls(i)
+    override def put(isNull: Boolean, bits: Long): Unit = {
+      ensure(1)
+      nulls(n) = isNull
+      values(n) = java.lang.Double.longBitsToDouble(bits)
+      n += 1
+    }
     // compareDoubles = Spark sort semantics: NaN largest, NaN==NaN, -0.0==0.0.
     // Safe for the float lane too: the float→double widening is exact and
     // order-preserving, including NaN handling.
     override def cmpRaw(a: Int, b: Int): Int = SQLOrderingUtil.compareDoubles(values(a), values(b))
+    override def bits(i: Int): Long = java.lang.Double.doubleToRawLongBits(values(i))
+    // Spark equality canonicalization FIRST (-0.0 → 0.0 so the pair
+    // forms ONE tie-run for secondary keys; any NaN → the canonical NaN,
+    // which maps above +Inf = NaN-largest), then the IEEE total-order
+    // bit trick (negative → flip all bits, positive → flip sign bit)
+    override def radix(i: Int): Long = {
+      var d = values(i)
+      if (d == 0.0) d = 0.0 // collapses -0.0
+      else if (java.lang.Double.isNaN(d)) d = java.lang.Double.NaN
+      val b = java.lang.Double.doubleToRawLongBits(d)
+      if (b < 0) ~b else b ^ java.lang.Long.MIN_VALUE
+    }
     override def vector(): ColumnVector = new DoubleBuildVector(dt, values, nulls, n)
-    def raw(i: Int): Double = values(i)
-    override def writeSlot(i: Int, out: java.io.DataOutput): Unit = {
-      out.writeBoolean(nulls(i))
-      if (!nulls(i)) out.writeDouble(values(i))
-    }
-    override def reset(): Unit = {
-      values = new Array[Double](1 << 12)
-      nulls = new Array[Boolean](1 << 12)
-      n = 0
-    }
   }
 
-  /** String column buffer over ONE concatenated byte array + offset/
-    * length lanes — not one cloned UTF8String object per row. Copying in
-    * is a single bulk writeToMemory per cell (no per-row object + byte[]
-    * allocation), comparisons run through the
-    * java.util.Arrays.compareUnsigned(byte[],...) intrinsic (UTF8_BINARY
-    * order == unsigned byte order; the planning rule only swaps
-    * default-collation strings), and emission wraps zero-copy
-    * UTF8String.fromBytes views over the shared buffer.
-    */
-  private final class StringBuf extends ColBuf {
-    private var bytes = new Array[Byte](1 << 16)
-    private var used = 0
-    private var offs = new Array[Int](1 << 12)
-    private var lens = new Array[Int](1 << 12)
-    private var nulls = new Array[Boolean](1 << 12)
-    private var n = 0
-    override def trackedBytes: Long = bytes.length.toLong + offs.length * 9L
-    override def append(v: ColumnVector, rows: Int): Unit = {
-      if (n + rows > offs.length) {
-        val cap = math.max(offs.length * 2, n + rows)
-        offs = java.util.Arrays.copyOf(offs, cap)
-        lens = java.util.Arrays.copyOf(lens, cap)
-        nulls = java.util.Arrays.copyOf(nulls, cap)
-      }
-      var i = 0
-      while (i < rows) {
-        if (v.isNullAt(i)) nulls(n) = true
-        else {
-          val s = v.getUTF8String(i)
-          val len = s.numBytes()
-          if (used.toLong + len > bytes.length) {
-            // partition content is scan-block-bounded (planning gate),
-            // so the 2 GiB byte[] ceiling is never the binding limit
-            val cap = math.min(math.max(bytes.length * 2L, used.toLong + len),
-              Int.MaxValue.toLong - 16).toInt
-            bytes = java.util.Arrays.copyOf(bytes, cap)
-          }
-          s.writeToMemory(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + used)
-          offs(n) = used
-          lens(n) = len
-          used += len
-        }
-        n += 1; i += 1
-      }
-    }
-    override def isNull(i: Int): Boolean = nulls(i)
-    override def cmpRaw(a: Int, b: Int): Int =
-      java.util.Arrays.compareUnsigned(
-        bytes, offs(a), offs(a) + lens(a),
-        bytes, offs(b), offs(b) + lens(b))
-    override def vector(): ColumnVector = new ByteSliceStringVector(bytes, offs, lens, nulls, n)
-    override def writeSlot(i: Int, out: java.io.DataOutput): Unit = {
-      out.writeBoolean(nulls(i))
-      if (!nulls(i)) {
-        out.writeInt(lens(i))
-        out.write(bytes, offs(i), lens(i))
-      }
-    }
-    override def reset(): Unit = {
-      bytes = new Array[Byte](1 << 16)
-      used = 0
-      offs = new Array[Int](1 << 12)
-      lens = new Array[Int](1 << 12)
-      nulls = new Array[Boolean](1 << 12)
-      n = 0
-    }
-    /** Copy of slot `i`'s content — merge-path cursor staging only. */
-    def bytesAt(i: Int): Array[Byte] =
-      java.util.Arrays.copyOfRange(bytes, offs(i), offs(i) + lens(i))
-  }
+  def newBuf(dt: DataType): ColBuf =
+    if (doubleLane(dt)) new DoubleBuf(dt) else new LongBuf(dt)
 
-  def newBuf(dt: DataType): ColBuf = dt match {
-    case DoubleType | FloatType => new DoubleBuf(dt)
-    case StringType => new StringBuf
-    case _ => new LongBuf(dt)
-  }
-
-  /** Full key compare of buffered rows a vs b: direction and null
-    * placement per spec, tie falls to the next key. */
-  private def cmpKeys(specs: Array[TopKKeySpec], keyBufs: Array[ColBuf], a: Int, b: Int): Int = {
-    var k = 0
-    while (k < specs.length) {
-      val s = specs(k)
-      val buf = keyBufs(k)
-      val an = buf.isNull(a)
-      val bn = buf.isNull(b)
-      val c =
-        if (an && bn) 0
-        else if (an) { if (s.nullsFirst) -1 else 1 }
-        else if (bn) { if (s.nullsFirst) 1 else -1 }
-        else { val r = buf.cmpRaw(a, b); if (s.desc) -r else r }
-      if (c != 0) return c
-      k += 1
-    }
-    0
-  }
-
-  /** Compare on the key suffix specs(from..): the radix path resolved
+  /** Compare on the key suffix specs(from..): the radix pass resolved
     * specs(0..from-1) already. */
   private def cmpKeysFrom(
       specs: Array[TopKKeySpec], keyBufs: Array[ColBuf], from: Int, a: Int, b: Int): Int = {
@@ -488,34 +418,6 @@ object GraftColumnarSortExec {
       k += 1
     }
     0
-  }
-
-  /** Map a first-key slot to an unsigned-radix-sortable long preserving
-    * Spark's sort semantics. Longs: flip the sign bit. Doubles: Spark
-    * equality canonicalization FIRST (-0.0 → 0.0 so the pair forms ONE
-    * tie-run for secondary keys; any NaN → the canonical NaN, which
-    * maps above +Inf = NaN-largest), then the IEEE total-order bit
-    * trick (negative → flip all bits, positive → flip sign bit).
-    */
-  private trait RadixKey { def map(buf: ColBuf, i: Int): Long }
-  private object LongRadix extends RadixKey {
-    def map(buf: ColBuf, i: Int): Long =
-      buf.asInstanceOf[LongBuf].raw(i) ^ java.lang.Long.MIN_VALUE
-  }
-  private object DoubleRadix extends RadixKey {
-    def map(buf: ColBuf, i: Int): Long = {
-      var d = buf.asInstanceOf[DoubleBuf].raw(i)
-      if (d == 0.0) d = 0.0 // collapses -0.0
-      else if (java.lang.Double.isNaN(d)) d = java.lang.Double.NaN
-      val bits = java.lang.Double.doubleToRawLongBits(d)
-      if (bits < 0) ~bits else bits ^ java.lang.Long.MIN_VALUE
-    }
-  }
-
-  private def radixKeyFor(buf: ColBuf): Option[RadixKey] = buf match {
-    case _: LongBuf => Some(LongRadix)
-    case _: DoubleBuf => Some(DoubleRadix)
-    case _ => None
   }
 
   /** LSD radix sort (8 passes x 8 bits) of `keys`+`idx` in tandem over
@@ -601,25 +503,12 @@ object GraftColumnarSortExec {
     qsort(lo0, hi0)
   }
 
-  /** Sort the index array by the key specs. Numeric first keys take the
-    * HYBRID path — LSD radix on the bit-mapped first key (the algorithm
-    * class Tungsten's prefix sort wins with), then comparison sort only
-    * inside first-key tie runs and the null segment; everything else
-    * (string first key) takes the pure comparison path.
+  /** Sort the index array by the key specs: LSD radix on the bit-mapped
+    * first key, then comparison sort only inside first-key tie runs and
+    * the null segment.
     */
   private[graft] def sortIndices(
       idx: Array[Int], n: Int, specs: Array[TopKKeySpec], keyBufs: Array[ColBuf]): Unit = {
-    val first = keyBufs(0)
-    radixKeyFor(first) match {
-      case Some(rk) => hybridSort(idx, n, specs, keyBufs, rk)
-      case None =>
-        qsortRange(idx, 0, n - 1, (a, b) => cmpKeys(specs, keyBufs, a, b))
-    }
-  }
-
-  private def hybridSort(
-      idx: Array[Int], n: Int, specs: Array[TopKKeySpec],
-      keyBufs: Array[ColBuf], rk: RadixKey): Unit = {
     val s0 = specs(0)
     val first = keyBufs(0)
     // split null / non-null first keys (stable not required)
@@ -637,7 +526,7 @@ object GraftColumnarSortExec {
     // radix-sort the non-null segment ascending on the mapped key
     val keys = new Array[Long](nn)
     i = 0
-    while (i < nn) { keys(i) = rk.map(first, nonNull(i)); i += 1 }
+    while (i < nn) { keys(i) = first.radix(nonNull(i)); i += 1 }
     radixSortRange(keys, nonNull, nn)
     if (s0.desc) {
       // reverse values AND keys: tie runs stay contiguous for the
@@ -682,25 +571,16 @@ object GraftColumnarSortExec {
   // ---------------------------------------------------------------------
   // Spill path: external sorted-run merge (DataFusion's spilling SortExec
   // role, Tungsten UnsafeExternalSorter's scheme re-expressed columnar).
-  // Runs are written row-major in sorted order (null flag + fixed value,
-  // strings length-prefixed) through the node's compression codec, then
-  // k-way merged through per-run cursors.
+  // Runs are written row-major in sorted order (null flag + 64 value
+  // bits per column) through the node's compression codec, then k-way
+  // merged through per-run cursors.
   // ---------------------------------------------------------------------
 
-  /** Column storage kind: 0 = long family, 1 = double family, 2 = string
-    * — mirrors [[newBuf]]. */
-  def kindOf(dt: DataType): Int = dt match {
-    case DoubleType | FloatType => 1
-    case StringType => 2
-    case _ => 0
-  }
-
-  /** The current row of one sorted run, staged column-wise. */
+  /** The current row of one sorted run: null flags and value bits per
+    * column ([[ColBuf.bits]]). */
   private final class RunCursor(nCols: Int) {
     val nulls = new Array[Boolean](nCols)
-    val longs = new Array[Long](nCols)
-    val dbls = new Array[Double](nCols)
-    val strs = new Array[Array[Byte]](nCols)
+    val bits = new Array[Long](nCols)
   }
 
   private sealed trait SortedRun {
@@ -711,8 +591,7 @@ object GraftColumnarSortExec {
   }
 
   /** The final (unspilled) in-memory block as a merge participant. */
-  private final class MemoryRun(
-      bufs: Array[ColBuf], kinds: Array[Int], idx: Array[Int], n: Int)
+  private final class MemoryRun(bufs: Array[ColBuf], idx: Array[Int], n: Int)
       extends SortedRun {
     val cur = new RunCursor(bufs.length)
     private var pos = 0
@@ -724,11 +603,7 @@ object GraftColumnarSortExec {
       while (c < bufs.length) {
         val nl = bufs(c).isNull(r)
         cur.nulls(c) = nl
-        if (!nl) kinds(c) match {
-          case 0 => cur.longs(c) = bufs(c).asInstanceOf[LongBuf].raw(r)
-          case 1 => cur.dbls(c) = bufs(c).asInstanceOf[DoubleBuf].raw(r)
-          case _ => cur.strs(c) = bufs(c).asInstanceOf[StringBuf].bytesAt(r)
-        }
+        if (!nl) cur.bits(c) = bufs(c).bits(r)
         c += 1
       }
       true
@@ -739,27 +614,31 @@ object GraftColumnarSortExec {
   /** One spilled run file: `rows` rows in sorted order. */
   final case class SpillFile(file: java.io.File, rows: Int)
 
-  private def wrapOut(raw: java.io.OutputStream): java.io.OutputStream =
-    if (org.apache.spark.SparkEnv.get != null) {
-      org.apache.spark.io.CompressionCodec
-        .createCodec(org.apache.spark.SparkEnv.get.conf).compressedOutputStream(raw)
-    } else raw
-
   private def wrapIn(raw: java.io.InputStream): java.io.InputStream =
     if (org.apache.spark.SparkEnv.get != null) {
       org.apache.spark.io.CompressionCodec
         .createCodec(org.apache.spark.SparkEnv.get.conf).compressedInputStream(raw)
     } else raw
 
+  /** A new run file and its (compressed when a SparkEnv is up) output
+    * stream. */
+  private def openRun(): (java.io.File, java.io.DataOutputStream) = {
+    val env = org.apache.spark.SparkEnv.get
+    val file =
+      if (env != null) env.blockManager.diskBlockManager.createTempLocalBlock()._2
+      else java.io.File.createTempFile("graft-sort-spill", ".run")
+    val raw = new java.io.BufferedOutputStream(new java.io.FileOutputStream(file), 1 << 16)
+    val out =
+      if (env != null) org.apache.spark.io.CompressionCodec.createCodec(env.conf)
+        .compressedOutputStream(raw)
+      else raw
+    (file, new java.io.DataOutputStream(out))
+  }
+
   /** Write the sorted block (bufs gathered through idx) as one run. */
   def writeRun(
       bufs: Array[ColBuf], idx: Array[Int], n: Int): SpillFile = {
-    val file =
-      if (org.apache.spark.SparkEnv.get != null) {
-        org.apache.spark.SparkEnv.get.blockManager.diskBlockManager.createTempLocalBlock()._2
-      } else java.io.File.createTempFile("graft-sort-spill", ".run")
-    val out = new java.io.DataOutputStream(wrapOut(
-      new java.io.BufferedOutputStream(new java.io.FileOutputStream(file), 1 << 16)))
+    val (file, out) = openRun()
     try {
       out.writeInt(n)
       var i = 0
@@ -773,8 +652,8 @@ object GraftColumnarSortExec {
     SpillFile(file, n)
   }
 
-  private final class DiskRun(spill: SpillFile, kinds: Array[Int]) extends SortedRun {
-    val cur = new RunCursor(kinds.length)
+  private final class DiskRun(spill: SpillFile, nCols: Int) extends SortedRun {
+    val cur = new RunCursor(nCols)
     private val in = new java.io.DataInputStream(wrapIn(
       new java.io.BufferedInputStream(new java.io.FileInputStream(spill.file), 1 << 16)))
     private val total = in.readInt()
@@ -784,18 +663,10 @@ object GraftColumnarSortExec {
       if (read >= total) return false
       read += 1
       var c = 0
-      while (c < kinds.length) {
+      while (c < nCols) {
         val nl = in.readBoolean()
         cur.nulls(c) = nl
-        if (!nl) kinds(c) match {
-          case 0 => cur.longs(c) = in.readLong()
-          case 1 => cur.dbls(c) = in.readDouble()
-          case _ =>
-            val len = in.readInt()
-            val b = new Array[Byte](len)
-            in.readFully(b)
-            cur.strs(c) = b
-        }
+        if (!nl) cur.bits(c) = in.readLong()
         c += 1
       }
       true
@@ -812,11 +683,11 @@ object GraftColumnarSortExec {
     * LIMIT above the sort — cannot leak file descriptors).
     */
   private final class RunHeap(
-      runsIn: Seq[SortedRun], specs: Array[TopKKeySpec], kinds: Array[Int]) {
+      runsIn: Seq[SortedRun], specs: Array[TopKKeySpec], dbl: Array[Boolean]) {
     private val heap = new Array[SortedRun](runsIn.size)
     var size = 0
     private def lt(x: SortedRun, y: SortedRun): Boolean =
-      cmpCursors(specs, kinds, x.cur, y.cur) < 0
+      cmpCursors(specs, dbl, x.cur, y.cur) < 0
     private def siftUp(i0: Int): Unit = {
       var i = i0
       while (i > 0 && lt(heap(i), heap((i - 1) / 2))) {
@@ -871,30 +742,19 @@ object GraftColumnarSortExec {
     * stream simultaneously and can exhaust file descriptors.
     */
   private def mergeSpillGroup(
-      group: Seq[SpillFile], specs: Array[TopKKeySpec], kinds: Array[Int]): SpillFile = {
+      group: Seq[SpillFile], specs: Array[TopKKeySpec], dbl: Array[Boolean]): SpillFile = {
     val total = java.lang.Math.toIntExact(group.map(_.rows.toLong).sum)
-    val file =
-      if (org.apache.spark.SparkEnv.get != null) {
-        org.apache.spark.SparkEnv.get.blockManager.diskBlockManager.createTempLocalBlock()._2
-      } else java.io.File.createTempFile("graft-sort-spill", ".run")
-    val out = new java.io.DataOutputStream(wrapOut(
-      new java.io.BufferedOutputStream(new java.io.FileOutputStream(file), 1 << 16)))
-    val h = new RunHeap(group.map(sp => new DiskRun(sp, kinds)), specs, kinds)
+    val (file, out) = openRun()
+    val h = new RunHeap(group.map(sp => new DiskRun(sp, dbl.length)), specs, dbl)
     try {
       out.writeInt(total)
       while (h.size > 0) {
         val cur = h.top.cur
         var c = 0
-        while (c < kinds.length) {
+        while (c < dbl.length) {
           val nl = cur.nulls(c)
           out.writeBoolean(nl)
-          if (!nl) kinds(c) match {
-            case 0 => out.writeLong(cur.longs(c))
-            case 1 => out.writeDouble(cur.dbls(c))
-            case _ =>
-              out.writeInt(cur.strs(c).length)
-              out.write(cur.strs(c))
-          }
+          if (!nl) out.writeLong(cur.bits(c))
           c += 1
         }
         h.step()
@@ -909,7 +769,7 @@ object GraftColumnarSortExec {
 
   /** Key compare of two run cursors under the sort specs. */
   private def cmpCursors(
-      specs: Array[TopKKeySpec], kinds: Array[Int], a: RunCursor, b: RunCursor): Int = {
+      specs: Array[TopKKeySpec], dbl: Array[Boolean], a: RunCursor, b: RunCursor): Int = {
     var k = 0
     while (k < specs.length) {
       val s = specs(k)
@@ -921,11 +781,11 @@ object GraftColumnarSortExec {
         else if (an) { if (s.nullsFirst) -1 else 1 }
         else if (bn) { if (s.nullsFirst) 1 else -1 }
         else {
-          val base = kinds(c) match {
-            case 0 => java.lang.Long.compare(a.longs(c), b.longs(c))
-            case 1 => SQLOrderingUtil.compareDoubles(a.dbls(c), b.dbls(c))
-            case _ => java.util.Arrays.compareUnsigned(a.strs(c), b.strs(c))
-          }
+          val base =
+            if (dbl(c)) SQLOrderingUtil.compareDoubles(
+              java.lang.Double.longBitsToDouble(a.bits(c)),
+              java.lang.Double.longBitsToDouble(b.bits(c)))
+            else java.lang.Long.compare(a.bits(c), b.bits(c))
           if (s.desc) -base else base
         }
       if (r != 0) return r
@@ -937,9 +797,9 @@ object GraftColumnarSortExec {
   /** K-way merge of sorted runs into output batches. Ties between runs
     * are broken arbitrarily (SQL sort is not stability-sensitive). */
   private def mergeRuns(
-      runsIn: Seq[SortedRun], specs: Array[TopKKeySpec], kinds: Array[Int],
+      runsIn: Seq[SortedRun], specs: Array[TopKKeySpec], dbl: Array[Boolean],
       colTypes: Array[DataType], onBatch: () => Unit): Iterator[ColumnarBatch] = {
-    val h = new RunHeap(runsIn, specs, kinds)
+    val h = new RunHeap(runsIn, specs, dbl)
     // a LIMIT above the sort can abandon this iterator mid-merge —
     // close whatever streams remain open at task end
     Option(org.apache.spark.TaskContext.get()).foreach(
@@ -948,53 +808,17 @@ object GraftColumnarSortExec {
     new Iterator[ColumnarBatch] {
       override def hasNext: Boolean = h.size > 0
       override def next(): ColumnarBatch = {
-        val cap = batchRows
-        val nulls = Array.ofDim[Boolean](nCols, cap)
-        val longs = kinds.map(k => if (k == 0) new Array[Long](cap) else null)
-        val dbls = kinds.map(k => if (k == 1) new Array[Double](cap) else null)
-        // string lanes: one concatenated buffer + offset/length per column
-        var strBytes = kinds.map(k => if (k == 2) new Array[Byte](1 << 12) else null)
-        val strUsed = new Array[Int](nCols)
-        val strOffs = kinds.map(k => if (k == 2) new Array[Int](cap) else null)
-        val strLens = kinds.map(k => if (k == 2) new Array[Int](cap) else null)
+        val out = colTypes.map(newBuf)
         var m = 0
-        while (m < cap && h.size > 0) {
+        while (m < batchRows && h.size > 0) {
           val cur = h.top.cur
           var c = 0
-          while (c < nCols) {
-            val nl = cur.nulls(c)
-            nulls(c)(m) = nl
-            if (!nl) kinds(c) match {
-              case 0 => longs(c)(m) = cur.longs(c)
-              case 1 => dbls(c)(m) = cur.dbls(c)
-              case _ =>
-                val b = cur.strs(c)
-                if (strUsed(c) + b.length > strBytes(c).length) {
-                  strBytes(c) = java.util.Arrays.copyOf(strBytes(c),
-                    math.max(strBytes(c).length * 2, strUsed(c) + b.length))
-                }
-                System.arraycopy(b, 0, strBytes(c), strUsed(c), b.length)
-                strOffs(c)(m) = strUsed(c)
-                strLens(c)(m) = b.length
-                strUsed(c) += b.length
-            }
-            c += 1
-          }
+          while (c < nCols) { out(c).put(cur.nulls(c), cur.bits(c)); c += 1 }
           m += 1
           h.step()
         }
-        val cols = new Array[ColumnVector](nCols)
-        var c = 0
-        while (c < nCols) {
-          cols(c) = kinds(c) match {
-            case 0 => new LongBuildVector(colTypes(c), longs(c), nulls(c), m)
-            case 1 => new DoubleBuildVector(colTypes(c), dbls(c), nulls(c), m)
-            case _ => new ByteSliceStringVector(strBytes(c), strOffs(c), strLens(c), nulls(c), m)
-          }
-          c += 1
-        }
         onBatch()
-        new ColumnarBatch(cols, m)
+        new ColumnarBatch(out.map(_.vector()), m)
       }
     }
   }

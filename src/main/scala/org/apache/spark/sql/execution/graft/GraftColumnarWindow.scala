@@ -9,9 +9,7 @@ import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.graft.{DoubleBuildVector, LongBuildVector, StringArrayVector}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 import GraftColumnarWindowExec.{emitDbl, emitLong, readBoxed, rowDbl, rowLong}
 
@@ -22,7 +20,7 @@ import GraftColumnarWindowExec.{emitDbl, emitLong, readBoxed, rowDbl, rowLong}
   * their value closes AT the row; 7/8 need the node's ORDER BY keys for
   * peer detection, threaded via orderIdx/orderTypes),
   * 9=first 10=last (`ign` = ignoreNulls; last+ign is the forward-fill
-  * shape — row faces only, the boxed lane has no output vector),
+  * shape),
   * 11=nth_value (`nth` = 1-based frame row; Spark rewrites
   * first_value without ignoreNulls into nth_value(x, 1, false)),
   * 12=lag/lead (`off` = SIGNED row offset, `dflt` = literal default —
@@ -40,8 +38,8 @@ import GraftColumnarWindowExec.{emitDbl, emitLong, readBoxed, rowDbl, rowLong}
   * end — kind 1).
   * `excl` marks the exclusive running frame ROWS UNBOUNDED
   * PRECEDING..1 PRECEDING (fn 0-5): the value closes one row EARLIER —
-  * the distributed-prefix-sum shape. Offset/excl/boxed specs run the
-  * row face (emission lags consumption by the ring, fed from per-slot
+  * the distributed-prefix-sum shape. Offset, fn-13 sliding and excl
+  * specs take the ring loop (emission lags consumption by the ring, fed from per-slot
   * accumulator snapshots).
   * `lane`: 0 = long-family input (integral/date/ts/bool/Decimal64
   * unscaled), 1 = double-family input, 2 = no input lane (counts,
@@ -78,10 +76,10 @@ final case class WinAggSpec(
   * it once per window function. For the
   * `sum(x) OVER (PARTITION BY p ORDER BY o ROWS UNBOUNDED PRECEDING)`
   * family none of that buffering is needed: input arrives sorted by
-  * (p, o) from the columnar sort below, so one streaming pass holds ONE
-  * accumulator per window function and emits each batch as soon as it
-  * is read — zero buffering, zero row materialization below the
-  * ColumnarToRow above.
+  * (p, o) from the sort below, so one streaming pass holds ONE
+  * accumulator per window function and emits each row as soon as it
+  * is read — zero buffering. The node reads and emits rows; over a
+  * columnar child Spark's ColumnarToRow feeds it.
   *
   * At 100 TB the difference is structural, not constant-factor: the row
   * operator's per-group buffer degrades to spill IO on any skewed
@@ -116,11 +114,7 @@ final case class WinAggSpec(
   * offset-supported type incl. strings) across all three kinds —
   * last + ignoreNulls over the running frame is the forward-fill /
   * as-of-join shape (q82's plan swaps through it). Note Spark rewrites
-  * first_value without ignoreNulls into nth_value(x, 1, false). On the
-  * BATCH face the carried boxed value maps onto the long/double/string
-  * output vectors by input type, so forward-fill over a bucketed
-  * columnar child stays columnar end-to-end (kind 0; deferred kinds
-  * keep the row face's spill-backed group buffer).
+  * first_value without ignoreNulls into nth_value(x, 1, false).
   *
   * Nodes MIXING lag/lead with other streaming functions (the SCD2
   * row_number + lead + running-sum shape, q132) and EXCLUSIVE running
@@ -153,19 +147,6 @@ case class GraftColumnarWindowExec(
     child: SparkPlan)
     extends UnaryExecNode {
 
-  // Two faces: over a columnar child (scan-side window: bucketed layout
-  // or sortWithinPartitions) the pass is batch kernels; over the
-  // standard shuffled shape (Exchange → row Sort → Window) it streams
-  // InternalRows — the structural win (no per-group buffering) is the
-  // same in both domains. Deferred frames (RANGE peers / whole
-  // partition) run the row face only: their group buffer is Spark's
-  // own spill-backed ExternalAppendOnlyUnsafeRowArray. Boxed
-  // first/last/nth specs (fn 9-11) ride the batch face too: their
-  // carried value maps onto the long/double/string output vectors by
-  // input type (the forward-fill shape stays columnar end-to-end over
-  // a bucketed child).
-  override def supportsColumnar: Boolean =
-    child.supportsColumnar && specs.forall(s => s.kind == 0 && s.fn <= 11 && !s.excl)
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override def outputOrdering = child.outputOrdering
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
@@ -176,291 +157,6 @@ case class GraftColumnarWindowExec(
     "numPartitionGroups" -> SQLMetrics.createMetric(sparkContext, "window partition groups"),
     "numStreamedGroups" -> SQLMetrics.createMetric(sparkContext,
       "window partition groups streamed with a known size"))
-
-  private def longGetter(v: ColumnVector, dt: DataType): Int => Long = dt match {
-    case ByteType => v.getByte(_).toLong
-    case ShortType => v.getShort(_).toLong
-    case IntegerType | DateType => v.getInt(_).toLong
-    case BooleanType => i => if (v.getBoolean(i)) 1L else 0L
-    case d: DecimalType => i => v.getDecimal(i, d.precision, d.scale).toUnscaledLong
-    // double/float reach here only as PEER keys (normalized bits)
-    case DoubleType => i => GraftColumnarWindowExec.peerBits(v.getDouble(i))
-    case FloatType => i => GraftColumnarWindowExec.peerBits(v.getFloat(i).toDouble)
-    case _ => v.getLong
-  }
-
-  private def dblGetter(v: ColumnVector, dt: DataType): Int => Double = dt match {
-    case FloatType => v.getFloat(_).toDouble
-    case ByteType => v.getByte(_).toDouble
-    case ShortType => v.getShort(_).toDouble
-    case IntegerType => v.getInt(_).toDouble
-    case LongType => v.getLong(_).toDouble
-    case _ => v.getDouble
-  }
-
-  override def doExecuteColumnar(): RDD[ColumnarBatch] = {
-    val (inM, grpM) = (metrics("numInputRows"), metrics("numPartitionGroups"))
-    val pIdx = partIdx.toArray
-    val pTypes = partTypes.toArray
-    val oIdx = orderIdx.toArray
-    val oTypes = orderTypes.toArray
-    val ss = specs.toArray
-    val nIn = child.output.length
-    // rank/dense_rank need the previous row's ORDER BY keys to detect
-    // peer-group starts; row_number needs only the partition counter
-    val needPeers = ss.exists(s => s.fn == 7 || s.fn == 8)
-    child.executeColumnar().mapPartitionsInternal { batches =>
-      val nP = pIdx.length
-      val nO = if (needPeers) oIdx.length else 0
-      val nS = ss.length
-      // carried partition key of the previous row (survives batches —
-      // string keys are COPIED because a child may recycle its vectors)
-      val prevLong = new Array[Long](nP)
-      val prevStr = new Array[org.apache.spark.unsafe.types.UTF8String](nP)
-      val prevNull = new Array[Boolean](nP)
-      val oPrevLong = new Array[Long](nO)
-      val oPrevStr = new Array[org.apache.spark.unsafe.types.UTF8String](nO)
-      val oPrevNull = new Array[Boolean](nO)
-      var anyRow = false
-      // accumulators, one set per window spec
-      val accLong = new Array[Long](nS)
-      val accDbl = new Array[Double](nS)
-      val accCnt = new Array[Long](nS)
-      val accSeen = new Array[Boolean](nS)
-      // boxed lane (first/last/nth): the carried value rides the
-      // long/double/string accumulator for its input type; the value
-      // itself may be NULL (captured null under ignoreNulls=false), so
-      // a separate flag tracks that
-      val accStr = new Array[org.apache.spark.unsafe.types.UTF8String](nS)
-      val accValNull = new Array[Boolean](nS)
-      // output storage lane for boxed specs: 0 long-family, 1
-      // double-family, 2 string, -1 not boxed
-      val boxLane = ss.map { s =>
-        if (s.fn < 9 || s.fn > 11) -1
-        else child.output(s.col).dataType match {
-          case DoubleType | FloatType => 1
-          case StringType => 2
-          case _ => 0
-        }
-      }
-      // ranking counters, shared across specs (per-partition)
-      var rkRowNum = 0L
-      var rkRank = 0L
-      var rkDense = 0L
-      def reset(): Unit = {
-        java.util.Arrays.fill(accLong, 0L)
-        java.util.Arrays.fill(accDbl, 0.0)
-        java.util.Arrays.fill(accCnt, 0L)
-        java.util.Arrays.fill(accSeen, false)
-        java.util.Arrays.fill(accStr.asInstanceOf[Array[AnyRef]], null)
-        java.util.Arrays.fill(accValNull, false)
-        rkRowNum = 0L; rkRank = 0L; rkDense = 0L
-      }
-      batches.map { batch =>
-        val n = batch.numRows()
-        inM.add(n)
-        val pCols = pIdx.map(batch.column)
-        val pGetL: Array[Int => Long] = Array.tabulate(nP) { k =>
-          if (pTypes(k) == StringType) null else longGetter(pCols(k), pTypes(k))
-        }
-        val oCols = Array.tabulate(nO)(k => batch.column(oIdx(k)))
-        val oGetL: Array[Int => Long] = Array.tabulate(nO) { k =>
-          if (oTypes(k) == StringType) null else longGetter(oCols(k), oTypes(k))
-        }
-        val vCols = ss.map(s => if (s.col >= 0) batch.column(s.col) else null)
-        val vGetL: Array[Int => Long] = Array.tabulate(nS) { k =>
-          val s = ss(k)
-          if (s.col >= 0 && (s.lane == 0 || boxLane(k) == 0))
-            longGetter(vCols(k), child.output(s.col).dataType)
-          else null
-        }
-        val vGetD: Array[Int => Double] = Array.tabulate(nS) { k =>
-          val s = ss(k)
-          if (s.col >= 0 && (s.lane == 1 || boxLane(k) == 1))
-            dblGetter(vCols(k), child.output(s.col).dataType)
-          else null
-        }
-        // output lane: counts and ranking are long, avg is double,
-        // sum/min/max follow the input lane, boxed first/last/nth
-        // follow boxLane
-        val outL = ss.zipWithIndex.map { case (s, k) =>
-          if (s.fn == 1 || s.fn == 5 || (s.fn >= 6 && s.fn <= 8) ||
-            ((s.fn == 0 || s.fn == 2 || s.fn == 3) && s.lane == 0) ||
-            boxLane(k) == 0) new Array[Long](n) else null
-        }
-        val outD = ss.zipWithIndex.map { case (s, k) =>
-          if (s.fn == 4 ||
-            ((s.fn == 0 || s.fn == 2 || s.fn == 3) && s.lane == 1) ||
-            boxLane(k) == 1) new Array[Double](n) else null
-        }
-        val outS = ss.zipWithIndex.map { case (_, k) =>
-          if (boxLane(k) == 2)
-            new Array[org.apache.spark.unsafe.types.UTF8String](n) else null
-        }
-        val outNull = ss.map(_ => new Array[Boolean](n))
-        var i = 0
-        while (i < n) {
-          // partition boundary: any key differs from the previous row's
-          var boundary = !anyRow
-          var k = 0
-          while (!boundary && k < nP) {
-            val nl = pCols(k).isNullAt(i)
-            boundary =
-              if (nl != prevNull(k)) true
-              else if (nl) false
-              else if (pGetL(k) ne null) pGetL(k)(i) != prevLong(k)
-              else pCols(k).getUTF8String(i).compareTo(prevStr(k)) != 0
-            k += 1
-          }
-          // a new peer group starts when the partition changes OR any
-          // ORDER BY key differs (nulls are peers of nulls) — decide
-          // BEFORE carrying this row's keys
-          var newPeer = boundary
-          k = 0
-          while (needPeers && !newPeer && k < nO) {
-            val nl = oCols(k).isNullAt(i)
-            newPeer =
-              if (nl != oPrevNull(k)) true
-              else if (nl) false
-              else if (oGetL(k) ne null) oGetL(k)(i) != oPrevLong(k)
-              else oCols(k).getUTF8String(i).compareTo(oPrevStr(k)) != 0
-            k += 1
-          }
-          if (boundary) { reset(); grpM.add(1) }
-          // carry this row's key
-          k = 0
-          while (k < nP) {
-            val nl = pCols(k).isNullAt(i)
-            prevNull(k) = nl
-            if (!nl) {
-              if (pGetL(k) ne null) prevLong(k) = pGetL(k)(i)
-              else prevStr(k) = pCols(k).getUTF8String(i).clone()
-            }
-            k += 1
-          }
-          k = 0
-          while (k < nO) {
-            val nl = oCols(k).isNullAt(i)
-            oPrevNull(k) = nl
-            if (!nl) {
-              if (oGetL(k) ne null) oPrevLong(k) = oGetL(k)(i)
-              else oPrevStr(k) = oCols(k).getUTF8String(i).clone()
-            }
-            k += 1
-          }
-          anyRow = true
-          rkRowNum += 1
-          if (boundary) { rkRank = 1; rkDense = 1 }
-          else if (newPeer) { rkRank = rkRowNum; rkDense += 1 }
-          // update + emit each window function
-          var s = 0
-          while (s < nS) {
-            val sp = ss(s)
-            val nullIn = sp.col >= 0 && vCols(s).isNullAt(i)
-            sp.fn match {
-              case 0 => // sum
-                if (!nullIn) {
-                  if (sp.lane == 0) {
-                    val x = vGetL(s)(i)
-                    if (sp.ansi) {
-                      try accLong(s) = Math.addExact(accLong(s), x)
-                      catch {
-                        case _: ArithmeticException =>
-                          throw org.apache.spark.sql.errors.QueryExecutionErrors
-                            .arithmeticOverflowError("long overflow", "try_add", null)
-                      }
-                    } else accLong(s) += x
-                  } else accDbl(s) += vGetD(s)(i)
-                  accSeen(s) = true
-                }
-                if (accSeen(s)) {
-                  if (sp.lane == 0) outL(s)(i) = accLong(s) else outD(s)(i) = accDbl(s)
-                } else outNull(s)(i) = true
-              case 1 => // count(col)
-                if (!nullIn) accCnt(s) += 1
-                outL(s)(i) = accCnt(s)
-              case 5 => // count(*)
-                accCnt(s) += 1
-                outL(s)(i) = accCnt(s)
-              case 6 => outL(s)(i) = rkRowNum // row_number
-              case 7 => outL(s)(i) = rkRank // rank
-              case 8 => outL(s)(i) = rkDense // dense_rank
-              case 9 | 10 | 11 => // boxed first / last / nth_value
-                def capture(): Unit = {
-                  accValNull(s) = nullIn
-                  if (!nullIn) boxLane(s) match {
-                    case 0 => accLong(s) = vGetL(s)(i)
-                    case 1 => accDbl(s) = vGetD(s)(i)
-                    // clone: the child may recycle its vectors
-                    case _ => accStr(s) = vCols(s).getUTF8String(i).clone()
-                  }
-                }
-                sp.fn match {
-                  case 9 => // first (ign: first non-null; else first row)
-                    if (!accSeen(s) && !(sp.ign && nullIn)) {
-                      capture(); accSeen(s) = true
-                    }
-                  case 10 => // last (ign: last non-null; else current row)
-                    if (!(sp.ign && nullIn)) { capture(); accSeen(s) = true }
-                  case _ => // nth_value: nth (1-based) qualifying row
-                    if (!(sp.ign && nullIn)) {
-                      accCnt(s) += 1
-                      if (accCnt(s) == sp.nth) { capture(); accSeen(s) = true }
-                    }
-                }
-                if (!accSeen(s) || accValNull(s)) outNull(s)(i) = true
-                else boxLane(s) match {
-                  case 0 => outL(s)(i) = accLong(s)
-                  case 1 => outD(s)(i) = accDbl(s)
-                  case _ => outS(s)(i) = accStr(s)
-                }
-              case 2 | 3 => // min / max
-                if (!nullIn) {
-                  if (sp.lane == 0) {
-                    val x = vGetL(s)(i)
-                    if (!accSeen(s) ||
-                      (if (sp.fn == 2) x < accLong(s) else x > accLong(s)))
-                      accLong(s) = x
-                  } else {
-                    val x = vGetD(s)(i)
-                    val c = SQLOrderingUtil.compareDoubles(x, accDbl(s))
-                    if (!accSeen(s) || (if (sp.fn == 2) c < 0 else c > 0))
-                      accDbl(s) = x
-                  }
-                  accSeen(s) = true
-                }
-                if (accSeen(s)) {
-                  if (sp.lane == 0) outL(s)(i) = accLong(s) else outD(s)(i) = accDbl(s)
-                } else outNull(s)(i) = true
-              case _ => // avg: double sum + count, emitted as sum/count
-                if (!nullIn) {
-                  accDbl(s) += (if (sp.lane == 0) vGetL(s)(i).toDouble else vGetD(s)(i))
-                  accCnt(s) += 1
-                }
-                if (accCnt(s) > 0) outD(s)(i) = accDbl(s) / accCnt(s)
-                else outNull(s)(i) = true
-            }
-            s += 1
-          }
-          i += 1
-        }
-        val cols = new Array[ColumnVector](nIn + nS)
-        var c = 0
-        while (c < nIn) { cols(c) = batch.column(c); c += 1 }
-        var s = 0
-        while (s < nS) {
-          val sp = ss(s)
-          cols(nIn + s) =
-            if (outS(s) ne null)
-              new StringArrayVector(outS(s), outNull(s), n)
-            else if (outL(s) ne null) new LongBuildVector(sp.outType, outL(s), outNull(s), n)
-            else new DoubleBuildVector(sp.outType, outD(s), outNull(s), n)
-          s += 1
-        }
-        new ColumnarBatch(cols, n)
-      }
-    }
-  }
 
   override protected def doExecute(): RDD[InternalRow] =
     if (specs.exists(_.fn >= 14)) sizeBasedRowPath()
@@ -492,23 +188,12 @@ case class GraftColumnarWindowExec(
       val partCarry = new KeyCarry(pIdx, pTypes)
       val peerCarry = if (needPeers) new KeyCarry(oIdx, oTypes) else null
       var anyRow = false
-      val accLong = new Array[Long](nS)
-      val accDbl = new Array[Double](nS)
-      val accCnt = new Array[Long](nS)
-      val accSeen = new Array[Boolean](nS)
-      // boxed lane (first/last): catalyst value, with a separate
-      // "observed" flag because the stored value itself may be null
-      // (first over a leading null row with ignoreNulls=false)
-      val accAny = new Array[Any](nS)
+      val accs = new GraftColumnarWindowExec.Accumulators(ss, inTypes)
       var rkRowNum = 0L
       var rkRank = 0L
       var rkDense = 0L
       def reset(): Unit = {
-        java.util.Arrays.fill(accLong, 0L)
-        java.util.Arrays.fill(accDbl, 0.0)
-        java.util.Arrays.fill(accCnt, 0L)
-        java.util.Arrays.fill(accSeen, false)
-        java.util.Arrays.fill(accAny.asInstanceOf[Array[AnyRef]], null)
+        accs.reset()
         rkRowNum = 0L; rkRank = 0L; rkDense = 0L
       }
       val aggRow = new org.apache.spark.sql.catalyst.expressions
@@ -536,7 +221,9 @@ case class GraftColumnarWindowExec(
       val anyExcl = ss.exists(_.excl)
       // +1 slot when exclusive frames read the PREVIOUS row's snapshot
       val cap = (maxLag + maxLead + 1L + (if (anyExcl) 1L else 0L)).toInt
-      if (cap == 1) rows.map { row =>
+      // fn 12/13 values are read from the ring even at offset 0 (lead(x, 0),
+      // a CURRENT ROW..CURRENT ROW frame), so they always take it
+      if (cap == 1 && !ss.exists(s => s.fn == 12 || s.fn == 13)) rows.map { row =>
         inM.add(1)
         val boundary = !anyRow || partCarry.differs(row)
         // peer-group start: partition change OR any ORDER BY key differs
@@ -549,87 +236,14 @@ case class GraftColumnarWindowExec(
         rkRowNum += 1
         if (boundary) { rkRank = 1; rkDense = 1 }
         else if (newPeer) { rkRank = rkRowNum; rkDense += 1 }
+        accs.update(row)
         var s = 0
         while (s < nS) {
-          val sp = ss(s)
-          val nullIn = sp.col >= 0 && row.isNullAt(sp.col)
-          sp.fn match {
-            case 0 => // sum
-              if (!nullIn) {
-                if (sp.lane == 0) {
-                  val x = rowLong(row, sp.col, inTypes(s))
-                  if (sp.ansi) {
-                    try accLong(s) = Math.addExact(accLong(s), x)
-                    catch {
-                      case _: ArithmeticException =>
-                        throw org.apache.spark.sql.errors.QueryExecutionErrors
-                          .arithmeticOverflowError("long overflow", "try_add", null)
-                    }
-                  } else accLong(s) += x
-                } else accDbl(s) += rowDbl(row, sp.col, inTypes(s))
-                accSeen(s) = true
-              }
-              if (accSeen(s)) {
-                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accLong(s))
-                else emitDbl(aggRow, s, sp.outType, accDbl(s))
-              } else aggRow.setNullAt(s)
-            case 1 =>
-              if (!nullIn) accCnt(s) += 1
-              aggRow.update(s, accCnt(s))
-            case 5 =>
-              accCnt(s) += 1
-              aggRow.update(s, accCnt(s))
+          ss(s).fn match {
             case 6 => aggRow.update(s, rkRowNum.toInt) // row_number
             case 7 => aggRow.update(s, rkRank.toInt) // rank
             case 8 => aggRow.update(s, rkDense.toInt) // dense_rank
-            case 9 => // first (ign: first non-null; else first row's value)
-              if (!accSeen(s) && !(sp.ign && nullIn)) {
-                accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                accSeen(s) = true
-              }
-              if (accSeen(s)) aggRow.update(s, accAny(s)) else aggRow.setNullAt(s)
-            case 10 => // last (ign: last non-null; else current row's value)
-              if (!(sp.ign && nullIn)) {
-                accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                accSeen(s) = true
-              }
-              if (accSeen(s)) aggRow.update(s, accAny(s)) else aggRow.setNullAt(s)
-            case 11 => // nth_value: the nth (1-based) qualifying frame row
-              if (!(sp.ign && nullIn)) {
-                accCnt(s) += 1
-                if (accCnt(s) == sp.nth) {
-                  accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                  accSeen(s) = true
-                }
-              }
-              if (accSeen(s)) aggRow.update(s, accAny(s)) else aggRow.setNullAt(s)
-            case 2 | 3 =>
-              if (!nullIn) {
-                if (sp.lane == 0) {
-                  val x = rowLong(row, sp.col, inTypes(s))
-                  if (!accSeen(s) ||
-                    (if (sp.fn == 2) x < accLong(s) else x > accLong(s)))
-                    accLong(s) = x
-                } else {
-                  val x = rowDbl(row, sp.col, inTypes(s))
-                  val c = SQLOrderingUtil.compareDoubles(x, accDbl(s))
-                  if (!accSeen(s) || (if (sp.fn == 2) c < 0 else c > 0))
-                    accDbl(s) = x
-                }
-                accSeen(s) = true
-              }
-              if (accSeen(s)) {
-                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accLong(s))
-                else emitDbl(aggRow, s, sp.outType, accDbl(s))
-              } else aggRow.setNullAt(s)
-            case _ => // avg
-              if (!nullIn) {
-                accDbl(s) += (if (sp.lane == 0) rowLong(row, sp.col, inTypes(s)).toDouble
-                  else rowDbl(row, sp.col, inTypes(s)))
-                accCnt(s) += 1
-              }
-              if (accCnt(s) > 0) aggRow.update(s, accDbl(s) / accCnt(s))
-              else aggRow.setNullAt(s)
+            case _ => accs.write(aggRow, s)
           }
           s += 1
         }
@@ -646,112 +260,19 @@ case class GraftColumnarWindowExec(
         // consumption/flush.
         import org.apache.spark.sql.catalyst.expressions.UnsafeRow
         val ring = new Array[UnsafeRow](cap)
-        val snapL = Array.ofDim[Long](cap, nS)
-        val snapD = Array.ofDim[Double](cap, nS)
-        val snapCnt = Array.ofDim[Long](cap, nS)
-        val snapSeen = Array.ofDim[Boolean](cap, nS)
-        val snapAny = Array.ofDim[Any](cap, nS)
+        val snaps = Array.fill(cap)(new GraftColumnarWindowExec.Accumulators(ss, inTypes))
         val snapRn = new Array[Long](cap)
         val snapRank = new Array[Long](cap)
         val snapDense = new Array[Long](cap)
-        // mutation-only twin of the fast path's interleaved update+emit
-        def updAccs(row: InternalRow): Unit = {
-          var s = 0
-          while (s < nS) {
-            val sp = ss(s)
-            val nullIn = sp.col >= 0 && row.isNullAt(sp.col)
-            sp.fn match {
-              case 0 =>
-                if (!nullIn) {
-                  if (sp.lane == 0) {
-                    val x = rowLong(row, sp.col, inTypes(s))
-                    if (sp.ansi) {
-                      try accLong(s) = Math.addExact(accLong(s), x)
-                      catch {
-                        case _: ArithmeticException =>
-                          throw org.apache.spark.sql.errors.QueryExecutionErrors
-                            .arithmeticOverflowError("long overflow", "try_add", null)
-                      }
-                    } else accLong(s) += x
-                  } else accDbl(s) += rowDbl(row, sp.col, inTypes(s))
-                  accSeen(s) = true
-                }
-              case 1 => if (!nullIn) accCnt(s) += 1
-              case 5 => accCnt(s) += 1
-              case 2 | 3 =>
-                if (!nullIn) {
-                  if (sp.lane == 0) {
-                    val x = rowLong(row, sp.col, inTypes(s))
-                    if (!accSeen(s) ||
-                      (if (sp.fn == 2) x < accLong(s) else x > accLong(s)))
-                      accLong(s) = x
-                  } else {
-                    val x = rowDbl(row, sp.col, inTypes(s))
-                    val c = SQLOrderingUtil.compareDoubles(x, accDbl(s))
-                    if (!accSeen(s) || (if (sp.fn == 2) c < 0 else c > 0))
-                      accDbl(s) = x
-                  }
-                  accSeen(s) = true
-                }
-              case 4 =>
-                if (!nullIn) {
-                  accDbl(s) += (if (sp.lane == 0) rowLong(row, sp.col, inTypes(s)).toDouble
-                    else rowDbl(row, sp.col, inTypes(s)))
-                  accCnt(s) += 1
-                }
-              case 9 =>
-                if (!accSeen(s) && !(sp.ign && nullIn)) {
-                  accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                  accSeen(s) = true
-                }
-              case 10 =>
-                if (!(sp.ign && nullIn)) {
-                  accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                  accSeen(s) = true
-                }
-              case 11 =>
-                if (!(sp.ign && nullIn)) {
-                  accCnt(s) += 1
-                  if (accCnt(s) == sp.nth) {
-                    accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                    accSeen(s) = true
-                  }
-                }
-              case _ => () // fn 12 offsets carry no accumulator
-            }
-            s += 1
-          }
-        }
         def snapshot(slot: Int): Unit = {
-          var s = 0
-          while (s < nS) {
-            snapL(slot)(s) = accLong(s); snapD(slot)(s) = accDbl(s)
-            snapCnt(slot)(s) = accCnt(s); snapSeen(slot)(s) = accSeen(s)
-            snapAny(slot)(s) = accAny(s)
-            s += 1
-          }
+          snaps(slot).copyFrom(accs)
           snapRn(slot) = rkRowNum; snapRank(slot) = rkRank; snapDense(slot) = rkDense
         }
-        def writeFromSnap(s: Int, slot: Int): Unit = {
-          val sp = ss(s)
-          sp.fn match {
-            case 0 | 2 | 3 =>
-              if (snapSeen(slot)(s)) {
-                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, snapL(slot)(s))
-                else emitDbl(aggRow, s, sp.outType, snapD(slot)(s))
-              } else aggRow.setNullAt(s)
-            case 1 | 5 => aggRow.update(s, snapCnt(slot)(s))
-            case 4 =>
-              if (snapCnt(slot)(s) > 0)
-                aggRow.update(s, snapD(slot)(s) / snapCnt(slot)(s))
-              else aggRow.setNullAt(s)
-            case 6 => aggRow.update(s, snapRn(slot).toInt)
-            case 7 => aggRow.update(s, snapRank(slot).toInt)
-            case 8 => aggRow.update(s, snapDense(slot).toInt)
-            case _ =>
-              if (snapSeen(slot)(s)) aggRow.update(s, snapAny(slot)(s))
-              else aggRow.setNullAt(s)
-          }
+        def writeFromSnap(s: Int, slot: Int): Unit = ss(s).fn match {
+          case 6 => aggRow.update(s, snapRn(slot).toInt)
+          case 7 => aggRow.update(s, snapRank(slot).toInt)
+          case 8 => aggRow.update(s, snapDense(slot).toInt)
+          case _ => snaps(slot).write(aggRow, s)
         }
         /** Empty-accumulator output — an exclusive frame on the first
           * partition row. */
@@ -769,7 +290,7 @@ case class GraftColumnarWindowExec(
           rkRowNum += 1
           if (boundary) { rkRank = 1; rkDense = 1 }
           else if (newPeer) { rkRank = rkRowNum; rkDense += 1 }
-          updAccs(row)
+          accs.update(row)
         }
         new Iterator[InternalRow] {
           private var cons = 0L
@@ -949,109 +470,12 @@ case class GraftColumnarWindowExec(
       val partCarry = new KeyCarry(pIdx, pTypes)
       val peerCarry = if (byPeer) new KeyCarry(oIdx, oTypes) else null
       var anyRow = false
-      val accLong = new Array[Long](nS)
-      val accDbl = new Array[Double](nS)
-      val accCnt = new Array[Long](nS)
-      val accSeen = new Array[Boolean](nS)
-      val accAny = new Array[Any](nS)
-      def reset(): Unit = {
-        java.util.Arrays.fill(accLong, 0L)
-        java.util.Arrays.fill(accDbl, 0.0)
-        java.util.Arrays.fill(accCnt, 0L)
-        java.util.Arrays.fill(accSeen, false)
-        java.util.Arrays.fill(accAny.asInstanceOf[Array[AnyRef]], null)
-      }
+      val accs = new GraftColumnarWindowExec.Accumulators(ss, inTypes)
       val aggRow = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(nS)
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(outAll.map(_.dataType).toArray)
-      def update(row: InternalRow): Unit = {
-        var s = 0
-        while (s < nS) {
-          val sp = ss(s)
-          val nullIn = sp.col >= 0 && row.isNullAt(sp.col)
-          sp.fn match {
-            case 0 =>
-              if (!nullIn) {
-                if (sp.lane == 0) {
-                  val x = rowLong(row, sp.col, inTypes(s))
-                  if (sp.ansi) {
-                    try accLong(s) = Math.addExact(accLong(s), x)
-                    catch {
-                      case _: ArithmeticException =>
-                        throw org.apache.spark.sql.errors.QueryExecutionErrors
-                          .arithmeticOverflowError("long overflow", "try_add", null)
-                    }
-                  } else accLong(s) += x
-                } else accDbl(s) += rowDbl(row, sp.col, inTypes(s))
-                accSeen(s) = true
-              }
-            case 1 => if (!nullIn) accCnt(s) += 1
-            case 5 => accCnt(s) += 1
-            case 2 | 3 =>
-              if (!nullIn) {
-                if (sp.lane == 0) {
-                  val x = rowLong(row, sp.col, inTypes(s))
-                  if (!accSeen(s) ||
-                    (if (sp.fn == 2) x < accLong(s) else x > accLong(s)))
-                    accLong(s) = x
-                } else {
-                  val x = rowDbl(row, sp.col, inTypes(s))
-                  val c = SQLOrderingUtil.compareDoubles(x, accDbl(s))
-                  if (!accSeen(s) || (if (sp.fn == 2) c < 0 else c > 0))
-                    accDbl(s) = x
-                }
-                accSeen(s) = true
-              }
-            case 9 => // first
-              if (!accSeen(s) && !(sp.ign && nullIn)) {
-                accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                accSeen(s) = true
-              }
-            case 10 => // last
-              if (!(sp.ign && nullIn)) {
-                accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                accSeen(s) = true
-              }
-            case 11 => // nth_value
-              if (!(sp.ign && nullIn)) {
-                accCnt(s) += 1
-                if (accCnt(s) == sp.nth) {
-                  accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                  accSeen(s) = true
-                }
-              }
-            case _ =>
-              if (!nullIn) {
-                accDbl(s) += (if (sp.lane == 0) rowLong(row, sp.col, inTypes(s)).toDouble
-                  else rowDbl(row, sp.col, inTypes(s)))
-                accCnt(s) += 1
-              }
-          }
-          s += 1
-        }
-      }
-      def closeGroupValues(): Unit = {
-        var s = 0
-        while (s < nS) {
-          val sp = ss(s)
-          sp.fn match {
-            case 1 | 5 => aggRow.update(s, accCnt(s))
-            case 4 =>
-              if (accCnt(s) > 0) aggRow.update(s, accDbl(s) / accCnt(s))
-              else aggRow.setNullAt(s)
-            case 9 | 10 | 11 =>
-              if (accSeen(s)) aggRow.update(s, accAny(s)) else aggRow.setNullAt(s)
-            case _ =>
-              if (accSeen(s)) {
-                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accLong(s))
-                else emitDbl(aggRow, s, sp.outType, accDbl(s))
-              } else aggRow.setNullAt(s)
-          }
-          s += 1
-        }
-      }
       new Iterator[InternalRow] {
         private val buffer = new org.apache.spark.sql.execution
           .ExternalAppendOnlyUnsafeRowArray(inMemThreshold, Long.MaxValue,
@@ -1070,8 +494,8 @@ case class GraftColumnarWindowExec(
           if (!rows.hasNext && held == null) return
           buffer.clear()
           if (held != null) {
-            if (heldIsNewPartition) { reset(); grpM.add(1) }
-            update(held)
+            if (heldIsNewPartition) { accs.reset(); grpM.add(1) }
+            accs.update(held)
             partCarry.carry(held)
             if (byPeer) peerCarry.carry(held)
             buffer.add(held)
@@ -1086,19 +510,19 @@ case class GraftColumnarWindowExec(
               // close the current group BEFORE consuming this row
               held = row.copy()
               heldIsNewPartition = newPart
-              closeGroupValues()
+              accs.writeAll(aggRow)
               emitIter = buffer.generateIterator()
               return
             }
-            if (newPart) { reset(); grpM.add(1) }
+            if (newPart) { accs.reset(); grpM.add(1) }
             anyRow = true
-            update(row)
+            accs.update(row)
             partCarry.carry(row)
             if (byPeer) peerCarry.carry(row)
             buffer.add(row)
           }
           if (buffer.length > 0) {
-            closeGroupValues()
+            accs.writeAll(aggRow)
             emitIter = buffer.generateIterator()
           }
         }
@@ -1168,115 +592,12 @@ case class GraftColumnarWindowExec(
       // emission cursor; kind-1 nodes detect peers to drive the scout
       val needPeers = kind1 || ss.exists(s => s.fn == 7 || s.fn == 8 || s.fn == 15)
       val peerCarry = if (needPeers) new KeyCarry(oIdx, oTypes) else null
-      val accLong = new Array[Long](nS)
-      val accDbl = new Array[Double](nS)
-      val accCnt = new Array[Long](nS)
-      val accSeen = new Array[Boolean](nS)
-      val accAny = new Array[Any](nS)
-      def reset(): Unit = {
-        java.util.Arrays.fill(accLong, 0L)
-        java.util.Arrays.fill(accDbl, 0.0)
-        java.util.Arrays.fill(accCnt, 0L)
-        java.util.Arrays.fill(accSeen, false)
-        java.util.Arrays.fill(accAny.asInstanceOf[Array[AnyRef]], null)
-      }
+      val accs = new GraftColumnarWindowExec.Accumulators(ss, inTypes)
       val aggRow = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(nS)
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(outAll.map(_.dataType).toArray)
-      def update(row: InternalRow): Unit = {
-        var s = 0
-        while (s < nS) {
-          val sp = ss(s)
-          if (sp.fn < 6 || (sp.fn >= 9 && sp.fn <= 11)) {
-            val nullIn = sp.col >= 0 && row.isNullAt(sp.col)
-            sp.fn match {
-              case 0 =>
-                if (!nullIn) {
-                  if (sp.lane == 0) {
-                    val x = rowLong(row, sp.col, inTypes(s))
-                    if (sp.ansi) {
-                      try accLong(s) = Math.addExact(accLong(s), x)
-                      catch {
-                        case _: ArithmeticException =>
-                          throw org.apache.spark.sql.errors.QueryExecutionErrors
-                            .arithmeticOverflowError("long overflow", "try_add", null)
-                      }
-                    } else accLong(s) += x
-                  } else accDbl(s) += rowDbl(row, sp.col, inTypes(s))
-                  accSeen(s) = true
-                }
-              case 1 => if (!nullIn) accCnt(s) += 1
-              case 5 => accCnt(s) += 1
-              case 2 | 3 =>
-                if (!nullIn) {
-                  if (sp.lane == 0) {
-                    val x = rowLong(row, sp.col, inTypes(s))
-                    if (!accSeen(s) ||
-                      (if (sp.fn == 2) x < accLong(s) else x > accLong(s)))
-                      accLong(s) = x
-                  } else {
-                    val x = rowDbl(row, sp.col, inTypes(s))
-                    val c = SQLOrderingUtil.compareDoubles(x, accDbl(s))
-                    if (!accSeen(s) || (if (sp.fn == 2) c < 0 else c > 0))
-                      accDbl(s) = x
-                  }
-                  accSeen(s) = true
-                }
-              case 9 => // first
-                if (!accSeen(s) && !(sp.ign && nullIn)) {
-                  accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                  accSeen(s) = true
-                }
-              case 10 => // last
-                if (!(sp.ign && nullIn)) {
-                  accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                  accSeen(s) = true
-                }
-              case 11 => // nth_value
-                if (!(sp.ign && nullIn)) {
-                  accCnt(s) += 1
-                  if (accCnt(s) == sp.nth) {
-                    accAny(s) = readBoxed(row, sp.col, inTypes(s))
-                    accSeen(s) = true
-                  }
-                }
-              case _ => // avg
-                if (!nullIn) {
-                  accDbl(s) += (if (sp.lane == 0) rowLong(row, sp.col, inTypes(s)).toDouble
-                    else rowDbl(row, sp.col, inTypes(s)))
-                  accCnt(s) += 1
-                }
-            }
-          }
-          s += 1
-        }
-      }
-      /** Aggregate (fn 0-5, 9-11) lanes from the accumulators — the
-        * accumulated state IS the emitted value for both kinds (kind 0:
-        * updated through the current row; kind 1: through the scout's
-        * peer-group end). */
-      def writeAggValues(): Unit = {
-        var s = 0
-        while (s < nS) {
-          val sp = ss(s)
-          if (sp.fn < 6 || (sp.fn >= 9 && sp.fn <= 11)) sp.fn match {
-            case 1 | 5 => aggRow.update(s, accCnt(s))
-            case 4 =>
-              if (accCnt(s) > 0) aggRow.update(s, accDbl(s) / accCnt(s))
-              else aggRow.setNullAt(s)
-            case 9 | 10 | 11 =>
-              if (accSeen(s)) aggRow.update(s, accAny(s)) else aggRow.setNullAt(s)
-            case _ =>
-              if (accSeen(s)) {
-                if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accLong(s))
-                else emitDbl(aggRow, s, sp.outType, accDbl(s))
-              } else aggRow.setNullAt(s)
-          }
-          s += 1
-        }
-      }
       /** Spark NTile bucketing: n/b even buckets, the first n%b take one
         * extra row (when n < b every row is its own bucket). */
       def ntileBucket(rowNum: Long, n: Long, b: Int): Int = {
@@ -1320,7 +641,7 @@ case class GraftColumnarWindowExec(
         }
         private def advancePartition(): Unit = {
           if (!rows.hasNext && held == null) { emitIter = Iterator.empty; return }
-          reset()
+          accs.reset()
           rowNum = 0L; rkRank = 0L; rkDense = 0L
           scoutPos = 0L; scoutPending = null
           val first = if (held != null) held else input()
@@ -1384,14 +705,14 @@ case class GraftColumnarWindowExec(
           }
           private def fill(): Unit = {
             buffer.clear()
-            peerCarry.carry(nextPeer); buffer.add(nextPeer); update(nextPeer); scoutPos += 1
+            peerCarry.carry(nextPeer); buffer.add(nextPeer); accs.update(nextPeer); scoutPos += 1
             nextPeer = null
             while (nextPeer == null && left > 0) {
               val r = groupInput()
               if (peerCarry.differs(r)) nextPeer = r.copy()
-              else { buffer.add(r); update(r); scoutPos += 1 }
+              else { buffer.add(r); accs.update(r); scoutPos += 1 }
             }
-            writeAggValues()
+            accs.writeAll(aggRow)
             writeCumeDist()
             it = buffer.generateIterator()
           }
@@ -1411,11 +732,11 @@ case class GraftColumnarWindowExec(
           while (scanning) {
             if (scoutPending != null) {
               if (peerCarry.differs(scoutPending)) scanning = false
-              else { update(scoutPending); scoutPos += 1; scoutPending = null }
+              else { accs.update(scoutPending); scoutPos += 1; scoutPending = null }
             } else if (scout.hasNext) {
               val sr = scout.next()
               if (peerCarry.differs(sr)) { scoutPending = sr.copy(); scanning = false }
-              else { update(sr); scoutPos += 1 }
+              else { accs.update(sr); scoutPos += 1 }
             } else scanning = false
           }
         }
@@ -1434,14 +755,14 @@ case class GraftColumnarWindowExec(
             if (!streamed && (rowNum == 1L || peerCarry.differs(r))) {
               peerCarry.carry(r)
               scoutThroughPeers()
-              writeAggValues()
+              accs.writeAll(aggRow)
               writeCumeDist()
             }
           } else {
             val newPeer = needPeers && (rowNum == 1L || peerCarry.differs(r))
             if (newPeer) { peerCarry.carry(r); rkRank = rowNum; rkDense += 1 }
-            update(r)
-            writeAggValues()
+            accs.update(r)
+            accs.writeAll(aggRow)
             var s = 0
             while (s < nS) {
               ss(s).fn match {
@@ -3686,5 +3007,132 @@ object GraftColumnarWindowExec {
   def emitDbl(out: InternalRow, s: Int, dt: DataType, v: Double): Unit = dt match {
     case FloatType => out.update(s, v.toFloat)
     case _ => out.update(s, v)
+  }
+
+  /** Whether spec `sp` keeps running state in [[Accumulators]]: the
+    * aggregates (fn 0-5) and the boxed first/last/nth_value (fn 9-11). */
+  private def accumulates(sp: WinAggSpec): Boolean = sp.fn < 6 || (sp.fn >= 9 && sp.fn <= 11)
+
+  /** The running accumulators of the streaming, deferred and size-based
+    * row faces: one slot per window spec (`inTypes` = each spec's input
+    * column type), folded row by row and read back as each spec's
+    * value. Specs that do not [[accumulates]] are skipped. */
+  final class Accumulators(ss: Array[WinAggSpec], inTypes: Array[DataType]) {
+    private val nS = ss.length
+    private val long = new Array[Long](nS)
+    private val dbl = new Array[Double](nS)
+    private val cnt = new Array[Long](nS)
+    private val seen = new Array[Boolean](nS)
+    // boxed lane (first/last/nth): catalyst value, with `seen` as the
+    // "observed" flag because the stored value itself may be null
+    // (first over a leading null row with ignoreNulls=false)
+    private val any = new Array[Any](nS)
+
+    def reset(): Unit = {
+      java.util.Arrays.fill(long, 0L)
+      java.util.Arrays.fill(dbl, 0.0)
+      java.util.Arrays.fill(cnt, 0L)
+      java.util.Arrays.fill(seen, false)
+      java.util.Arrays.fill(any.asInstanceOf[Array[AnyRef]], null)
+    }
+
+    /** Copies every slot of `from` — the ring face's per-row snapshot. */
+    def copyFrom(from: Accumulators): Unit = {
+      System.arraycopy(from.long, 0, long, 0, nS)
+      System.arraycopy(from.dbl, 0, dbl, 0, nS)
+      System.arraycopy(from.cnt, 0, cnt, 0, nS)
+      System.arraycopy(from.seen, 0, seen, 0, nS)
+      System.arraycopy(from.any, 0, any, 0, nS)
+    }
+
+    /** Folds `row` into every accumulating spec. */
+    def update(row: InternalRow): Unit = {
+      var s = 0
+      while (s < nS) {
+        val sp = ss(s)
+        if (accumulates(sp)) {
+          val nullIn = sp.col >= 0 && row.isNullAt(sp.col)
+          sp.fn match {
+            case 0 => // sum
+              if (!nullIn) {
+                if (sp.lane == 0) {
+                  val x = rowLong(row, sp.col, inTypes(s))
+                  if (sp.ansi) {
+                    try long(s) = Math.addExact(long(s), x)
+                    catch {
+                      case _: ArithmeticException =>
+                        throw org.apache.spark.sql.errors.QueryExecutionErrors
+                          .arithmeticOverflowError("long overflow", "try_add", null)
+                    }
+                  } else long(s) += x
+                } else dbl(s) += rowDbl(row, sp.col, inTypes(s))
+                seen(s) = true
+              }
+            case 1 => if (!nullIn) cnt(s) += 1 // count(col)
+            case 5 => cnt(s) += 1 // count(*)
+            case 2 | 3 => // min / max
+              if (!nullIn) {
+                if (sp.lane == 0) {
+                  val x = rowLong(row, sp.col, inTypes(s))
+                  if (!seen(s) || (if (sp.fn == 2) x < long(s) else x > long(s))) long(s) = x
+                } else {
+                  val x = rowDbl(row, sp.col, inTypes(s))
+                  val c = SQLOrderingUtil.compareDoubles(x, dbl(s))
+                  if (!seen(s) || (if (sp.fn == 2) c < 0 else c > 0)) dbl(s) = x
+                }
+                seen(s) = true
+              }
+            case 4 => // avg: double sum + count
+              if (!nullIn) {
+                dbl(s) += (if (sp.lane == 0) rowLong(row, sp.col, inTypes(s)).toDouble
+                  else rowDbl(row, sp.col, inTypes(s)))
+                cnt(s) += 1
+              }
+            case 9 => // first (ign: first non-null; else first row's value)
+              if (!seen(s) && !(sp.ign && nullIn)) {
+                any(s) = readBoxed(row, sp.col, inTypes(s))
+                seen(s) = true
+              }
+            case 10 => // last (ign: last non-null; else current row's value)
+              if (!(sp.ign && nullIn)) {
+                any(s) = readBoxed(row, sp.col, inTypes(s))
+                seen(s) = true
+              }
+            case _ => // nth_value: the nth (1-based) qualifying frame row
+              if (!(sp.ign && nullIn)) {
+                cnt(s) += 1
+                if (cnt(s) == sp.nth) {
+                  any(s) = readBoxed(row, sp.col, inTypes(s))
+                  seen(s) = true
+                }
+              }
+          }
+        }
+        s += 1
+      }
+    }
+
+    /** Writes accumulating spec `s`'s current value into slot `s` of `out`. */
+    def write(out: InternalRow, s: Int): Unit = {
+      val sp = ss(s)
+      sp.fn match {
+        case 1 | 5 => out.update(s, cnt(s))
+        case 4 => if (cnt(s) > 0) out.update(s, dbl(s) / cnt(s)) else out.setNullAt(s)
+        case 9 | 10 | 11 => if (seen(s)) out.update(s, any(s)) else out.setNullAt(s)
+        case _ => // sum / min / max
+          if (!seen(s)) out.setNullAt(s)
+          else if (sp.lane == 0) emitLong(out, s, sp.outType, long(s))
+          else emitDbl(out, s, sp.outType, dbl(s))
+      }
+    }
+
+    /** [[write]] for every accumulating spec. */
+    def writeAll(out: InternalRow): Unit = {
+      var s = 0
+      while (s < nS) {
+        if (accumulates(ss(s))) write(out, s)
+        s += 1
+      }
+    }
   }
 }

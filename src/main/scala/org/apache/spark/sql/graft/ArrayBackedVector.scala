@@ -132,20 +132,6 @@ final class StringArrayVector(values: Array[UTF8String], nulls: Array[Boolean], 
   override def getUTF8String(rowId: Int): UTF8String = values(rowId)
 }
 
-/** Zero-copy string views over the columnar sort's concatenated string
-  * buffer: getUTF8String wraps a (offset, length) slice of the shared
-  * byte array — no per-row copy at emission; the downstream
-  * ColumnarToRow (or next kernel) copies what it keeps, same contract as
-  * [[StringArrayVector]].
-  */
-final class ByteSliceStringVector(
-    bytes: Array[Byte], offs: Array[Int], lens: Array[Int],
-    nulls: Array[Boolean], n: Int)
-    extends ArrayBackedVector(StringType, nulls, n) {
-  override def getUTF8String(rowId: Int): UTF8String =
-    UTF8String.fromBytes(bytes, offs(rowId), lens(rowId))
-}
-
 /** Materialized array<string> vector: per-row slices of one flat
   * UTF8String child (offsets + lengths), the layout split() projections
   * produce. Element nulls don't exist (StringSplit's containsNull =

@@ -123,8 +123,8 @@ object GraftColumnarRule {
   val enabledKey = "spark.graft.columnar.enabled"
 
   /** Columnar window aggregation over running ROWS frames — default ON
-    * (streaming accumulators over the columnar sort's batches replace
-    * the row WindowExec's whole-group buffering; A/B in
+    * (streaming accumulators over the sorted rows replace the row
+    * WindowExec's whole-group buffering; A/B in
     * GraftColumnarWindowExec's scaladoc). */
   val windowAggEnabledKey = "spark.graft.columnar.window.enabled"
 
@@ -173,24 +173,13 @@ object GraftColumnarRule {
     */
   val innerShjEnabledKey = "spark.graft.columnar.shj.inner.enabled"
 
-  /** Columnar per-partition sort over a columnar block — OPT-IN in
-    * general (default off): the A/B (FilterMicroBench sf0.1, after the
-    * concatenated-byte-buffer string rework) still loses on wide rows
-    * (16-col 1.38-1.40x) and slightly on string keys (1.15-1.21x) —
-    * the residual cost is buffering every output column, which the
-    * reference escapes natively (arena + SIMD), not the sort loop.
-    * Correct, parity-tested, demonstrated (q164 opts in on a cloned
-    * session).
-    */
-  val sortEnabledKey = "spark.graft.columnar.sort.enabled"
-
-  /** NARROW all-numeric sorts (<= 4 output columns, no strings) swap by
+  /** NARROW sorts (at most 4 output columns, each long/double family or
+    * Decimal64) over a columnar block swap to GraftColumnarSortExec by
     * DEFAULT: with so little to buffer, the radix path beats Tungsten's
-    * row sort — A/B medians 0.55-0.87x across 1-4 column numeric shapes
-    * (sort-narrow-1col 0.71-0.77x, -3col 0.64-0.87x, -4col-2key
-    * 0.55-0.57x; 3 session runs, FilterMicroBench sf0.1). The win case
-    * is the common sorted-export / pre-bucketing projection; anything
-    * wider or stringed still requires the explicit opt-in above.
+    * row sort (FilterMicroBench sf0.1, A/B medians across 1-4 column
+    * shapes; numbers in the exec's scaladoc). Wider or string outputs
+    * keep the row sort, where the same kernel measured slower. The win
+    * case is the common sorted-export / pre-bucketing projection.
     */
   val narrowSortEnabledKey = "spark.graft.columnar.sort.narrow.enabled"
 

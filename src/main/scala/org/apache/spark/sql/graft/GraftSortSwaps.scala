@@ -17,28 +17,24 @@ object GraftSortSwaps {
   def apply(session: SparkSession): PartialFunction[SparkPlan, SparkPlan] = {
     // Per-partition sort over a columnar block: replace
     // ColumnarToRow + SortExec with the typed index sort
-    // (GraftColumnarSortExec). Sort keys must be plain attributes and
-    // EVERY output column a bufferable type (long/double family or
-    // string) — the operator decomposes batches column-wise. Oversized
-    // partitions spill sorted runs and merge (see the exec's scaladoc).
+    // (GraftColumnarSortExec) when the output is NARROW — at most
+    // maxColumns columns, each long/double family or Decimal64, the
+    // shape whose A/B won — and every key is a plain attribute.
     // No spill-safety gate needed: the columnar sort spills sorted runs
     // to disk on task-memory refusal or past its byte threshold, so
     // bucketed scans (one unbounded partition per bucket) and
     // row-expanding columnar children (join probes) are safe to swap —
     // an oversized partition degrades to run merge IO, exactly like the
     // row SortExec's UnsafeExternalSorter.
-    case s: SortExec
-        if s.child.supportsColumnar && (flag(session, sortEnabledKey, default = false) ||
-          (flag(session, narrowSortEnabledKey) && s.output.length <= 4 &&
-            s.output.forall(a => GraftColumnarSortExec.numericColType(a.dataType)))) =>
-      allRight(s.sortOrder.map(so =>
+    case s: SortExec if s.child.supportsColumnar && flag(session, narrowSortEnabledKey) =>
+      if (s.output.length > GraftColumnarSortExec.maxColumns ||
+          !s.output.forall(a => GraftColumnarSortExec.supportedColType(a.dataType)))
+        declined(s, s"sort output not narrow (at most ${GraftColumnarSortExec.maxColumns} " +
+          "columns, each long/double family or Decimal64)")
+      else allRight(s.sortOrder.map(so =>
         sortKeySpec(so, s.child, GraftColumnarSortExec.supportedColType)
           .toRight(s"unsupported sort key: ${so.child} (${so.child.dataType})"))) match {
         case Left(reason) => declined(s, reason)
-        case Right(_) if !s.child.output.forall(a =>
-            GraftColumnarSortExec.supportedColType(a.dataType)) =>
-          declined(s, "sort output has a non-bufferable column type (long/double " +
-            "family and string only)")
         case Right(keys) => GraftColumnarSortExec(keys, s.sortOrder, s.global, s.child)
       }
 

@@ -310,13 +310,11 @@ class EngineSuite extends GraftTestBase {
       s"grouped agg leaked ${currentReserved.get()} reserved bytes past task end")
 
     currentReserved.set(0L); peakReserved.set(0L)
-    withSQLConf("spark.graft.columnar.sort.enabled" -> "true") {
-      val srt = t.sortWithinPartitions($"k", $"id")
-      srt.collect()
-      assert(findExec(srt) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
-      }.isDefined, "expected the columnar sort in the plan")
-    }
+    val srt = t.select($"id", $"v").sortWithinPartitions($"v", $"id")
+    srt.collect()
+    assert(findExec(srt) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
+    }.isDefined, "expected the columnar sort in the plan")
     assert(peakReserved.get() > 0L,
       "columnar sort executed without reserving any task memory")
     assert(currentReserved.get() == 0L,
@@ -334,17 +332,12 @@ class EngineSuite extends GraftTestBase {
     def q() = li.join(broadcast(keys), li("l_orderkey") === keys("o_orderkey"), "left_semi")
       .select($"l_orderkey", $"l_quantity")
       .sortWithinPartitions($"l_quantity", $"l_orderkey")
-    val on = withSQLConf(GraftColumnarRule.sortEnabledKey -> "true") {
-      val df = q()
-      val rows = df.collect()
-      assert(findExec(df) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
-      }.isDefined, s"columnar sort should swap above the semi probe:\n${df.queryExecution.executedPlan}")
-      rows
-    }
-    val off = withSQLConf(
-      GraftColumnarRule.sortEnabledKey -> "false",
-      GraftColumnarRule.narrowSortEnabledKey -> "false") { q().collect() }
+    val df = q()
+    val on = df.collect()
+    assert(findExec(df) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
+    }.isDefined, s"columnar sort should swap above the semi probe:\n${df.queryExecution.executedPlan}")
+    val off = withSQLConf(GraftColumnarRule.narrowSortEnabledKey -> "false") { q().collect() }
     assert(on.toSeq == off.toSeq, "columnar sort above a join probe diverged from the row sort")
   }
 
@@ -353,23 +346,21 @@ class EngineSuite extends GraftTestBase {
     import org.apache.spark.sql.execution.graft.GraftColumnarSortExec
     val dir = java.nio.file.Files.createTempDirectory("graft-sortspill").toString
     // unique (k, id) total key -> deterministic order on both paths;
-    // strings + nulls + doubles exercise every run-serialization lane
+    // longs + doubles + nulls exercise every run-serialization lane
     (1 to 20000).map { i =>
-      (if (i % 7 == 0) None else Some(s"key_${i % 613}_${"x" * (i % 23)}"),
+      (if (i % 7 == 0) None else Some((i % 613).toLong - 300L),
         i.toLong, if (i % 11 == 0) None else Some(i * 1.25 - 9999))
     }.toDF("k", "id", "v").repartition(1).write.mode("overwrite").parquet(dir)
-    // several orderings exercise every merge-comparator lane: string
+    // several orderings exercise every merge-comparator lane: long
     // desc + nulls-first primary, double asc + nulls-last primary with a
-    // desc string secondary, and a long primary with tie runs
+    // desc long secondary, and a long primary with tie runs
     val orderings: Seq[(String, Seq[org.apache.spark.sql.Column])] = Seq(
-      "string-desc-nf" -> Seq($"k".desc_nulls_first, $"id"),
-      "double-asc-nl-strsec" -> Seq($"v".asc_nulls_last, $"k".desc, $"id"),
-      "string-ties-desc-sec" -> Seq($"k".asc_nulls_last, $"id".desc))
+      "long-desc-nf" -> Seq($"k".desc_nulls_first, $"id"),
+      "double-asc-nl-longsec" -> Seq($"v".asc_nulls_last, $"k".desc, $"id"),
+      "long-ties-desc-sec" -> Seq($"k".asc_nulls_last, $"id".desc))
     for ((label, keys) <- orderings) {
       def qq() = spark.read.parquet(dir).sortWithinPartitions(keys: _*)
-      val spilled = withSQLConf(
-        GraftColumnarRule.sortEnabledKey -> "true",
-        GraftColumnarSortExec.spillThresholdKey -> "65536") {
+      val spilled = withSQLConf(GraftColumnarSortExec.spillThresholdKey -> "65536") {
         val df = qq()
         val rows = df.collect()
         val exec = findExec(df) {
@@ -381,9 +372,7 @@ class EngineSuite extends GraftTestBase {
         assert(exec.get.metrics("spillBytes").value > 0)
         rows
       }
-      val row = withSQLConf(
-        GraftColumnarRule.sortEnabledKey -> "false",
-        GraftColumnarRule.narrowSortEnabledKey -> "false") { qq().collect() }
+      val row = withSQLConf(GraftColumnarRule.narrowSortEnabledKey -> "false") { qq().collect() }
       assert(spilled.toSeq == row.toSeq, s"$label: spill-merge diverged from the row sort")
     }
   }
@@ -393,7 +382,7 @@ class EngineSuite extends GraftTestBase {
     import org.apache.spark.sql.execution.graft.GraftColumnarSortExec
     val dir = java.nio.file.Files.createTempDirectory("graft-sortfanin").toString
     (1 to 300000).map { i =>
-      (if (i % 5 == 0) None else Some(s"s_${i % 811}"), i.toLong, i * 0.75 - 123)
+      (if (i % 5 == 0) None else Some((i % 811).toLong), i.toLong, i * 0.75 - 123)
     }.toDF("k", "id", "v").repartition(1).write.mode("overwrite").parquet(dir)
     def qq() = spark.read.parquet(dir)
       .sortWithinPartitions($"k".desc_nulls_first, $"v".asc, $"id")
@@ -402,9 +391,7 @@ class EngineSuite extends GraftTestBase {
     // above the 64-run fan-in cap → the intermediate mergeSpillGroup
     // pass must run; parity vs the row sort proves the re-serialized
     // intermediate format round-trips every lane
-    val spilled = withSQLConf(
-      GraftColumnarRule.sortEnabledKey -> "true",
-      GraftColumnarSortExec.spillThresholdKey -> "4096") {
+    val spilled = withSQLConf(GraftColumnarSortExec.spillThresholdKey -> "4096") {
       val df = qq()
       val rows = df.collect()
       val exec = findExec(df) {
@@ -416,9 +403,7 @@ class EngineSuite extends GraftTestBase {
         s"need > ${GraftColumnarSortExec.mergeFanIn} runs to exercise the multi-pass merge, got $runCount")
       rows
     }
-    val row = withSQLConf(
-      GraftColumnarRule.sortEnabledKey -> "false",
-      GraftColumnarRule.narrowSortEnabledKey -> "false") { qq().collect() }
+    val row = withSQLConf(GraftColumnarRule.narrowSortEnabledKey -> "false") { qq().collect() }
     assert(spilled.toSeq == row.toSeq, "multi-pass spill merge diverged from the row sort")
   }
 
@@ -462,17 +447,12 @@ class EngineSuite extends GraftTestBase {
         min($"vf").over(w).as("mn_f"))
         .orderBy($"o")
     }
-    val on = withSQLConf(GraftColumnarRule.sortEnabledKey -> "true") {
-      val df = qq()
-      val rows = df.collect()
-      assert(findExec(df) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
-      }.isDefined, s"expected the columnar window agg:\n${df.queryExecution.executedPlan}")
-      rows
-    }
-    val off = withSQLConf(
-      GraftColumnarRule.windowAggEnabledKey -> "false",
-      GraftColumnarRule.sortEnabledKey -> "true") { qq().collect() }
+    val df = qq()
+    val on = df.collect()
+    assert(findExec(df) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+    }.isDefined, s"expected the columnar window agg:\n${df.queryExecution.executedPlan}")
+    val off = withSQLConf(GraftColumnarRule.windowAggEnabledKey -> "false") { qq().collect() }
     // double running sums accumulate in identical row order on both
     // paths (same sort) → bit-exact comparison is valid
     assert(on.toSeq == off.toSeq, "columnar window agg diverged from the row WindowExec")
@@ -496,22 +476,17 @@ class EngineSuite extends GraftTestBase {
         sum($"v").over(w).as("s_v"), count($"v").over(w).as("c_v"))
         .orderBy($"o")
     }
-    val on = withSQLConf(GraftColumnarRule.sortEnabledKey -> "true") {
-      val df = qq()
-      val rows = df.collect()
-      assert(findExec(df) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
-      }.isDefined, s"expected the columnar window agg:\n${df.queryExecution.executedPlan}")
-      rows
-    }
-    val off = withSQLConf(
-      GraftColumnarRule.windowAggEnabledKey -> "false",
-      GraftColumnarRule.sortEnabledKey -> "true") { qq().collect() }
+    val df = qq()
+    val on = df.collect()
+    assert(findExec(df) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+    }.isDefined, s"expected the columnar window agg:\n${df.queryExecution.executedPlan}")
+    val off = withSQLConf(GraftColumnarRule.windowAggEnabledKey -> "false") { qq().collect() }
     assert(on.toSeq == off.toSeq,
       "columnar window agg (string/composite keys) diverged from the row WindowExec")
   }
 
-  test("columnar window agg: columnar face over a bucketed scan + columnar sort") {
+  test("columnar window agg: row face over a bucketed scan + narrow columnar sort") {
     import org.apache.spark.sql.graft.GraftColumnarRule
     import org.apache.spark.sql.expressions.Window
     val s = spark
@@ -533,27 +508,28 @@ class EngineSuite extends GraftTestBase {
           min($"vd").over(w).as("mn_d"), avg($"vl").over(w).as("a_l"))
           .orderBy($"o")
       }
-      val on = withSQLConf(GraftColumnarRule.sortEnabledKey -> "true") {
-        val df = qq()
-        val rows = df.collect()
-        val win = findExec(df) {
-          case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
-        }
-        assert(win.isDefined, s"expected the columnar window agg:\n${df.queryExecution.executedPlan}")
-        // bucketed scan satisfies the distribution → no exchange → the
-        // local sort swapped columnar → the window's COLUMNAR face runs
-        assert(win.get.child.isInstanceOf[org.apache.spark.sql.execution.graft.GraftColumnarSortExec],
-          s"expected the columnar sort under the window (columnar face):\n${df.queryExecution.executedPlan}")
-        rows
+      val df = qq()
+      val on = df.collect()
+      val win = findExec(df) {
+        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
       }
+      assert(win.isDefined, s"expected the columnar window agg:\n${df.queryExecution.executedPlan}")
+      // bucketed scan satisfies the distribution → no exchange → the
+      // narrow local sort (k, o, vl, vd) swapped columnar → the window
+      // reads its rows through Spark's ColumnarToRow
+      val chain = Iterator.iterate(win.get.child)(_.children.head)
+        .filterNot(n => n.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec] ||
+          n.isInstanceOf[org.apache.spark.sql.execution.InputAdapter])
+        .map(_.getClass.getSimpleName).take(2).toList
+      assert(chain == List("ColumnarToRowExec", "GraftColumnarSortExec"),
+        s"expected ColumnarToRow over the columnar sort under the window:\n${
+        df.queryExecution.executedPlan}")
       val off = withSQLConf(
         GraftColumnarRule.windowAggEnabledKey -> "false",
-        GraftColumnarRule.sortEnabledKey -> "false",
         GraftColumnarRule.narrowSortEnabledKey -> "false") { qq().collect() }
-      assert(on.toSeq == off.toSeq,
-        "columnar-face window agg diverged from the row path")
-      // BOXED lanes (first/last/nth, q183's forward-fill shape) on the
-      // BATCH face: long, double and STRING carried values, incl.
+      assert(on.toSeq == off.toSeq, "window agg over the columnar sort diverged from the row path")
+      // BOXED lanes (first/last/nth, q183's forward-fill shape) over the
+      // bucketed child: long, double and STRING carried values, incl.
       // captured-null under ignoreNulls=false and leading-null groups
       def qb() = {
         val w = Window.partitionBy($"k").orderBy($"o")
@@ -568,24 +544,14 @@ class EngineSuite extends GraftTestBase {
             sum($"vl").over(w).as("s_l"))
           .orderBy($"o")
       }
-      val onB = withSQLConf(GraftColumnarRule.sortEnabledKey -> "true") {
-        val df = qb()
-        val rows = df.collect()
-        val win = findExec(df) {
-          case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
-        }
-        assert(win.isDefined,
-          s"expected the columnar window agg for boxed lanes:\n${df.queryExecution.executedPlan}")
-        assert(win.get.supportsColumnar && win.get.child.supportsColumnar,
-          s"boxed lanes must ride the BATCH face over the bucketed child:\n${df.queryExecution.executedPlan}")
-        rows
-      }
-      val offB = withSQLConf(
-        GraftColumnarRule.windowAggEnabledKey -> "false",
-        GraftColumnarRule.sortEnabledKey -> "false",
-        GraftColumnarRule.narrowSortEnabledKey -> "false") { qb().collect() }
-      assert(onB.toSeq == offB.toSeq,
-        "batch-face boxed window lanes diverged from the row path")
+      val dfB = qb()
+      val onB = dfB.collect()
+      assert(findExec(dfB) {
+        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+      }.isDefined,
+        s"expected the columnar window agg for boxed lanes:\n${dfB.queryExecution.executedPlan}")
+      val offB = withSQLConf(GraftColumnarRule.windowAggEnabledKey -> "false") { qb().collect() }
+      assert(onB.toSeq == offB.toSeq, "boxed window lanes diverged from the row path")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
@@ -2140,6 +2106,30 @@ class EngineSuite extends GraftTestBase {
         .orderBy($"o"))
   }
 
+  test("columnar window agg: offset-0 lead and a CURRENT ROW frame beside a running sum") {
+    import org.apache.spark.sql.graft.GraftColumnarRule
+    import org.apache.spark.sql.expressions.Window
+    val s = spark
+    import s.implicits._
+    // lead(v, 0) and max over CURRENT ROW..CURRENT ROW add no ring slot,
+    // yet their values come from the ring: the node must not take the
+    // ring-less streaming loop
+    val df0 = (1 to 200).map(i => ((i % 3).toLong, i.toLong, (i * 7 % 11).toLong))
+      .toDF("k", "o", "v")
+    val w = Window.partitionBy($"k").orderBy($"o")
+    def qq() = df0.select($"k", $"o",
+      sum($"v").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("s"),
+      max($"v").over(w.rowsBetween(Window.currentRow, Window.currentRow)).as("m"),
+      lead($"v", 0).over(w).as("l0")).orderBy($"k", $"o")
+    val df = qq()
+    val on = df.collect()
+    assert(findExec(df) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+    }.isDefined, s"expected the columnar window agg:\n${df.queryExecution.executedPlan}")
+    val off = withSQLConf(GraftColumnarRule.windowAggEnabledKey -> "false") { qq().collect() }
+    assert(on.toSeq == off.toSeq, "offset-0 / current-row specs diverged from the row WindowExec")
+  }
+
   test("columnar window agg: unsupported frames and functions keep the row path") {
     import org.apache.spark.sql.graft.GraftColumnarRule
     import org.apache.spark.sql.expressions.Window
@@ -2148,76 +2138,74 @@ class EngineSuite extends GraftTestBase {
     val df0 = (1 to 1000).map(i => ((i % 5).toLong, i.toLong, i * 1.5)).toDF("k", "o", "v")
     val dir = java.nio.file.Files.createTempDirectory("graft-winagg3").toString
     df0.repartition(1).write.mode("overwrite").parquet(dir)
-    withSQLConf(GraftColumnarRule.sortEnabledKey -> "true") {
-      // mixed kinds in one node (streaming ROWS + deferred RANGE over
-      // the same spec): the SPLITTER chains two homogeneous nodes and
-      // both swap (one close point cannot serve both in one node)
-      val wRows = Window.partitionBy($"k").orderBy($"o")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wRange = Window.partitionBy($"k").orderBy($"o")
-      def q1() = spark.read.parquet(dir).select($"k", $"o",
-        sum($"v").over(wRows).as("sr"), sum($"v").over(wRange).as("sg"))
-        .orderBy($"k", $"o")
-      val d1 = q1()
-      val on1 = d1.collect()
-      assert(findExec(d1) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
-      }.isDefined, s"mixed streaming + deferred kinds should split and swap:\n${
-        d1.queryExecution.executedPlan}")
-      assert(findExec(d1) {
-        case e: org.apache.spark.sql.execution.window.WindowExec => e
-      }.isEmpty, "no row WindowExec should remain after the kind split")
-      val off1 = withSQLConf(
-        GraftColumnarRule.windowAggEnabledKey -> "false") { q1().collect() }
-      assert(on1.toSeq == off1.toSeq, "split streaming+deferred node diverged")
-      // a window FUNCTION the engine never compiles (collect_list)
-      // poisons the whole node: no split, single row WindowExec
-      val d2 = spark.read.parquet(dir).select($"k",
-        sum($"v").over(wRows).as("s"),
-        collect_list($"v").over(wRange).as("vs"))
-      d2.collect()
-      assert(findExec(d2) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
-      }.isEmpty, "a node holding collect_list must keep the row path whole")
-      // a DOUBLE sum over the suffix frame never compiles (block
-      // association changes bits) — its split group keeps the row path
-      // while the running-sum group swaps beside it
-      val wBack = Window.partitionBy($"k").orderBy($"o")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      def q3() = spark.read.parquet(dir).select($"k", $"o",
-        sum($"v").over(wBack).as("s"),
-        sum($"v").over(wRows).as("sr")).orderBy($"k", $"o")
-      val d3 = q3()
-      val on3 = d3.collect()
-      assert(findExec(d3) {
-        case e: org.apache.spark.sql.execution.window.WindowExec => e
-      }.isDefined, s"the double-sum suffix group must keep a row node:\n${
-        d3.queryExecution.executedPlan}")
-      assert(findExec(d3) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
-      }.isDefined, s"the running-sum group should still swap:\n${
-        d3.queryExecution.executedPlan}")
-      val off3 = withSQLConf(
-        GraftColumnarRule.windowAggEnabledKey -> "false") { q3().collect() }
-      assert(on3.toSeq == off3.toSeq, "double-suffix + running split diverged")
-      // a node mixing ntile with a plain running agg swaps WHOLE on the
-      // partition-buffered face (no split needed — both are kind 0)
-      val wRun = Window.partitionBy($"k").orderBy($"o")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      def q4() = spark.read.parquet(dir).select($"k", $"o",
-        sum($"v").over(wRun).as("s"),
-        ntile(4).over(Window.partitionBy($"k").orderBy($"o")).as("qt"))
-        .orderBy($"k", $"o")
-      val d4 = q4()
-      val on4 = d4.collect()
-      assert(findExec(d4) {
-        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
-      }.isDefined, s"ntile + running agg should swap on the buffered face:\n${
-        d4.queryExecution.executedPlan}")
-      val off4 = withSQLConf(
-        GraftColumnarRule.windowAggEnabledKey -> "false") { q4().collect() }
-      assert(on4.toSeq == off4.toSeq, "ntile + running agg node diverged")
-    }
+    // mixed kinds in one node (streaming ROWS + deferred RANGE over
+    // the same spec): the SPLITTER chains two homogeneous nodes and
+    // both swap (one close point cannot serve both in one node)
+    val wRows = Window.partitionBy($"k").orderBy($"o")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wRange = Window.partitionBy($"k").orderBy($"o")
+    def q1() = spark.read.parquet(dir).select($"k", $"o",
+      sum($"v").over(wRows).as("sr"), sum($"v").over(wRange).as("sg"))
+      .orderBy($"k", $"o")
+    val d1 = q1()
+    val on1 = d1.collect()
+    assert(findExec(d1) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+    }.isDefined, s"mixed streaming + deferred kinds should split and swap:\n${
+      d1.queryExecution.executedPlan}")
+    assert(findExec(d1) {
+      case e: org.apache.spark.sql.execution.window.WindowExec => e
+    }.isEmpty, "no row WindowExec should remain after the kind split")
+    val off1 = withSQLConf(
+      GraftColumnarRule.windowAggEnabledKey -> "false") { q1().collect() }
+    assert(on1.toSeq == off1.toSeq, "split streaming+deferred node diverged")
+    // a window FUNCTION the engine never compiles (collect_list)
+    // poisons the whole node: no split, single row WindowExec
+    val d2 = spark.read.parquet(dir).select($"k",
+      sum($"v").over(wRows).as("s"),
+      collect_list($"v").over(wRange).as("vs"))
+    d2.collect()
+    assert(findExec(d2) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+    }.isEmpty, "a node holding collect_list must keep the row path whole")
+    // a DOUBLE sum over the suffix frame never compiles (block
+    // association changes bits) — its split group keeps the row path
+    // while the running-sum group swaps beside it
+    val wBack = Window.partitionBy($"k").orderBy($"o")
+      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    def q3() = spark.read.parquet(dir).select($"k", $"o",
+      sum($"v").over(wBack).as("s"),
+      sum($"v").over(wRows).as("sr")).orderBy($"k", $"o")
+    val d3 = q3()
+    val on3 = d3.collect()
+    assert(findExec(d3) {
+      case e: org.apache.spark.sql.execution.window.WindowExec => e
+    }.isDefined, s"the double-sum suffix group must keep a row node:\n${
+      d3.queryExecution.executedPlan}")
+    assert(findExec(d3) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+    }.isDefined, s"the running-sum group should still swap:\n${
+      d3.queryExecution.executedPlan}")
+    val off3 = withSQLConf(
+      GraftColumnarRule.windowAggEnabledKey -> "false") { q3().collect() }
+    assert(on3.toSeq == off3.toSeq, "double-suffix + running split diverged")
+    // a node mixing ntile with a plain running agg swaps WHOLE on the
+    // partition-buffered face (no split needed — both are kind 0)
+    val wRun = Window.partitionBy($"k").orderBy($"o")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def q4() = spark.read.parquet(dir).select($"k", $"o",
+      sum($"v").over(wRun).as("s"),
+      ntile(4).over(Window.partitionBy($"k").orderBy($"o")).as("qt"))
+      .orderBy($"k", $"o")
+    val d4 = q4()
+    val on4 = d4.collect()
+    assert(findExec(d4) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+    }.isDefined, s"ntile + running agg should swap on the buffered face:\n${
+      d4.queryExecution.executedPlan}")
+    val off4 = withSQLConf(
+      GraftColumnarRule.windowAggEnabledKey -> "false") { q4().collect() }
+    assert(on4.toSeq == off4.toSeq, "ntile + running agg node diverged")
   }
 
   test("columnar moments partial: stddev/variance family parity, grouped + global") {
@@ -3269,41 +3257,31 @@ class EngineSuite extends GraftTestBase {
     val sorts: Seq[(String, Seq[org.apache.spark.sql.Column])] = Seq(
       "double-nulls-first" -> Seq($"d".asc_nulls_first, $"id"),
       "double-desc-nulls-last" -> Seq($"d".desc_nulls_last, $"id"),
-      "string-asc" -> Seq($"s".asc_nulls_last, $"id"),
-      "string-desc-nulls-first" -> Seq($"s".desc_nulls_first, $"id"),
       "decimal-asc-nulls-first" -> Seq($"dec".asc_nulls_first, $"id"),
       "decimal-desc-nulls-last" -> Seq($"dec".desc_nulls_last, $"id"),
       "id-desc" -> Seq($"id".desc))
+    val narrowOff = org.apache.spark.sql.graft.GraftColumnarRule.narrowSortEnabledKey -> "false"
     for ((label, keys) <- sorts) {
-      def sorted() = spark.read.parquet(s"$dir/t").sortWithinPartitions(keys: _*)
-      // opt-in: the kernel lost its A/B to Tungsten's radix sort, so
-      // the default keeps the row path (checked below)
-      val onRows = withSQLConf(
-        org.apache.spark.sql.graft.GraftColumnarRule.sortEnabledKey -> "true") {
-        val cdf = sorted()
-        val rows = cdf.collect().map(_.toString).toSeq
-        assert(findExec(cdf) {
-          case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
-        }.isDefined, s"$label: expected columnar sort in:\n${cdf.queryExecution.executedPlan}")
-        rows
-      }
-      val rdf = sorted()
-      val offRows = rdf.collect().map(_.toString).toSeq
-      assert(findExec(rdf) {
+      // (id, d, dec) is the narrow all-numeric shape: the swap is on by default
+      def sorted() = spark.read.parquet(s"$dir/t").select($"id", $"d", $"dec")
+        .sortWithinPartitions(keys: _*)
+      val cdf = sorted()
+      val onRows = cdf.collect().map(_.toString).toSeq
+      assert(findExec(cdf) {
         case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
-      }.isEmpty, "the sort swap must stay off by default")
+      }.isDefined, s"$label: expected columnar sort in:\n${cdf.queryExecution.executedPlan}")
+      val offRows = withSQLConf(narrowOff) { sorted().collect().map(_.toString).toSeq }
       // id tiebreak makes every order total -> exact sequence equality
       assert(onRows == offRows, s"$label: columnar=$onRows row=$offRows")
     }
-    // non-bufferable column type (array) keeps the row path even opted in
-    withSQLConf(org.apache.spark.sql.graft.GraftColumnarRule.sortEnabledKey -> "true") {
-      val arr = spark.read.parquet(s"$dir/t")
-        .select($"id", org.apache.spark.sql.functions.array($"id").as("a"))
-        .sortWithinPartitions($"id")
-      arr.collect()
-      assert(findExec(arr) {
+    // string and array columns are not narrow: those sorts keep the row path
+    for (cols <- Seq(Seq($"id", $"s"),
+        Seq($"id", org.apache.spark.sql.functions.array($"id").as("a")))) {
+      val df = spark.read.parquet(s"$dir/t").select(cols: _*).sortWithinPartitions($"id")
+      df.collect()
+      assert(findExec(df) {
         case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
-      }.isEmpty, s"array column must fall back:\n${arr.queryExecution.executedPlan}")
+      }.isEmpty, s"a non-narrow output must fall back:\n${df.queryExecution.executedPlan}")
     }
     // randomized radix-path parity at a size that exercises multi-pass
     // radix and long tie runs (seeded: deterministic)
@@ -3329,11 +3307,12 @@ class EngineSuite extends GraftTestBase {
         Seq($"k".asc_nulls_first, $"d".desc_nulls_last, $"id"),
         Seq($"id".desc))) {
       def sorted() = spark.read.parquet(s"$dir/big").sortWithinPartitions(keys: _*)
-      val onRows = withSQLConf(
-        org.apache.spark.sql.graft.GraftColumnarRule.sortEnabledKey -> "true") {
-        sorted().collect().map(_.toString).toSeq
-      }
-      val offRows = sorted().collect().map(_.toString).toSeq
+      val cdf = sorted()
+      val onRows = cdf.collect().map(_.toString).toSeq
+      assert(findExec(cdf) {
+        case e: org.apache.spark.sql.execution.graft.GraftColumnarSortExec => e
+      }.isDefined, s"expected columnar sort in:\n${cdf.queryExecution.executedPlan}")
+      val offRows = withSQLConf(narrowOff) { sorted().collect().map(_.toString).toSeq }
       assert(onRows == offRows, s"radix parity failed for $keys")
     }
   }

@@ -675,17 +675,10 @@ object FilterMicroBench {
     }
 
     // Columnar sort A/B: ColumnarToRow + Tungsten SortExec vs the typed
-    // index sort + gather. sortWithinPartitions keeps the sort directly
-    // over the columnar scan (a global orderBy hides behind a range
-    // exchange and never swaps).
+    // index sort + gather on the narrow shapes it serves.
+    // sortWithinPartitions keeps the sort directly over the columnar scan
+    // (a global orderBy hides behind a range exchange and never swaps).
     val sortShapes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "sort-1key-long" -> (() =>
-        Tables.t(spark, sfDir, "lineitem").sortWithinPartitions($"l_orderkey")),
-      "sort-2key-mixed" -> (() =>
-        Tables.t(spark, sfDir, "lineitem")
-          .sortWithinPartitions($"l_extendedprice".desc, $"l_orderkey")),
-      "sort-string-key" -> (() =>
-        spark.read.parquet(strPath).sortWithinPartitions($"sk", $"l_orderkey")),
       "sort-narrow-3col" -> (() =>
         Tables.t(spark, sfDir, "lineitem")
           .select($"l_orderkey", $"l_extendedprice", $"l_quantity")
@@ -705,10 +698,8 @@ object FilterMicroBench {
             $"l_extendedprice".cast("decimal(12,2)").as("price"))
           .sortWithinPartitions($"price".desc, $"l_orderkey")))
     sel(sortShapes).foreach { case (name, f) =>
-      spark.conf.set(GraftColumnarRule.sortEnabledKey, "false")
       spark.conf.set(GraftColumnarRule.narrowSortEnabledKey, "false")
       val off = timeIt(f)
-      spark.conf.set(GraftColumnarRule.sortEnabledKey, "true")
       spark.conf.set(GraftColumnarRule.narrowSortEnabledKey, "true")
       val on = timeIt(f)
       spark.conf.unset(GraftColumnarRule.narrowSortEnabledKey)

@@ -1609,8 +1609,7 @@ class PlanAssertionSuite extends GraftTestBase {
     val actual = for {
       (op, sql, candidate) <- ops
       (name, c, k) <- keys
-    } yield s"$op / $name" -> withSQLConf(
-        org.apache.spark.sql.graft.GraftColumnarRule.sortEnabledKey -> "true") {
+    } yield s"$op / $name" -> {
       val df = spark.sql(sql(c, k))
       admission(if (op == "sort") df.sortWithinPartitions(org.apache.spark.sql.functions.expr(k))
         else df)(candidate)
@@ -1619,10 +1618,10 @@ class PlanAssertionSuite extends GraftTestBase {
       "sort / int" -> "GraftColumnarSortExec TopKKeySpec(1,IntegerType,false,true)",
       "sort / long" -> "GraftColumnarSortExec TopKKeySpec(1,LongType,false,true)",
       "sort / double" -> "GraftColumnarSortExec TopKKeySpec(1,DoubleType,false,true)",
-      "sort / string" -> "GraftColumnarSortExec TopKKeySpec(1,StringType,false,true)",
+      "sort / string" -> "Sort: sort output not narrow (at most 4 columns, each long/double family or Decimal64)",
       "sort / date" -> "GraftColumnarSortExec TopKKeySpec(1,DateType,false,true)",
       "sort / decimal" -> "GraftColumnarSortExec TopKKeySpec(1,DecimalType(10,2),false,true)",
-      "sort / wide decimal" -> "Sort: unsupported sort key: dec38#N (DecimalType(38,2))",
+      "sort / wide decimal" -> "Sort: sort output not narrow (at most 4 columns, each long/double family or Decimal64)",
       "sort / computed" -> "Sort: unsupported sort key: (i#N + 1) (IntegerType)",
       "top-k / int" -> "GraftColumnarTopKExec TopKKeySpec(1,IntegerType,true,false)",
       "top-k / long" -> "GraftColumnarTopKExec TopKKeySpec(1,LongType,true,false)",

@@ -65,10 +65,6 @@ class ArrayBackedVectorSuite extends AnyFunSuite {
     Case("StringArrayVector",
       (nl, n) => new StringArrayVector(Array("ab", "c", "d", "e", "f").map(u), nl, n),
       Map("getUTF8String" -> (_.getUTF8String(0))), Map("getUTF8String" -> u("ab"))),
-    Case("ByteSliceStringVector",
-      (nl, n) => new ByteSliceStringVector("xxabcdefgh".getBytes("UTF-8"),
-        Array(2, 4, 5, 6, 7), Array(2, 1, 1, 1, 1), nl, n),
-      Map("getUTF8String" -> (_.getUTF8String(0))), Map("getUTF8String" -> u("ab"))),
     Case("StringsListVector",
       (nl, n) => new StringsListVector(Array("a", "b", "c").map(u),
         Array(0, 2, 2, 2, 2), Array(2, 1, 0, 0, 0), nl, n),
