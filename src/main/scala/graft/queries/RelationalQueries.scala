@@ -607,10 +607,11 @@ object RelationalQueries {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        // Streaming lag/lead (GraftWindowOffsetExec, pinned): the
-        // sessionization/CDC lookback shape — previous/next event per
-        // key with O(k) ring state instead of the row WindowExec's
-        // whole buffered partition. Defaults exercise partition edges.
+        // Streaming lag/lead (the GraftColumnarWindowExec ring loop,
+        // pinned): the sessionization/CDC lookback shape — previous/next
+        // event per key with O(k) ring state instead of the row
+        // WindowExec's whole buffered partition. Defaults exercise
+        // partition edges.
         // (l_linenumber) alone is NOT a total order in the synthetic data
         // (~20% duplicate (ok, ln) keys) and lag/lead over ties is
         // engine-arbitrary — (ln, pk, sk) is verified unique
@@ -634,7 +635,7 @@ object RelationalQueries {
         WINDOW w AS (PARTITION BY l_orderkey
                      ORDER BY l_linenumber, l_partkey, l_suppkey)
         ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey"""),
-      doc = "Streaming lag/lead on GraftWindowOffsetExec: O(maxLag+maxLead+1) ring state replaces the row WindowExec's whole-partition buffer — the sessionization lookback shape."),
+      doc = "Streaming lag/lead on the GraftColumnarWindowExec ring loop: O(maxLag+maxLead+1) ring state replaces the row WindowExec's whole-partition buffer — the sessionization lookback shape."),
 
     // ----------------------------------------------------------------
     QueryDef(
@@ -682,8 +683,9 @@ object RelationalQueries {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         // Sliding ROWS frames — the moving-average / rolling-metric
-        // shape — on GraftWindowSlidingExec: a frame-wide ring of rows
-        // replaces the row WindowExec's whole buffered partition. Four
+        // shape — on the GraftColumnarWindowExec ring loop: a frame-wide
+        // ring of rows replaces the row WindowExec's whole buffered
+        // partition. Four
         // frames in ONE node: trailing avg, centered sum, trailing
         // count, lookahead max (specs carry per-expression [lo, hi]).
         // total order: (ln, pk, sk) — ROWS frames over tied keys are
@@ -714,7 +716,7 @@ object RelationalQueries {
             ROWS BETWEEN CURRENT ROW AND 2 FOLLOWING) AS ahead_max
         FROM lineitem WHERE l_orderkey < 5000
         ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey"""),
-      doc = "Sliding ROWS-frame window aggregation (moving avg / centered sum / trailing count / lookahead max in ONE GraftWindowSlidingExec node) — the reference falls back on sliding frames."),
+      doc = "Sliding ROWS-frame window aggregation (moving avg / centered sum / trailing count / lookahead max in ONE GraftColumnarWindowExec node) — the reference falls back on sliding frames."),
 
     // ----------------------------------------------------------------
     QueryDef(
@@ -807,12 +809,12 @@ object RelationalQueries {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         // WIDE sliding ROWS frames (1,000-row rolling sum/min/max/count)
-        // on GraftWindowSlidingExec's O(n) invertible kernels: exact
-        // add/subtract for the long sum/counts, monotonic deques for
-        // min/max — total work O(n) where both the recompute path and
-        // Spark's SlidingWindowFunctionFrame pay O(n·frame) (here
-        // 1,000x the value ops). Frames this wide previously kept the
-        // row path (65,536-row eager-ring cap; invertible cap is 2M).
+        // on the GraftColumnarWindowExec ring loop's O(n) invertible
+        // kernels: exact add/subtract for the long sum/counts, monotonic
+        // deques for min/max — total work O(n) where both the slice
+        // recompute and Spark's SlidingWindowFunctionFrame pay
+        // O(n·frame) (here 1,000x the value ops). Recompute specs are
+        // capped at 65,536-row frames; invertible ones at 2M.
         // All check lanes exact: long sum/avg-free, min/max selection.
         // ORDER BY must be a TOTAL order for a cross-engine ROWS-frame
         // check: (l_orderkey, l_linenumber) alone has ~20% duplicate
@@ -846,7 +848,7 @@ object RelationalQueries {
                       ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey
                       ROWS BETWEEN 499 PRECEDING AND 500 FOLLOWING)
         ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey"""),
-      doc = "1,000-row rolling window aggregates over hot partitions — O(n) invertible sliding kernels (exact sum add/subtract + monotonic min/max deques) vs the O(n*frame) recompute both Spark and the ring path pay; frames this wide previously fell back to the row WindowExec."),
+      doc = "1,000-row rolling window aggregates over hot partitions — O(n) invertible sliding kernels (exact sum add/subtract + monotonic min/max deques) on the GraftColumnarWindowExec ring loop, vs the O(n*frame) recompute both Spark and the slice recompute pay."),
 
     QueryDef(
       "q186_window_range_wide",

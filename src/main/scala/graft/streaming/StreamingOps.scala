@@ -233,8 +233,8 @@ object StreamingOps {
       roll_sum: Double, roll_min: Double, roll_n: Long)
 
   /** Streaming rolling last-`n`-events aggregates per key — the
-    * incremental twin of the batch sliding ROWS frame (and of
-    * GraftWindowSlidingExec's O(n) ring kernels on the batch side): for
+    * incremental twin of the batch sliding ROWS frame (and of the
+    * window ring loop's O(n) kernels on the batch side): for
     * every event, sum/min/count over the user's trailing `n` events.
     * The rate/health metric shape (rolling request value, rolling
     * floor) a 100 TB/day ingest runs per key.

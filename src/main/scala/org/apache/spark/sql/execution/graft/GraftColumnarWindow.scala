@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types._
 
-import GraftColumnarWindowExec.{emitDbl, emitLong, readBoxed, rowDbl, rowLong}
+import GraftColumnarWindowExec.{emitDbl, emitLong, fastSlice, leadRows, readBoxed, rowDbl, rowLong}
 
 /** One window aggregate over a supported frame.
   *
@@ -23,13 +23,11 @@ import GraftColumnarWindowExec.{emitDbl, emitLong, readBoxed, rowDbl, rowLong}
   * shape),
   * 11=nth_value (`nth` = 1-based frame row; Spark rewrites
   * first_value without ignoreNulls into nth_value(x, 1, false)),
-  * 12=lag/lead (`off` = SIGNED row offset, `dflt` = literal default —
-  * for nodes MIXING offsets with other streaming functions; pure
-  * offset nodes take the dedicated [[GraftWindowOffsetExec]]),
-  * 13=sliding ROWS aggregate in a MIXED node (`sLo`/`sHi` = finite row
-  * bounds; the winnowing min-over-window + lead shape; `lane` 3 adds
-  * string min/max via UTF8String compare — pure sliding nodes take the
-  * dedicated [[GraftWindowSlidingExec]]),
+  * 12=lag/lead (`off` = SIGNED row offset, `dflt` = literal default),
+  * 13=finite ROWS aggregate (`sLo`/`sHi` = finite row bounds, `off` =
+  * the inner aggregate op; [[GraftColumnarWindowExec.invertible]] ops
+  * run the O(n) SlideKernels, the rest — double sum, avg, and string
+  * min/max on `lane` 3 via UTF8String compare — recompute each slice),
   * 14=ntile (`nth` = bucket count), 15=percent_rank, 16=cume_dist —
   * the SIZE-BASED functions (SizeBasedWindowFunction: their value needs
   * the partition row count, so the node runs the size-based row face,
@@ -39,8 +37,8 @@ import GraftColumnarWindowExec.{emitDbl, emitLong, readBoxed, rowDbl, rowLong}
   * `excl` marks the exclusive running frame ROWS UNBOUNDED
   * PRECEDING..1 PRECEDING (fn 0-5): the value closes one row EARLIER —
   * the distributed-prefix-sum shape. Offset, fn-13 sliding and excl
-  * specs take the ring loop (emission lags consumption by the ring, fed from per-slot
-  * accumulator snapshots).
+  * specs take the ring loop (emission lags consumption by the ring;
+  * running values come from per-slot accumulator snapshots).
   * `lane`: 0 = long-family input (integral/date/ts/bool/Decimal64
   * unscaled), 1 = double-family input, 2 = no input lane (counts,
   * ranking), 3 = boxed catalyst value (first/last — any offset-supported
@@ -99,8 +97,9 @@ final case class WinAggSpec(
   *    partition's value closes at its end — both engines buffer the
   *    partition, with the same spill machinery.
   * Kinds must be homogeneous per node (mixed streaming + deferred would
-  * need per-row value storage); bounded/sliding frames keep the row
-  * path.
+  * need per-row value storage). Finite ROWS frames and lag/lead are
+  * kind 0 and run the ring loop below; finite RANGE frames take
+  * [[GraftWindowRangeSlideExec]].
   *
   * Ranking functions (row_number/rank/dense_rank — the SCD2 /
   * pick-latest / top-k-per-group shape) ride the same kind-0 streaming
@@ -116,14 +115,20 @@ final case class WinAggSpec(
   * as-of-join shape (q82's plan swaps through it). Note Spark rewrites
   * first_value without ignoreNulls into nth_value(x, 1, false).
   *
-  * Nodes MIXING lag/lead with other streaming functions (the SCD2
-  * row_number + lead + running-sum shape, q132) and EXCLUSIVE running
-  * frames (UNBOUNDED..1 PRECEDING — the distributed-prefix-sum shape,
-  * q112) run a ring + per-slot accumulator-snapshot machine on the row
-  * face: emission lags consumption by maxLead rows, reading each row's
-  * own accumulator snapshot (the previous row's for exclusive frames)
-  * and the ring rows for offsets. Peer keys extend to double/float via
-  * normalized-bits equality (the row path's SQLOrderingUtil classes).
+  * lag/lead (pure — the sessionization lookback, q180 — or beside
+  * other streaming functions, as in the SCD2 row_number + lead +
+  * running-sum shape, q132), finite ROWS frames (moving averages and
+  * rolling sums, q182/q185) and EXCLUSIVE running frames
+  * (UNBOUNDED..1 PRECEDING — the distributed-prefix-sum shape, q112)
+  * run ONE ring machine on the row face: emission lags consumption by
+  * the node's largest lead, so the ring holds maxLead + 1 rows plus the
+  * lag of the specs that read rows back, where the row WindowExec
+  * buffers the whole partition. Emission reads each row's own
+  * accumulator snapshot (the previous row's for exclusive frames), the
+  * ring rows for offsets and recomputed slices, and the O(n)
+  * SlideKernels for invertible finite-ROWS aggregates. Peer keys
+  * extend to double/float via normalized-bits equality (the row path's
+  * SQLOrderingUtil classes).
   *
   * A/B (FilterMicroBench winagg-, winrank-, winfl-, winmix- prefixes;
   * sf0.1, 3 runs of min-of-5): streaming — many tiny
@@ -132,7 +137,11 @@ final case class WinAggSpec(
   * 0.97-0.99x, whole-partition 0.78-0.98x; ranking — row_number over
   * ~4-row groups 0.90-0.95x, rank+dense_rank+row_number over three hot
   * groups 0.96-1.07x; forward-fill first+last 0.86-0.96x; mixed
-  * ranking+lead+running-sum 0.86-0.99x.
+  * ranking+lead+running-sum 0.86-0.99x. Ring loop (winoff-, winslide-;
+  * sf0.1, 4 cores, 3 sessions): lag(1) over ~4-row groups 0.80-0.89x,
+  * lag+lead over three hot groups 0.93-1.10x, 3-row moving avg
+  * 0.82-0.98x, centered sum+min+max over hot groups 0.85-0.99x,
+  * 1,000-row rolling sum+min+count 0.07-0.08x.
   * Win-to-parity on every shape, so the swap defaults ON
   * (spark.graft.columnar.window.enabled=false to keep the row
   * WindowExec).
@@ -183,6 +192,9 @@ case class GraftColumnarWindowExec(
     // rank/dense_rank need the previous row's ORDER BY keys for peer
     // detection; row_number needs only the partition counter
     val needPeers = ss.exists(s => s.fn == 7 || s.fn == 8)
+    // the ring machine's per-slot accumulator snapshots are read by every
+    // spec but the fn-12/13 ones, which read rows and kernels
+    val needSnaps = ss.exists(s => s.fn != 12 && s.fn != 13)
     child.execute().mapPartitionsInternal { rows =>
       val nS = ss.length
       val partCarry = new KeyCarry(pIdx, pTypes)
@@ -201,20 +213,17 @@ case class GraftColumnarWindowExec(
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(outAll.map(_.dataType).toArray)
-      // lag/lead (fn 12), sliding-in-mixed-node (fn 13), and exclusive
+      // lag/lead (fn 12), finite ROWS frames (fn 13) and exclusive
       // frames defer emission behind the consumption point; everything
       // else emits per row
-      val maxLead = ss.foldLeft(0L) { (m, s) =>
-        val lead =
-          if (s.fn == 12) math.max(0L, s.off.toLong)
-          else if (s.fn == 13) math.max(0L, s.sHi.toLong)
-          else 0L
-        math.max(m, lead)
-      }
+      val maxLead = ss.foldLeft(0L)((m, s) => math.max(m, leadRows(s)))
+      // the row ring keeps the PRECEDING rows a spec reads back: the lag
+      // of fn-12 specs and of recompute fn-13 specs (the invertible ones
+      // keep their PRECEDING values in the SlideKernels value rings)
       val maxLag = ss.foldLeft(0L) { (m, s) =>
         val lag =
           if (s.fn == 12) math.max(0L, -s.off.toLong)
-          else if (s.fn == 13) math.max(0L, -s.sLo.toLong)
+          else if (s.fn == 13 && !fastSlice(s)) math.max(0L, -s.sLo.toLong)
           else 0L
         math.max(m, lag)
       }
@@ -250,20 +259,25 @@ case class GraftColumnarWindowExec(
         proj(joined(row, aggRow))
       }
       else {
-        // ring + per-slot accumulator snapshots: lag/lead specs force
-        // emission to lag consumption by maxLead rows, so running
-        // values for row e must be e's — not the consumption point's —
-        // accumulator state. Each consumed row snapshots the
-        // accumulators into its ring slot; emission reads the snapshot
-        // (the previous row's for exclusive frames) and the ring rows
-        // for offsets. The GraftWindowOffsetExec state machine drives
-        // consumption/flush.
+        // the ring machine: fn-12/13 and exclusive specs make emission
+        // lag consumption by maxLead rows, so running values for row e
+        // must be e's — not the consumption point's — accumulator state.
+        // When some spec reads that state (an accumulating, ranking or
+        // exclusive spec), each consumed row snapshots the accumulators
+        // into its ring slot. Emission reads the snapshot (the previous
+        // row's for exclusive frames), the ring rows for offsets and
+        // recompute slices, and the kernels for invertible slices.
         import org.apache.spark.sql.catalyst.expressions.UnsafeRow
         val ring = new Array[UnsafeRow](cap)
-        val snaps = Array.fill(cap)(new GraftColumnarWindowExec.Accumulators(ss, inTypes))
-        val snapRn = new Array[Long](cap)
-        val snapRank = new Array[Long](cap)
-        val snapDense = new Array[Long](cap)
+        val snaps =
+          if (needSnaps) Array.fill(cap)(new GraftColumnarWindowExec.Accumulators(ss, inTypes))
+          else null
+        val snapRn = if (needSnaps) new Array[Long](cap) else null
+        val snapRank = if (needSnaps) new Array[Long](cap) else null
+        val snapDense = if (needSnaps) new Array[Long](cap) else null
+        val kernels =
+          if (ss.exists(fastSlice)) new GraftColumnarWindowExec.SlideKernels(ss, inTypes, maxLead)
+          else null
         def snapshot(slot: Int): Unit = {
           snaps(slot).copyFrom(accs)
           snapRn(slot) = rkRowNum; snapRank(slot) = rkRank; snapDense(slot) = rkDense
@@ -281,45 +295,121 @@ case class GraftColumnarWindowExec(
           case _ => aggRow.setNullAt(s)
         }
         /** Full consumption step for a row KNOWN to be in the current
-          * partition (boundary handled by the caller). */
+          * partition (boundary handled by the caller). Keys are carried
+          * only where they change: within a partition (peer group) they
+          * equal the carried ones. */
         def ingest(row: UnsafeRow, boundary: Boolean): Unit = {
           val newPeer = boundary || (needPeers && peerCarry.differs(row))
-          partCarry.carry(row)
-          if (needPeers) peerCarry.carry(row)
+          if (boundary) partCarry.carry(row)
+          if (needPeers && newPeer) peerCarry.carry(row)
           anyRow = true
           rkRowNum += 1
           if (boundary) { rkRank = 1; rkDense = 1 }
           else if (newPeer) { rkRank = rkRowNum; rkDense += 1 }
-          accs.update(row)
+          if (needSnaps) accs.update(row)
+        }
+        /** Recomputes recompute fn-13 spec `s` over partition rows
+          * [from, to] of the ring, in ascending row order — Spark's
+          * sliding-frame evaluation order, so double sums and averages
+          * are bit-identical to the row path. */
+        def evalSlice(s: Int, from: Long, to: Long): Unit = {
+          val sp = ss(s)
+          var accL = 0L
+          var accD = 0.0
+          var accS: org.apache.spark.unsafe.types.UTF8String = null
+          var cnt = 0L
+          var seen = false
+          var t = from
+          while (t <= to) {
+            val r = ring((t % cap).toInt)
+            if (!r.isNullAt(sp.col)) {
+              sp.fn13Op match {
+                case 0 => // sum
+                  if (sp.lane == 0) {
+                    val x = rowLong(r, sp.col, inTypes(s))
+                    if (sp.ansi) {
+                      try accL = Math.addExact(accL, x)
+                      catch {
+                        case _: ArithmeticException =>
+                          throw org.apache.spark.sql.errors.QueryExecutionErrors
+                            .arithmeticOverflowError("long overflow", "try_add", null)
+                      }
+                    } else accL += x
+                  } else accD += rowDbl(r, sp.col, inTypes(s))
+                case 1 => // count(col): cnt below
+                case 4 =>
+                  // avg matches Spark's Average over every input family: a
+                  // double sum of per-row casts
+                  accD += (if (sp.lane == 0) rowLong(r, sp.col, inTypes(s)).toDouble
+                    else rowDbl(r, sp.col, inTypes(s)))
+                case _ => // min / max (2 | 3)
+                  if (sp.lane == 3) {
+                    val x = r.getUTF8String(sp.col)
+                    if (!seen || (if (sp.fn13Op == 2) x.compareTo(accS) < 0
+                      else x.compareTo(accS) > 0)) accS = x
+                  } else if (sp.lane == 0) {
+                    val x = rowLong(r, sp.col, inTypes(s))
+                    if (!seen || (if (sp.fn13Op == 2) x < accL else x > accL)) accL = x
+                  } else {
+                    val x = rowDbl(r, sp.col, inTypes(s))
+                    val c = SQLOrderingUtil.compareDoubles(x, accD)
+                    if (!seen || (if (sp.fn13Op == 2) c < 0 else c > 0)) accD = x
+                  }
+              }
+              cnt += 1
+              seen = true
+            }
+            t += 1
+          }
+          sp.fn13Op match {
+            case 1 => aggRow.update(s, cnt)
+            case 4 =>
+              if (cnt > 0) aggRow.update(s, accD / cnt) else aggRow.setNullAt(s)
+            case _ =>
+              if (seen) {
+                if (sp.lane == 3) aggRow.update(s, accS)
+                else if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accL)
+                else emitDbl(aggRow, s, sp.outType, accD)
+              } else aggRow.setNullAt(s)
+          }
         }
         new Iterator[InternalRow] {
-          private var cons = 0L
-          private var emitE = 0L
-          private var flushN = -1L
+          private var cons = 0L // rows consumed in the current partition
+          private var emitE = 0L // rows emitted in the current partition
+          private var flushN = -1L // ≥0: partition closed at this row count
           private var held: UnsafeRow = _
           private def canEmit: Boolean = cons - emitE > maxLead
           private def store(row: UnsafeRow): Unit = {
             val slot = (cons % cap).toInt
             ring(slot) = row
-            snapshot(slot)
+            if (needSnaps) snapshot(slot)
+            if (kernels != null) kernels.store(row, cons)
             cons += 1
           }
-          // the GraftWindowOffsetExec state machine — see its advance()
-          // doc for why the boundary restart MUST loop
+          /** Drive the state machine until something is emittable or input
+            * is truly exhausted. MUST loop internally: a partition
+            * boundary with no deferred rows pending (lag-only nodes emit
+            * each row as it is consumed, so emitE == cons at the boundary)
+            * completes its zero-row flush and must immediately seed the
+            * next partition and keep consuming — returning there would end
+            * the iterator after the first partition.
+            */
           private def advance(): Unit = {
             var looping = true
             while (looping) {
               looping = false
               if (flushN >= 0) {
-                if (emitE < flushN) return
+                if (emitE < flushN) return // flush pending → emittable
+                // flush done: start the next partition with the held row
                 flushN = -1; cons = 0; emitE = 0
                 if (held != null) {
                   grpM.add(1)
                   reset()
+                  if (kernels != null) kernels.reset()
                   ingest(held, boundary = true)
                   store(held)
                   held = null
-                } else return
+                } else return // input exhausted
               }
               var boundary = false
               while (!canEmit && !boundary && rows.hasNext) {
@@ -332,19 +422,19 @@ case class GraftColumnarWindowExec(
                   boundary = true
                 } else {
                   if (!anyRow) grpM.add(1)
-                  if (newPart) reset()
                   ingest(row, boundary = newPart)
                   store(row)
                 }
               }
               if (canEmit && flushN < 0) return
               if (boundary) {
-                if (emitE < flushN) return
-                looping = true
+                if (emitE < flushN) return // deferred tail → emittable
+                looping = true // zero-row flush: restart with held now
               } else if (cons > emitE) {
+                // input exhausted with a deferred tail
                 flushN = cons
                 return
-              } else return
+              } else return // truly done
             }
           }
           override def hasNext: Boolean = {
@@ -362,72 +452,15 @@ case class GraftColumnarWindowExec(
               val sp = ss(s)
               if (sp.fn == 12) {
                 val t = e + sp.off
+                // the ring holds copied rows: no string clone needed
                 if (t < 0 || t >= bound) aggRow.update(s, sp.dflt)
-                else aggRow.update(s, readBoxed(ring((t % cap).toInt), sp.col, inTypes(s)))
+                else aggRow.update(s,
+                  readBoxed(ring((t % cap).toInt), sp.col, inTypes(s), copy = false))
               } else if (sp.fn == 13) {
-                // sliding slice recompute over the ring (the dedicated
-                // GraftWindowSlidingExec semantics, plus a string lane)
                 val from = math.max(0L, e + sp.sLo)
                 val to = math.min(bound - 1L, e + sp.sHi)
-                if (sp.fn13IsCountStar) aggRow.update(s, math.max(0L, to - from + 1L))
-                else {
-                  var accL = 0L
-                  var accD = 0.0
-                  var accS: org.apache.spark.unsafe.types.UTF8String = null
-                  var cnt = 0L
-                  var seen = false
-                  var t = from
-                  while (t <= to) {
-                    val r = ring((t % cap).toInt)
-                    if (!r.isNullAt(sp.col)) {
-                      sp.fn13Op match {
-                        case 0 => // sum / avg accumulation
-                          if (sp.lane == 0) {
-                            val x = rowLong(r, sp.col, inTypes(s))
-                            if (sp.ansi) {
-                              try accL = Math.addExact(accL, x)
-                              catch {
-                                case _: ArithmeticException =>
-                                  throw org.apache.spark.sql.errors.QueryExecutionErrors
-                                    .arithmeticOverflowError("long overflow", "try_add", null)
-                              }
-                            } else accL += x
-                          } else accD += rowDbl(r, sp.col, inTypes(s))
-                        case 1 => // count(col): cnt below
-                        case 4 =>
-                          accD += (if (sp.lane == 0) rowLong(r, sp.col, inTypes(s)).toDouble
-                            else rowDbl(r, sp.col, inTypes(s)))
-                        case _ => // min / max (2 | 3)
-                          if (sp.lane == 3) {
-                            val x = r.getUTF8String(sp.col)
-                            if (!seen || (if (sp.fn13Op == 2) x.compareTo(accS) < 0
-                              else x.compareTo(accS) > 0)) accS = x
-                          } else if (sp.lane == 0) {
-                            val x = rowLong(r, sp.col, inTypes(s))
-                            if (!seen || (if (sp.fn13Op == 2) x < accL else x > accL)) accL = x
-                          } else {
-                            val x = rowDbl(r, sp.col, inTypes(s))
-                            val c = SQLOrderingUtil.compareDoubles(x, accD)
-                            if (!seen || (if (sp.fn13Op == 2) c < 0 else c > 0)) accD = x
-                          }
-                      }
-                      cnt += 1
-                      seen = true
-                    }
-                    t += 1
-                  }
-                  sp.fn13Op match {
-                    case 1 => aggRow.update(s, cnt)
-                    case 4 =>
-                      if (cnt > 0) aggRow.update(s, accD / cnt) else aggRow.setNullAt(s)
-                    case _ =>
-                      if (seen) {
-                        if (sp.lane == 3) aggRow.update(s, accS)
-                        else if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accL)
-                        else emitDbl(aggRow, s, sp.outType, accD)
-                      } else aggRow.setNullAt(s)
-                  }
-                }
+                if (kernels != null && kernels.fast(s)) kernels.eval(s, from, to, aggRow)
+                else evalSlice(s, from, to)
               } else if (sp.excl) {
                 if (e == 0) writeEmpty(s)
                 else writeFromSnap(s, ((e - 1) % cap).toInt)
@@ -1043,8 +1076,8 @@ case class GraftColumnarWindowExec(
                   if (!r.isNullAt(sp.col)) {
                     val x = rowLong(r, sp.col, inTypes(t))
                     accL(t) += x; accSeen(t) = true
-                    if (sp.ansi && (x > GraftWindowSlidingExec.ansiSafeAbs ||
-                      x < -GraftWindowSlidingExec.ansiSafeAbs)) ansiBig = true
+                    if (sp.ansi && (x > GraftColumnarWindowExec.ansiSafeAbs ||
+                      x < -GraftColumnarWindowExec.ansiSafeAbs)) ansiBig = true
                   }
                 case 9 => // first: ign needs the block's first non-null
                   if (sp.ign && accFirst(t) == null && !r.isNullAt(sp.col))
@@ -1419,644 +1452,14 @@ case class GraftColumnarWindowExec(
     copy(child = newChild)
 }
 
-/** One lag/lead column: `offset` is SIGNED (negative = lag, positive =
-  * lead — the FrameLessOffsetWindowFunction convention), `default` is
-  * the pre-evaluated literal default (catalyst internal value or null),
-  * `dt` the input/result type. */
-final case class WinOffsetSpec(col: Int, offset: Int, default: Any, dt: DataType)
-
-/** Streaming lag/lead (reference analogue: CometWindowExec's offset
-  * whitelist; Spark twin: WindowExec with FrameLessOffsetWindowFrame).
-  *
-  * The row WindowExec copies EVERY partition group into its
-  * ExternalAppendOnlyUnsafeRowArray before evaluating even a 1-row
-  * lag — on a skewed partition key that buffer is the whole hot group.
-  * lag(k)/lead(k) only ever need maxLag + maxLead + 1 rows of context,
-  * so this operator holds exactly that ring of row copies and emits
-  * each row once its furthest lead is in the ring (or the partition
-  * closed): O(k) memory under any skew, one pass, no spill machinery
-  * needed at all.
-  *
-  * Restrictions (the rule falls back otherwise): literal offsets,
-  * literal defaults, ignoreNulls=false, attribute inputs of
-  * long/double/string-family types, and a node holding ONLY lag/lead
-  * (Spark plans mixed agg+offset functions into one WindowExec; those
-  * keep the row path).
-  *
-  * A/B (FilterMicroBench winoff-*, sf0.1, 3 runs of min-of-5): lag(1)
-  * over ~4-row groups 0.79-0.86x, lag+lead over three ~200k-row hot
-  * groups 0.92-1.00x — win-to-parity, ON by default under the shared
-  * spark.graft.columnar.window.enabled gate.
-  */
-case class GraftWindowOffsetExec(
-    output: Seq[Attribute],
-    partIdx: Seq[Int],
-    partTypes: Seq[DataType],
-    specs: Seq[WinOffsetSpec],
-    child: SparkPlan)
-    extends UnaryExecNode {
-
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  override def outputOrdering = child.outputOrdering
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(output.drop(child.output.length))
-
-  override lazy val metrics = Map(
-    "numInputRows" -> SQLMetrics.createMetric(sparkContext, "number of input rows"),
-    "numPartitionGroups" -> SQLMetrics.createMetric(sparkContext, "window partition groups"))
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val (inM, grpM) = (metrics("numInputRows"), metrics("numPartitionGroups"))
-    val pIdx = partIdx.toArray
-    val pTypes = partTypes.toArray
-    val ss = specs.toArray
-    val outAll = output
-    val maxLead = (0 +: ss.map(_.offset).filter(_ > 0).toSeq).max
-    val maxLag = (0 +: ss.map(s => -s.offset).filter(_ > 0).toSeq).max
-    val cap = maxLag + maxLead + 1
-    child.execute().mapPartitionsInternal { rows =>
-      import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-      val partCarry = new KeyCarry(pIdx, pTypes)
-      var anyRow = false
-      val ring = new Array[UnsafeRow](cap)
-      val aggRow = new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(ss.length)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(outAll.map(_.dataType).toArray)
-      new Iterator[InternalRow] {
-        private var cons = 0L // rows consumed in the current partition
-        private var emitE = 0L // rows emitted in the current partition
-        private var flushN = -1L // ≥0: partition closed at this row count
-        private var held: UnsafeRow = _
-        private def canEmit: Boolean = cons - emitE > maxLead
-        /** Drive the state machine until something is emittable or input
-          * is truly exhausted. MUST loop internally: a partition
-          * boundary with no deferred rows pending (lag-only nodes emit
-          * each row as it is consumed, so emitE == cons at the boundary)
-          * completes its zero-row flush and must immediately seed the
-          * next partition and keep consuming — returning there would end
-          * the iterator after the first partition.
-          */
-        private def advance(): Unit = {
-          var looping = true
-          while (looping) {
-            looping = false
-            if (flushN >= 0) {
-              if (emitE < flushN) return // flush pending → emittable
-              // flush done: start the next partition with the held row
-              flushN = -1; cons = 0; emitE = 0
-              if (held != null) {
-                grpM.add(1)
-                partCarry.carry(held)
-                ring(0) = held
-                cons = 1
-                held = null
-              } else return // input exhausted
-            }
-            var boundary = false
-            while (!canEmit && !boundary && rows.hasNext) {
-              val row = rows.next().asInstanceOf[UnsafeRow].copy()
-              inM.add(1)
-              if (anyRow && partCarry.differs(row)) {
-                held = row
-                flushN = cons
-                boundary = true
-              } else {
-                if (!anyRow) grpM.add(1)
-                anyRow = true
-                partCarry.carry(row)
-                ring((cons % cap).toInt) = row
-                cons += 1
-              }
-            }
-            if (canEmit && flushN < 0) return
-            if (boundary) {
-              if (emitE < flushN) return // deferred tail → emittable
-              looping = true // zero-row flush: restart with held now
-            } else if (cons > emitE) {
-              // input exhausted with a deferred tail
-              flushN = cons
-              return
-            } else return // truly done
-          }
-        }
-        override def hasNext: Boolean = {
-          if ((flushN >= 0 && emitE < flushN) || canEmit) true
-          else { advance(); (flushN >= 0 && emitE < flushN) || canEmit }
-        }
-        override def next(): InternalRow = {
-          if (!hasNext) throw new NoSuchElementException
-          val bound = if (flushN >= 0) flushN else Long.MaxValue
-          val e = emitE
-          emitE += 1
-          var s = 0
-          while (s < ss.length) {
-            val sp = ss(s)
-            val t = e + sp.offset
-            if (t < 0 || t >= bound) aggRow.update(s, sp.default)
-            else aggRow.update(s, readBoxed(ring((t % cap).toInt), sp.col, sp.dt, copy = false))
-            s += 1
-          }
-          proj(joined(ring((e % cap).toInt), aggRow))
-        }
-      }
-    }
-  }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): GraftWindowOffsetExec =
-    copy(child = newChild)
-}
-
-object GraftWindowOffsetExec {
-  /** Input/result types the boxed reader handles. */
-  def supportedType(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | BooleanType |
-        DateType | TimestampType | TimestampNTZType |
-        DoubleType | FloatType | StringType => true
-    case d: DecimalType => d.precision <= Decimal.MAX_LONG_DIGITS
-    case _ => false
-  }
-}
-
-/** One sliding-frame aggregate: frame is ROWS BETWEEN `lo` AND `hi`
-  * (row-relative, both finite; lo <= 0 <= no constraint on hi's sign —
-  * trailing [-5,-2] and centered [-1,1] both valid). `fn`/`lane`/
-  * `outType`/`ansi` follow [[WinAggSpec]] (0=sum 1=count(col) 2=min
-  * 3=max 4=avg 5=count(*)). */
+/** One finite-RANGE aggregate of [[GraftWindowRangeSlideExec]]: the
+  * frame holds the rows whose ORDER BY value lies within [`lo`, `hi`] of
+  * the row's own (direction-relative deltas; double keys carry them as
+  * raw bits). `fn`/`lane`/`outType`/`ansi` follow [[WinAggSpec]] (0=sum
+  * 1=count(col) 2=min 3=max 4=avg 5=count(*)). */
 final case class WinSlideSpec(
     fn: Int, col: Int, lane: Int, outType: DataType, ansi: Boolean,
     lo: Long, hi: Long)
-
-/** Sliding ROWS-frame window aggregation (moving averages / rolling
-  * sums — reference analogue: CometWindowExec.scala:41-388 whitelists
-  * running aggregates only and falls back on sliding frames; Spark twin:
-  * WindowExec with SlidingWindowFunctionFrame).
-  *
-  * The row WindowExec buffers EVERY partition group in its spill-backed
-  * ExternalAppendOnlyUnsafeRowArray before evaluating even a 3-row
-  * moving average. A ROWS [lo, hi] frame only ever needs
-  * max(hi,0)+1-min(lo,0) rows of context, so this operator holds
-  * exactly that ring of row copies (the [[GraftWindowOffsetExec]] state
-  * machine) and emits each row once its furthest FOLLOWING row is in
-  * the ring or the partition closed: O(frame) memory under any skew.
-  *
-  * TWO evaluation modes, chosen per node:
-  *  - FAST (every spec [[GraftWindowSlidingExec.invertible]]): O(n)
-  *    total work — exact add/subtract updates for long sums/counts
-  *    (modular arithmetic is order-free; ANSI sums use plain adds while
-  *    |v| ≤ 2^41, exact-recomputing from the value ring when a bigger
-  *    value appears, preserving the throw-on-any-prefix contract) and a
-  *    monotonic deque for min/max. The row ring shrinks to the emission
-  *    lag (maxLead+1 rows); PRECEDING context survives only as 9 B/row
-  *    primitive value rings, so frames up to maxInvertibleFrameRows
-  *    (2M rows) are admitted with plan-constant memory. Spark's
-  *    SlidingWindowFunctionFrame re-aggregates each frame — O(n·frame) —
-  *    so this is an ASYMPTOTIC win (winslide-wide1k: 0.09x = ~11x
-  *    faster on 1,000-row rolling sums at sf0.1).
-  *  - RECOMPUTE (a double/float sum or any avg in the node): each
-  *    emitted row recomputes its aggregate over the ring slice in
-  *    ascending row order — the exact evaluation order of Spark's
-  *    SlidingWindowFunctionFrame, so double results are bit-identical.
-  *    O(n·frame) compute, same as the row path; frame width ≤ 65536
-  *    (the full-row ring is allocated eagerly).
-  *
-  * Restrictions (the rule falls back otherwise): finite literal ROWS
-  * bounds within the mode's width cap, sum/count/min/max/avg over
-  * long/double-family attributes, supported partition keys, and a node
-  * holding ONLY sliding-frame aggregates.
-  *
-  * A/B (FilterMicroBench winslide-*, sf0.1, 3 runs of min-of-5):
-  * 3-row moving avg over ~4-row groups 0.80-0.88x, centered sum+min+max
-  * over three ~200k-row hot groups 0.82-0.93x, 1,000-row rolling
-  * sum+min+count over the hot groups 0.09x — win on every shape, ON
-  * by default under the shared spark.graft.columnar.window.enabled gate.
-  */
-case class GraftWindowSlidingExec(
-    output: Seq[Attribute],
-    partIdx: Seq[Int],
-    partTypes: Seq[DataType],
-    specs: Seq[WinSlideSpec],
-    child: SparkPlan)
-    extends UnaryExecNode {
-
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  override def outputOrdering = child.outputOrdering
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(output.drop(child.output.length))
-
-  override lazy val metrics = Map(
-    "numInputRows" -> SQLMetrics.createMetric(sparkContext, "number of input rows"),
-    "numPartitionGroups" -> SQLMetrics.createMetric(sparkContext, "window partition groups"))
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val (inM, grpM) = (metrics("numInputRows"), metrics("numPartitionGroups"))
-    val pIdx = partIdx.toArray
-    val pTypes = partTypes.toArray
-    val ss = specs.toArray
-    val childOut = child.output
-    val inTypes = ss.map(s => if (s.col >= 0) childOut(s.col).dataType else null)
-    val outAll = output
-    val maxLead = math.max(0L, ss.map(_.hi).max)
-    val minLo = math.min(0L, ss.map(_.lo).min)
-    // FAST MODE: every spec invertible (exact long sum/count add-subtract,
-    // min/max monotonic deque) → O(n) total work instead of O(n·frame)
-    // recompute, and the row ring shrinks to the emission lag
-    // (maxLead+1 rows) — PRECEDING rows survive only as 9 B/row primitive
-    // values, which is what lifts the frame cap to
-    // maxInvertibleFrameRows. Doubles sums/avgs are NOT invertible
-    // (subtraction breaks bit-equality with the row path's left-to-right
-    // recompute) and ANSI sums must observe per-prefix overflow, so
-    // those nodes keep the slice recompute and the 65,536-row cap.
-    val fastMode = ss.forall(GraftWindowSlidingExec.invertible)
-    val cap = (if (fastMode) maxLead + 1L else maxLead + 1L - minLo).toInt
-    child.execute().mapPartitionsInternal { rows =>
-      import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-      val partCarry = new KeyCarry(pIdx, pTypes)
-      var anyRow = false
-      val ring = new Array[UnsafeRow](cap)
-      // fast-mode per-spec state: value rings (sized to cover every
-      // index between a spec's lowest live frame start and the
-      // consumption point), running sum/count, and a monotonic deque of
-      // candidate indices for min/max. The footprint is a PLAN constant
-      // (frame bounds are literals), registered once with the task
-      // memory manager below — a shortfall is logged by the reservation
-      // but cannot grow: unlike the range-slide ring this state is not
-      // data-dependent.
-      val nS = ss.length
-      val vCapS = new Array[Int](nS)
-      val vLongS = new Array[Array[Long]](nS)
-      val vDblS = new Array[Array[Double]](nS)
-      val vNullS = new Array[Array[Boolean]](nS)
-      val dqS = new Array[Array[Long]](nS)
-      val dqCapS = new Array[Int](nS)
-      val dqHead = new Array[Int](nS)
-      val dqLen = new Array[Int](nS)
-      val accLF = new Array[Long](nS)
-      val cntF = new Array[Long](nS)
-      val loF = new Array[Long](nS)
-      val hiF = new Array[Long](nS)
-      // per-partition sticky: an ANSI long sum saw |v| > 2^41 — its
-      // frames recompute left-to-right with addExact from the value
-      // ring (Spark's exact evaluation, incl. the throw position)
-      val bigSeenS = new Array[Boolean](nS)
-      if (fastMode) {
-        def pow2(x: Long): Int =
-          java.lang.Long.highestOneBit(math.max(4L, x * 2 - 1)).toInt
-        var s = 0
-        var fixedBytes = cap.toLong * 64
-        while (s < nS) {
-          val sp = ss(s)
-          if (sp.fn != 5) {
-            val vc = pow2(maxLead - math.min(0L, sp.lo) + 2L)
-            vCapS(s) = vc
-            vNullS(s) = new Array[Boolean](vc)
-            fixedBytes += vc
-            if (sp.lane == 1) { vDblS(s) = new Array[Double](vc); fixedBytes += vc * 8L }
-            else if (sp.fn != 1) { vLongS(s) = new Array[Long](vc); fixedBytes += vc * 8L }
-            if (sp.fn == 2 || sp.fn == 3) {
-              val dc = pow2(sp.hi - sp.lo + 3L)
-              dqCapS(s) = dc
-              dqS(s) = new Array[Long](dc)
-              fixedBytes += dc * 8L
-            }
-          }
-          s += 1
-        }
-        java.util.Arrays.fill(hiF, -1L)
-        org.apache.spark.sql.graft.GraftMemoryReservation.forTask()
-          .foreach(_.reserve(fixedBytes))
-      }
-      def storeVals(row: UnsafeRow, idx: Long): Unit = {
-        var s = 0
-        while (s < nS) {
-          val sp = ss(s)
-          if (sp.fn != 5) {
-            val o = (idx % vCapS(s)).toInt
-            val nl = row.isNullAt(sp.col)
-            vNullS(s)(o) = nl
-            if (!nl) {
-              if (sp.lane == 1) vDblS(s)(o) = rowDbl(row, sp.col, inTypes(s))
-              else if (vLongS(s) != null) {
-                val x = rowLong(row, sp.col, inTypes(s))
-                vLongS(s)(o) = x
-                if (sp.fn == 0 && sp.ansi &&
-                  (x > GraftWindowSlidingExec.ansiSafeAbs ||
-                    x < -GraftWindowSlidingExec.ansiSafeAbs)) bigSeenS(s) = true
-              }
-            }
-          }
-          s += 1
-        }
-      }
-      def resetFast(): Unit = {
-        java.util.Arrays.fill(accLF, 0L)
-        java.util.Arrays.fill(cntF, 0L)
-        java.util.Arrays.fill(loF, 0L)
-        java.util.Arrays.fill(hiF, -1L)
-        java.util.Arrays.fill(dqHead, 0)
-        java.util.Arrays.fill(dqLen, 0)
-        java.util.Arrays.fill(bigSeenS, false)
-      }
-      val aggRow = new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(ss.length)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(outAll.map(_.dataType).toArray)
-      /** O(1)-amortized update of spec `s` to frame [from, to]: exact
-        * add/subtract on the long sum/count lanes (modular arithmetic is
-        * order-free, so results equal the recompute path bit-for-bit) and
-        * a monotonic deque for min/max (keeps the FIRST minimal/maximal
-        * index among compare-equal values — the recompute path's strict-<
-        * tie rule). */
-      def evalFast(s: Int, from: Long, to: Long): Unit = {
-        val sp = ss(s)
-        if (sp.fn == 5) { aggRow.update(s, math.max(0L, to - from + 1L)); return }
-        val vc = vCapS(s)
-        val nls = vNullS(s)
-        sp.fn match {
-          case 0 if sp.ansi && bigSeenS(s) =>
-            // rare: the partition holds |v| > 2^41, so a prefix COULD
-            // overflow — recompute this frame left-to-right with
-            // addExact, Spark's exact evaluation (and throw position)
-            val vl = vLongS(s)
-            var acc = 0L
-            var cnt = 0L
-            var t = from
-            while (t <= to) {
-              val o = (t % vc).toInt
-              if (!nls(o)) {
-                try acc = Math.addExact(acc, vl(o))
-                catch {
-                  case _: ArithmeticException =>
-                    throw org.apache.spark.sql.errors.QueryExecutionErrors
-                      .arithmeticOverflowError("long overflow", "try_add", null)
-                }
-                cnt += 1
-              }
-              t += 1
-            }
-            if (cnt > 0) emitLong(aggRow, s, sp.outType, acc) else aggRow.setNullAt(s)
-          case 0 | 1 =>
-            val vl = vLongS(s)
-            while (hiF(s) < to) {
-              hiF(s) += 1
-              val o = (hiF(s) % vc).toInt
-              if (!nls(o)) { cntF(s) += 1; if (sp.fn == 0) accLF(s) += vl(o) }
-            }
-            while (loF(s) < from) {
-              // subtract ONLY indexes the add loop included: an EMPTY
-              // frame (partition-end clamp pushes `from` past `to`, so
-              // hiF stops at the last row) advances `from` over indexes
-              // that were never added — reading their ring slots would
-              // subtract stale values (the winFrameGen counterexample:
-              // a 1-row partition under a 3..4 FOLLOWING frame returned
-              // count = -2 from two never-written null flags)
-              if (loF(s) <= hiF(s)) {
-                val o = (loF(s) % vc).toInt
-                if (!nls(o)) { cntF(s) -= 1; if (sp.fn == 0) accLF(s) -= vl(o) }
-              }
-              loF(s) += 1
-            }
-            if (sp.fn == 1) aggRow.update(s, cntF(s))
-            else if (cntF(s) > 0) emitLong(aggRow, s, sp.outType, accLF(s))
-            else aggRow.setNullAt(s)
-          case _ => // min/max: monotonic deque of candidate indices
-            val dq = dqS(s)
-            val dc = dqCapS(s)
-            val isMin = sp.fn == 2
-            // push ONLY indexes >= this frame's start: `from` never
-            // decreases across emissions, so an index below it can
-            // never enter any future frame — and skipping them is what
-            // BOUNDS the deque at its pow2(hi-lo+3) capacity. (A
-            // FOLLOWING frame's first emissions otherwise push the
-            // whole consumed prefix before any eviction: the seed-146
-            // hunt saw a 4-slot deque wrap at 5 candidates and emit a
-            // stale suffix minimum.)
-            if (sp.lane == 0) {
-              val vl = vLongS(s)
-              while (hiF(s) < to) {
-                hiF(s) += 1
-                val o = (hiF(s) % vc).toInt
-                if (!nls(o) && hiF(s) >= from) {
-                  val x = vl(o)
-                  var len = dqLen(s)
-                  while (len > 0 && {
-                    val b = vl((dq((dqHead(s) + len - 1) % dc) % vc).toInt)
-                    if (isMin) b > x else b < x
-                  }) len -= 1
-                  dq((dqHead(s) + len) % dc) = hiF(s)
-                  dqLen(s) = len + 1
-                }
-              }
-            } else {
-              val vd = vDblS(s)
-              while (hiF(s) < to) {
-                hiF(s) += 1
-                val o = (hiF(s) % vc).toInt
-                if (!nls(o) && hiF(s) >= from) {
-                  val x = vd(o)
-                  var len = dqLen(s)
-                  while (len > 0 && {
-                    val c = SQLOrderingUtil.compareDoubles(
-                      vd((dq((dqHead(s) + len - 1) % dc) % vc).toInt), x)
-                    if (isMin) c > 0 else c < 0
-                  }) len -= 1
-                  dq((dqHead(s) + len) % dc) = hiF(s)
-                  dqLen(s) = len + 1
-                }
-              }
-            }
-            loF(s) = from
-            while (dqLen(s) > 0 && dq(dqHead(s)) < from) {
-              dqHead(s) = (dqHead(s) + 1) % dc
-              dqLen(s) -= 1
-            }
-            if (dqLen(s) == 0) aggRow.setNullAt(s)
-            else {
-              val idx = dq(dqHead(s))
-              if (sp.lane == 0) emitLong(aggRow, s, sp.outType, vLongS(s)((idx % vc).toInt))
-              else emitDbl(aggRow, s, sp.outType, vDblS(s)((idx % vc).toInt))
-            }
-        }
-      }
-      /** Recompute spec `s` over partition-relative rows [from, to] (in
-        * ascending order — Spark's sliding-frame evaluation order). */
-      def evalSlice(s: Int, from: Long, to: Long): Unit = {
-        val sp = ss(s)
-        if (sp.fn == 5) { // count(*): frame size, no input column
-          aggRow.update(s, math.max(0L, to - from + 1L))
-          return
-        }
-        var accL = 0L
-        var accD = 0.0
-        var cnt = 0L
-        var seen = false
-        var t = from
-        while (t <= to) {
-          val r = ring((t % cap).toInt)
-          if (!r.isNullAt(sp.col)) {
-            sp.fn match {
-              case 4 =>
-                // avg matches Spark's Average over EVERY input family: a
-                // DoubleType sum built from incremental double adds (long
-                // inputs are cast per-row, never summed exactly — a
-                // long-lane exact sum diverges in ulps for large values
-                // and wraps silently past Long.MaxValue)
-                accD += (if (sp.lane == 0) rowLong(r, sp.col, inTypes(s)).toDouble
-                  else rowDbl(r, sp.col, inTypes(s)))
-              case 0 =>
-                if (sp.lane == 0) {
-                  val x = rowLong(r, sp.col, inTypes(s))
-                  if (sp.ansi) {
-                    try accL = Math.addExact(accL, x)
-                    catch {
-                      case _: ArithmeticException =>
-                        throw org.apache.spark.sql.errors.QueryExecutionErrors
-                          .arithmeticOverflowError("long overflow", "try_add", null)
-                    }
-                  } else accL += x
-                } else accD += rowDbl(r, sp.col, inTypes(s))
-              case 1 => // count(col): cnt below is the value
-              case _ => // min / max
-                if (sp.lane == 0) {
-                  val x = rowLong(r, sp.col, inTypes(s))
-                  if (!seen || (if (sp.fn == 2) x < accL else x > accL)) accL = x
-                } else {
-                  val x = rowDbl(r, sp.col, inTypes(s))
-                  val c = SQLOrderingUtil.compareDoubles(x, accD)
-                  if (!seen || (if (sp.fn == 2) c < 0 else c > 0)) accD = x
-                }
-            }
-            cnt += 1
-            seen = true
-          }
-          t += 1
-        }
-        sp.fn match {
-          case 1 => aggRow.update(s, cnt)
-          case 4 =>
-            if (cnt > 0) aggRow.update(s, accD / cnt)
-            else aggRow.setNullAt(s)
-          case _ =>
-            if (seen) {
-              if (sp.lane == 0) emitLong(aggRow, s, sp.outType, accL)
-              else emitDbl(aggRow, s, sp.outType, accD)
-            } else aggRow.setNullAt(s)
-        }
-      }
-      new Iterator[InternalRow] {
-        private var cons = 0L
-        private var emitE = 0L
-        private var flushN = -1L
-        private var held: UnsafeRow = _
-        private def canEmit: Boolean = cons - emitE > maxLead
-        // the GraftWindowOffsetExec state machine verbatim — see its
-        // advance() doc for why the boundary restart MUST loop
-        private def advance(): Unit = {
-          var looping = true
-          while (looping) {
-            looping = false
-            if (flushN >= 0) {
-              if (emitE < flushN) return
-              flushN = -1; cons = 0; emitE = 0
-              if (fastMode) resetFast()
-              if (held != null) {
-                grpM.add(1)
-                partCarry.carry(held)
-                ring(0) = held
-                if (fastMode) storeVals(held, 0L)
-                cons = 1
-                held = null
-              } else return
-            }
-            var boundary = false
-            while (!canEmit && !boundary && rows.hasNext) {
-              val row = rows.next().asInstanceOf[UnsafeRow].copy()
-              inM.add(1)
-              if (anyRow && partCarry.differs(row)) {
-                held = row
-                flushN = cons
-                boundary = true
-              } else {
-                if (!anyRow) grpM.add(1)
-                anyRow = true
-                partCarry.carry(row)
-                ring((cons % cap).toInt) = row
-                if (fastMode) storeVals(row, cons)
-                cons += 1
-              }
-            }
-            if (canEmit && flushN < 0) return
-            if (boundary) {
-              if (emitE < flushN) return
-              looping = true
-            } else if (cons > emitE) {
-              flushN = cons
-              return
-            } else return
-          }
-        }
-        override def hasNext: Boolean = {
-          if ((flushN >= 0 && emitE < flushN) || canEmit) true
-          else { advance(); (flushN >= 0 && emitE < flushN) || canEmit }
-        }
-        override def next(): InternalRow = {
-          if (!hasNext) throw new NoSuchElementException
-          val bound = if (flushN >= 0) flushN else Long.MaxValue
-          val e = emitE
-          emitE += 1
-          var s = 0
-          while (s < ss.length) {
-            val sp = ss(s)
-            val from = math.max(0L, e + sp.lo)
-            val to = math.min(bound - 1L, e + sp.hi)
-            if (fastMode) evalFast(s, from, to) else evalSlice(s, from, to)
-            s += 1
-          }
-          proj(joined(ring((e % cap).toInt), aggRow))
-        }
-      }
-    }
-  }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): GraftWindowSlidingExec =
-    copy(child = newChild)
-}
-
-object GraftWindowSlidingExec {
-  /** Ring width cap for RECOMPUTE nodes (any double/ANSI sum or avg
-    * spec): frames wider than this keep the row path — the row ring is
-    * allocated eagerly per task and every emission rescans its slice. */
-  val maxFrameRows = 65536L
-
-  /** Frame cap when EVERY spec is [[invertible]]: the O(n) kernels hold
-    * only 9 B/row primitive value rings plus a maxLead+1-row emission
-    * ring, so 2M-row frames cost ~36 MB/spec of plan-constant state —
-    * and beat both this operator's recompute path and Spark's
-    * SlidingWindowFunctionFrame (each O(n·frame)) asymptotically. */
-  val maxInvertibleFrameRows = 1L << 21
-
-  /** Specs evaluable by exact O(1) frame updates: long-lane sums
-    * (non-ANSI wrap is modular arithmetic, order-free; ANSI sums ride
-    * the incremental path while every |value| stays ≤ 2^41 — no prefix
-    * of ≤ 2^21 such values can overflow, so plain adds equal addExact —
-    * and fall back to exact left-to-right addExact recompute over the
-    * value ring once a partition shows a bigger value, preserving
-    * Spark's throw-on-any-prefix semantics bit-for-bit), counts, and
-    * min/max on either lane (monotonic deque — pure selection, no
-    * accumulation). Double sums are excluded (subtraction breaks IEEE
-    * bit-equality with the row path's left-to-right recompute), as is
-    * avg (double accumulation on every lane — Spark's Average). */
-  def invertible(sp: WinSlideSpec): Boolean =
-    sp.fn == 1 || sp.fn == 5 ||
-      (sp.fn == 0 && sp.lane == 0) ||
-      sp.fn == 2 || sp.fn == 3
-
-  /** |value| bound for the incremental ANSI-sum path: 2^41, so any
-    * prefix of up to maxInvertibleFrameRows (2^21) values is ≤ 2^62. */
-  val ansiSafeAbs = 1L << 41
-}
 
 /** Sliding RANGE-frame window aggregation — the rolling time/value
   * window shape (`RANGE BETWEEN 7 PRECEDING AND CURRENT ROW` over a
@@ -2095,12 +1498,16 @@ object GraftWindowSlidingExec {
   * it.) The partition's end releases the file and arrays and returns
   * to ring mode. Each emission recomputes its slice in ascending row
   * order — Spark's evaluation order, so doubles are bit-identical.
-  * Specs reuse [[WinSlideSpec]] with lo/hi as ORDER-BY-value deltas
-  * (per-expression frames supported).
+  * Specs are [[WinSlideSpec]]s with lo/hi as ORDER-BY-value deltas
+  * (per-expression frames supported). `ansiSafeAbsBound` and
+  * `ansiFrameRowCap` are the incremental ANSI-sum proof bounds
+  * ([[GraftColumnarWindowExec.ansiSafeAbs]],
+  * [[GraftColumnarWindowExec.maxInvertibleFrameRows]]); a test shrinks
+  * them on the planned node to reach the addExact rescan on small data.
   *
   * Invertible specs (long sums incl. the ANSI safe-bound/rescan split,
   * counts, min/max via a monotonic index deque — the
-  * [[GraftWindowSlidingExec.invertible]] predicate) evaluate
+  * [[GraftColumnarWindowExec.invertible]] predicate) evaluate
   * INCREMENTALLY: the per-spec frame pointers only ever advance, so
   * each emission add/subtracts the delta instead of rescanning the
   * slice — O(n) total where the rescan (and Spark's frame machinery)
@@ -2127,7 +1534,9 @@ case class GraftWindowRangeSlideExec(
     dir: Int,
     nullsFirst: Boolean,
     specs: Seq[WinSlideSpec],
-    child: SparkPlan)
+    child: SparkPlan,
+    ansiSafeAbsBound: Long = GraftColumnarWindowExec.ansiSafeAbs,
+    ansiFrameRowCap: Long = GraftColumnarWindowExec.maxInvertibleFrameRows)
     extends UnaryExecNode {
 
   override def outputPartitioning: Partitioning = child.outputPartitioning
@@ -2148,12 +1557,6 @@ case class GraftWindowRangeSlideExec(
     val degM = metrics("degradedPartitions")
     val maxRingBytes = conf.getConfString(
       GraftWindowRangeSlideExec.maxRingBytesKey, "1073741824").toLong
-    val ansiSafeAbsBound = conf.getConfString(
-      GraftWindowRangeSlideExec.ansiSafeAbsKey,
-      GraftWindowSlidingExec.ansiSafeAbs.toString).toLong
-    val ansiFrameRowCap = conf.getConfString(
-      GraftWindowRangeSlideExec.ansiFrameRowCapKey,
-      GraftWindowSlidingExec.maxInvertibleFrameRows.toString).toLong
     val pIdx = partIdx.toArray
     val pTypes = partTypes.toArray
     val ss = specs.toArray
@@ -2477,20 +1880,20 @@ case class GraftWindowRangeSlideExec(
       val cD = new Array[Double](nS)
       val cCnt = new Array[Long](nS)
       val cSeen = new Array[Boolean](nS)
-      // INCREMENTAL (O(n)) kernels for invertible specs — the sliding
-      // ROWS exec's trick carried to value-range frames: the per-spec
+      // INCREMENTAL (O(n)) kernels for invertible specs — the ROWS
+      // ring's SlideKernels trick carried to value-range frames: the per-spec
       // frame pointers lp/hp only ever advance, so long sums/counts
       // update by exact add/subtract and min/max by a monotonic deque
       // of ring indices, instead of evalSlice's O(frame) rescan per
       // emission. Doubles/avg keep the rescan (bit-equality); ANSI
       // sums flip to the rescan for the rest of a partition once it
       // shows |v| > 2^41 (plain adds equal addExact below that — see
-      // GraftWindowSlidingExec.ansiSafeAbs). The kernels read through
+      // GraftColumnarWindowExec.ansiSafeAbs). The kernels read through
       // the mode-dispatching spec*At accessors, so degraded partitions
       // keep the incremental path too (values live in flat arrays
       // there). fn 5 (count(*)) is already O(1).
       val invS = ss.map(sp => sp.fn != 5 && sp.fn != 4 &&
-        GraftWindowSlidingExec.invertible(sp))
+        GraftColumnarWindowExec.invertible(sp.fn, sp.lane))
       val iFrom = new Array[Long](nS)
       val iTo = Array.fill(nS)(-1L)
       val iAccL = new Array[Long](nS)
@@ -2863,15 +2266,6 @@ object GraftWindowRangeSlideExec {
     * current partition to the spill-backed buffer instead of growing
     * unspillable heap. Tests shrink it to force the degraded path. */
   val maxRingBytesKey = "spark.graft.columnar.window.rangeslide.maxRingBytes"
-
-  /** Test-only overrides of the incremental ANSI-sum safe bounds
-    * (defaults = the proof constants [[GraftWindowSlidingExec.ansiSafeAbs]]
-    * and [[GraftWindowSlidingExec.maxInvertibleFrameRows]]): the silent-wrap
-    * hazard needs |v| near 2^41 AND > 2^22 frame rows, so the parity test
-    * shrinks both to exercise the evalSlice fallback on small data. */
-  val ansiSafeAbsKey = "spark.graft.columnar.window.rangeslide.ansiSafeAbs"
-  val ansiFrameRowCapKey =
-    "spark.graft.columnar.window.rangeslide.ansiFrameRowCap"
 }
 
 /** Partition/peer key carry of the row faces: null-safe equality of a
@@ -2945,9 +2339,63 @@ object GraftColumnarWindowExec {
     java.lang.Double.doubleToLongBits(
       if (java.lang.Double.isNaN(d)) Double.NaN else if (d == 0.0) 0.0 else d)
 
+  /** Frame-width cap of a RECOMPUTE fn-13 spec (double sum, avg, string
+    * min/max): each emission rescans its slice of the row ring, which
+    * holds the spec's whole frame. */
+  val maxFrameRows = 65536L
+
+  /** Frame-width cap of an [[invertible]] fn-13 spec and of the RANGE
+    * exec's incremental ANSI-sum proof: the O(n) kernels keep PRECEDING
+    * context in 9 B/row primitive value rings, not the row ring, so
+    * 2M-row frames cost tens of MB of plan-constant state per spec — and
+    * beat the slice recompute and Spark's SlidingWindowFunctionFrame (each
+    * O(n·frame)) asymptotically. */
+  val maxInvertibleFrameRows = 1L << 21
+
+  /** Aggregates (op 0=sum 1=count(col) 2=min 3=max 4=avg 5=count(*) on
+    * `lane`) evaluable by exact O(1) frame updates: long-lane sums
+    * (non-ANSI wrap is modular arithmetic, order-free; ANSI sums ride the
+    * incremental path while every |value| stays ≤ [[ansiSafeAbs]] — no
+    * prefix of ≤ 2^21 such values can overflow, so plain adds equal
+    * addExact — and fall back to exact left-to-right addExact recompute
+    * over the value ring once a partition shows a bigger value,
+    * preserving Spark's throw-on-any-prefix semantics bit-for-bit),
+    * counts, and long/double min/max (monotonic deque — pure selection,
+    * no accumulation). Double sums are excluded (subtraction breaks IEEE
+    * bit-equality with the row path's left-to-right recompute), as are
+    * avg (double accumulation on every lane — Spark's Average) and string
+    * min/max (no value ring). */
+  def invertible(op: Int, lane: Int): Boolean =
+    op == 1 || op == 5 || (op == 0 && lane == 0) || ((op == 2 || op == 3) && lane != 3)
+
+  /** |value| bound for the incremental ANSI-sum path: 2^41, so any
+    * prefix of up to maxInvertibleFrameRows (2^21) values is ≤ 2^62. */
+  val ansiSafeAbs = 1L << 41
+
+  /** An fn-13 spec the ring loop evaluates on [[SlideKernels]]. */
+  def fastSlice(sp: WinAggSpec): Boolean = sp.fn == 13 && invertible(sp.fn13Op, sp.lane)
+
+  /** Rows past its own that spec `sp` reads (a lead offset, a FOLLOWING
+    * frame end): the ring loop's emission lags consumption by the
+    * node's largest. */
+  def leadRows(sp: WinAggSpec): Long =
+    if (sp.fn == 12) math.max(0L, sp.off.toLong)
+    else if (sp.fn == 13) math.max(0L, sp.sHi.toLong)
+    else 0L
+
+  /** Input/result types of the boxed lane (first/last, nth_value,
+    * lag/lead). */
+  def supportedBoxedType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+        DateType | TimestampType | TimestampNTZType |
+        DoubleType | FloatType | StringType => true
+    case d: DecimalType => d.precision <= Decimal.MAX_LONG_DIGITS
+    case _ => false
+  }
+
   // Row-lane helpers shared by every row face (the streaming, deferred,
   // size-based and suffix faces of GraftColumnarWindowExec, and the
-  // offset, sliding and RANGE-slide nodes).
+  // RANGE-slide node).
 
   /** Long-lane value of a non-null row column: integral/date/bool widen,
     * Decimal64 reads its unscaled long, timestamps read their micros. */
@@ -3132,6 +2580,213 @@ object GraftColumnarWindowExec {
       while (s < nS) {
         if (accumulates(ss(s))) write(out, s)
         s += 1
+      }
+    }
+  }
+
+  /** The O(n) kernels of the ring loop's invertible fn-13 specs
+    * ([[fastSlice]]): exact add/subtract for long sums and counts and a
+    * monotonic deque for min/max, over a per-spec primitive value ring
+    * indexed by partition row. A spec's frame pointers only ever advance,
+    * so each emission costs O(1) amortized where the slice recompute
+    * (and Spark's SlidingWindowFunctionFrame) costs O(frame), and the row
+    * ring need not hold these specs' PRECEDING rows. The state is a plan
+    * constant (frame bounds are literals; `maxLead` is the node's
+    * emission lag), registered once per task with the task memory
+    * manager — a shortfall is logged by the reservation but cannot
+    * shrink it.
+    */
+  final class SlideKernels(ss: Array[WinAggSpec], inTypes: Array[DataType], maxLead: Long) {
+    private val nS = ss.length
+    /** Whether spec `s` runs here. */
+    val fast: Array[Boolean] = ss.map(fastSlice)
+    // specs with a value ring: every fast spec but count(*)
+    private val valued = (0 until nS).filter(s => fast(s) && ss(s).fn13Op != 5).toArray
+    private val vCap = new Array[Int](nS)
+    private val vLong = new Array[Array[Long]](nS)
+    private val vDbl = new Array[Array[Double]](nS)
+    private val vNull = new Array[Array[Boolean]](nS)
+    private val dq = new Array[Array[Long]](nS)
+    private val dqCap = new Array[Int](nS)
+    private val dqHead = new Array[Int](nS)
+    private val dqLen = new Array[Int](nS)
+    private val accL = new Array[Long](nS)
+    private val cnt = new Array[Long](nS)
+    private val lo = new Array[Long](nS)
+    private val hi = Array.fill(nS)(-1L)
+    // per-partition sticky: an ANSI long sum saw |v| > 2^41 — its
+    // frames recompute left-to-right with addExact from the value ring
+    // (Spark's exact evaluation, incl. the throw position)
+    private val bigSeen = new Array[Boolean](nS)
+
+    locally {
+      // value rings cover every index between a spec's lowest live frame
+      // start and the consumption point; deques the frame width
+      def pow2(x: Long): Int = java.lang.Long.highestOneBit(math.max(4L, x * 2 - 1)).toInt
+      var bytes = 0L
+      valued.foreach { s =>
+        val sp = ss(s)
+        val vc = pow2(maxLead - math.min(0L, sp.sLo.toLong) + 2L)
+        vCap(s) = vc
+        vNull(s) = new Array[Boolean](vc)
+        bytes += vc
+        if (sp.lane == 1) { vDbl(s) = new Array[Double](vc); bytes += vc * 8L }
+        else if (sp.fn13Op != 1) { vLong(s) = new Array[Long](vc); bytes += vc * 8L }
+        if (sp.fn13Op == 2 || sp.fn13Op == 3) {
+          val dc = pow2(sp.sHi.toLong - sp.sLo + 3L)
+          dqCap(s) = dc
+          dq(s) = new Array[Long](dc)
+          bytes += dc * 8L
+        }
+      }
+      org.apache.spark.sql.graft.GraftMemoryReservation.forTask().foreach(_.reserve(bytes))
+    }
+
+    /** Starts a new partition. */
+    def reset(): Unit = {
+      java.util.Arrays.fill(accL, 0L)
+      java.util.Arrays.fill(cnt, 0L)
+      java.util.Arrays.fill(lo, 0L)
+      java.util.Arrays.fill(hi, -1L)
+      java.util.Arrays.fill(dqHead, 0)
+      java.util.Arrays.fill(dqLen, 0)
+      java.util.Arrays.fill(bigSeen, false)
+    }
+
+    /** Records partition row `idx`'s input values. */
+    def store(row: InternalRow, idx: Long): Unit = {
+      var i = 0
+      while (i < valued.length) {
+        val s = valued(i)
+        val sp = ss(s)
+        val o = (idx % vCap(s)).toInt
+        val nl = row.isNullAt(sp.col)
+        vNull(s)(o) = nl
+        if (!nl) {
+          if (sp.lane == 1) vDbl(s)(o) = rowDbl(row, sp.col, inTypes(s))
+          else if (vLong(s) != null) {
+            val x = rowLong(row, sp.col, inTypes(s))
+            vLong(s)(o) = x
+            if (sp.fn13Op == 0 && sp.ansi && (x > ansiSafeAbs || x < -ansiSafeAbs))
+              bigSeen(s) = true
+          }
+        }
+        i += 1
+      }
+    }
+
+    /** Writes spec `s`'s value over partition rows [from, to] into slot
+      * `s` of `out`. Min/max keep the FIRST minimal/maximal index among
+      * compare-equal values — the recompute's strict-< tie rule. */
+    def eval(s: Int, from: Long, to: Long, out: InternalRow): Unit = {
+      val sp = ss(s)
+      if (sp.fn13Op == 5) { out.update(s, math.max(0L, to - from + 1L)); return }
+      val vc = vCap(s)
+      val nls = vNull(s)
+      sp.fn13Op match {
+        case 0 if sp.ansi && bigSeen(s) =>
+          // rare: the partition holds |v| > 2^41, so a prefix COULD
+          // overflow — recompute this frame left-to-right with
+          // addExact, Spark's exact evaluation (and throw position)
+          val vl = vLong(s)
+          var acc = 0L
+          var c = 0L
+          var t = from
+          while (t <= to) {
+            val o = (t % vc).toInt
+            if (!nls(o)) {
+              try acc = Math.addExact(acc, vl(o))
+              catch {
+                case _: ArithmeticException =>
+                  throw org.apache.spark.sql.errors.QueryExecutionErrors
+                    .arithmeticOverflowError("long overflow", "try_add", null)
+              }
+              c += 1
+            }
+            t += 1
+          }
+          if (c > 0) emitLong(out, s, sp.outType, acc) else out.setNullAt(s)
+        case 0 | 1 =>
+          val vl = vLong(s)
+          val isSum = sp.fn13Op == 0
+          while (hi(s) < to) {
+            hi(s) += 1
+            val o = (hi(s) % vc).toInt
+            if (!nls(o)) { cnt(s) += 1; if (isSum) accL(s) += vl(o) }
+          }
+          while (lo(s) < from) {
+            // subtract ONLY indexes the add loop included: an EMPTY
+            // frame (partition-end clamp pushes `from` past `to`, so hi
+            // stops at the last row) advances `from` over indexes that
+            // were never added — reading their ring slots would subtract
+            // stale values (the winFrameGen counterexample: a 1-row
+            // partition under a 3..4 FOLLOWING frame returned count = -2
+            // from two never-written null flags)
+            if (lo(s) <= hi(s)) {
+              val o = (lo(s) % vc).toInt
+              if (!nls(o)) { cnt(s) -= 1; if (isSum) accL(s) -= vl(o) }
+            }
+            lo(s) += 1
+          }
+          if (!isSum) out.update(s, cnt(s))
+          else if (cnt(s) > 0) emitLong(out, s, sp.outType, accL(s))
+          else out.setNullAt(s)
+        case _ => // min/max: monotonic deque of candidate indices
+          val q = dq(s)
+          val dc = dqCap(s)
+          val isMin = sp.fn13Op == 2
+          // push ONLY indexes >= this frame's start: `from` never
+          // decreases across emissions, so an index below it can never
+          // enter any future frame — and skipping them is what BOUNDS the
+          // deque at its pow2(hi-lo+3) capacity. (A FOLLOWING frame's
+          // first emissions otherwise push the whole consumed prefix
+          // before any eviction: the seed-146 hunt saw a 4-slot deque
+          // wrap at 5 candidates and emit a stale suffix minimum.)
+          if (sp.lane == 0) {
+            val vl = vLong(s)
+            while (hi(s) < to) {
+              hi(s) += 1
+              val o = (hi(s) % vc).toInt
+              if (!nls(o) && hi(s) >= from) {
+                val x = vl(o)
+                var len = dqLen(s)
+                while (len > 0 && {
+                  val b = vl((q((dqHead(s) + len - 1) % dc) % vc).toInt)
+                  if (isMin) b > x else b < x
+                }) len -= 1
+                q((dqHead(s) + len) % dc) = hi(s)
+                dqLen(s) = len + 1
+              }
+            }
+          } else {
+            val vd = vDbl(s)
+            while (hi(s) < to) {
+              hi(s) += 1
+              val o = (hi(s) % vc).toInt
+              if (!nls(o) && hi(s) >= from) {
+                val x = vd(o)
+                var len = dqLen(s)
+                while (len > 0 && {
+                  val c = SQLOrderingUtil.compareDoubles(
+                    vd((q((dqHead(s) + len - 1) % dc) % vc).toInt), x)
+                  if (isMin) c > 0 else c < 0
+                }) len -= 1
+                q((dqHead(s) + len) % dc) = hi(s)
+                dqLen(s) = len + 1
+              }
+            }
+          }
+          lo(s) = from
+          while (dqLen(s) > 0 && q(dqHead(s)) < from) {
+            dqHead(s) = (dqHead(s) + 1) % dc
+            dqLen(s) -= 1
+          }
+          if (dqLen(s) == 0) out.setNullAt(s)
+          else {
+            val idx = q(dqHead(s))
+            if (sp.lane == 0) emitLong(out, s, sp.outType, vLong(s)((idx % vc).toInt))
+            else emitDbl(out, s, sp.outType, vDbl(s)((idx % vc).toInt))
+          }
       }
     }
   }

@@ -136,8 +136,6 @@ object GraftGroupedSortExec {
       case w: WindowExec => Some((w.partitionSpec, w.child))
       case w: WindowGroupLimitExec => Some((w.partitionSpec, w.child))
       case w: GraftColumnarWindowExec => ords(w.partIdx, w.child)
-      case w: GraftWindowOffsetExec => ords(w.partIdx, w.child)
-      case w: GraftWindowSlidingExec => ords(w.partIdx, w.child)
       case w: GraftWindowRangeSlideExec => ords(w.partIdx, w.child)
       case _ => None
     }

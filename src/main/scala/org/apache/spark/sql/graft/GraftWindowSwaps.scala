@@ -4,16 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, AttributeReference, CumeDist, CurrentRow, DenseRank, EvalMode, Expression, FrameLessOffsetWindowFunction, Lag, Lead, Literal, NamedExpression, NTile, NthValue, NullsFirst, PercentRank, RangeFrame, Rank, RowFrame, RowNumber, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, WindowExpression, WindowFrame, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, First, Last, Max, Min, Sum}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
-import org.apache.spark.sql.execution.graft.{GraftColumnarWindowExec, GraftWindowOffsetExec, GraftWindowRangeSlideExec, GraftWindowSlidingExec, WinAggSpec, WinOffsetSpec, WinSlideSpec}
+import org.apache.spark.sql.execution.graft.{GraftColumnarWindowExec, GraftWindowRangeSlideExec, WinAggSpec, WinSlideSpec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types._
 
 /** Swaps of the window family, in order: the computed-key retry, pure
-  * lag/lead (GraftWindowOffsetExec), pure finite ROWS frames
-  * (GraftWindowSlidingExec), pure finite RANGE frames
-  * (GraftWindowRangeSlideExec) and the streaming catch-all
-  * (GraftColumnarWindowExec). Also hosts the mixed-kind splitter the
-  * rule's first pass runs, and the frame and bound helpers both share.
+  * finite RANGE frames (GraftWindowRangeSlideExec) and the streaming
+  * catch-all (GraftColumnarWindowExec, which also takes lag/lead and
+  * finite ROWS frames). Also hosts the mixed-kind splitter the rule's
+  * first pass runs, and the frame and bound helpers both share.
   */
 object GraftWindowSwaps {
   import GraftColumnarRule._
@@ -44,28 +43,6 @@ object GraftWindowSwaps {
           w.getTagValue(computedPKeyTag).isEmpty =>
       computedKeyRetry(w, swapOne)
 
-    // Streaming lag/lead: a node holding ONLY FrameLessOffset functions
-    // needs maxLag + maxLead + 1 rows of context, not the row
-    // WindowExec's whole buffered partition — O(k) memory under any
-    // partition-key skew (the sessionization/CDC shape).
-    case w: WindowExec
-        if flag(session, windowAggEnabledKey) && w.windowExpression.forall(isLagLead) =>
-      offsetWindow(w)
-
-    // Sliding ROWS-frame aggregation (moving averages / rolling
-    // sums): a finite [lo, hi] frame needs only a frame-wide ring of
-    // rows, not the row WindowExec's whole buffered partition —
-    // O(frame) memory under any partition-key skew. Guard: EVERY
-    // window expression is an aggregate over a finite literal ROWS
-    // frame (running/unbounded frames fall through to the streaming
-    // case below; mixed nodes take it too).
-    case w: WindowExec if flag(session, windowAggEnabledKey) && w.windowExpression.forall {
-          case Alias(WindowExpression(_: AggregateExpression,
-              WindowSpecDefinition(_, _, frame)), _) => slideFrame(frame).isDefined
-          case _ => false
-        } =>
-      slidingWindow(w)
-
     // Sliding RANGE-frame aggregation (rolling time/value windows:
     // RANGE 7 PRECEDING over a numeric key, INTERVAL '1' HOUR over a
     // timestamp): a value-bounded ring holds only the rows inside the
@@ -86,15 +63,16 @@ object GraftWindowSwaps {
 
     // Everything else the streaming exec can take: running, whole-
     // partition and suffix frames, ranking and size-based functions,
-    // and mixed nodes with lag/lead or finite-ROWS slices. The row
+    // lag/lead and finite ROWS frames (alone or mixed). The row
     // WindowExec copies every partition group into a (spillable)
     // buffer before computing; the swap streams ONE accumulator set
-    // per function over input EnsureRequirements already ordered by
-    // (partition, order) — batch kernels over a columnar child
-    // (scan-side window), an InternalRow pass over the shuffled row
-    // shape (reference analogue: CometWindowExec.scala:41-388
-    // whitelist). All window expressions must compile or none swap
-    // (the node is atomic).
+    // per function in one InternalRow pass over input
+    // EnsureRequirements already ordered by (partition, order), and
+    // offsets and finite ROWS frames hold only a ring of the rows they
+    // still read — O(frame) memory under any partition-key skew
+    // (reference analogue: CometWindowExec.scala:41-388 whitelist). All
+    // window expressions must compile or none swap (the node is
+    // atomic).
     case w: WindowExec if flag(session, windowAggEnabledKey) =>
       streamingWindow(w)
   }
@@ -133,47 +111,6 @@ object GraftWindowSwaps {
     }
   }
 
-  private def offsetWindow(w: WindowExec): SparkPlan = {
-    val specs: Seq[Either[String, WinOffsetSpec]] = w.windowExpression.map {
-      case Alias(WindowExpression(f: FrameLessOffsetWindowFunction, _), _) =>
-        offsetShape(f, w.child).map { case (col, off, d, dt) => WinOffsetSpec(col, off, d, dt) }
-          .toRight(s"unsupported lag/lead shape: $f (needs an attribute " +
-            "input of long/double/string family, literal offset, literal " +
-            "default, ignoreNulls=false)")
-      case other => Left(s"unexpected window expression: $other")
-    }
-    withPartitionKeys(w, specs) { (pk, sps) =>
-      GraftWindowOffsetExec(w.output, pk.map(_._1), pk.map(_._2), sps, w.child)
-    }
-  }
-
-  private def slidingWindow(w: WindowExec): SparkPlan = {
-    val specs: Seq[Either[String, WinSlideSpec]] = w.windowExpression.map {
-      case Alias(WindowExpression(AggregateExpression(af, Complete, false, None, _),
-          WindowSpecDefinition(_, _, frame)), _) =>
-        val (lo, hi) = slideFrame(frame).get
-        // the width cap is checked AFTER compilation: invertible
-        // nodes (O(n) kernels) admit far wider frames than
-        // recompute nodes — see the node-level check below
-        if (lo > hi) Left(s"degenerate frame [$lo, $hi]")
-        else winAggLane(af, w.child, allowString = false).map(_.slide(lo, hi))
-          .toRight(s"unsupported sliding window aggregate: $af (${af.dataType})")
-      case other => Left(s"unexpected sliding window expression: $other")
-    }
-    withPartitionKeys(w, specs) { (pk, sps) =>
-      // node-wide width vs the mode's cap: all-invertible nodes
-      // run the O(n) kernels (9 B/row value rings) and admit 2M-row
-      // frames; a double/ANSI-sum or avg spec forces the slice
-      // recompute whose eager row ring stays capped at 64K
-      val span = math.max(0L, sps.map(_.hi).max) + 1L - math.min(0L, sps.map(_.lo).min)
-      val capRows =
-        if (sps.forall(GraftWindowSlidingExec.invertible)) GraftWindowSlidingExec.maxInvertibleFrameRows
-        else GraftWindowSlidingExec.maxFrameRows
-      if (span > capRows) declined(w, s"frame span $span wider than the ring cap $capRows")
-      else GraftWindowSlidingExec(w.output, pk.map(_._1), pk.map(_._2), sps, w.child)
-    }
-  }
-
   private def rangeWindow(w: WindowExec): SparkPlan = {
     val so = w.orderSpec.head
     val oAttr = so.child.asInstanceOf[AttributeReference]
@@ -192,7 +129,8 @@ object GraftWindowSwaps {
             java.lang.Double.longBitsToDouble(lo) > java.lang.Double.longBitsToDouble(hi)
           else lo > hi
         if (degenerate) Left(s"degenerate RANGE frame [$lo, $hi]")
-        else winAggLane(af, w.child, allowString = false).map(_.slide(lo, hi))
+        else winAggLane(af, w.child, allowString = false)
+          .map(l => WinSlideSpec(l.fn, l.col, l.lane, l.outType, l.ansi, lo, hi))
           .toRight(s"unsupported RANGE window aggregate: $af (${af.dataType})")
       case other => Left(s"unexpected RANGE window expression: $other")
     }
@@ -213,15 +151,14 @@ object GraftWindowSwaps {
           case Some((lo, hi)) => sliceSpec(af, lo, hi, w.child)
           case None => runningSpec(af, frame, w.child)
         }
-      // lag/lead mixed with other streaming functions (a PURE
-      // offset node took the GraftWindowOffsetExec case above):
-      // fn-12 specs read the emission ring directly
+      // lag/lead: fn-12 specs read the emission ring directly
       case Alias(WindowExpression(f: FrameLessOffsetWindowFunction, _), _)
           if f.isInstanceOf[Lag] || f.isInstanceOf[Lead] =>
         offsetShape(f, w.child)
           .map { case (col, off, d, dt) => WinAggSpec(12, col, 3, dt, ansi = false, 0, off = off, dflt = d) }
-          .toRight(s"unsupported mixed lag/lead shape: $f (needs an attribute " +
-            "input, literal offset, literal default, ignoreNulls=false)")
+          .toRight(s"unsupported lag/lead shape: $f (needs an attribute " +
+            "input of long/double/string family, literal offset, literal " +
+            "default, ignoreNulls=false)")
       // ranking functions: per-row streaming values (their frame is
       // ROWS UNBOUNDED..CURRENT by definition); rank/dense_rank peer
       // detection is validated below against the node's ORDER BY
@@ -257,7 +194,7 @@ object GraftWindowSwaps {
       case Alias(WindowExpression(NthValue(a: AttributeReference, Literal(n: Int, IntegerType), ign),
           WindowSpecDefinition(_, _, frame)), _)
           if frameKind(frame).exists(k => k <= 2 || n == 1) && ord(a) >= 0 && n > 0 &&
-            GraftWindowOffsetExec.supportedType(a.dataType) =>
+            GraftColumnarWindowExec.supportedBoxedType(a.dataType) =>
         val k = frameKind(frame).get
         if (k >= 3) Right(WinAggSpec(9, ord(a), 3, a.dataType, ansi = false, k, ign = ign))
         else Right(WinAggSpec(11, ord(a), 3, a.dataType, ansi = false, k, ign = ign, nth = n))
@@ -287,6 +224,12 @@ object GraftWindowSwaps {
         sp.exists(s => s.fn == 7 || s.fn == 8 || s.fn == 15)
       if (kinds.size > 1 && !kinds.forall(k => k == 3 || k == 4))
         declined(w, "mixed window frame kinds in one node (streaming + deferred)")
+      else if (sp.exists(s => s.fn != 12 && s.fn != 13) &&
+          sp.map(GraftColumnarWindowExec.leadRows).max > GraftColumnarWindowExec.maxFrameRows)
+        // the ring loop snapshots the accumulators of running/ranking
+        // specs once per ring slot, and the ring spans the lead reach
+        declined(w, "lag/lead or FOLLOWING reach beside running/ranking " +
+          s"specs wider than the snapshot ring cap ${GraftColumnarWindowExec.maxFrameRows}")
       else if (sp.exists(_.fn >= 14) && sp.exists(s => s.excl || s.fn == 12 || s.fn == 13))
         // the size-based path's emission cursors replay plain
         // streaming updates only — not the offset ring / sliding
@@ -309,17 +252,24 @@ object GraftWindowSwaps {
     }
   }
 
-  /** A finite-ROWS aggregate inside a mixed node: an fn-13 slice spec
-    * (a pure-sliding node takes the GraftWindowSlidingExec case). */
+  /** A finite-ROWS aggregate: an fn-13 slice spec. Its frame width is
+    * capped per spec: invertible aggregates run the O(n) kernels, whose
+    * value rings admit maxInvertibleFrameRows; the rest recompute each
+    * slice over the row ring, capped at maxFrameRows. */
   private def sliceSpec(af: AggregateFunction, lo: Long, hi: Long,
       child: SparkPlan): Either[String, WinAggSpec] =
     if (lo > hi) Left(s"degenerate frame [$lo, $hi]")
-    else if (math.max(0L, hi) - math.min(0L, lo) + 1L > GraftWindowSlidingExec.maxFrameRows)
-      Left(s"mixed-node sliding frame [$lo, $hi] wider than the ring cap")
     else winAggLane(af, child, allowString = true)
-      .map(l => WinAggSpec(13, l.col, l.lane, l.outType, l.ansi, 0,
-        off = l.fn, sLo = lo.toInt, sHi = hi.toInt))
-      .toRight(s"unsupported mixed-node sliding aggregate: $af")
+      .toRight(s"unsupported sliding window aggregate: $af (${af.dataType})")
+      .flatMap { l =>
+        val cap =
+          if (GraftColumnarWindowExec.invertible(l.fn, l.lane)) GraftColumnarWindowExec.maxInvertibleFrameRows
+          else GraftColumnarWindowExec.maxFrameRows
+        if (math.max(0L, hi) - math.min(0L, lo) + 1L > cap)
+          Left(s"sliding frame [$lo, $hi] wider than the ring cap $cap")
+        else Right(WinAggSpec(13, l.col, l.lane, l.outType, l.ansi, 0,
+          off = l.fn, sLo = lo.toInt, sHi = hi.toInt))
+      }
 
   /** An aggregate over a running, exclusive, whole-partition or suffix
     * frame. */
@@ -360,14 +310,12 @@ object GraftWindowSwaps {
 
   private def boxedInput(e: Expression, child: SparkPlan): Boolean =
     e.isInstanceOf[AttributeReference] && ordinal(child, e) >= 0 &&
-      GraftWindowOffsetExec.supportedType(e.dataType)
+      GraftColumnarWindowExec.supportedBoxedType(e.dataType)
 
   /** One window aggregate's lane: `fn` 0 sum, 1 count(x), 2 min, 3 max,
     * 4 avg, 5 count(*); `lane` 0 long family, 1 double, 2 count,
     * 3 string (min/max, only where `allowString`). */
-  private case class WinLane(fn: Int, col: Int, lane: Int, outType: DataType, ansi: Boolean) {
-    def slide(lo: Long, hi: Long): WinSlideSpec = WinSlideSpec(fn, col, lane, outType, ansi, lo, hi)
-  }
+  private case class WinLane(fn: Int, col: Int, lane: Int, outType: DataType, ansi: Boolean)
 
   /** The lane table every window family shares: which aggregate over
     * which input type runs on which lane. None when the function or its
@@ -460,7 +408,7 @@ object GraftWindowSwaps {
     (f.input, f.offset, f.default) match {
       case (a: AttributeReference, Literal(off: Int, IntegerType), dflt)
           if ordinal(child, a) >= 0 && !f.ignoreNulls &&
-            GraftWindowOffsetExec.supportedType(a.dataType) &&
+            GraftColumnarWindowExec.supportedBoxedType(a.dataType) &&
             (dflt == null || dflt.isInstanceOf[Literal]) =>
         val d = dflt match {
           case l: Literal => l.value
@@ -632,15 +580,16 @@ object GraftWindowSwaps {
     * in the chain emits rows in input order, so the one sort below
     * feeds the whole chain with no extra exchange or sort — plus an
     * attribute-only Project restoring the original column order. The
-    * swap pass then takes each homogeneous node independently (a pure
-    * lag/lead group lands on GraftWindowOffsetExec, a pure finite-ROWS
-    * group on GraftWindowSlidingExec, running/deferred groups on
-    * GraftColumnarWindowExec), and the merge-back pass re-fuses
-    * adjacent nodes left unswapped, so the degenerate outcome is never
-    * worse than today's single row WindowExec. A size-based group sits
-    * at the BOTTOM, on the sort that counts its partitions; the other
-    * buffering kinds follow where rows are narrowest; the streaming
-    * kind-0 group tops it. (Reference analogue: CometWindowExec
+    * swap pass then takes each homogeneous node independently (a
+    * finite-RANGE group lands on GraftWindowRangeSlideExec, every other
+    * group on GraftColumnarWindowExec — the streaming group with its
+    * lag/lead and finite-ROWS specs on the ring loop), and the merge-back
+    * pass re-fuses adjacent nodes left unswapped, so the degenerate
+    * outcome is never worse than today's single row WindowExec. A
+    * size-based group sits at the BOTTOM, on the sort that counts its
+    * partitions; the other buffering kinds follow where rows are
+    * narrowest; the streaming kind-0 group tops it. (Reference
+    * analogue: CometWindowExec
     * serializes whole window nodes and falls back on any unsupported
     * expression — `spark/sql/comet/CometWindowExec.scala`; splitting
     * is the Spark-side answer because chained WindowExecs compose for

@@ -674,8 +674,9 @@ class EngineSuite extends GraftTestBase {
       val df = qq()
       val rows = df.collect()
       assert(findExec(df) {
-        case e: org.apache.spark.sql.execution.graft.GraftWindowOffsetExec => e
-      }.isDefined, s"expected the streaming offset exec:\n${df.queryExecution.executedPlan}")
+        case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+            if e.specs.forall(_.fn == 12) => e
+      }.isDefined, s"expected the ring loop's lag/lead specs:\n${df.queryExecution.executedPlan}")
       rows
     }
     val off = withSQLConf(
@@ -696,24 +697,33 @@ class EngineSuite extends GraftTestBase {
     val loDf = lagOnly()
     val lo = loDf.collect()
     assert(findExec(loDf) {
-      case e: org.apache.spark.sql.execution.graft.GraftWindowOffsetExec => e
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
     }.isDefined, s"lag-only must swap:\n${loDf.queryExecution.executedPlan}")
     val loOff = withSQLConf(
       GraftColumnarRule.windowAggEnabledKey -> "false") { lagOnly().collect() }
     assert(lo.length == loOff.length,
       s"lag-only lost rows: ${lo.length} vs ${loOff.length}")
     assert(lo.toSeq == loOff.toSeq, "lag-only diverged from the row WindowExec")
-    // mixed agg + offset in one node keeps the row path
-    val sp2 = spark
-    import sp2.implicits._
-    val w2 = Window.partitionBy($"k").orderBy($"o")
-    val mixed = spark.read.parquet(dir).select($"k",
-      lag($"v", 1).over(w2).as("lg"),
-      sum($"v").over(w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("sm"))
-    mixed.collect()
-    assert(findExec(mixed) {
-      case e: org.apache.spark.sql.execution.graft.GraftWindowOffsetExec => e
-    }.isEmpty, "a mixed agg+offset node must not swap to the offset exec")
+    // mixed agg + offset in one node: the same ring loop, with
+    // accumulator snapshots beside the offset reads
+    def mixed() = {
+      val sp = spark
+      import sp.implicits._
+      val w2 = Window.partitionBy($"k").orderBy($"o")
+      spark.read.parquet(dir).select($"k", $"o",
+        lag($"v", 1).over(w2).as("lg"),
+        sum($"v").over(w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("sm"))
+        .orderBy($"o")
+    }
+    val mxDf = mixed()
+    val mx = mxDf.collect()
+    assert(findExec(mxDf) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+          if e.specs.exists(_.fn == 12) && e.specs.exists(_.fn == 0) => e
+    }.isDefined, s"a mixed agg+offset node must swap whole:\n${mxDf.queryExecution.executedPlan}")
+    val mxOff = withSQLConf(
+      GraftColumnarRule.windowAggEnabledKey -> "false") { mixed().collect() }
+    assert(mx.toSeq == mxOff.toSeq, "mixed agg+offset diverged from the row WindowExec")
   }
 
   test("streaming ranking: parity vs the row WindowExec incl. ties, nulls, string order keys") {
@@ -928,8 +938,8 @@ class EngineSuite extends GraftTestBase {
       GraftColumnarRule.windowAggEnabledKey -> "false") { q3().collect() }
     assert(on3.toSeq == off3.toSeq, "three-kind split diverged from the row exec")
 
-    // 2) a pure lag/lead group routes to the O(k) offset exec after the
-    //    split (not the partition-buffered catch-all)
+    // 2) a pure lag/lead group routes to the O(k) ring loop after the
+    //    split (not a partition-buffered face)
     def qOff() = {
       val w = Window.partitionBy($"k").orderBy($"o")
       read().select($"k", $"o",
@@ -941,11 +951,13 @@ class EngineSuite extends GraftTestBase {
     val dOff = qOff()
     val onOff = dOff.collect()
     assert(findExec(dOff) {
-      case e: org.apache.spark.sql.execution.graft.GraftWindowOffsetExec => e
-    }.isDefined, s"the split lag/lead group should land on GraftWindowOffsetExec:\n${
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+          if e.specs.forall(_.fn == 12) => e
+    }.isDefined, s"the split lag/lead group should land on the ring loop:\n${
       dOff.queryExecution.executedPlan}")
     assert(findExec(dOff) {
-      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+          if e.specs.forall(_.kind == 1) => e
     }.isDefined, "the deferred RANGE group should swap too")
     val offOff = withSQLConf(
       GraftColumnarRule.windowAggEnabledKey -> "false") { qOff().collect() }
@@ -1604,7 +1616,9 @@ class EngineSuite extends GraftTestBase {
     // cap for ROWS frames only). Shrunk bounds (|v| cap 2^59, row cap 8)
     // reproduce the hazard on 24 rows: a 16-row frame of 2^59s sums to
     // exactly 2^63 — Spark's ANSI row path throws where the unguarded
-    // incremental add silently wrapped.
+    // incremental add silently wrapped. The bounds are fields of the
+    // planned node, so the test rewrites it (AQE off: the executed plan
+    // is final and runs as rewritten).
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -1616,12 +1630,23 @@ class EngineSuite extends GraftTestBase {
       .repartition(1).sortWithinPartitions("o")
       .write.mode("overwrite").parquet(dir)
     val w = Window.partitionBy($"k").orderBy($"o").rangeBetween(-100, 0)
-    withSQLConf("spark.sql.ansi.enabled" -> "true",
-      RS.ansiSafeAbsKey -> big.toString,
-      RS.ansiFrameRowCapKey -> "8") {
+    withSQLConf("spark.sql.ansi.enabled" -> "true", "spark.sql.adaptive.enabled" -> "false") {
+      /** The planned query with the shrunk bounds on its RANGE node. */
+      def shrunk(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+        var rewritten = 0
+        val plan = df.queryExecution.executedPlan.transform {
+          case e: RS =>
+            rewritten += 1
+            e.copy(ansiSafeAbsBound = big, ansiFrameRowCap = 8L)
+        }
+        assert(rewritten == 1, s"the finite-RANGE ANSI sum should land on the ring exec:\n${
+          df.queryExecution.executedPlan}")
+        plan
+      }
       def q() = spark.read.parquet(dir)
         .select($"k", $"o", sum($"v").over(w).as("s")).orderBy($"o")
-      intercept[Throwable] { q().collect() } // engine throws...
+      val plan1 = shrunk(q())
+      intercept[Throwable] { plan1.executeCollect() } // engine throws...
       withSQLConf(GraftColumnarRule.windowAggEnabledKey -> "false") {
         intercept[Throwable] { q().collect() } // ...exactly like the row path
       }
@@ -1631,16 +1656,13 @@ class EngineSuite extends GraftTestBase {
       val w2 = Window.partitionBy($"k").orderBy($"o").rangeBetween(-11, 0)
       def q2() = spark.read.parquet(dir)
         .select($"k", $"o", sum($"v").over(w2).as("s")).orderBy($"o")
-      val d2 = q2()
-      val on2 = d2.collect()
-      assert(findExec(d2) {
-        case e: org.apache.spark.sql.execution.graft.GraftWindowRangeSlideExec => e
-      }.isDefined, s"the finite-RANGE ANSI sum should land on the ring exec:\n${
-        d2.queryExecution.executedPlan}")
+      val on2 = shrunk(q2()).executeCollect().toSeq.map(r =>
+        (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
       val off2 = withSQLConf(GraftColumnarRule.windowAggEnabledKey -> "false") {
-        q2().collect()
+        q2().collect().toSeq.map(r =>
+          (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
       }
-      assert(on2.toSeq == off2.toSeq, "capped-frame ANSI parity diverged")
+      assert(on2.size == 24 && on2 == off2, "capped-frame ANSI parity diverged")
     }
   }
 
@@ -1702,8 +1724,9 @@ class EngineSuite extends GraftTestBase {
         else if (i % 11 == 0) None else Some(if (i % 3 != 0) 1L else (i % 4 + 2).toLong)
       val v = if (i % 7 == 0) None else Some((i % 211).toLong)
       val d = if (i % 5 == 0) None else Some(i * 0.25)
-      (k, i.toLong, v, d)
-    }.toDF("k", "o", "v", "d")
+      val st = if (i % 13 == 0) None else Some(s"s_${i % 37}")
+      (k, i.toLong, v, d, st)
+    }.toDF("k", "o", "v", "d", "st")
       .repartition(1).write.mode("overwrite").parquet(dir)
     def qq() = {
       val sp = spark
@@ -1715,14 +1738,17 @@ class EngineSuite extends GraftTestBase {
         min($"v").over(w.rowsBetween(-3, -1)).as("tmin"),
         max($"d").over(w.rowsBetween(1, 3)).as("amax"),
         count($"v").over(w.rowsBetween(-2, 2)).as("cnt"),
-        count(lit(1)).over(w.rowsBetween(-4, -2)).as("cstar"))
+        count(lit(1)).over(w.rowsBetween(-4, -2)).as("cstar"),
+        min($"st").over(w.rowsBetween(-2, 1)).as("smin"),
+        max($"st").over(w.rowsBetween(-1, 2)).as("smax"))
         .orderBy($"o")
     }
     val onDf = qq()
     val on = onDf.collect()
     assert(findExec(onDf) {
-      case e: org.apache.spark.sql.execution.graft.GraftWindowSlidingExec => e
-    }.isDefined, s"expected the sliding window exec:\n${onDf.queryExecution.executedPlan}")
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+          if e.specs.size == 8 && e.specs.forall(_.fn == 13) => e
+    }.isDefined, s"expected one ring loop with every slice:\n${onDf.queryExecution.executedPlan}")
     val off = withSQLConf(
       GraftColumnarRule.windowAggEnabledKey -> "false") { qq().collect() }
     assert(on.toSeq == off.toSeq, "sliding frames diverged from the row WindowExec")
@@ -1742,25 +1768,51 @@ class EngineSuite extends GraftTestBase {
     val wideDf = wide()
     val wideOn = wideDf.collect()
     assert(findExec(wideDf) {
-      case e: org.apache.spark.sql.execution.graft.GraftWindowSlidingExec => e
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec => e
     }.isDefined, s"an invertible wide frame must swap:\n${wideDf.queryExecution.executedPlan}")
     val wideOff = withSQLConf(
       GraftColumnarRule.windowAggEnabledKey -> "false") { wide().collect() }
     assert(wideOn.toSeq == wideOff.toSeq, "wide invertible frame diverged from the row path")
+    // the same kernels beside a running spec: row_number makes the ring
+    // loop snapshot accumulators, while the rolling specs keep their
+    // PRECEDING context in value rings
+    def wideMixed() = {
+      val w = Window.partitionBy($"k").orderBy($"o")
+      val wWide = w.rowsBetween(-100000, 0)
+      spark.read.parquet(dir).select($"k", $"o",
+        row_number().over(w).as("rn"),
+        sum($"v").over(wWide).as("s"),
+        min($"v").over(wWide).as("mn"),
+        count($"v").over(wWide).as("c"))
+        .orderBy($"o")
+    }
+    val wmDf = wideMixed()
+    val wmOn = wmDf.collect()
+    assert(findExec(wmDf) {
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+          if e.specs.exists(_.fn == 6) && e.specs.count(_.fn == 13) == 3 => e
+    }.isDefined, s"row_number beside wide invertible frames must swap whole:\n${
+      wmDf.queryExecution.executedPlan}")
+    val wmOff = withSQLConf(
+      GraftColumnarRule.windowAggEnabledKey -> "false") { wideMixed().collect() }
+    assert(wmOn.toSeq == wmOff.toSeq, "row_number beside wide frames diverged from the row path")
+    def reason(df: org.apache.spark.sql.DataFrame): Option[String] = findExec(df) {
+      case w: org.apache.spark.sql.execution.window.WindowExec
+          if w.getTagValue(GraftColumnarRule.fallbackReasonTag).isDefined =>
+        w.getTagValue(GraftColumnarRule.fallbackReasonTag).get
+    }
     // past even the invertible cap → row path
     val wHuge = Window.partitionBy($"k").orderBy($"o").rowsBetween(-3000000, 0)
     val huge = spark.read.parquet(dir).select($"k", sum($"v").over(wHuge).as("s"))
     huge.collect()
-    assert(findExec(huge) {
-      case e: org.apache.spark.sql.execution.graft.GraftWindowSlidingExec => e
-    }.isEmpty, "a frame wider than the invertible cap must keep the row path")
-    // a RECOMPUTE spec (avg) in the node keeps the 64K cap
+    assert(reason(huge).exists(_.contains("ring cap 2097152")),
+      s"a frame wider than the invertible cap must keep the row path: ${reason(huge)}")
+    // a RECOMPUTE spec (avg) keeps the 64K cap
     val wAvg = Window.partitionBy($"k").orderBy($"o").rowsBetween(-100000, 0)
     val avgWide = spark.read.parquet(dir).select($"k", avg($"d").over(wAvg).as("a"))
     avgWide.collect()
-    assert(findExec(avgWide) {
-      case e: org.apache.spark.sql.execution.graft.GraftWindowSlidingExec => e
-    }.isEmpty, "a wide recompute (avg) frame must keep the row path")
+    assert(reason(avgWide).exists(_.contains("ring cap 65536")),
+      s"a wide recompute (avg) frame must keep the row path: ${reason(avgWide)}")
   }
 
   test("sliding ROWS fast kernels: ANSI big-value sums, deque ties, pure-invertible nodes") {
@@ -1798,7 +1850,8 @@ class EngineSuite extends GraftTestBase {
     val onDf = q()
     val on = onDf.collect()
     assert(findExec(onDf) {
-      case e: org.apache.spark.sql.execution.graft.GraftWindowSlidingExec => e
+      case e: org.apache.spark.sql.execution.graft.GraftColumnarWindowExec
+          if e.specs.forall(org.apache.spark.sql.execution.graft.GraftColumnarWindowExec.fastSlice) => e
     }.isDefined, s"pure-invertible node must swap:\n${onDf.queryExecution.executedPlan}")
     val off = withSQLConf(
       GraftColumnarRule.windowAggEnabledKey -> "false") { q().collect() }

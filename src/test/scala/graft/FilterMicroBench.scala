@@ -382,8 +382,8 @@ object FilterMicroBench {
           .select($"l_orderkey", sum($"l_quantity").over(w).as("s"),
             max($"l_extendedprice").over(w).as("mx"))
       }),
-      // streaming lag/lead (GraftWindowOffsetExec, O(k) ring vs the
-      // row WindowExec's whole-group buffer)
+      // streaming lag/lead (the window ring loop's O(k) row ring vs
+      // the row WindowExec's whole-group buffer)
       "winoff-lag1" -> (() => {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions._
@@ -422,8 +422,9 @@ object FilterMicroBench {
           .select($"l_returnflag", rank().over(w).as("rnk"),
             dense_rank().over(w).as("drnk"), row_number().over(wu).as("rn"))
       }),
-      // sliding ROWS frames (GraftWindowSlidingExec ring vs the row
-      // WindowExec's whole-group buffer + SlidingWindowFunctionFrame)
+      // sliding ROWS frames (the window ring loop and its O(n) kernels
+      // vs the row WindowExec's whole-group buffer +
+      // SlidingWindowFunctionFrame)
       "winslide-ma3" -> (() => {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions._

@@ -871,8 +871,8 @@ class PlanAssertionSuite extends GraftTestBase {
     val df = run("q185_window_rolling_wide")
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(p.contains("GraftWindowSliding"),
-      s"expected the 1,000-row frames on the invertible sliding kernels in:\n$p")
+    assert(p.contains("GraftColumnarWindow") && p.contains("WinAggSpec(13,"),
+      s"expected the 1,000-row frames on the ring loop's invertible kernels in:\n$p")
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0,
       s"no row WindowExec should remain for the wide sliding frames:\n$p")
@@ -1009,13 +1009,12 @@ class PlanAssertionSuite extends GraftTestBase {
   }
 
   test("q156 winnowing windows all leave the row WindowExec") {
-    // 6-gram assembly = pure-lead nodes (GraftWindowOffsetExec);
-    // fingerprint selection = sliding string-min + lead in ONE node
-    // (fn-13 mixed machine)
+    // 6-gram assembly = pure-lead nodes; fingerprint selection =
+    // sliding string-min + lead in ONE node — both on the ring loop
     val df = run("q156_winnowing_dedup")
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(p.contains("GraftWindowOffset") || p.contains("GraftColumnarWindow"),
+    assert(p.contains("GraftColumnarWindow"),
       s"expected streaming window execs in:\n$p")
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0, s"no row WindowExec should remain:\n$p")
@@ -1056,8 +1055,8 @@ class PlanAssertionSuite extends GraftTestBase {
     val df = run("q182_window_sliding")
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(p.contains("GraftWindowSliding"),
-      s"expected the sliding window exec in:\n$p")
+    assert(p.contains("GraftColumnarWindow") && p.contains("WinAggSpec(13,"),
+      s"expected the ring loop's finite-ROWS specs in:\n$p")
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0, s"no row WindowExec should remain:\n$p")
   }
@@ -1077,8 +1076,8 @@ class PlanAssertionSuite extends GraftTestBase {
     val df = run("q180_window_lag_lead")
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(p.contains("GraftWindowOffset"),
-      s"expected the streaming offset exec in:\n$p")
+    assert(p.contains("GraftColumnarWindow") && p.contains("WinAggSpec(12,"),
+      s"expected the ring loop's lag/lead specs in:\n$p")
     val rowWindows = "(?<!GraftColumnar)Window \\[".r.findAllIn(p).size
     assert(rowWindows == 0, s"no row WindowExec should remain:\n$p")
   }
@@ -1379,21 +1378,21 @@ class PlanAssertionSuite extends GraftTestBase {
           _.nodeName.contains("Window"))
       }
     assertMatrix(actual, Seq(
-      "sliding ROWS / sum int" -> "GraftWindowSlidingExec WinSlideSpec(0,2,0,LongType,false,-2,0)",
-      "sliding ROWS / sum double" -> "GraftWindowSlidingExec WinSlideSpec(0,2,1,DoubleType,false,-2,0)",
+      "sliding ROWS / sum int" -> "GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,false,0,false,0,0,null,false,-2,0)",
+      "sliding ROWS / sum double" -> "GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,0,null,false,-2,0)",
       "sliding ROWS / sum TRY" -> "Window: unsupported sliding window aggregate: try_sum(i#N) (LongType)",
-      "sliding ROWS / sum ANSI" -> "GraftWindowSlidingExec WinSlideSpec(0,2,0,LongType,true,-2,0)",
-      "sliding ROWS / count(*)" -> "GraftWindowSlidingExec WinSlideSpec(5,-1,2,LongType,false,-2,0)",
-      "sliding ROWS / count(x)" -> "GraftWindowSlidingExec WinSlideSpec(1,2,2,LongType,false,-2,0)",
-      "sliding ROWS / min long" -> "GraftWindowSlidingExec WinSlideSpec(2,2,0,LongType,false,-2,0)",
-      "sliding ROWS / max long" -> "GraftWindowSlidingExec WinSlideSpec(3,2,0,LongType,false,-2,0)",
-      "sliding ROWS / min double" -> "GraftWindowSlidingExec WinSlideSpec(2,2,1,DoubleType,false,-2,0)",
-      "sliding ROWS / max double" -> "GraftWindowSlidingExec WinSlideSpec(3,2,1,DoubleType,false,-2,0)",
-      "sliding ROWS / min string" -> "Window: unsupported sliding window aggregate: min(s#N) (StringType)",
-      "sliding ROWS / max string" -> "Window: unsupported sliding window aggregate: max(s#N) (StringType)",
-      "sliding ROWS / avg int" -> "GraftWindowSlidingExec WinSlideSpec(4,2,0,DoubleType,false,-2,0)",
+      "sliding ROWS / sum ANSI" -> "GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,true,0,false,0,0,null,false,-2,0)",
+      "sliding ROWS / count(*)" -> "GraftColumnarWindowExec WinAggSpec(13,-1,2,LongType,false,0,false,0,5,null,false,-2,0)",
+      "sliding ROWS / count(x)" -> "GraftColumnarWindowExec WinAggSpec(13,2,2,LongType,false,0,false,0,1,null,false,-2,0)",
+      "sliding ROWS / min long" -> "GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,false,0,false,0,2,null,false,-2,0)",
+      "sliding ROWS / max long" -> "GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,false,0,false,0,3,null,false,-2,0)",
+      "sliding ROWS / min double" -> "GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,2,null,false,-2,0)",
+      "sliding ROWS / max double" -> "GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,3,null,false,-2,0)",
+      "sliding ROWS / min string" -> "GraftColumnarWindowExec WinAggSpec(13,2,3,StringType,false,0,false,0,2,null,false,-2,0)",
+      "sliding ROWS / max string" -> "GraftColumnarWindowExec WinAggSpec(13,2,3,StringType,false,0,false,0,3,null,false,-2,0)",
+      "sliding ROWS / avg int" -> "GraftColumnarWindowExec WinAggSpec(13,2,0,DoubleType,false,0,false,0,4,null,false,-2,0)",
       "sliding ROWS / avg decimal" -> shapeNo,
-      "sliding ROWS / avg double" -> "GraftWindowSlidingExec WinSlideSpec(4,2,1,DoubleType,false,-2,0)",
+      "sliding ROWS / avg double" -> "GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,4,null,false,-2,0)",
       "sliding ROWS / first" -> "Window: unsupported sliding window aggregate: first(i#N)() (IntegerType)",
       "sliding ROWS / last" -> "Window: unsupported sliding window aggregate: last(i#N)() (IntegerType)",
       "finite RANGE / sum int" -> "GraftWindowRangeSlideExec WinSlideSpec(0,2,0,LongType,false,-2,0)",
@@ -1466,7 +1465,7 @@ class PlanAssertionSuite extends GraftTestBase {
       "suffix ROWS / last" -> "GraftColumnarWindowExec WinAggSpec(10,2,3,IntegerType,false,3,false,0,0,null,false,0,0)",
       "mixed finite ROWS / sum int" -> ("GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,false,0,false,0,0,null,false,-2,0)" + rowNumber),
       "mixed finite ROWS / sum double" -> ("GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,0,null,false,-2,0)" + rowNumber),
-      "mixed finite ROWS / sum TRY" -> "Window: unsupported mixed-node sliding aggregate: try_sum(i#N)",
+      "mixed finite ROWS / sum TRY" -> "Window: unsupported sliding window aggregate: try_sum(i#N) (LongType)",
       "mixed finite ROWS / sum ANSI" -> ("GraftColumnarWindowExec WinAggSpec(13,2,0,LongType,true,0,false,0,0,null,false,-2,0)" + rowNumber),
       "mixed finite ROWS / count(*)" -> ("GraftColumnarWindowExec WinAggSpec(13,-1,2,LongType,false,0,false,0,5,null,false,-2,0)" + rowNumber),
       "mixed finite ROWS / count(x)" -> ("GraftColumnarWindowExec WinAggSpec(13,2,2,LongType,false,0,false,0,1,null,false,-2,0)" + rowNumber),
@@ -1479,8 +1478,8 @@ class PlanAssertionSuite extends GraftTestBase {
       "mixed finite ROWS / avg int" -> ("GraftColumnarWindowExec WinAggSpec(13,2,0,DoubleType,false,0,false,0,4,null,false,-2,0)" + rowNumber),
       "mixed finite ROWS / avg decimal" -> shapeNo,
       "mixed finite ROWS / avg double" -> ("GraftColumnarWindowExec WinAggSpec(13,2,1,DoubleType,false,0,false,0,4,null,false,-2,0)" + rowNumber),
-      "mixed finite ROWS / first" -> "Window: unsupported mixed-node sliding aggregate: first(i#N)()",
-      "mixed finite ROWS / last" -> "Window: unsupported mixed-node sliding aggregate: last(i#N)()"
+      "mixed finite ROWS / first" -> "Window: unsupported sliding window aggregate: first(i#N)() (IntegerType)",
+      "mixed finite ROWS / last" -> "Window: unsupported sliding window aggregate: last(i#N)() (IntegerType)"
     ))
   }
 

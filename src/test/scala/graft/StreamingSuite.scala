@@ -517,7 +517,7 @@ class StreamingSuite extends GraftTestBase {
           (r.getAs[Double]("roll_sum"), r.getAs[Double]("roll_min"),
             r.getAs[Long]("roll_n")))).toMap
       // batch twin: the sliding ROWS frame over ALL events — the exact
-      // shape GraftWindowSlidingExec's O(n) kernels run on the batch side
+      // shape the window ring loop's O(n) kernels run on the batch side
       val w = org.apache.spark.sql.expressions.Window.partitionBy($"user_id")
         .orderBy($"ts", $"event_id").rowsBetween(-(n - 1), 0)
       val expected = (b1 ++ b2).toDF()
