@@ -138,7 +138,7 @@ final case class WinAggSpec(
   * ~4-row groups 0.90-0.95x, rank+dense_rank+row_number over three hot
   * groups 0.96-1.07x; forward-fill first+last 0.86-0.96x; mixed
   * ranking+lead+running-sum 0.86-0.99x. Ring loop (winoff-, winslide-;
-  * sf0.1, 4 cores, 3 sessions): lag(1) over ~4-row groups 0.80-0.89x,
+  * sf0.1, 4 cores, 3 runs of min-of-5): lag(1) over ~4-row groups 0.80-0.89x,
   * lag+lead over three hot groups 0.93-1.10x, 3-row moving avg
   * 0.82-0.98x, centered sum+min+max over hot groups 0.85-0.99x,
   * 1,000-row rolling sum+min+count 0.07-0.08x.
